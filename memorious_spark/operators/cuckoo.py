@@ -1,5 +1,5 @@
-"""Sharded cuckoo filter — the deletable alternative to the URL-seen
-bloom (``operators/seen.py``).
+"""Sharded cuckoo filter — the deletable alternative to a URL-seen
+bloom filter.
 
 BASELINE.json's north rule names "a partitioned bloom/cuckoo URL-seen
 set" as the replacement for memorious's Redis ``tags`` lookups
@@ -22,8 +22,7 @@ Design (10^10-key posture):
   INDEPENDENTLY in one vectorized pass. At 10^10 keys the shard map is
   also the serve-time partitioning: a cluster deployment pins shard i
   next to candidate partition i and probes without moving the filter;
-  the sandbox broadcasts the shard dict (same posture as the bloom
-  bitmap, which is equally monolithic under broadcast).
+  the sandbox broadcasts the shard dict.
 - **4-way buckets, 16-bit fingerprints** (Fan et al., "Cuckoo Filter:
   Practically Better Than Bloom", CoNLL 2014): ~2 bytes/key at 95%
   load, false-positive rate ≈ 2·4/2^16 ≈ 1.2e-4 — an order tighter
@@ -42,10 +41,10 @@ Design (10^10-key posture):
 - **Probe/delete are pure numpy** over the broadcast shards — no
   per-row Python anywhere on the hot path.
 
-The filter is a PREFILTER, exactly like the bloom: ``dedup_new(...,
-cuckoo=...)`` routes "definitely new" rows past the shuffle and sends
-only "maybe seen" rows into the exact anti-join, so its false
-positives cost bandwidth, never correctness.
+The filter is a PREFILTER: ``dedup_new(..., cuckoo=...)`` folds its
+"maybe seen" flag into the exact anti-join's condition, so its false
+positives cost a hash lookup, never correctness. The crawl runner does
+not use it (seen.py explains why).
 """
 
 from __future__ import annotations
@@ -61,7 +60,7 @@ __all__ = [
     "build_cuckoo",
     "update_cuckoo",
     "delete_cuckoo",
-    "cuckoo_probe_udf",
+    "cuckoo_maybe_seen_udf",
 ]
 
 _BUCKET = 4  # slots per bucket
@@ -178,8 +177,7 @@ def _insert_batch(table: np.ndarray, hv: np.ndarray) -> None:
 
 class CuckooFilter:
     """``shards[s]`` is an (nb, 4) uint16 table holding the keys with
-    ``hash % n_shards == s``. Pickles cleanly for broadcast and for
-    RunStore checkpointing (same contract as the bloom's npz)."""
+    ``hash % n_shards == s``. Pickles cleanly for broadcast."""
 
     def __init__(self, n_shards: int, nb: int):
         self.n_shards = n_shards
@@ -317,8 +315,7 @@ def _collect_hashes(df: DataFrame, key: str) -> np.ndarray:
 
 
 def update_cuckoo(filt: CuckooFilter, df: DataFrame, key: str = "url_hash"):
-    """Incremental insert of a round's NEW hashes (the cuckoo twin of
-    ``update_bloom``). Per-round deltas are small relative to the
+    """Incremental insert of a round's NEW hashes. Per-round deltas are small relative to the
     filter, so they collect to the driver — the build path stays the
     distributed one.
 
@@ -341,11 +338,10 @@ def delete_cuckoo(filt: CuckooFilter, df: DataFrame, key: str = "url_hash") -> i
     return filt.delete(hv) if len(hv) else 0
 
 
-def cuckoo_probe_udf(spark, filt: CuckooFilter):
+def cuckoo_maybe_seen_udf(spark, filt: CuckooFilter):
     """Arrow-batched 'maybe seen' probe over the broadcast shard dict
-    — same contract as the bloom's ``_probe_udf``: false positives
-    land in the exact anti-join, false negatives don't exist for
-    inserted keys."""
+    — false positives land in the exact anti-join, false negatives
+    don't exist for inserted keys."""
     bc = spark.sparkContext.broadcast(filt)
 
     @F.pandas_udf("boolean")

@@ -18,7 +18,6 @@ from memorious_spark.functions.hof import bind_once
 __all__ = [
     "FRONTIER_SCHEMA",
     "politeness_dequeue",
-    "assign_emit_seq",
     "order_bucket_expr",
     "range_by_order",
     "seq_from_sizes",
@@ -139,16 +138,21 @@ def dedup_within_round(candidates: DataFrame, order_cols: list[str]) -> DataFram
     candidate stream carries ~links-per-page duplicates of every hot
     url, and partial aggregation collapses them map-side BEFORE the
     exchange (guide §2.3: aggregate before you shuffle), where the
-    window shuffled and sorted every raw candidate row. Output
-    partitioning (hash on url_hash) is identical, so the downstream
-    seen anti-join still reuses it.
+    window shuffled and sorted every raw candidate row. The output
+    keeps the aggregate's grouping column ``url_hash`` itself (only
+    the other columns come out of ``_row``), so its hash partitioning
+    on ``url_hash`` survives and the downstream seen anti-join reuses
+    it instead of re-shuffling the candidates.
     """
     cols = candidates.columns
+    rest = [c for c in cols if c != "url_hash"]
     ord_key = F.struct(*[F.col(c) for c in order_cols])
     return (
         candidates.groupBy("url_hash")
-        .agg(F.min_by(F.struct(*cols), ord_key).alias("_row"))
-        .select("_row.*")
+        .agg(F.min_by(F.struct(*rest), ord_key).alias("_row"))
+        .select(*[
+            F.col(c) if c == "url_hash" else F.col(f"_row.{c}") for c in cols
+        ])
     )
 
 
@@ -229,21 +233,6 @@ def seq_from_sizes(
         .withColumn(out_col, (offset_map[F.col("_pid")] + F.col("_rn") - 1).cast("long"))
         .drop("_pid", "_rn")
     )
-
-
-def assign_emit_seq(
-    df: DataFrame, order_cols: list[str], start: int, out_col: str = "emit_seq"
-) -> DataFrame:
-    """Dense global sequence numbers in ``order_cols`` order, from
-    ``start`` — convenience wrapper (one bounds job + one size-collect
-    job). The runner uses the two-step form so the size collect also
-    yields its row count."""
-    rp = range_by_order(df, order_cols)
-    sizes = {
-        r["_pid"]: r["cnt"]
-        for r in rp.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    return seq_from_sizes(rp, order_cols, sizes, start, out_col)
 
 
 def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:

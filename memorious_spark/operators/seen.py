@@ -1,158 +1,38 @@
-"""The URL-seen set: bloom pre-filter + exact anti-join dedup.
+"""The URL-seen set: one exact anti-join per frontier round.
 
 Replaces memorious's Redis/SQL ``tags`` lookups (one round-trip per
 URL, memorious/logic/context.py:114-148; run-scoped link dedup
 memorious/operations/parse.py:55-58) with one distributed anti-join
 per frontier round — the scalability pivot of this graft.
 
-Scale design (10^10-URL frontier):
 - Candidates are pre-hashed (``url_hash = xxhash64(url_norm)``); the
-  seen table stores only hashes + scope columns, bucketable by
-  ``url_hash`` so the anti-join co-partitions without a re-shuffle.
-- Default path: exact ``left_anti`` join; Spark's runtime bloom-filter
-  join injection (``spark.sql.optimizer.runtime.bloomFilter.enabled``,
-  set in session.py) prunes the shuffle on its own.
-- Large-seen path: an explicit broadcast Bloom built distributed
-  (Arrow batches → vectorized numpy bit ops → treeReduce OR), probed
-  by an Arrow-batched vectorized UDF BEFORE the shuffle. The bloom is
-  a bandwidth optimization only — false positives are caught (kept)
-  by the exact anti-join that follows, so no URL is ever wrongly
-  dropped (test_operators.py::test_dedup_new_bloom_path forces this
-  path and asserts exactness). The runner maintains the bitmap
-  INCREMENTALLY across rounds (:func:`update_bloom` ORs in only each
-  round's new hashes) instead of rebuilding from the full seen set —
-  at 10^8-10^10 seen keys a per-round rebuild would dominate exactly
-  the regime the bloom exists for. False NEGATIVES are the only
-  correctness hazard (a seen hash missing from the bitmap re-crawls
-  its URL), so the contract is: build once from a full seen snapshot,
-  then OR in every subsequent seen append before the next probe.
+  seen table stores only hashes + scope columns. The within-round
+  dedup leaves candidates hash-partitioned by ``url_hash``, so the
+  ``left_anti`` join shuffles only the seen side; Spark's runtime
+  bloom-filter join injection
+  (``spark.sql.optimizer.runtime.bloomFilter.enabled``, set in
+  session.py) may prune that shuffle on its own.
+- There is no explicit prefilter on the crawl path. A probe's flag
+  folds into the anti-join condition (:func:`_anti_join_maybe`), so
+  every candidate and every seen key is still shuffled and the probe
+  only adds work; measured against the plain anti-join at local[4]
+  with 4M and 12M seen keys, the broadcast and sharded blooms were
+  both slower. The cuckoo prefilter (``dedup_new(..., cuckoo=)``) and
+  the sharded filters (operators/sharded_filter.py) remain as
+  standalone operators.
 - Expiry (`expires_at`) reproduces the reference's ``expire × 84600``
   quirk (sic, not 86400 — memorious/logic/crawler.py:50).
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = [
-    "EXPIRE_QUIRK_SECONDS", "dedup_new", "seen_entries", "build_bloom",
-    "update_bloom",
-]
+__all__ = ["EXPIRE_QUIRK_SECONDS", "dedup_new", "seen_entries"]
 
 # The reference multiplies `expire` (days) by 84600 — a long-standing
 # off-by-1800 quirk we reproduce for parity (memorious/logic/crawler.py:50).
 EXPIRE_QUIRK_SECONDS = 84600
-
-# Below this many seen hashes, a plain anti-join (with Spark's own
-# runtime bloom injection) wins; above it, the explicit broadcast
-# bloom prunes the candidate shuffle first.
-_BLOOM_MIN_ROWS = 4_000_000
-_BLOOM_FPP = 0.01
-_MULT = 0x9E3779B97F4A7C15
-_MASK = (1 << 64) - 1
-
-
-def _bloom_params(expected: int, fpp: float) -> tuple[int, int]:
-    m = max(1024, int(-expected * math.log(fpp) / (math.log(2) ** 2)))
-    k = max(1, round(m / expected * math.log(2)))
-    return m, min(k, 8)
-
-
-def _or_hashes(arr: np.ndarray, hv: np.ndarray, m: int, k: int) -> None:
-    """Set the k bloom bits of each 64-bit hash in ``hv`` — the exact
-    uint64-wraparound arithmetic of the vectorized probe (no Python
-    per-row loop; ``bitwise_or.at`` handles duplicate byte indexes)."""
-    hv = hv.astype(np.uint64, copy=False)
-    h2 = ((hv * np.uint64(_MULT)) & np.uint64(_MASK)) | np.uint64(1)
-    for i in range(k):
-        idx = (hv + np.uint64(i) * h2) % np.uint64(m)
-        np.bitwise_or.at(
-            arr,
-            (idx >> np.uint64(3)).astype(np.int64),
-            (np.uint64(1) << (idx & np.uint64(7))).astype(np.uint8),
-        )
-
-
-def _partial_bitmaps(df: DataFrame, key: str, m: int, k: int) -> DataFrame:
-    """One partial bitmap row per partition: Arrow-batched numpy bit
-    ops (mirrors the probe side — no per-row Python)."""
-    import pyarrow as pa
-
-    m_bytes = (m + 7) // 8
-
-    def part(batches):  # pragma: no cover (executor)
-        arr = np.zeros(m_bytes, dtype=np.uint8)
-        for batch in batches:
-            col = batch.column(0).drop_null()
-            if len(col) == 0:
-                continue
-            # int64 → uint64 view keeps the two's-complement bit pattern
-            # (the `h & _MASK` of the scalar formulation)
-            hv = col.to_numpy(zero_copy_only=False).astype(np.uint64)
-            _or_hashes(arr, hv, m, k)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([arr.tobytes()], type=pa.binary())], names=["bm"]
-        )
-
-    return df.select(key).mapInArrow(part, "bm binary")
-
-
-def _reduce_bitmaps(df: DataFrame, key: str, m: int, k: int) -> np.ndarray | None:
-    """treeReduce the per-partition bitmaps; None when the input plan
-    collapses to zero partitions (an empty round — nothing to OR)."""
-    try:
-        return (
-            _partial_bitmaps(df, key, m, k)
-            .rdd.map(lambda r: np.frombuffer(r["bm"], dtype=np.uint8))
-            .treeReduce(np.bitwise_or)
-        )
-    except ValueError:  # "Cannot reduce() empty RDD"
-        return None
-
-
-def build_bloom(df: DataFrame, key: str, expected: int, fpp: float = _BLOOM_FPP):
-    """Distributed Bloom build over a 64-bit-hash column: per-partition
-    vectorized numpy bitmaps OR-combined via treeReduce. Returns
-    (bitmap, m, k)."""
-    m, k = _bloom_params(expected, fpp)
-    bitmap = _reduce_bitmaps(df, key, m, k)
-    if bitmap is None:
-        bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
-    return bitmap, m, k
-
-
-def update_bloom(bloom, df: DataFrame, key: str = "url_hash"):
-    """OR ``df``'s hashes into an existing bitmap — the incremental
-    maintenance path: per frontier round only the round's NEW seen
-    hashes are inserted (ideally from already-cached data), never the
-    full seen set. Returns the updated (bitmap, m, k)."""
-    bitmap, m, k = bloom
-    partial = _reduce_bitmaps(df, key, m, k)
-    if partial is None:
-        return bloom
-    return np.bitwise_or(bitmap, partial), m, k
-
-
-def _probe_udf(spark, bitmap: np.ndarray, m: int, k: int):
-    bc = spark.sparkContext.broadcast(bitmap)
-
-    @F.pandas_udf("boolean")
-    def _maybe_seen(h: pd.Series) -> pd.Series:  # pragma: no cover (executor)
-        arr = bc.value
-        hv = h.to_numpy(dtype=np.uint64, na_value=0)
-        hit = np.ones(len(hv), dtype=bool)
-        h2 = ((hv * np.uint64(_MULT)) & np.uint64(_MASK)) | np.uint64(1)
-        for i in range(k):
-            idx = (hv + np.uint64(i) * h2) % np.uint64(m)
-            hit &= (arr[(idx >> np.uint64(3)).astype(np.int64)]
-                    & (1 << (idx & np.uint64(7))).astype(np.uint8)) != 0
-        return pd.Series(hit & h.notna().to_numpy())
-
-    return _maybe_seen
 
 
 def _anti_join_maybe(
@@ -185,49 +65,32 @@ def dedup_new(
     seen: DataFrame | None,
     key: str = "url_hash",
     seen_count: int | None = None,
-    bloom=None,
     cuckoo=None,
 ) -> DataFrame:
     """Rows of ``candidates`` whose ``key`` is not in ``seen``.
 
-    Exactness is guaranteed by the final ``left_anti`` join; the bloom
-    probe (only engaged for large seen sides) just cuts shuffle volume.
-    ``seen_count`` — if the caller tracked it from round metrics —
-    picks the strategy without an extra count job. ``bloom`` — a
-    (bitmap, m, k) the caller maintains incrementally across rounds
-    (:func:`update_bloom`) — skips the per-call rebuild; it MUST cover
-    every hash in ``seen`` (false negatives re-crawl URLs). ``cuckoo``
-    — a :class:`~memorious_spark.operators.cuckoo.CuckooFilter` —
-    plays the same prefilter role with DELETE support (expired tags
-    leave the filter, keeping its pruning tight; see cuckoo.py).
+    Exactness is guaranteed by the ``left_anti`` join. ``seen_count``
+    is accepted for callers that track it and no longer affects the
+    plan. ``cuckoo`` — a
+    :class:`~memorious_spark.operators.cuckoo.CuckooFilter` covering
+    every live hash in ``seen`` — adds a probe whose flag gates the
+    anti-join (see cuckoo.py).
     """
     if seen is None:
         return candidates
     seen_keys = seen.select(key).distinct()
-    if (
-        bloom is None and cuckoo is None
-        and seen_count is not None and seen_count >= _BLOOM_MIN_ROWS
-    ):
-        bloom = build_bloom(seen_keys, key, seen_count)
     if cuckoo is not None:
-        from memorious_spark.operators.cuckoo import cuckoo_probe_udf
+        from memorious_spark.operators.cuckoo import cuckoo_maybe_seen_udf
 
-        maybe_seen = cuckoo_probe_udf(candidates.sparkSession, cuckoo)
-        return _anti_join_maybe(
-            candidates.withColumn("_maybe_seen", maybe_seen(F.col(key))),
-            seen_keys, key,
-        )
-    if bloom is not None:
-        bitmap, m, k = bloom
-        maybe_seen = _probe_udf(candidates.sparkSession, bitmap, m, k)
+        maybe_seen = cuckoo_maybe_seen_udf(candidates.sparkSession, cuckoo)
         return _anti_join_maybe(
             candidates.withColumn("_maybe_seen", maybe_seen(F.col(key))),
             seen_keys, key,
         )
     # SHUFFLE_HASH: candidates arrive already hash-partitioned by
-    # url_hash (the within-round dedup window), so only the seen side
-    # shuffles — parallel — where a broadcast would serialize the whole
-    # seen key set through the driver every round.
+    # url_hash (the within-round dedup aggregate), so only the seen
+    # side shuffles — parallel — where a broadcast would serialize the
+    # whole seen key set through the driver every round.
     return candidates.join(seen_keys.hint("shuffle_hash"), key, "left_anti")
 
 

@@ -1,9 +1,8 @@
 """Executor-resident sharded Bloom seen-filter.
 
-The broadcast bloom (:mod:`memorious_spark.operators.seen`) and the
-driver cuckoo (:mod:`memorious_spark.operators.cuckoo`) both keep the
-filter ON THE DRIVER: the bitmap (or shard dict) is built/updated by
-collecting state to the driver and re-broadcast for every probe. At
+The driver cuckoo (:mod:`memorious_spark.operators.cuckoo`) keeps the
+filter ON THE DRIVER: its shard dict is built/updated by collecting
+state to the driver and re-broadcast for every probe. At
 the north-rule scale (10^10-URL frontier) that is ~12-20 GB of
 driver-resident filter plus an O(new URLs) or O(bitmap) driver
 transfer per round — the driver becomes the memory and bandwidth
@@ -29,10 +28,12 @@ cogrouped Arrow jobs that move ZERO filter bytes through the driver:
   exact ``left_anti`` join, so a false positive is kept and a wrongly
   dropped URL is impossible.
 
-Checkpoint/resume: the filter is already a DataFrame — the run store
-writes it as a parquet table (``RunStore.save_sharded`` /
-``load_sharded``), which is also what a real deployment would pin to
-the Iceberg catalog next to the seen table.
+Checkpoint/resume: the filter is already a DataFrame, so a caller can
+persist it as a parquet table next to the seen table.
+
+The crawl runner does not use these filters: its seen step is the
+plain anti-join of :func:`seen.dedup_new`, which measured faster (see
+the seen.py module docstring). They remain standalone operators.
 
 Reference semantics replaced: memorious's Redis ``tags`` membership
 checks (memorious/logic/context.py:114-148), one round-trip per URL.
@@ -40,16 +41,13 @@ checks (memorious/logic/context.py:114-148), one round-trip per URL.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
-
-from memorious_spark.operators.seen import (
-    _MASK, _MULT, _bloom_params, _or_hashes,
-)
 
 __all__ = [
     "ShardedBloom",
@@ -64,6 +62,29 @@ __all__ = [
 ]
 
 _FILTER_SCHEMA = "shard int, bm binary"
+_MULT = 0x9E3779B97F4A7C15
+_MASK = (1 << 64) - 1
+
+
+def _bloom_params(expected: int, fpp: float) -> tuple[int, int]:
+    m = max(1024, int(-expected * math.log(fpp) / (math.log(2) ** 2)))
+    k = max(1, round(m / expected * math.log(2)))
+    return m, min(k, 8)
+
+
+def _or_hashes(arr: np.ndarray, hv: np.ndarray, m: int, k: int) -> None:
+    """Set the k bloom bits of each 64-bit hash in ``hv`` — the exact
+    uint64-wraparound arithmetic of the vectorized probe (no Python
+    per-row loop; ``bitwise_or.at`` handles duplicate byte indexes)."""
+    hv = hv.astype(np.uint64, copy=False)
+    h2 = ((hv * np.uint64(_MULT)) & np.uint64(_MASK)) | np.uint64(1)
+    for i in range(k):
+        idx = (hv + np.uint64(i) * h2) % np.uint64(m)
+        np.bitwise_or.at(
+            arr,
+            (idx >> np.uint64(3)).astype(np.int64),
+            (np.uint64(1) << (idx & np.uint64(7))).astype(np.uint8),
+        )
 
 
 @dataclass
@@ -115,8 +136,9 @@ def update_sharded(
     executors (cogrouped Arrow tasks), O(P) driver bytes. The returned
     shard table is eagerly localCheckpoint'ed: the update must be a
     MATERIALIZED fact before the next round probes it (and the
-    lineage must not re-run a nondeterministic upstream), exactly the
-    :func:`seen.update_bloom` false-negative contract."""
+    lineage must not re-run a nondeterministic upstream): a hash
+    missing from the filter would be a false negative, the one error
+    the exact anti-join cannot absorb."""
     m, k = bloom.m, bloom.k
     keys = (
         new_df.select(F.col(key).alias("_h"))

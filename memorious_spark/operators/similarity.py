@@ -13,13 +13,14 @@ md5(i:j) — reproducible across engines and runs.
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "cosine_sim", "knn_brute_force", "lsh_bucket_col", "knn_lsh",
     "query_probe_buckets", "ivf_seed_centroids", "ivf_assign_col",
-    "ivf_assign_udf", "ivf_assign_join", "ivf_train", "knn_ivf",
+    "ivf_assign_udf", "ivf_train", "knn_ivf",
     "build_ann_index", "knn_lsh_serve", "build_ivf_index", "knn_ivf_serve",
     "pq_seed_codebooks", "pq_encode_col", "pq_encode_udf", "pq_encode",
     "knn_pq", "build_pq_index", "knn_pq_serve",
@@ -377,41 +378,6 @@ def ivf_assign_udf(centroids: list[tuple[int, list[float]]]):
         return pd.Series(d.argmin(axis=1).astype("int32"))
 
     return _assign
-
-
-def ivf_assign_join(
-    emb: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Nearest-centroid assignment as a broadcast centroid-table join +
-    min-by-distance aggregate: emb ⨯ broadcast(K centroids) → dist2 →
-    ``min_by(cid, (dist2, cid))`` per vector. Keeps everything JVM-side
-    with K as real data (no codegen ceiling), at the cost of one
-    groupBy(id) shuffle of K×n slim rows — prefer ``ivf_assign_udf``
-    when a shuffle-free plan matters more than staying off Python.
-    Returns (id_col, _b)."""
-    spark = emb.sparkSession
-    cents_df = spark.createDataFrame(
-        [(cid, [float(x) for x in c]) for cid, c in centroids],
-        f"cid int, centroid array<double>",
-    )
-    crossed = emb.select(id_col, vec_col).crossJoin(F.broadcast(cents_df))
-    d2 = _dist2(F.col(vec_col), F.col("centroid"))
-    return (
-        crossed.select(
-            F.col(id_col),
-            F.col("cid"),
-            d2.alias("_d2"),
-        )
-        # min_by with a (dist, cid) struct: lowest distance, ties → lowest
-        # cid — identical tie rule to the literal/udf paths
-        .groupBy(id_col)
-        .agg(
-            F.min_by("cid", F.struct(F.col("_d2"), F.col("cid"))).alias("_b")
-        )
-    )
 
 
 def _assign_bucket_col(
@@ -867,6 +833,15 @@ def knn_ivfpq(
         .select(id_col, vec_col)
         .collect()
     )
+    # a dict over duplicate ids would keep whichever row the collect
+    # returned last — nondeterministic codebooks
+    counts = Counter(int(r[id_col]) for r in rows)
+    dups = sorted(i for i, n in counts.items() if n > 1)
+    if dups:
+        raise ValueError(
+            f"knn_ivfpq: duplicate seed rows at ids {dups}; {id_col} "
+            "must be unique"
+        )
     by_id = {int(r[id_col]): [float(x) for x in r[vec_col]] for r in rows}
 
     def _seeds(ids: list[int], label: str) -> list[tuple[int, list[float]]]:

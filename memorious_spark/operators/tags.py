@@ -12,8 +12,8 @@ RunStore's shared area:
 
 - ``set_tags``    — batch ``set_tag``: append one row per input row.
 - ``check_tags``  — batch ``check_tag``: boolean membership column via
-  a left join on the key hash (the bloom/anti-join machinery of the
-  seen set applies when used as a filter — see operators.seen).
+  a left join on the key hash (the anti-join of the seen set applies
+  when used as a filter — see operators.seen).
 - ``get_tags``    — batch ``get_tag``: attach the latest unexpired
   value per key.
 

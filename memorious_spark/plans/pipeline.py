@@ -123,16 +123,6 @@ class CrawlConfig:
     # to ONE seen entry. Fetch/corpus join stays on url_norm either
     # way — the canon form keys dedup, never the request.
     canonicalize: str = "conservative"
-    # seen-filter posture: "bloom" (default) keeps the incremental
-    # broadcast bloom of operators/seen.py — zero extra shuffles, but
-    # the bitmap lives on (and round-trips through) the driver;
-    # "sharded" keeps the filter WHERE THE DATA IS as an
-    # executor-resident (shard, bitmap) table maintained by cogrouped
-    # Arrow jobs (operators/sharded_filter.py) — per-round driver
-    # traffic for filter maintenance is O(P) task metadata, the posture
-    # that survives a 10^10-URL frontier. Exactness is identical either
-    # way (the exact anti-join always decides).
-    seen_filter: str = "bloom"
     # crawler-trap frontier gate (functions/urls.py trap_signals —
     # Heritrix's pathological-path/too-many-segments decide-rule
     # family; no reference analogue, a single-site crawler never fills
@@ -286,7 +276,6 @@ def load_config(spec: dict) -> CrawlConfig:
     trap_filter = False
     politeness_group = "host"
     canonicalize = "conservative"
-    seen_filter = "bloom"
     backoff_threshold, backoff_rounds = None, 2
     for stage in stages.values():
         method = stage.get("method")
@@ -317,12 +306,6 @@ def load_config(spec: dict) -> CrawlConfig:
                     "fetch canonicalize: unknown form "
                     f"{canonicalize!r} (supported: conservative, "
                     "aggressive)"
-                )
-            seen_filter = params.get("seen_filter", "bloom")
-            if seen_filter not in ("bloom", "sharded"):
-                raise ValueError(
-                    "fetch seen_filter: unknown posture "
-                    f"{seen_filter!r} (supported: bloom, sharded)"
                 )
             eb = params.get("error_backoff")
             if eb is not None:
@@ -433,7 +416,6 @@ def load_config(spec: dict) -> CrawlConfig:
         trap_filter=trap_filter,
         politeness_group=politeness_group,
         canonicalize=canonicalize,
-        seen_filter=seen_filter,
         backoff_threshold=backoff_threshold,
         backoff_rounds=backoff_rounds,
     )

@@ -72,12 +72,7 @@ from memorious_spark.operators.frontier import (
     salt_partitions, seq_from_sizes,
 )
 from memorious_spark.operators.parse import extract_links_df, parse_stage
-from memorious_spark.operators.seen import (
-    _BLOOM_MIN_ROWS, build_bloom, dedup_new, seen_entries, update_bloom,
-)
-from memorious_spark.operators.sharded_filter import (
-    build_sharded_bloom, dedup_new_sharded, update_sharded,
-)
+from memorious_spark.operators.seen import dedup_new, seen_entries
 from memorious_spark.plans.pipeline import CrawlConfig
 from memorious_spark.plans.storage import RunStore
 
@@ -361,25 +356,6 @@ class CrawlRunner:
         rnd = start_round
         status = "done"
         pool = ThreadPoolExecutor(max_workers=4)
-        # incrementally-maintained seen bloom (engages past
-        # _BLOOM_MIN_ROWS): built ONCE from the seen snapshot, then
-        # each round ORs in only its new hashes — never rebuilt from
-        # the full set unless growth exceeds the sized capacity. A
-        # resume reloads the committed bitmap instead of paying a
-        # full-seen-scan rebuild at first engagement (the scan is
-        # largest exactly when resuming matters).
-        bloom, bloom_capacity = None, 0
-        # sharded posture (cfg.seen_filter == "sharded"): the filter is
-        # an executor-resident (shard, bitmap) table instead — engages
-        # at the same threshold, maintained by cogrouped Arrow jobs
-        # with O(P) driver traffic (operators/sharded_filter.py).
-        sharded = None
-        if start_round > 0:
-            if cfg.seen_filter == "sharded":
-                sharded = store.load_sharded(spark)
-            elif (saved := store.load_bloom()) is not None:
-                bitmap, m, k, bloom_capacity = saved
-                bloom = (bitmap, m, k)
         while rnd < cfg.max_rounds:
             if store.abort_requested():
                 status = "aborted"
@@ -632,50 +608,11 @@ class CrawlRunner:
                 if seen is not None
                 else None
             )
-            if seen_keys is not None and seen_count + 1 >= _BLOOM_MIN_ROWS:
-                if cfg.seen_filter == "sharded":
-                    if sharded is not None and seen_count + 1 > sharded.capacity:
-                        try:  # release the superseded filter's executor
-                            # storage (update_sharded does the same on
-                            # every incremental update)
-                            sharded.df.unpersist()
-                        except Exception:
-                            pass
-                        sharded = None  # past design capacity → rebuild
-                    if sharded is None:
-                        # distributed build — the shard table never
-                        # touches the driver (same 4× headroom sizing)
-                        sharded = build_sharded_bloom(
-                            seen_keys.distinct(), "url_hash",
-                            expected=max(
-                                (seen_count + 1) * 4, _BLOOM_MIN_ROWS
-                            ),
-                        )
-                else:
-                    if bloom is not None and seen_count + 1 > bloom_capacity:
-                        bloom = None  # past design capacity → rebuild below
-                    if bloom is None:
-                        # one full build (first engagement or resume), sized
-                        # with 4× headroom so rounds of incremental inserts
-                        # stay inside the designed fpp
-                        bloom_capacity = max(
-                            (seen_count + 1) * 4, _BLOOM_MIN_ROWS
-                        )
-                        bloom = build_bloom(
-                            seen_keys.distinct(), "url_hash", bloom_capacity
-                        )
             # new0 persisted: the dedup chain feeds the bounds job, the
             # sizes collect, and every wave-3 consumer (frontier/seen
-            # writes, the filter update) — advisory only, since _pid is
-            # a pure function of the data (below)
-            if sharded is not None:
-                new0 = dedup_new_sharded(
-                    cands, seen_keys, sharded
-                ).persist()
-            else:
-                new0 = dedup_new(
-                    cands, seen_keys, seen_count=seen_count + 1, bloom=bloom
-                ).persist()
+            # writes) — advisory only, since _pid is a pure function of
+            # the data (below)
+            new0 = dedup_new(cands, seen_keys).persist()
             # wave 2: materialize the dedup chain (the bounds aggregate
             # inside range_by_order is the materializing action), then
             # ONE cached-scan collect yields the per-bucket sizes (→
@@ -699,25 +636,6 @@ class CrawlRunner:
             new_links = seq_from_sizes(rp, _ORDER, sizes, start=next_seq)
             ph.mark(f"dedup+emit_seq ({n_new})")
             next_seq += n_new
-            # incremental maintenance: OR in this round's seen
-            # additions (new links off the rp cache + the few
-            # redirect-source tags off the parsed cache) so the
-            # next probe never sees a false negative.
-            # filter_driver_bytes = filter bytes that moved THROUGH THE
-            # DRIVER for maintenance this round (metrics row below):
-            # bloom mode pulls a bitmap-sized partial to the driver per
-            # update; sharded mode's cogrouped update moves only task
-            # statuses — 0 filter bytes, O(P), whatever the round found.
-            filter_driver_bytes = 0
-            round_adds = rp.select("url_hash").unionByName(
-                redirect_tags.select("url_hash")
-            )
-            if sharded is not None:
-                sharded = update_sharded(sharded, round_adds)
-            elif bloom is not None:
-                bloom = update_bloom(bloom, round_adds)
-                filter_driver_bytes = int(bloom[0].nbytes)
-
             new_frontier_rows = new_links.select(
                 "url", "url_norm", "url_hash",
                 host_col(F.col("url")).alias("host"),
@@ -850,7 +768,7 @@ class CrawlRunner:
                 fut.result()
             frontier_rows = int(_obs_counts(obs_frontier, "rows")["rows"])
             ph.mark(f"frontier+seen write (next={frontier_rows})")
-            seen_count = seen_count + n_new  # redirect tags are few; bloom sizing only
+            seen_count = seen_count + n_new  # redirect-source tags (few) not counted
 
             # metrics: round summary + per-partition lineage (footer- or
             # histogram-derived above); a driver-local 1-partition
@@ -862,7 +780,6 @@ class CrawlRunner:
                     ("round_summary", n_selected), ("fetched", n_hits),
                     ("emitted", n_emitted), ("stored", n_stored),
                     ("new_links", n_new),
-                    ("filter_driver_bytes", filter_driver_bytes),
                 ]
             ]
             store.write_round_local("metrics", rnd, metrics_rows)
@@ -877,15 +794,6 @@ class CrawlRunner:
 
             totals["fetched"] += n_hits
             totals["stored"] += n_stored
-            if sharded is not None:
-                # checkpoint the shard table BEFORE the manifest
-                # advances (same ordering argument) — a distributed
-                # parquet write; no bitmap touches the driver
-                store.save_sharded(sharded)
-            elif bloom is not None:
-                # checkpoint the bitmap BEFORE the manifest advances
-                # (load_bloom docstring has the ordering argument)
-                store.save_bloom(bloom[0], bloom[1], bloom[2], bloom_capacity)
             store.commit_round(
                 rnd,
                 {

@@ -390,131 +390,6 @@ class RunStore:
         if shared_root.is_dir():
             shutil.rmtree(shared_root)
 
-    # ---- URL-seen bloom checkpoint ----------------------------------
-    # The runner maintains the seen bloom incrementally across rounds;
-    # rebuilding it from the full seen set on resume costs a full
-    # table scan exactly when the set is largest. Persist (bitmap, m,
-    # k, capacity) beside the manifest at every commit (BEFORE the
-    # manifest advances, so a loaded bloom always covers at least the
-    # committed rounds — a bloom from a later crashed round only adds
-    # false POSITIVES, which the exact anti-join absorbs; false
-    # negatives are the hazard and the ordering rules them out).
-
-    def save_bloom(self, bitmap, m: int, k: int, capacity: int) -> None:
-        import numpy as np
-
-        tmp = self.dir / "bloom.npz.tmp"
-        with open(tmp, "wb") as fh:
-            np.savez(
-                fh, bitmap=bitmap, m=np.int64(m), k=np.int64(k),
-                capacity=np.int64(capacity),
-            )
-        tmp.replace(self.dir / "bloom.npz")  # atomic on POSIX
-
-    def load_bloom(self):
-        """(bitmap, m, k, capacity) or None — resume-side reload."""
-        import numpy as np
-
-        p = self.dir / "bloom.npz"
-        if not p.exists():
-            return None
-        d = np.load(p)
-        return (
-            d["bitmap"], int(d["m"]), int(d["k"]), int(d["capacity"])
-        )
-
-    def save_cuckoo(self, filt) -> None:
-        """Checkpoint a :class:`~memorious_spark.operators.cuckoo.
-        CuckooFilter` beside the bloom, same write-then-replace
-        atomicity and the same false-positive-only ordering argument —
-        with ONE extra hazard the bloom doesn't have: a cuckoo
-        checkpoint taken AFTER deletes were applied but BEFORE their
-        source rows left the exact table would miss live keys. The
-        runner's contract (delete only what the exact side already
-        excludes) rules that out."""
-        import numpy as np
-
-        tmp = self.dir / "cuckoo.npz.tmp"
-        shard_ids = sorted(filt.shards)
-        with open(tmp, "wb") as fh:
-            np.savez(
-                fh,
-                n_shards=np.int64(filt.n_shards),
-                nb=np.int64(filt.nb),
-                shards=np.stack([filt.shards[s] for s in shard_ids]),
-                shard_ids=np.array(shard_ids, dtype=np.int64),
-            )
-        tmp.replace(self.dir / "cuckoo.npz")
-
-    def load_cuckoo(self):
-        """CuckooFilter or None — resume-side reload."""
-        import numpy as np
-
-        from memorious_spark.operators.cuckoo import CuckooFilter
-
-        p = self.dir / "cuckoo.npz"
-        if not p.exists():
-            return None
-        d = np.load(p)
-        filt = CuckooFilter(int(d["n_shards"]), int(d["nb"]))
-        for i, s in enumerate(d["shard_ids"]):
-            filt.shards[int(s)] = d["shards"][i].copy()
-        return filt
-
-    # ---- executor-resident sharded seen-filter checkpoint ------------
-    # Unlike bloom.npz / cuckoo.npz (driver numpy state, driver file
-    # write), the sharded filter is a DataFrame of (shard, bm) rows and
-    # NEVER materializes on the driver: the checkpoint is a distributed
-    # parquet write from executors. Atomicity: write a fresh versioned
-    # dir, then atomically swap the pointer JSON; the superseded version
-    # is dropped one save later (the in-memory filter is an eager
-    # localCheckpoint, so nothing still reads the old files). Same
-    # false-positive-only ordering contract as save_bloom: saved BEFORE
-    # the manifest advances, so a loaded filter always covers at least
-    # the committed rounds.
-
-    def save_sharded(self, bloom) -> None:
-        """Checkpoint a :class:`~memorious_spark.operators.
-        sharded_filter.ShardedBloom` — parquet from executors plus a
-        driver-side geometry pointer (a few hundred bytes: the ONLY
-        driver-side bytes in the sharded filter's whole lifecycle)."""
-        meta_p = self.dir / "sharded_bloom.json"
-        prev = None
-        if meta_p.exists():
-            prev = json.loads(meta_p.read_text())
-        v = (prev["version"] + 1) if prev else 1
-        data_p = self.dir / f"sharded_bloom.v{v}"
-        bloom.df.write.mode("overwrite").parquet(str(data_p))
-        tmp = self.dir / "sharded_bloom.json.tmp"
-        tmp.write_text(json.dumps({
-            "version": v, "shards": bloom.shards, "m": bloom.m,
-            "k": bloom.k, "capacity": bloom.capacity,
-        }))
-        tmp.replace(meta_p)  # atomic pointer swap on POSIX
-        if prev:
-            shutil.rmtree(
-                self.dir / f"sharded_bloom.v{prev['version']}",
-                ignore_errors=True,
-            )
-
-    def load_sharded(self, spark):
-        """ShardedBloom or None — resume-side reload. The shard table
-        is re-checkpointed immediately so later saves can drop the
-        on-disk version it was read from."""
-        from memorious_spark.operators.sharded_filter import ShardedBloom
-
-        meta_p = self.dir / "sharded_bloom.json"
-        if not meta_p.exists():
-            return None
-        meta = json.loads(meta_p.read_text())
-        df = spark.read.parquet(
-            str(self.dir / f"sharded_bloom.v{meta['version']}")
-        ).localCheckpoint(eager=True)
-        return ShardedBloom(
-            df=df, shards=int(meta["shards"]), m=int(meta["m"]),
-            k=int(meta["k"]), capacity=int(meta["capacity"]),
-        )
-
     def commit_round(self, rnd: int, stats: dict) -> None:
         """Advance the manifest: round ``rnd`` is durable and complete."""
         manifest = self.read_manifest() or {"rounds": []}

@@ -312,7 +312,7 @@ def test_extract_links_fast_join_equals_urljoin():
         "/p?", "/p#", "/p?q=1", "/p#frag", "//other.host/x",
         "/tab\there", "doc/rel", "../up", "https://abs.example.com/z",
         "HTTPS://abs.example.com/Z", "?onlyquery", "#onlyfrag",
-        "/trailing/", "/:@weird", "/a\\b",
+        "/trailing/", "/:@weird", "/a\\b", "/j3;", "/a;/b;",
     ]
     bases = [
         "https://h0.example.com/doc/1",

@@ -106,10 +106,9 @@ def test_politeness_robots_gate(spark):
 
 # ---- seen-set --------------------------------------------------------------
 
-def test_dedup_new_bloom_path(spark):
+def test_dedup_new_exact(spark):
     cands = spark.range(1000).select(F.col("id").alias("url_hash"))
     seen = spark.range(0, 1000, 2).select(F.col("id").alias("url_hash"))
-    # force the bloom path by lying about size — exactness must hold anyway
     out = dedup_new(cands, seen, seen_count=10_000_000)
     got = sorted(r["url_hash"] for r in out.collect())
     assert got == list(range(1, 1000, 2))
@@ -118,7 +117,7 @@ def test_dedup_new_bloom_path(spark):
 def test_dedup_new_cuckoo_path(spark):
     """Forced cuckoo prefilter == plain anti-join (exactness survives
     the probe), including after incremental insert AND delete — the
-    capability the bloom lacks."""
+    capability a bloom filter lacks."""
     from memorious_spark.operators.cuckoo import (
         build_cuckoo, delete_cuckoo, update_cuckoo,
     )
@@ -162,24 +161,6 @@ def test_dedup_new_cuckoo_path(spark):
     assert filt.contains(hv).mean() < 0.05
 
 
-def test_cuckoo_checkpoint_roundtrip(spark, tmp_path):
-    import numpy as np
-
-    from memorious_spark.operators.cuckoo import build_cuckoo
-    from memorious_spark.plans.storage import RunStore
-
-    seen = spark.range(0, 2000, 2).select(F.col("id").alias("url_hash"))
-    filt = build_cuckoo(seen, "url_hash", expected=4000, n_shards=4)
-    store = RunStore(tmp_path, "ck", "r1")
-    assert store.load_cuckoo() is None
-    store.save_cuckoo(filt)
-    back = store.load_cuckoo()
-    assert back.n_shards == filt.n_shards and back.nb == filt.nb
-    hv = np.arange(0, 2000, dtype=np.uint64)
-    assert (back.contains(hv) == filt.contains(hv)).all()
-    assert back.contains(np.arange(0, 2000, 2, dtype=np.uint64)).all()
-
-
 def test_cuckoo_overfull_fails_loud(spark):
     from memorious_spark.operators.cuckoo import build_cuckoo
 
@@ -204,68 +185,6 @@ def test_cuckoo_negative_hash_routing(spark):
     ).astype("uint64")
     filt = build_cuckoo(df, "url_hash", expected=8000, n_shards=8)
     assert bool(filt.contains(hv).all())  # no false negatives, ever
-
-
-def test_bloom_incremental_update_no_false_negatives(spark):
-    from memorious_spark.operators.seen import build_bloom, update_bloom
-
-    seen0 = spark.range(0, 1000, 2).select(F.col("id").alias("url_hash"))
-    bloom = build_bloom(seen0, "url_hash", expected=10_000)
-    # OR in a later round's additions instead of rebuilding
-    bloom = update_bloom(
-        bloom, spark.range(5000, 5100).select(F.col("id").alias("url_hash"))
-    )
-    cands = (
-        spark.range(1000)
-        .select(F.col("id").alias("url_hash"))
-        .unionByName(spark.range(5000, 5200).select(F.col("id").alias("url_hash")))
-    )
-    seen_all = seen0.unionByName(
-        spark.range(5000, 5100).select(F.col("id").alias("url_hash"))
-    )
-    out = dedup_new(cands, seen_all, seen_count=10_000_000, bloom=bloom)
-    got = sorted(r["url_hash"] for r in out.collect())
-    assert got == list(range(1, 1000, 2)) + list(range(5100, 5200))
-
-
-def test_runner_incremental_bloom_exactness(spark, tmp_path):
-    """Force the runner's incremental-bloom regime (engage threshold 1)
-    and assert the crawl result equals the plain anti-join crawl."""
-    from memorious_spark.plans import runner as runner_mod
-    from memorious_spark.plans.pipeline import CrawlConfig
-    from memorious_spark.plans.runner import CrawlRunner
-    from memorious_spark.plans.storage import RunStore
-    from memorious_spark.sources.corpus import build_corpus, seed_urls
-
-    docs = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.lit("body words").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    corpus = build_corpus(spark, docs, 100).persist()
-    corpus.count()
-    cfg = CrawlConfig(name="bloomcrawl", seeds=tuple(seed_urls(3)))
-
-    def crawl(run_id):
-        store = RunStore(tmp_path, "bloomcrawl", run_id)
-        res = CrawlRunner(spark, cfg, store).run(corpus)
-        rows = store.read_all(spark, "results", res.rounds).select(
-            "url", "emit_seq", "content_hash"
-        ).collect()
-        return res, sorted(map(tuple, rows))
-
-    res_plain, rows_plain = crawl("plain")
-    orig = runner_mod._BLOOM_MIN_ROWS
-    runner_mod._BLOOM_MIN_ROWS = 1
-    try:
-        res_bloom, rows_bloom = crawl("bloom")
-    finally:
-        runner_mod._BLOOM_MIN_ROWS = orig
-    corpus.unpersist()
-    assert rows_bloom == rows_plain
-    assert (res_bloom.pages_fetched, res_bloom.urls_seen) == (
-        res_plain.pages_fetched, res_plain.urls_seen,
-    )
 
 
 # ---- sinks ------------------------------------------------------------------
@@ -700,9 +619,9 @@ def test_checks(spark):
 
 
 def test_ivf_assignment_paths_agree(spark):
-    """Centroids-as-data parity: the Arrow-UDF argmin and the broadcast
-    join + min_by aggregate must assign every vector to the same cell
-    as the literal-Column path (same lowest-cid tie rule)."""
+    """Centroids-as-data parity: the Arrow-UDF argmin must assign every
+    vector to the same cell as the literal-Column path (same lowest-cid
+    tie rule)."""
     import math
 
     rows = [
@@ -725,11 +644,7 @@ def test_ivf_assignment_paths_agree(spark):
             similarity.ivf_assign_udf(cents)(F.col("embedding")).alias("_b"),
         ).collect()
     }
-    join = {
-        r["vec_id"]: r["_b"]
-        for r in similarity.ivf_assign_join(emb, cents).collect()
-    }
-    assert lit == udf == join
+    assert lit == udf
 
 
 def test_pq_encode_hand_math_and_paths_agree(spark):
@@ -866,6 +781,24 @@ def test_knn_ivfpq_full_probe_full_refine_equals_brute(spark):
     assert tight[0]["vec_id"] == 5
 
 
+def test_knn_ivfpq_duplicate_seed_rows_fail_loud(spark):
+    """A duplicated seed id must raise: the seed lookup would keep
+    whichever duplicate row the collect returned last."""
+    import math
+
+    rows = [
+        (i, [math.sin(0.7 * i + j * 0.3) for j in range(8)])
+        for i in range(24)
+    ]
+    rows.append((5, [0.0] * 8))  # vec_id 5 is a coarse seed (spacing=5)
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="duplicate seed rows at ids \\[5\\]"):
+        similarity.knn_ivfpq(
+            emb, rows[5][1], k=3, n_centroids=4, nprobe=1, spacing=5,
+            m=2, n_codes=4, pq_spacing=3, refine=2,
+        )
+
+
 def test_ivf_k256_beyond_literal_codegen(spark):
     """K=256 — far past the literal-expression codegen ceiling
     (_IVF_LITERAL_MAX_K=16): knn_ivf auto-routes assignment through the
@@ -944,68 +877,6 @@ def test_dedup_components_chain_logarithmic(spark):
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)
     assert stats["iterations"] <= 3 * math.log2(n) + 5, stats
-
-
-def test_bloom_persists_across_resume(spark, tmp_path):
-    """Kill AFTER the bloom engaged, resume: the resumed run must
-    reload the committed bitmap (zero build_bloom calls) and still
-    produce exactly the uninterrupted run's results — the false-
-    negative-free contract across the checkpoint boundary."""
-    import dataclasses
-
-    from memorious_spark.plans import runner as runner_mod
-    from memorious_spark.plans.pipeline import CrawlConfig
-    from memorious_spark.plans.runner import CrawlRunner
-    from memorious_spark.plans.storage import RunStore
-    from memorious_spark.sources.corpus import build_corpus, seed_urls
-
-    docs = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.lit("body words").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    corpus = build_corpus(spark, docs, 100).persist()
-    corpus.count()
-    cfg = CrawlConfig(name="bloomres", seeds=tuple(seed_urls(3)))
-
-    orig_min, orig_build = runner_mod._BLOOM_MIN_ROWS, runner_mod.build_bloom
-    builds = []
-
-    def counting_build(*a, **kw):
-        builds.append(1)
-        return orig_build(*a, **kw)
-
-    runner_mod._BLOOM_MIN_ROWS = 1
-    runner_mod.build_bloom = counting_build
-    try:
-        ref_store = RunStore(tmp_path, "bloomres", "full")
-        CrawlRunner(spark, cfg, ref_store).run(corpus)
-
-        store = RunStore(tmp_path, "bloomres", "killed")
-        CrawlRunner(
-            spark, dataclasses.replace(cfg, max_rounds=3), store
-        ).run(corpus)
-        assert (store.dir / "bloom.npz").exists()
-        builds.clear()
-        resumed = CrawlRunner(spark, cfg, store).run(corpus, resume=True)
-        assert resumed.status == "done"
-        # the resume NEVER rebuilt from the seen table
-        assert builds == []
-    finally:
-        runner_mod._BLOOM_MIN_ROWS = orig_min
-        runner_mod.build_bloom = orig_build
-    corpus.unpersist()
-
-    rows = lambda s: sorted(  # noqa: E731
-        map(tuple, s.read_all(spark, "results", 60)
-            .select("url", "emit_seq", "content_hash").collect())
-    )
-    assert rows(store) == rows(ref_store)
-    seen = lambda s: {  # noqa: E731
-        r["key_hash"]
-        for r in s.read_all(spark, "seen", 60).select("key_hash").collect()
-    }
-    assert seen(store) == seen(ref_store)
 
 
 def test_lang_guess_twelve_languages(spark):

@@ -565,3 +565,35 @@ def test_lsh_pair_self_joins_never_broadcast(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan, name
         assert "BroadcastHashJoin" not in plan, name
+
+
+def test_seen_anti_join_reuses_within_round_partitioning(spark):
+    """The crawl's seen step, ``dedup_new(dedup_within_round(c),
+    seen)``: the within-round aggregate hash-partitions the candidates
+    on ``url_hash`` and its output keeps that column, so the anti-join
+    shuffles only the seen side. Two exchanges in all (aggregate +
+    seen distinct); a third would re-shuffle every candidate row each
+    round. AQE off so the plan is the static one."""
+    from memorious_spark.operators.frontier import dedup_within_round
+    from memorious_spark.operators.seen import dedup_new
+
+    cands = spark.range(400).select(
+        F.concat(F.lit("u"), (F.col("id") % 150).cast("string")).alias("url"),
+        (F.col("id") % 150).alias("url_hash"),
+        (F.col("id") % 7).alias("src_emit_seq"),
+        (F.col("id") % 11).cast("int").alias("link_idx"),
+    )
+    seen = spark.range(0, 150, 3).select(F.col("id").alias("url_hash"))
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        deduped = dedup_within_round(cands, ["src_emit_seq", "link_idx"])
+        assert deduped.columns == cands.columns
+        out = dedup_new(deduped, seen)
+        plan = _plan(out)
+        assert plan.count("Exchange") == 2, plan[:3000]
+        assert plan.count("Exchange hashpartitioning(url_hash") == 2, plan[:3000]
+        got = {r["url_hash"] for r in out.collect()}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert got == {h for h in range(150) if h % 3}

@@ -1,24 +1,17 @@
 """Executor-resident sharded seen-filter (operators/sharded_filter.py).
 
-The scale posture under test: filter maintenance must move ZERO filter
-bytes through the driver (the broadcast bloom's bitmap round-trip is
-the driver bottleneck at a 10^10-URL frontier), while keeping the
-exactness contract of ``seen.dedup_new`` — the probe only prunes, the
-final left_anti decides.
+The scale posture under test: filter maintenance moves ZERO filter
+bytes through the driver, while keeping the exactness contract of
+``seen.dedup_new`` — the probe only prunes, the final left_anti
+decides.
 """
-
-import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
 
-import memorious_spark.plans.runner as runner_mod
 from memorious_spark.operators.sharded_filter import (
     build_sharded_bloom, dedup_new_sharded, update_sharded,
 )
-from memorious_spark.plans.pipeline import CrawlConfig, load_yaml
-from memorious_spark.plans.runner import CrawlRunner
-from memorious_spark.plans.storage import RunStore
 
 
 def test_dedup_new_sharded_exactness(spark):
@@ -72,153 +65,6 @@ def test_sharded_zero_false_negatives(spark):
     both = seen.unionByName(add)
     assert dedup_new_sharded(both, both, filt).count() == 0
     filt.df.unpersist()
-
-
-def test_sharded_save_load_roundtrip(spark, tmp_path):
-    """RunStore checkpoint: distributed parquet + pointer JSON; a
-    second save supersedes (and drops) the first version dir; the
-    reloaded filter probes identically."""
-    store = RunStore(tmp_path, "c", "run1")
-    store.dir.mkdir(parents=True, exist_ok=True)
-    seen = spark.range(0, 500, 2).select(F.col("id").alias("url_hash"))
-    filt = build_sharded_bloom(seen, "url_hash", expected=2000, shards=4)
-    store.save_sharded(filt)
-    assert (store.dir / "sharded_bloom.json").exists()
-    assert (store.dir / "sharded_bloom.v1").is_dir()
-
-    loaded = store.load_sharded(spark)
-    assert (loaded.shards, loaded.m, loaded.k, loaded.capacity) == (
-        filt.shards, filt.m, filt.k, filt.capacity,
-    )
-    cands = spark.range(500).select(F.col("id").alias("url_hash"))
-    got = sorted(
-        r["url_hash"] for r in dedup_new_sharded(cands, seen, loaded).collect()
-    )
-    assert got == list(range(1, 500, 2))
-
-    # version rotation: save again, v1 is gone, v2 is live
-    filt2 = update_sharded(
-        loaded, spark.range(9000, 9010).select(F.col("id").alias("url_hash"))
-    )
-    store.save_sharded(filt2)
-    assert not (store.dir / "sharded_bloom.v1").exists()
-    assert (store.dir / "sharded_bloom.v2").is_dir()
-    assert store.load_sharded(spark) is not None
-    filt.df.unpersist()
-    filt2.df.unpersist()
-
-
-def test_yaml_seen_filter_wiring():
-    yml = """
-name: shardedcrawl
-pipeline:
-  init: {method: seed, params: {urls: ["https://h0.example.com/doc/0"]},
-         handle: {pass: fetch}}
-  fetch: {method: fetch, params: {seen_filter: sharded}, handle: {pass: parse}}
-  parse: {method: parse}
-"""
-    cfg = load_yaml(yml)
-    assert cfg.seen_filter == "sharded"
-    with pytest.raises(ValueError, match="seen_filter"):
-        load_yaml(yml.replace("sharded", "redis"))
-
-
-def test_crawl_sharded_matches_plain(spark, tmp_path):
-    """E2e: a crawl under the sharded posture stores exactly the plain
-    run's rows; kill/resume reloads the checkpointed shard table
-    (never rebuilds from the seen scan); the metrics ledger shows
-    filter_driver_bytes == 0 every round (the O(P) claim, as a
-    recorded number)."""
-    from memorious_spark.sources.corpus import build_corpus, seed_urls
-
-    docs = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.lit("body words").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    corpus = build_corpus(spark, docs, 100).persist()
-    corpus.count()
-    cfg = CrawlConfig(name="shardcrawl", seeds=tuple(seed_urls(3)))
-    cfg_sharded = dataclasses.replace(cfg, seen_filter="sharded")
-
-    def rows(store, rounds):
-        return sorted(map(tuple, store.read_all(spark, "results", rounds)
-                          .select("url", "emit_seq", "content_hash").collect()))
-
-    plain_store = RunStore(tmp_path, "shardcrawl", "plain")
-    res_plain = CrawlRunner(spark, cfg, plain_store).run(corpus)
-
-    orig_min = runner_mod._BLOOM_MIN_ROWS
-    orig_build = runner_mod.build_sharded_bloom
-    builds = []
-
-    def counting_build(*a, **kw):
-        builds.append(1)
-        return orig_build(*a, **kw)
-
-    runner_mod._BLOOM_MIN_ROWS = 1
-    runner_mod.build_sharded_bloom = counting_build
-    try:
-        sh_store = RunStore(tmp_path, "shardcrawl", "sharded")
-        res_sh = CrawlRunner(spark, cfg_sharded, sh_store).run(corpus)
-        assert rows(sh_store, res_sh.rounds) == rows(plain_store, res_plain.rounds)
-        assert (res_sh.pages_fetched, res_sh.urls_seen) == (
-            res_plain.pages_fetched, res_plain.urls_seen,
-        )
-        # engages once, plus at most one capacity regrow (the 4×
-        # headroom sizing under the patched-tiny threshold); every
-        # other round maintains incrementally
-        assert 1 <= len(builds) <= 2
-        # the O(P) evidence: zero filter bytes through the driver
-        metrics = sh_store.read_all(spark, "metrics", res_sh.rounds)
-        fdb = metrics.filter(F.col("stage") == "filter_driver_bytes")
-        assert fdb.count() > 0
-        assert fdb.agg(F.max("rows")).first()[0] == 0
-
-        # kill/resume: the checkpoint is reloaded, never rebuilt
-        killed = RunStore(tmp_path, "shardcrawl", "killed")
-        CrawlRunner(
-            spark, dataclasses.replace(cfg_sharded, max_rounds=3), killed
-        ).run(corpus)
-        assert (killed.dir / "sharded_bloom.json").exists()
-        builds.clear()
-        resumed = CrawlRunner(spark, cfg_sharded, killed).run(
-            corpus, resume=True
-        )
-        assert resumed.status == "done"
-        assert builds == []  # resume loaded the parquet checkpoint
-        assert rows(killed, 60) == rows(plain_store, res_plain.rounds)
-    finally:
-        runner_mod._BLOOM_MIN_ROWS = orig_min
-        runner_mod.build_sharded_bloom = orig_build
-    corpus.unpersist()
-
-
-def test_bloom_mode_reports_driver_bytes(spark, tmp_path):
-    """Contrast row: under the (default) broadcast-bloom posture the
-    same ledger reports the bitmap-sized driver transfer — the number
-    the sharded posture exists to zero out."""
-    from memorious_spark.sources.corpus import build_corpus, seed_urls
-
-    docs = spark.range(60).select(
-        F.col("id").alias("doc_id"),
-        F.lit("body words").alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    corpus = build_corpus(spark, docs, 60).persist()
-    corpus.count()
-    cfg = CrawlConfig(name="bloombytes", seeds=tuple(seed_urls(2)))
-    orig_min = runner_mod._BLOOM_MIN_ROWS
-    runner_mod._BLOOM_MIN_ROWS = 1
-    try:
-        store = RunStore(tmp_path, "bloombytes", "r1")
-        res = CrawlRunner(spark, cfg, store).run(corpus)
-        metrics = store.read_all(spark, "metrics", res.rounds)
-        fdb = metrics.filter(F.col("stage") == "filter_driver_bytes")
-        assert fdb.agg(F.max("rows")).first()[0] > 0
-    finally:
-        runner_mod._BLOOM_MIN_ROWS = orig_min
-    corpus.unpersist()
 
 
 # ---- executor-resident sharded cuckoo (the deletable twin) -------------
