@@ -20,7 +20,7 @@ Reference semantics reproduced here (see /root/reference):
   seen set (parse.py:21-69) and ``urljoin`` base resolution
   (parse.py:45).
 - ``collapse_spaces`` = whitespace-run collapse + strip, applied to
-  link titles and meta values (parse.py:64-66,83-86).
+  the page title and meta values (parse.py:83-86).
 
 No state, no I/O, no wall clock: every function is deterministic in
 its arguments, which is what lets it run unchanged inside an Arrow
@@ -247,15 +247,16 @@ def extract_links(
     root: Element | None,
     base_url: str,
     include_paths: list[str] | None = None,
-    link_title_from_text: bool = False,
-) -> list[tuple[str, str | None, int]]:
-    """Extract outbound links: ``[(absolute_url, link_title, idx), ...]``.
+) -> list[str]:
+    """Extract outbound links as absolute URLs in emit order.
 
     Faithful to memorious/operations/parse.py:21-69: URL_TAGS scan
     order, per-page first-wins dedup on the joined absolute URL,
-    urljoin base resolution, skip empty attrs; ``idx`` is the emit
-    position (0-based) and is the within-page ordering key for the
-    deterministic crawl-order contract (SURVEY.md §4.3).
+    urljoin base resolution, skip empty attrs. A URL's list position
+    is its emit index, the within-page ordering key for the
+    deterministic crawl-order contract (SURVEY.md §4.3). The
+    reference's optional link titles are not extracted: no table
+    stores them.
     """
     if root is None:
         return []
@@ -278,8 +279,7 @@ def extract_links(
     except ValueError:
         pass
     seen: set[str] = set()
-    out: list[tuple[str, str | None, int]] = []
-    idx = 0
+    out: list[str] = []
     for path, attr in URL_TAGS:
         for r in roots:
             for el in _findall(r, path):
@@ -303,13 +303,7 @@ def extract_links(
                 if not url or url in seen:
                     continue
                 seen.add(url)
-                title = None
-                if link_title_from_text:
-                    title = collapse_spaces(_text_content(el)) or collapse_spaces(
-                        el.get("title")
-                    )
-                out.append((url, title, idx))
-                idx += 1
+                out.append(url)
     return out
 
 

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from memorious_spark.operators.seen import EXPIRE_QUIRK_SECONDS
+from memorious_spark.operators.seen import expiry_stamp, unexpired
 
 __all__ = [
     "HTTP_CACHE_SCHEMA",
@@ -74,11 +74,7 @@ def latest_cache(cache: DataFrame, now_ts: str | None = None) -> DataFrame:
     """Resolve the append-only cache to one live row per url: drop
     expired entries, keep the newest ``(created_at, run_id)`` — the
     read-side of what an Iceberg MERGE would maintain in place."""
-    if now_ts is not None:
-        cache = cache.filter(
-            F.col("expires_at").isNull()
-            | (F.col("expires_at") > F.to_timestamp(F.lit(now_ts)))
-        )
+    cache = unexpired(cache, now_ts)
     w = Window.partitionBy("url_hash").orderBy(
         F.col("created_at").desc(), F.col("run_id").desc()
     )
@@ -147,12 +143,6 @@ def cache_entries(
     """Cache rows for this round's ok responses (the reference caches
     only ``self.ok`` bodies, http.py:199-201). Replayed rows are not
     re-written — their live entry is already current."""
-    created = F.to_timestamp(F.lit(now_ts))
-    expires = (
-        created + F.expr(f"INTERVAL {expire_days * EXPIRE_QUIRK_SECONDS} SECONDS")
-        if expire_days
-        else F.lit(None).cast("timestamp")
-    )
     rows = parsed.filter(
         F.col("_emit") & F.col("ok") & ~F.coalesce(F.col("replayed"), F.lit(False))
     )
@@ -166,8 +156,7 @@ def cache_entries(
         "content_hash",
         F.col("retrieved_at"),
         F.lit(crawler_run_id).alias("run_id"),
-        created.alias("created_at"),
-        expires.alias("expires_at"),
+        *expiry_stamp(now_ts, expire_days),
     )
 
 
@@ -179,12 +168,7 @@ def skip_unchanged(
     (context.py:127-148 test; criteria shape per aleph.py:63-66)."""
     if inc_tags is None:
         return stored
-    if now_ts is not None:
-        inc_tags = inc_tags.filter(
-            F.col("expires_at").isNull()
-            | (F.col("expires_at") > F.to_timestamp(F.lit(now_ts)))
-        )
-    keys = inc_tags.select("url_hash", "content_hash").distinct()
+    keys = unexpired(inc_tags, now_ts).select("url_hash", "content_hash").distinct()
     return stored.join(
         keys.hint("shuffle_hash"), ["url_hash", "content_hash"], "left_anti"
     )
@@ -198,16 +182,9 @@ def inc_tag_entries(
 ) -> DataFrame:
     """The set half of skip_incremental's test-and-set (context.py:
     146-147): tag every row actually stored this round."""
-    created = F.to_timestamp(F.lit(now_ts))
-    expires = (
-        created + F.expr(f"INTERVAL {expire_days * EXPIRE_QUIRK_SECONDS} SECONDS")
-        if expire_days
-        else F.lit(None).cast("timestamp")
-    )
     return stored.select(
         "url_hash",
         "content_hash",
         F.lit(crawler_run_id).alias("run_id"),
-        created.alias("created_at"),
-        expires.alias("expires_at"),
+        *expiry_stamp(now_ts, expire_days),
     )

@@ -1,4 +1,4 @@
-"""Sharded cuckoo filter — the deletable alternative to a URL-seen
+"""Cuckoo filter kernel — the deletable alternative to a URL-seen
 bloom filter.
 
 BASELINE.json's north rule names "a partitioned bloom/cuckoo URL-seen
@@ -13,16 +13,17 @@ the prefilter's pruning decays toward useless as the expired fraction
 grows. A cuckoo filter supports DELETE: expire a tag, remove its
 fingerprint, and the prefilter stays tight for the life of the crawl.
 
+This module is the per-shard-table numpy kernel. The filter itself is
+executor-resident: :class:`~memorious_spark.operators.sharded_filter.
+ShardedCuckoo` keeps one ``(shard, tbl)`` row per shard and runs
+insert/delete/probe as cogrouped Arrow jobs over these functions.
+
 Design (10^10-key posture):
 
-- **Sharded by ``hash % n_shards``**, not one monolithic table: cuckoo
-  tables don't merge (inserting is stateful — two partials can't be
-  OR'd like bloom bitmaps), so the distributed build routes each key
-  to its shard's partition (one shuffle) and builds every shard
-  INDEPENDENTLY in one vectorized pass. At 10^10 keys the shard map is
-  also the serve-time partitioning: a cluster deployment pins shard i
-  next to candidate partition i and probes without moving the filter;
-  the sandbox broadcasts the shard dict.
+- **Sharded by ``hash & (n_shards - 1)``**, not one monolithic table:
+  cuckoo tables don't merge (inserting is stateful — two partials
+  can't be OR'd like bloom bitmaps), so every operation routes each
+  key to its shard's task and works on that shard's table alone.
 - **4-way buckets, 16-bit fingerprints** (Fan et al., "Cuckoo Filter:
   Practically Better Than Bloom", CoNLL 2014): ~2 bytes/key at 95%
   load, false-positive rate ≈ 2·4/2^16 ≈ 1.2e-4 — an order tighter
@@ -38,30 +39,28 @@ Design (10^10-key posture):
   dropped insert would be a false NEGATIVE at probe time, the one
   hazard the dedup contract can't absorb (a key wrongly "unseen"
   re-crawls its URL; wrongly "seen" is caught by the exact anti-join).
-- **Probe/delete are pure numpy** over the broadcast shards — no
-  per-row Python anywhere on the hot path.
+- **Probe is pure numpy** (8 slot comparisons per key).
 
-The filter is a PREFILTER: ``dedup_new(..., cuckoo=...)`` folds its
-"maybe seen" flag into the exact anti-join's condition, so its false
-positives cost a hash lookup, never correctness. The crawl runner does
-not use it (seen.py explains why).
+``build_cuckoo`` / ``delete_cuckoo`` and ``seen.dedup_new(...,
+cuckoo=)`` are the entry points ``__spark_entry__.py`` imports; they
+are thin adapters over the sharded filter. The filter is a PREFILTER:
+the probe's "maybe seen" flag folds into the exact anti-join's
+condition, so its false positives cost a hash lookup, never
+correctness. The crawl runner does not use it (seen.py explains why).
 """
 
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-__all__ = [
-    "CuckooFilter",
-    "build_cuckoo",
-    "update_cuckoo",
-    "delete_cuckoo",
-    "cuckoo_maybe_seen_udf",
-]
+if TYPE_CHECKING:
+    from memorious_spark.operators.sharded_filter import ShardedCuckoo
+
+__all__ = ["build_cuckoo", "delete_cuckoo"]
 
 _BUCKET = 4  # slots per bucket
 _FP_MULT = np.uint64(0x5BD1E995)  # fp → partner-bucket offset hash
@@ -91,11 +90,8 @@ def _buckets(hv: np.ndarray, fp: np.ndarray, nb: int):
     """The two candidate buckets. ``nb`` is a power of two so partner
     derivation is an XOR mask — the standard trick that makes
     ``partner(partner(b)) == b`` hold, which eviction relies on."""
-    mask = np.uint64(nb - 1)
-    b1 = (hv & mask).astype(np.int64)
-    step = ((fp.astype(np.uint64) * _FP_MULT) & _MASK64) & mask
-    b2 = (b1.astype(np.uint64) ^ step).astype(np.int64)
-    return b1, b2
+    b1 = (hv & np.uint64(nb - 1)).astype(np.int64)
+    return b1, _partner(b1, fp, nb)
 
 
 def _partner(b: np.ndarray, fp: np.ndarray, nb: int) -> np.ndarray:
@@ -175,74 +171,6 @@ def _insert_batch(table: np.ndarray, hv: np.ndarray) -> None:
             )
 
 
-class CuckooFilter:
-    """``shards[s]`` is an (nb, 4) uint16 table holding the keys with
-    ``hash % n_shards == s``. Pickles cleanly for broadcast."""
-
-    def __init__(self, n_shards: int, nb: int):
-        self.n_shards = n_shards
-        self.nb = nb
-        self.shards = {
-            s: np.zeros((nb, _BUCKET), dtype=np.uint16)
-            for s in range(n_shards)
-        }
-
-    def _route(self, hv: np.ndarray) -> np.ndarray:
-        return (hv % np.uint64(self.n_shards)).astype(np.int64)
-
-    def insert(self, hv: np.ndarray) -> None:
-        hv = hv.astype(np.uint64, copy=False)
-        sid = self._route(hv)
-        for s in np.unique(sid):
-            _insert_batch(self.shards[int(s)], hv[sid == s])
-
-    def contains(self, hv: np.ndarray) -> np.ndarray:
-        """Vectorized membership: 8 slot comparisons, no Python loop
-        over items."""
-        hv = hv.astype(np.uint64, copy=False)
-        out = np.zeros(len(hv), dtype=bool)
-        sid = self._route(hv)
-        for s in np.unique(sid):
-            m = sid == s
-            h = hv[m]
-            t = self.shards[int(s)]
-            fp = _fingerprint(h)
-            b1, b2 = _buckets(h, fp, self.nb)
-            hit = (t[b1] == fp[:, None]).any(axis=1)
-            hit |= (t[b2] == fp[:, None]).any(axis=1)
-            out[m] = hit
-        return out
-
-    def delete(self, hv: np.ndarray) -> int:
-        """Remove one stored copy of each hash's fingerprint; returns
-        how many were found. Deleting a never-inserted key is a no-op
-        (counted in the shortfall) — the caller decides whether that's
-        an error. Grouped by (bucket) so concurrent same-bucket
-        deletes can't zero one slot twice."""
-        hv = np.unique(hv.astype(np.uint64, copy=False))
-        removed = 0
-        sid = self._route(hv)
-        for s in np.unique(sid):
-            t = self.shards[int(s)]
-            h = hv[sid == s]
-            fp = _fingerprint(h)
-            b1, b2 = _buckets(h, fp, self.nb)
-            # per-item (cheap: deletes are expiry batches, and each
-            # np op here is O(BUCKET)); still no hashing re-done
-            for j in range(len(h)):
-                for b in (b1[j], b2[j]):
-                    slots = np.flatnonzero(t[b] == fp[j])
-                    if len(slots):
-                        t[b, slots[0]] = 0
-                        removed += 1
-                        break
-        return removed
-
-    def fill_ratio(self) -> float:
-        used = sum(int((t != 0).sum()) for t in self.shards.values())
-        return used / (self.n_shards * self.nb * _BUCKET)
-
-
 def _size_for(expected: int, n_shards: int, load: float) -> int:
     per_shard = expected / max(1, n_shards)
     # Poisson skew headroom: keys route by hash, so a shard draws
@@ -253,101 +181,62 @@ def _size_for(expected: int, n_shards: int, load: float) -> int:
     return _next_pow2(math.ceil(per_shard / _BUCKET / load))
 
 
+
+
+def _delete_batch(table: np.ndarray, hv: np.ndarray) -> int:
+    """Remove one stored copy of each distinct hash's fingerprint from
+    one shard table; returns how many were found. Deleting a
+    never-inserted key is a no-op (counted in the shortfall) — the
+    caller decides whether that's an error. Per item (deletes are
+    expiry batches, each step O(BUCKET)) so two same-bucket deletes
+    can't zero one slot twice."""
+    hv = np.unique(hv)
+    fp = _fingerprint(hv)
+    b1, b2 = _buckets(hv, fp, table.shape[0])
+    removed = 0
+    for j in range(len(hv)):
+        for b in (b1[j], b2[j]):
+            slots = np.flatnonzero(table[b] == fp[j])
+            if len(slots):
+                table[b, slots[0]] = 0
+                removed += 1
+                break
+    return removed
+
+
+def _contains(table: np.ndarray, hv: np.ndarray) -> np.ndarray:
+    """Vectorized membership in one shard table: 8 slot comparisons,
+    no Python loop over items."""
+    fp = _fingerprint(hv)
+    b1, b2 = _buckets(hv, fp, table.shape[0])
+    hit = (table[b1] == fp[:, None]).any(axis=1)
+    hit |= (table[b2] == fp[:, None]).any(axis=1)
+    return hit
+
+
 def build_cuckoo(
     df: DataFrame,
     key: str,
     expected: int,
     n_shards: int | None = None,
     load: float = _DEFAULT_LOAD,
-) -> CuckooFilter:
-    """Distributed sharded build: route each key hash to its shard's
-    task (ONE shuffle on ``hash % n_shards``), build every shard
-    vectorized and independently, collect the (small) shard tables.
-    ``n_shards`` defaults to the session's shuffle parallelism — at
-    cluster scale set it so one shard ≈ one task's memory budget."""
-    import pyarrow as pa
+) -> ShardedCuckoo:
+    """Build a :class:`~memorious_spark.operators.sharded_filter.
+    ShardedCuckoo` over ``df[key]`` (``n_shards`` rounds up to a power
+    of two; default: the session's shuffle parallelism)."""
+    from memorious_spark.operators.sharded_filter import build_sharded_cuckoo
 
-    spark = df.sparkSession
-    if n_shards is None:
-        n_shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # power of two, so the JVM-side shard id (low-bit mask of the
-    # SIGNED hash) equals the numpy side's ``uint64 % n_shards`` —
-    # two's complement keeps the low bits identical
-    n_shards = _next_pow2(n_shards)
-    nb = _size_for(expected, n_shards, load)
-
-    sid = F.expr(f"int({key} & {n_shards - 1})")
-    routed = (
-        df.select(F.col(key), sid.alias("_sid"))
-        .repartition(n_shards, "_sid")
-    )
-
-    def part(batches):  # pragma: no cover (executor)
-        tables: dict[int, np.ndarray] = {}
-        buf: dict[int, list[np.ndarray]] = {}
-        for batch in batches:
-            col = batch.column(0).drop_null()
-            ss = batch.column(1).to_numpy(zero_copy_only=False)
-            hv = col.to_numpy(zero_copy_only=False).astype(np.uint64)
-            for s in np.unique(ss):
-                buf.setdefault(int(s), []).append(hv[ss == s])
-        for s, parts in buf.items():
-            t = tables.setdefault(s, np.zeros((nb, _BUCKET), np.uint16))
-            _insert_batch(t, np.unique(np.concatenate(parts)))
-        arrs = [
-            pa.array([int(s) for s in tables], type=pa.int32()),
-            pa.array([t.tobytes() for t in tables.values()], pa.binary()),
-        ]
-        yield pa.RecordBatch.from_arrays(arrs, names=["sid", "tbl"])
-
-    rows = routed.mapInArrow(part, "sid int, tbl binary").collect()
-    filt = CuckooFilter(n_shards, nb)
-    for r in rows:
-        filt.shards[r["sid"]] = np.frombuffer(
-            r["tbl"], dtype=np.uint16
-        ).reshape(nb, _BUCKET).copy()
-    return filt
+    return build_sharded_cuckoo(df, key, expected, shards=n_shards, load=load)
 
 
-def _collect_hashes(df: DataFrame, key: str) -> np.ndarray:
-    rows = df.select(key).where(F.col(key).isNotNull()).collect()
-    return np.array([r[0] for r in rows], dtype=np.int64).astype(np.uint64)
+def delete_cuckoo(
+    filt: ShardedCuckoo, df: DataFrame, key: str = "url_hash"
+) -> int:
+    """Remove expired tags' hashes from ``filt`` IN PLACE (its ``df``
+    is replaced) — the operation the bloom cannot do. Returns the
+    number of fingerprints actually removed."""
+    from memorious_spark.operators.sharded_filter import delete_sharded_cuckoo
 
-
-def update_cuckoo(filt: CuckooFilter, df: DataFrame, key: str = "url_hash"):
-    """Incremental insert of a round's NEW hashes. Per-round deltas are small relative to the
-    filter, so they collect to the driver — the build path stays the
-    distributed one.
-
-    SMALL-CRAWL PATH: this keeps the filter driver-resident and moves
-    every round's raw delta hashes through the driver — fine at the
-    scales where a driver filter fits at all. At north-rule scale
-    (10^10 URLs) use the executor-resident twin
-    (:mod:`memorious_spark.operators.sharded_filter`,
-    ``update_sharded_cuckoo``): cogrouped updates, O(P) driver bytes."""
-    hv = _collect_hashes(df, key)
-    if len(hv):
-        filt.insert(hv)
-    return filt
-
-
-def delete_cuckoo(filt: CuckooFilter, df: DataFrame, key: str = "url_hash") -> int:
-    """Remove expired tags' hashes — the operation the bloom cannot
-    do. Returns the number of fingerprints actually removed."""
-    hv = _collect_hashes(df, key)
-    return filt.delete(hv) if len(hv) else 0
-
-
-def cuckoo_maybe_seen_udf(spark, filt: CuckooFilter):
-    """Arrow-batched 'maybe seen' probe over the broadcast shard dict
-    — false positives land in the exact anti-join, false negatives
-    don't exist for inserted keys."""
-    bc = spark.sparkContext.broadcast(filt)
-
-    @F.pandas_udf("boolean")
-    def _maybe_seen(h: pd.Series) -> pd.Series:  # pragma: no cover
-        f = bc.value
-        hv = h.to_numpy(dtype=np.uint64, na_value=0)
-        return pd.Series(f.contains(hv) & h.notna().to_numpy())
-
-    return _maybe_seen
+    new, removed = delete_sharded_cuckoo(filt, df, key)
+    filt.df = new.df
+    return removed

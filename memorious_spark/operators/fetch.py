@@ -25,9 +25,9 @@ real deployment the corpus is bucketed by url so even that path
 avoids re-shuffling the 100 TB side — demonstrated, not asserted:
 test_plans.py::test_bucketed_corpus_join_never_shuffles_corpus shows
 the bucketed-table join with ZERO exchange above the corpus scan.
-``MEMSPARK_FORCE_SHUFFLE_JOIN=1``
-forces this fallback regardless of size so tests can lock its plan
-and verify crawl equality (test_plans.py / test_crawl_e2e.py).
+``broadcast_frontier=False`` forces this fallback regardless of size
+(test_plans.py locks its plan; test_crawl_e2e.py lowers
+``_BROADCAST_MAX_ROWS`` to verify crawl equality).
 
 Outcome taxonomy (reference-faithful):
 - ``ok`` = status < 400, exactly requests' ``Response.ok`` used by the
@@ -52,8 +52,6 @@ the main join and redirect resolution join normalized keys against it.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -123,9 +121,7 @@ def fetch_stage(
     so its output is the single source of truth for the round's fetch
     outcomes (one corpus scan per round).
     """
-    if os.environ.get("MEMSPARK_FORCE_SHUFFLE_JOIN") == "1":
-        broadcast_frontier = False
-    elif broadcast_frontier is None:
+    if broadcast_frontier is None:
         broadcast_frontier = (
             selected_count is not None and selected_count <= _BROADCAST_MAX_ROWS
         )

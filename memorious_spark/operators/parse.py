@@ -34,7 +34,7 @@ __all__ = ["ParseConfig", "parse_stage", "extract_links_df"]
 class ParseConfig:
     """Driver-side parse parameters (the YAML ``params`` of a parse
     stage: meta/meta_date xpaths parse.py:72-92, schema+properties
-    parse.py:95-102, include_paths/link titles parse.py:36-44)."""
+    parse.py:95-102, include_paths parse.py:36-44)."""
 
     meta: dict[str, list[str]] = field(default_factory=dict)
     # keys of `meta` that came from the YAML meta_date block — their
@@ -42,7 +42,6 @@ class ParseConfig:
     meta_dates: tuple[str, ...] = ()
     properties: dict[str, str] = field(default_factory=dict)
     include_paths: tuple[str, ...] | None = None
-    link_titles: bool = True
     schema: str | None = None
     # emit <loc> URLs of sitemap XML responses as frontier links
     # (sitemaps.org protocol; functions/htmlkit.parse_sitemap). The
@@ -50,14 +49,13 @@ class ParseConfig:
     sitemaps: bool = False
 
 
-# links come back as PARALLEL FLAT ARRAYS (url[i], title[i]); the
-# array<struct> shape is assembled JVM-side in extract_links_df —
-# python-object→Arrow conversion of list-of-dict columns measured ~10×
-# slower than flat string arrays.
+# links come back as a FLAT string array (the position is the emit
+# index); extract_links_df explodes it JVM-side — python-object→Arrow
+# conversion of list-of-dict columns measured ~10× slower than flat
+# string arrays.
 _PARSE_OUT_FIELDS = (
     "title string, text string, meta map<string,string>, "
-    "properties map<string,array<string>>, "
-    "link_urls array<string>, link_titles array<string>"
+    "properties map<string,array<string>>, link_urls array<string>"
 )
 
 
@@ -87,7 +85,6 @@ def parse_stage(
     date_keys = tuple(config.meta_dates)
     properties = dict(config.properties)
     include = list(config.include_paths) if config.include_paths else None
-    link_titles = config.link_titles
     clean_list = list(clean_paths) if clean_paths else None
     sitemaps = config.sitemaps
 
@@ -105,7 +102,7 @@ def parse_stage(
 
         for pdf in batches:
             titles, texts, metas, props = [], [], [], []
-            lurls, ltitles = [], []
+            lurls = []
             cleans, chashes = [], []
             for u, body, ct in zip(
                 pdf["final_url"], pdf["html"], pdf["content_type_raw"]
@@ -130,18 +127,12 @@ def parse_stage(
                     if properties
                     else None
                 )
-                found = htmlkit.extract_links(root, u, include, link_titles)
-                page_urls = [lu for lu, _t, _i in found]
-                page_titles = [lt for _u, lt, _i in found]
+                page_urls = htmlkit.extract_links(root, u, include)
                 if sitemaps and mime in _XML_MIMES:
                     # sitemap face: XML responses carry no <a> anchors,
-                    # links come from <loc> instead — same flat-array
-                    # shape, titles null
-                    locs = htmlkit.parse_sitemap(text)
-                    page_urls.extend(locs)
-                    page_titles.extend([None] * len(locs))
+                    # links come from <loc> instead — same flat array
+                    page_urls.extend(htmlkit.parse_sitemap(text))
                 lurls.append(page_urls)
-                ltitles.append(page_titles if link_titles else None)
                 if clean_list:
                     # LAST: clean_tree mutates the DOM the extractors
                     # above already consumed; hash = sha1 of the
@@ -159,7 +150,6 @@ def parse_stage(
             out["meta"] = metas
             out["properties"] = props
             out["link_urls"] = lurls
-            out["link_titles"] = ltitles
             if clean_list:
                 out["clean_text"] = cleans
                 out["clean_hash"] = chashes
@@ -206,10 +196,8 @@ def extract_links_df(parsed: DataFrame) -> DataFrame:
         F.col("emit_seq").alias("src_emit_seq"),
         (F.col("depth") + 1).alias("depth"),
         F.posexplode("link_urls").alias("link_idx", "url"),
-        F.col("link_titles"),
     ).select(
         "url",
-        F.col("link_titles").getItem(F.col("link_idx")).alias("link_title"),
         F.col("link_idx").cast("int"),
         "src_url",
         "src_emit_seq",

@@ -13,50 +13,57 @@ per frontier round — the scalability pivot of this graft.
   (``spark.sql.optimizer.runtime.bloomFilter.enabled``, set in
   session.py) may prune that shuffle on its own.
 - There is no explicit prefilter on the crawl path. A probe's flag
-  folds into the anti-join condition (:func:`_anti_join_maybe`), so
-  every candidate and every seen key is still shuffled and the probe
-  only adds work; measured against the plain anti-join at local[4]
-  with 4M and 12M seen keys, the broadcast and sharded blooms were
-  both slower. The cuckoo prefilter (``dedup_new(..., cuckoo=)``) and
-  the sharded filters (operators/sharded_filter.py) remain as
-  standalone operators.
-- Expiry (`expires_at`) reproduces the reference's ``expire × 84600``
-  quirk (sic, not 86400 — memorious/logic/crawler.py:50).
+  folds into the anti-join condition, so every candidate and every
+  seen key is still shuffled and the probe only adds work; measured
+  against the plain anti-join at local[4] with 4M and 12M seen keys,
+  the broadcast and sharded blooms were both slower. The sharded
+  filters (operators/sharded_filter.py) remain as standalone
+  operators; ``dedup_new(..., cuckoo=)`` routes to the cuckoo one.
+- Expiry is stamped and filtered in one place (:func:`expiry_stamp`,
+  :func:`unexpired`) for the seen, http-cache, inc-tag and tags
+  tables. It reproduces the reference's ``expire × 84600`` quirk
+  (sic, not 86400 — memorious/logic/crawler.py:50).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["EXPIRE_QUIRK_SECONDS", "dedup_new", "seen_entries"]
+from memorious_spark.operators.sharded_filter import dedup_new_sharded_cuckoo
+
+__all__ = [
+    "EXPIRE_QUIRK_SECONDS", "dedup_new", "expiry_stamp", "seen_entries",
+    "unexpired",
+]
 
 # The reference multiplies `expire` (days) by 84600 — a long-standing
 # off-by-1800 quirk we reproduce for parity (memorious/logic/crawler.py:50).
 EXPIRE_QUIRK_SECONDS = 84600
 
 
-def _anti_join_maybe(
-    flagged: DataFrame, seen_keys: DataFrame, key: str
-) -> DataFrame:
-    """One-pass exactness backstop for a probabilistic probe: the
-    probe's ``_maybe_seen`` flag folds into the anti-join CONDITION —
-    a row is dropped only when its key matches ``seen_keys`` AND the
-    probe flagged it. ``_maybe_seen = false`` rows never match, so
-    they are kept without ever entering the hash lookup.
+def expiry_stamp(
+    now_ts: str, expire_days: int | None
+) -> tuple[Column, Column]:
+    """``created_at`` / ``expires_at`` columns for rows written at
+    ``now_ts``: they expire ``expire_days × 84600`` seconds later (the
+    reference quirk), or never (NULL) when ``expire_days`` is unset."""
+    created = F.to_timestamp(F.lit(now_ts))
+    expires = (
+        created + F.expr(f"INTERVAL {expire_days * EXPIRE_QUIRK_SECONDS} SECONDS")
+        if expire_days
+        else F.lit(None).cast("timestamp")
+    )
+    return created.alias("created_at"), expires.alias("expires_at")
 
-    vs the former split-and-union (``filter(~maybe) ∪
-    (filter(maybe) anti-join seen)``): both branches re-executed the
-    whole probe subtree — the Python probe UDF / cogrouped Arrow probe
-    ran TWICE per call. One anti-join evaluates it once (guide §2.4:
-    duplicated subtrees are removable shuffles/scans)."""
-    sk = seen_keys.select(F.col(key).alias("_seen_key"))
-    return (
-        flagged.join(
-            sk.hint("shuffle_hash"),
-            (F.col(key) == F.col("_seen_key")) & F.col("_maybe_seen"),
-            "left_anti",
-        )
-        .drop("_maybe_seen")
+
+def unexpired(df: DataFrame, now_ts: str | None) -> DataFrame:
+    """Rows of ``df`` still live at ``now_ts`` (``expires_at`` NULL or
+    later); every row when ``now_ts`` is None."""
+    if now_ts is None:
+        return df
+    return df.filter(
+        F.col("expires_at").isNull()
+        | (F.col("expires_at") > F.to_timestamp(F.lit(now_ts)))
     )
 
 
@@ -72,21 +79,16 @@ def dedup_new(
     Exactness is guaranteed by the ``left_anti`` join. ``seen_count``
     is accepted for callers that track it and no longer affects the
     plan. ``cuckoo`` — a
-    :class:`~memorious_spark.operators.cuckoo.CuckooFilter` covering
-    every live hash in ``seen`` — adds a probe whose flag gates the
-    anti-join (see cuckoo.py).
+    :class:`~memorious_spark.operators.sharded_filter.ShardedCuckoo`
+    covering every live hash in ``seen`` — adds its shard-local probe,
+    whose flag gates the anti-join
+    (:func:`~memorious_spark.operators.sharded_filter.dedup_new_sharded_cuckoo`).
     """
     if seen is None:
         return candidates
-    seen_keys = seen.select(key).distinct()
     if cuckoo is not None:
-        from memorious_spark.operators.cuckoo import cuckoo_maybe_seen_udf
-
-        maybe_seen = cuckoo_maybe_seen_udf(candidates.sparkSession, cuckoo)
-        return _anti_join_maybe(
-            candidates.withColumn("_maybe_seen", maybe_seen(F.col(key))),
-            seen_keys, key,
-        )
+        return dedup_new_sharded_cuckoo(candidates, seen, cuckoo, key)
+    seen_keys = seen.select(key).distinct()
     # SHUFFLE_HASH: candidates arrive already hash-partitioned by
     # url_hash (the within-round dedup aggregate), so only the seen
     # side shuffles — parallel — where a broadcast would serialize the
@@ -109,18 +111,11 @@ def seen_entries(
     ``value`` names a column to keep as the tag payload (the reference
     stores JSON values, memorious/logic/context.py:114-117; we keep
     the normalized URL for link tags — optional at scale)."""
-    created = F.to_timestamp(F.lit(now_ts))
-    expires = (
-        created + F.expr(f"INTERVAL {expire_days * EXPIRE_QUIRK_SECONDS} SECONDS")
-        if expire_days
-        else F.lit(None).cast("timestamp")
-    )
     return df.select(
         F.col(key).alias("key_hash"),
         F.lit(crawler).alias("crawler"),
         F.lit(run_id).alias("run_id"),
         F.lit(kind).alias("kind"),
         (F.col(value) if value else F.lit(None).cast("string")).alias("value"),
-        created.alias("created_at"),
-        expires.alias("expires_at"),
+        *expiry_stamp(now_ts, expire_days),
     )

@@ -1,32 +1,36 @@
-"""Executor-resident sharded Bloom seen-filter.
+"""Executor-resident sharded seen-filters: a bloom and a deletable
+cuckoo.
 
-The driver cuckoo (:mod:`memorious_spark.operators.cuckoo`) keeps the
-filter ON THE DRIVER: its shard dict is built/updated by collecting
-state to the driver and re-broadcast for every probe. At
-the north-rule scale (10^10-URL frontier) that is ~12-20 GB of
-driver-resident filter plus an O(new URLs) or O(bitmap) driver
-transfer per round — the driver becomes the memory and bandwidth
-bottleneck of exactly the stage the filter exists to scale.
+Each filter lives WHERE THE DATA IS: a DataFrame of one
+``(shard int, <table> binary)`` row per non-empty shard, kept on
+executors in localCheckpoint storage (an absent shard reads as
+empty). At the north-rule scale (10^10-URL frontier) a driver-resident
+filter would be ~12-20 GB of driver memory plus an O(new URLs) driver
+transfer per round; here every operation is a cogrouped Arrow job
+that moves ZERO filter bytes through the driver:
 
-This module keeps the filter WHERE THE DATA IS: a DataFrame of
-``(shard int, bm binary)`` rows living on executors (localCheckpoint
-storage), with ``shard = pmod(url_hash, S)``. All three operations are
-cogrouped Arrow jobs that move ZERO filter bytes through the driver:
-
-- **update**: cogroup(filter-by-shard, new-hashes-by-shard) → each
-  task ORs its shard's new hashes into its shard's bitmap. Driver
-  traffic is task metadata — O(P), independent of how many URLs the
-  round discovered.
+- **update** (bloom OR-in; cuckoo insert and delete):
+  cogroup(filter-by-shard, hashes-by-shard) → each task rewrites its
+  ONE shard table → the new table is eagerly checkpointed and the
+  superseded one released (:func:`_cogroup_update`). Driver traffic
+  is task metadata — O(P), independent of how many URLs the round
+  discovered.
 - **probe**: cogroup(candidates-by-shard, filter-by-shard) → each
-  task probes its candidates against the ONE bitmap it owns. Costs
-  one shuffle of the candidates on the shard key (the broadcast probe
-  is shuffle-free, but only while the whole bitmap still fits in — and
-  is re-shipped through — driver memory; past that regime this shuffle
-  IS the scalable shape).
+  task flags its candidates against the table it owns
+  (:func:`_probe_anti_join`). Costs one shuffle of the candidates on
+  the shard key — the scalable shape once the filter no longer fits
+  in (and is re-shipped through) driver memory.
 - **exactness**: identical contract to :func:`seen.dedup_new` — the
   probe only prunes; every ``maybe_seen`` candidate goes through the
   exact ``left_anti`` join, so a false positive is kept and a wrongly
   dropped URL is impossible.
+
+Routing: the bloom shards by ``pmod(url_hash, S)``; the cuckoo by the
+low-bit mask ``url_hash & (S-1)`` with ``S`` a power of two, which
+equals numpy's ``uint64 % S`` of the SIGNED hash (two's complement
+keeps the low bits), so shard tables can be read back on the driver.
+The cuckoo's per-table kernel is :mod:`memorious_spark.operators.
+cuckoo`; an over-full shard fails LOUD as a task failure.
 
 Checkpoint/resume: the filter is already a DataFrame, so a caller can
 persist it as a parquet table next to the seen table.
@@ -41,13 +45,19 @@ checks (memorious/logic/context.py:114-148), one round-trip per URL.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
+
+from memorious_spark.operators.cuckoo import (
+    _BUCKET, _DEFAULT_LOAD, _contains, _delete_batch, _insert_batch,
+    _next_pow2, _size_for,
+)
 
 __all__ = [
     "ShardedBloom",
@@ -61,9 +71,130 @@ __all__ = [
     "dedup_new_sharded_cuckoo",
 ]
 
-_FILTER_SCHEMA = "shard int, bm binary"
+_BLOOM_SCHEMA = "shard int, bm binary"
+# `removed` is delete's per-shard ledger; the handle keeps it in the
+# checkpointed frame so unpersist() releases the actual checkpoint
+_CUCKOO_SCHEMA = "shard int, tbl binary, removed long"
 _MULT = 0x9E3779B97F4A7C15
 _MASK = (1 << 64) - 1
+
+
+# ---- shared cogroup scaffold ------------------------------------------
+
+
+def _keys_by_shard(df: DataFrame, key: str, route, shards: int) -> DataFrame:
+    """Non-null ``key`` values as ``_h`` with their ``_shard`` id;
+    ``route(column name, shards)`` is the filter's routing expression."""
+    return (
+        df.select(F.col(key).alias("_h"))
+        .where(F.col("_h").isNotNull())
+        .withColumn("_shard", route("_h", shards))
+    )
+
+
+def _cogroup_update(filt_df: DataFrame, keys: DataFrame, schema: str, apply):
+    """cogroup(filter-by-shard, keys-by-shard) → one rewritten row per
+    shard → eager ``localCheckpoint``; the superseded table's storage
+    is released. ``apply(row, hv)`` gets the shard's stored filter row
+    (None for a shard never written) and its uint64 hashes, and returns
+    the new row's non-``shard`` columns as a dict.
+
+    The checkpoint is EAGER: the update must be a materialized fact
+    before the next probe reads it (and the lineage must not re-run a
+    nondeterministic upstream) — a hash missing from the filter would
+    be a false negative, the one error the exact anti-join cannot
+    absorb."""
+
+    def per_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty:
+            shard, row = right["_shard"].iloc[0], None
+        else:
+            shard, row = left["shard"].iloc[0], left.iloc[0]
+        hv = right["_h"].to_numpy(dtype=np.uint64, na_value=0)
+        cols = apply(row, hv)
+        return pd.DataFrame(
+            {"shard": [int(shard)], **{c: [v] for c, v in cols.items()}}
+        )
+
+    df = (
+        filt_df.groupby("shard")
+        .cogroup(keys.groupby("_shard"))
+        .applyInPandas(per_shard, schema)
+        .localCheckpoint(eager=True)
+    )
+    try:
+        filt_df.unpersist()
+    except Exception:
+        pass
+    return df
+
+
+def _anti_join_maybe(
+    flagged: DataFrame, seen_keys: DataFrame, key: str
+) -> DataFrame:
+    """One-pass exactness backstop for a probabilistic probe: the
+    probe's ``_maybe_seen`` flag folds into the anti-join CONDITION —
+    a row is dropped only when its key matches ``seen_keys`` AND the
+    probe flagged it. ``_maybe_seen = false`` rows never match, so
+    they are kept without ever entering the hash lookup. (A
+    split-and-union of flagged/unflagged rows would run the whole
+    cogrouped probe subtree twice.)"""
+    sk = seen_keys.select(F.col(key).alias("_seen_key"))
+    return (
+        flagged.join(
+            sk.hint("shuffle_hash"),
+            (F.col(key) == F.col("_seen_key")) & F.col("_maybe_seen"),
+            "left_anti",
+        )
+        .drop("_maybe_seen")
+    )
+
+
+def _probe_anti_join(
+    candidates: DataFrame,
+    seen: DataFrame | None,
+    filt_df: DataFrame,
+    shard_col: Column,
+    key: str,
+    contains,
+) -> DataFrame:
+    """Rows of ``candidates`` whose ``key`` is not in ``seen``: probe
+    each shard's candidates against that shard's filter row in its own
+    task (``contains(row, hv)`` → bool array), then send the flagged
+    rows through the exact anti-join. NULL-key rows probe as not-seen
+    (the anti-join keeps them too)."""
+    if seen is None:
+        return candidates
+    cands = candidates.withColumn("_shard", shard_col)
+    out_schema = StructType(
+        cands.schema.fields + [StructField("_maybe_seen", BooleanType())]
+    )
+
+    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        # left: the shard's candidates; right: 0/1 filter rows
+        left = left.copy()
+        if left.empty:
+            left["_maybe_seen"] = pd.Series([], dtype=bool)
+            return left
+        if right.empty:
+            left["_maybe_seen"] = False
+            return left
+        h = left[key]
+        hv = h.to_numpy(dtype=np.uint64, na_value=0)
+        left["_maybe_seen"] = contains(right.iloc[0], hv) & h.notna().to_numpy()
+        return left
+
+    probed = (
+        cands.groupby("_shard")
+        .cogroup(filt_df.groupby("shard"))
+        .applyInPandas(probe, out_schema)
+    )
+    return _anti_join_maybe(
+        probed, seen.select(key).distinct(), key
+    ).drop("_shard")
+
+
+# ---- sharded BLOOM (append-only) ---------------------------------------
 
 
 def _bloom_params(expected: int, fpp: float) -> tuple[int, int]:
@@ -72,36 +203,38 @@ def _bloom_params(expected: int, fpp: float) -> tuple[int, int]:
     return m, min(k, 8)
 
 
-def _or_hashes(arr: np.ndarray, hv: np.ndarray, m: int, k: int) -> None:
-    """Set the k bloom bits of each 64-bit hash in ``hv`` — the exact
-    uint64-wraparound arithmetic of the vectorized probe (no Python
-    per-row loop; ``bitwise_or.at`` handles duplicate byte indexes)."""
-    hv = hv.astype(np.uint64, copy=False)
+def _bloom_bits(hv: np.ndarray, m: int, k: int):
+    """Yield the k (byte index, bit mask) pairs of each 64-bit hash —
+    double hashing in exact uint64-wraparound arithmetic, shared by
+    the OR-in and the probe so the two can never disagree."""
     h2 = ((hv * np.uint64(_MULT)) & np.uint64(_MASK)) | np.uint64(1)
     for i in range(k):
         idx = (hv + np.uint64(i) * h2) % np.uint64(m)
-        np.bitwise_or.at(
-            arr,
+        yield (
             (idx >> np.uint64(3)).astype(np.int64),
             (np.uint64(1) << (idx & np.uint64(7))).astype(np.uint8),
         )
 
 
+def _or_hashes(arr: np.ndarray, hv: np.ndarray, m: int, k: int) -> None:
+    """Set the k bloom bits of each hash (``bitwise_or.at`` handles
+    duplicate byte indexes; no Python per-row loop)."""
+    for byte, bit in _bloom_bits(hv, m, k):
+        np.bitwise_or.at(arr, byte, bit)
+
+
 @dataclass
 class ShardedBloom:
     """Handle to an executor-resident sharded bloom: the shard table
-    plus the (driver-known, constant) geometry. ``df`` rows exist only
-    for shards that have ever seen a key — an absent shard reads as
-    all-zeros."""
+    plus the (driver-known, constant) geometry."""
 
     df: DataFrame
     shards: int
     m: int  # bits per shard
     k: int  # probes per key
-    capacity: int  # designed total key capacity (resize trigger)
 
 
-def _shard_col(key: str, shards: int):
+def _bloom_shard(key: str, shards: int) -> Column:
     return F.pmod(F.col(key), F.lit(shards)).cast("int")
 
 
@@ -123,8 +256,7 @@ def build_sharded_bloom(
         raise ValueError(f"shards must be >= 1, got {shards}")
     m, k = _bloom_params(max(1, expected // shards), fpp)
     empty = ShardedBloom(
-        df=spark.createDataFrame([], _FILTER_SCHEMA),
-        shards=shards, m=m, k=k, capacity=max(expected, 1),
+        df=spark.createDataFrame([], _BLOOM_SCHEMA), shards=shards, m=m, k=k
     )
     return update_sharded(empty, df, key=key)
 
@@ -133,47 +265,20 @@ def update_sharded(
     bloom: ShardedBloom, new_df: DataFrame, key: str = "url_hash"
 ) -> ShardedBloom:
     """OR a round's new hashes into their shards — entirely on
-    executors (cogrouped Arrow tasks), O(P) driver bytes. The returned
-    shard table is eagerly localCheckpoint'ed: the update must be a
-    MATERIALIZED fact before the next round probes it (and the
-    lineage must not re-run a nondeterministic upstream): a hash
-    missing from the filter would be a false negative, the one error
-    the exact anti-join cannot absorb."""
+    executors, O(P) driver bytes."""
     m, k = bloom.m, bloom.k
-    keys = (
-        new_df.select(F.col(key).alias("_h"))
-        .where(F.col("_h").isNotNull())
-        .withColumn("_shard", _shard_col("_h", bloom.shards))
-    )
 
-    def orin(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: 0/1 existing filter rows; right: the shard's new keys
-        if left.empty or left["bm"].iloc[0] is None:
+    def orin(row, hv: np.ndarray) -> dict:
+        if row is None:
             arr = np.zeros((m + 7) // 8, dtype=np.uint8)
-            shard = int(right["_shard"].iloc[0])
         else:
-            arr = np.frombuffer(left["bm"].iloc[0], dtype=np.uint8).copy()
-            shard = int(left["shard"].iloc[0])
-        if not right.empty:
-            hv = right["_h"].to_numpy(dtype=np.uint64, na_value=0)
-            _or_hashes(arr, hv, m, k)
-        return pd.DataFrame({"shard": [shard], "bm": [arr.tobytes()]})
+            arr = np.frombuffer(row["bm"], dtype=np.uint8).copy()
+        _or_hashes(arr, hv, m, k)
+        return {"bm": arr.tobytes()}
 
-    df = (
-        bloom.df.groupby("shard")
-        .cogroup(keys.groupby("_shard"))
-        .applyInPandas(orin, _FILTER_SCHEMA)
-        .localCheckpoint(eager=True)
-    )
-    old = bloom.df
-    out = ShardedBloom(
-        df=df, shards=bloom.shards, m=m, k=k, capacity=bloom.capacity
-    )
-    try:  # release the superseded checkpoint's executor storage
-        old.unpersist()
-    except Exception:
-        pass
-    return out
+    keys = _keys_by_shard(new_df, key, _bloom_shard, bloom.shards)
+    df = _cogroup_update(bloom.df, keys, _BLOOM_SCHEMA, orin)
+    return dataclasses.replace(bloom, df=df)
 
 
 def dedup_new_sharded(
@@ -183,93 +288,57 @@ def dedup_new_sharded(
     key: str = "url_hash",
 ) -> DataFrame:
     """Rows of ``candidates`` whose ``key`` is not in ``seen`` — the
-    sharded-probe twin of :func:`seen.dedup_new`: probe each shard's
-    candidates against that shard's bitmap in its own task, then send
-    only the ``maybe_seen`` survivors through the exact anti-join.
-    NULL-key rows probe as not-seen (the anti-join keeps them too)."""
-    if seen is None:
-        return candidates
+    sharded-bloom-probe twin of :func:`seen.dedup_new`."""
     m, k = bloom.m, bloom.k
-    cands = candidates.withColumn("_shard", _shard_col(key, bloom.shards))
-    out_schema = StructType(
-        cands.schema.fields + [StructField("_maybe_seen", BooleanType())]
-    )
 
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: the shard's candidates; right: 0/1 filter rows
-        left = left.copy()
-        if left.empty:
-            left["_maybe_seen"] = pd.Series([], dtype=bool)
-            return left
-        if right.empty or right["bm"].iloc[0] is None:
-            left["_maybe_seen"] = False
-            return left
-        arr = np.frombuffer(right["bm"].iloc[0], dtype=np.uint8)
-        h = left[key]
-        hv = h.to_numpy(dtype=np.uint64, na_value=0)
+    def contains(row, hv: np.ndarray) -> np.ndarray:
+        arr = np.frombuffer(row["bm"], dtype=np.uint8)
         hit = np.ones(len(hv), dtype=bool)
-        h2 = ((hv * np.uint64(_MULT)) & np.uint64(_MASK)) | np.uint64(1)
-        for i in range(k):
-            idx = (hv + np.uint64(i) * h2) % np.uint64(m)
-            hit &= (
-                arr[(idx >> np.uint64(3)).astype(np.int64)]
-                & (1 << (idx & np.uint64(7))).astype(np.uint8)
-            ) != 0
-        left["_maybe_seen"] = hit & h.notna().to_numpy()
-        return left
+        for byte, bit in _bloom_bits(hv, m, k):
+            hit &= (arr[byte] & bit) != 0
+        return hit
 
-    probed = (
-        cands.groupby("_shard")
-        .cogroup(bloom.df.groupby("shard"))
-        .applyInPandas(probe, out_schema)
+    return _probe_anti_join(
+        candidates, seen, bloom.df, _bloom_shard(key, bloom.shards), key,
+        contains,
     )
-    # one-pass backstop: the flag folds into the anti-join condition,
-    # so the cogrouped Arrow probe executes ONCE (the former
-    # split-and-union ran the whole probe subtree twice)
-    from memorious_spark.operators.seen import _anti_join_maybe
-
-    return _anti_join_maybe(
-        probed, seen.select(key).distinct(), key
-    ).drop("_shard")
 
 
-# ---- executor-resident sharded CUCKOO (the deletable twin) -----------
-#
-# Same posture shift as ShardedBloom, applied to the expiring-tags
-# regime: operators/cuckoo.py keeps the shard dict on the driver and
-# `update_cuckoo` COLLECTS each round's delta hashes (an O(new URLs)
-# driver transfer). Here the shard tables are a (shard, tbl) DataFrame
-# on executors and insert/delete/probe are cogrouped Arrow jobs over
-# the SAME per-shard numpy kernel (cuckoo.py `_insert_batch` /
-# fingerprint math), so delete support no longer costs driver
-# residency. Over-full shards still fail LOUD — the ValueError now
-# surfaces as a task failure instead of a driver one, same contract.
-
-from memorious_spark.operators.cuckoo import (  # noqa: E402
-    _BUCKET, _DEFAULT_LOAD, _buckets, _fingerprint, _insert_batch,
-    _next_pow2, _size_for,
-)
-
-_CUCKOO_SCHEMA = "shard int, tbl binary"
+# ---- sharded CUCKOO (deletable) ----------------------------------------
 
 
 @dataclass
 class ShardedCuckoo:
     """Executor-resident cuckoo filter: ``df`` holds one
-    ``(shard, tbl)`` row per non-empty shard (an absent shard reads
-    as empty), ``shard = int(hash & (shards-1))`` — identical routing
-    to the driver filter, so the fingerprint math is shared verbatim."""
+    ``(shard, tbl)`` row per non-empty shard, each ``tbl`` an
+    ``(nb, 4)`` uint16 table of the keys with
+    ``int(hash & (shards-1)) == shard``."""
 
     df: DataFrame
     shards: int  # power of two
     nb: int  # buckets per shard table
-    capacity: int
 
 
-def _cuckoo_shard_col(key: str, shards: int):
-    # low-bit mask of the SIGNED hash == uint64 % shards for a power
-    # of two (two's complement keeps low bits) — cuckoo.py's routing
+def _cuckoo_shard(key: str, shards: int) -> Column:
     return F.expr(f"int({key} & {shards - 1})")
+
+
+def _cuckoo_update(filt: ShardedCuckoo, df: DataFrame, key: str, op):
+    """Apply ``op(table, hv) -> removed count`` shard-locally."""
+    nb = filt.nb
+
+    def apply(row, hv: np.ndarray) -> dict:
+        if row is None:
+            t = np.zeros((nb, _BUCKET), dtype=np.uint16)
+        else:
+            t = np.frombuffer(row["tbl"], dtype=np.uint16)
+            t = t.reshape(nb, _BUCKET).copy()
+        removed = op(t, hv)
+        return {"tbl": t.tobytes(), "removed": removed}
+
+    keys = _keys_by_shard(df, key, _cuckoo_shard, filt.shards)
+    out = _cogroup_update(filt.df, keys, _CUCKOO_SCHEMA, apply)
+    return dataclasses.replace(filt, df=out)
 
 
 def build_sharded_cuckoo(
@@ -281,123 +350,43 @@ def build_sharded_cuckoo(
 ) -> ShardedCuckoo:
     """Distributed build: route keys to shards (one shuffle), build
     every shard table vectorized IN ITS OWN TASK, keep the tables on
-    executors. Nothing but task statuses reaches the driver."""
+    executors. ``shards`` (default: the session's shuffle parallelism)
+    rounds up to a power of two — at cluster scale set it so one shard
+    ≈ one task's memory budget."""
     spark = df.sparkSession
     if shards is None:
         shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
     shards = _next_pow2(shards)
-    nb = _size_for(expected, shards, load)
     empty = ShardedCuckoo(
         df=spark.createDataFrame([], _CUCKOO_SCHEMA),
-        shards=shards, nb=nb, capacity=max(expected, 1),
+        shards=shards, nb=_size_for(expected, shards, load),
     )
     return update_sharded_cuckoo(empty, df, key=key)
-
-
-def _cuckoo_cogroup(filt: ShardedCuckoo, keys_df: DataFrame, fn):
-    """cogroup(filter-by-shard, keys-by-shard) → applyInPandas(fn) →
-    eagerly checkpointed new shard table (same false-negative-proof
-    materialization contract as the bloom's update)."""
-    # the handle keeps the full checkpointed frame (incl. the
-    # `removed` ledger column — cogroup consumers read only
-    # shard/tbl) so unpersist() on a superseded filter releases the
-    # actual checkpoint storage, not a projection over it
-    df = (
-        filt.df.groupby("shard")
-        .cogroup(keys_df.groupby("_shard"))
-        .applyInPandas(fn, _CUCKOO_SCHEMA + ", removed long")
-    ).localCheckpoint(eager=True)
-    old = filt.df
-    out = ShardedCuckoo(
-        df=df, shards=filt.shards, nb=filt.nb, capacity=filt.capacity
-    )
-    try:
-        old.unpersist()
-    except Exception:
-        pass
-    removed = df.agg(F.sum("removed")).first()[0] or 0
-    return out, int(removed)
-
-
-def _keys_by_shard(new_df: DataFrame, key: str, shards: int) -> DataFrame:
-    return (
-        new_df.select(F.col(key).alias("_h"))
-        .where(F.col("_h").isNotNull())
-        .withColumn("_shard", _cuckoo_shard_col("_h", shards))
-    )
 
 
 def update_sharded_cuckoo(
     filt: ShardedCuckoo, new_df: DataFrame, key: str = "url_hash"
 ) -> ShardedCuckoo:
     """Insert a round's new hashes into their shards — entirely on
-    executors, O(P) driver bytes (vs ``update_cuckoo``'s collect of
-    every delta hash). Batch-internal duplicates are dropped (the
-    driver build does the same); an over-full shard raises in its
-    task."""
-    nb = filt.nb
+    executors, O(P) driver bytes. Batch-internal duplicates are
+    dropped; an over-full shard raises in its task."""
 
-    def ins(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            t = np.zeros((nb, _BUCKET), dtype=np.uint16)
-            shard = int(right["_shard"].iloc[0])
-        else:
-            t = np.frombuffer(left["tbl"].iloc[0], dtype=np.uint16)
-            t = t.reshape(nb, _BUCKET).copy()
-            shard = int(left["shard"].iloc[0])
-        if not right.empty:
-            hv = right["_h"].to_numpy(dtype=np.uint64, na_value=0)
-            _insert_batch(t, np.unique(hv))
-        return pd.DataFrame(
-            {"shard": [shard], "tbl": [t.tobytes()], "removed": [0]}
-        )
+    def ins(t: np.ndarray, hv: np.ndarray) -> int:
+        _insert_batch(t, np.unique(hv))
+        return 0
 
-    out, _ = _cuckoo_cogroup(
-        filt, _keys_by_shard(new_df, key, filt.shards), ins
-    )
-    return out
+    return _cuckoo_update(filt, new_df, key, ins)
 
 
 def delete_sharded_cuckoo(
     filt: ShardedCuckoo, expired_df: DataFrame, key: str = "url_hash"
 ) -> tuple[ShardedCuckoo, int]:
     """Remove expired hashes' fingerprints shard-locally — the
-    operation the bloom can't do, now without the driver round-trip.
-    Returns (new filter, number of fingerprints removed)."""
-    nb = filt.nb
-
-    def rm(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            # deleting from a never-written shard: nothing stored
-            shard = int(right["_shard"].iloc[0])
-            t = np.zeros((nb, _BUCKET), dtype=np.uint16)
-            return pd.DataFrame(
-                {"shard": [shard], "tbl": [t.tobytes()], "removed": [0]}
-            )
-        t = np.frombuffer(left["tbl"].iloc[0], dtype=np.uint16)
-        t = t.reshape(nb, _BUCKET).copy()
-        shard = int(left["shard"].iloc[0])
-        removed = 0
-        if not right.empty:
-            hv = np.unique(
-                right["_h"].to_numpy(dtype=np.uint64, na_value=0)
-            )
-            fp = _fingerprint(hv)
-            b1, b2 = _buckets(hv, fp, nb)
-            for j in range(len(hv)):
-                for b in (b1[j], b2[j]):
-                    slots = np.flatnonzero(t[b] == fp[j])
-                    if len(slots):
-                        t[b, slots[0]] = 0
-                        removed += 1
-                        break
-        return pd.DataFrame(
-            {"shard": [shard], "tbl": [t.tobytes()], "removed": [removed]}
-        )
-
-    return _cuckoo_cogroup(
-        filt, _keys_by_shard(expired_df, key, filt.shards), rm
-    )
+    operation the bloom can't do. Returns (new filter, number of
+    fingerprints removed)."""
+    out = _cuckoo_update(filt, expired_df, key, _delete_batch)
+    removed = out.df.agg(F.sum("removed")).first()[0] or 0
+    return out, int(removed)
 
 
 def dedup_new_sharded_cuckoo(
@@ -407,46 +396,14 @@ def dedup_new_sharded_cuckoo(
     key: str = "url_hash",
 ) -> DataFrame:
     """Rows of ``candidates`` whose ``key`` is not in ``seen`` — the
-    cuckoo probe runs shard-local (cogrouped), the exact ``left_anti``
-    decides. NULL-key rows probe as not-seen. Contract identical to
-    :func:`dedup_new_sharded` / ``seen.dedup_new``."""
-    if seen is None:
-        return candidates
+    sharded-cuckoo-probe twin of :func:`seen.dedup_new`."""
     nb = filt.nb
-    cands = candidates.withColumn(
-        "_shard", _cuckoo_shard_col(key, filt.shards)
-    )
-    out_schema = StructType(
-        cands.schema.fields + [StructField("_maybe_seen", BooleanType())]
-    )
 
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.copy()
-        if left.empty:
-            left["_maybe_seen"] = pd.Series([], dtype=bool)
-            return left
-        if right.empty:
-            left["_maybe_seen"] = False
-            return left
-        t = np.frombuffer(right["tbl"].iloc[0], dtype=np.uint16)
-        t = t.reshape(nb, _BUCKET)
-        h = left[key]
-        hv = h.to_numpy(dtype=np.uint64, na_value=0)
-        fp = _fingerprint(hv)
-        b1, b2 = _buckets(hv, fp, nb)
-        hit = (t[b1] == fp[:, None]).any(axis=1)
-        hit |= (t[b2] == fp[:, None]).any(axis=1)
-        left["_maybe_seen"] = hit & h.notna().to_numpy()
-        return left
+    def contains(row, hv: np.ndarray) -> np.ndarray:
+        t = np.frombuffer(row["tbl"], dtype=np.uint16).reshape(nb, _BUCKET)
+        return _contains(t, hv)
 
-    probed = (
-        cands.groupby("_shard")
-        .cogroup(filt.df.groupby("shard"))
-        .applyInPandas(probe, out_schema)
+    return _probe_anti_join(
+        candidates, seen, filt.df, _cuckoo_shard(key, filt.shards), key,
+        contains,
     )
-    # one-pass backstop — see dedup_new_sharded
-    from memorious_spark.operators.seen import _anti_join_maybe
-
-    return _anti_join_maybe(
-        probed, seen.select(key).distinct(), key
-    ).drop("_shard")

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from memorious_spark.operators.seen import EXPIRE_QUIRK_SECONDS
+from memorious_spark.operators.seen import expiry_stamp, unexpired
 
 __all__ = ["TAGS_SCHEMA", "tag_key_hash", "set_tags", "check_tags", "get_tags"]
 
@@ -56,12 +56,6 @@ def set_tags(
     now_ts: str = "2024-01-01 00:00:00",
 ) -> None:
     """Batch set_tag (context.py:114-117): one tags row per input row."""
-    created = F.to_timestamp(F.lit(now_ts))
-    expires = (
-        created + F.expr(f"INTERVAL {expire_days * EXPIRE_QUIRK_SECONDS} SECONDS")
-        if expire_days
-        else F.lit(None).cast("timestamp")
-    )
     rows = df.select(
         tag_key_hash(crawler, kind, F.col(key_col)).alias("key_hash"),
         F.lit(crawler).alias("crawler"),
@@ -69,8 +63,7 @@ def set_tags(
         F.col(key_col).cast("string").alias("key"),
         (F.col(value_col).cast("string") if value_col else F.lit(None).cast("string")).alias("value"),
         F.lit(run_id).alias("run_id"),
-        created.alias("created_at"),
-        expires.alias("expires_at"),
+        *expiry_stamp(now_ts, expire_days),
     )
     store.append_shared(TAGS_TABLE, rows)
 
@@ -84,12 +77,7 @@ def _live(
     tags = tags.filter(
         (F.col("crawler") == crawler) & (F.col("kind") == kind)
     )
-    if now_ts is not None:
-        tags = tags.filter(
-            F.col("expires_at").isNull()
-            | (F.col("expires_at") > F.to_timestamp(F.lit(now_ts)))
-        )
-    return tags
+    return unexpired(tags, now_ts)
 
 
 def check_tags(

@@ -127,13 +127,12 @@ def run_oracle(
             root,
             final_url,
             list(config.parse.include_paths) if config.parse.include_paths else None,
-            config.parse.link_titles,
         )
         next_depth = depth + 1
         if config.max_depth is not None and next_depth > config.max_depth:
             return []
         emitted = []
-        for link_url, _t, _idx in links:
+        for link_url in links:
             key = py_norm(link_url)
             if key is None or not key.startswith(("http://", "https://")):
                 continue

@@ -666,11 +666,12 @@ class CrawlRunner:
             # seen append: emitted links + redirect-source tags
             seen_rows = seen_entries(
                 new_links, cfg.name, store.dir.name, "link",
-                value="url_norm", expire_days=cfg.expire_days,
+                value="url_norm", expire_days=cfg.expire_days, now_ts=now_ts,
             ).unionByName(
                 seen_entries(
-                    redirect_tags, cfg.name, store.dir.name,
-                    "redirect", value="url_norm", expire_days=cfg.expire_days,
+                    redirect_tags, cfg.name, store.dir.name, "redirect",
+                    value="url_norm", expire_days=cfg.expire_days,
+                    now_ts=now_ts,
                 )
             )
             # wave 3: frontier + seen (+ cache/inc-tag appends in

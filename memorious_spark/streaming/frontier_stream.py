@@ -259,7 +259,7 @@ def run_streaming_crawl(
         if use_cache:
             fetched = apply_replay(fetched)
         parsed = parse_stage(fetched, parse_config).persist()
-        parsed.drop("link_titles").write.mode("overwrite").parquet(
+        parsed.write.mode("overwrite").parquet(
             f"{out_dir}/batch={batch_id}"
         )
         if use_cache:

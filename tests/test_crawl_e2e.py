@@ -472,10 +472,14 @@ def test_forced_shuffle_join_matches_broadcast_crawl(
     ceiling → SHUFFLE_HASH corpus join, fetch.py) must produce the
     byte-same crawl as the broadcast path — exercised end-to-end, not
     just plan-asserted."""
-    monkeypatch.setenv("MEMSPARK_FORCE_SHUFFLE_JOIN", "1")
+    import memorious_spark.operators.fetch as fetch
+
+    # every round's frontier is now past the ceiling: the real
+    # size-based selection picks the shuffle join
+    monkeypatch.setattr(fetch, "_BROADCAST_MAX_ROWS", 0)
     store_f = RunStore(tmp_path_factory.mktemp("runs_sj"), "e2e", "runSJ")
     result_f = CrawlRunner(spark, CFG, store_f).run(corpus)
-    monkeypatch.delenv("MEMSPARK_FORCE_SHUFFLE_JOIN")
+    monkeypatch.undo()
 
     store_b, result_b = engine_run
     assert (result_f.pages_fetched, result_f.pages_stored, result_f.urls_seen) == (

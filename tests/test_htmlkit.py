@@ -78,8 +78,7 @@ def test_title_collapsed():
 
 def test_links_order_dedup_urljoin():
     root = hk.parse_html(PAGE)
-    links = hk.extract_links(root, BASE, link_title_from_text=True)
-    urls = [u for u, _, _ in links]
+    urls = hk.extract_links(root, BASE)
     # URL_TAGS scan order: anchors, then img, link, iframe; first-wins dedup
     assert urls == [
         "https://h1.example.com/a",
@@ -88,8 +87,6 @@ def test_links_order_dedup_urljoin():
         "https://h1.example.com/style.css",
         "https://h1.example.com/frame.html",
     ]
-    assert [i for _, _, i in links] == list(range(5))
-    assert links[0][1] == "First"  # first-wins keeps first anchor's title
 
 
 def test_meta_first_match_and_attr_suffix():
@@ -116,7 +113,7 @@ def test_tolerant_parse():
     # unclosed + stray close tags must not crash or lose content
     root = hk.parse_html("<body><p>one<p>two</div><a href='/x'>y</a>")
     assert root is not None
-    assert hk.extract_links(root, "http://h/")[0][0] == "http://h/x"
+    assert hk.extract_links(root, "http://h/")[0] == "http://h/x"
     assert hk.parse_html(None) is None
 
 
@@ -323,7 +320,7 @@ def test_extract_links_fast_join_equals_urljoin():
         html = "<html><body>" + "".join(
             f'<a href="{r}">t</a>' for r in refs
         ) + "</body></html>"
-        got = [u for u, _t, _i in extract_links(parse_html(html), base)]
+        got = extract_links(parse_html(html), base)
         # reference: plain urljoin over the same scan order with the
         # same first-wins dedup
         seen, want = set(), []

@@ -130,6 +130,25 @@ def test_metrics_show_replay_economy(spark, runs):
     assert res2.pages_stored < res1.pages_stored / 3
 
 
+def test_seen_rows_stamped_with_run_now_ts(spark, runs):
+    """Seen rows carry the run's ``now_ts`` as ``created_at`` and
+    expire ``expire_days × 84600`` s later (the reference quirk) —
+    not the default timestamp of an unstamped call."""
+    _s1, _r1, store2, _r2 = runs
+    seen = store2.read_all(spark, "seen", 60)
+    assert seen.count() > 0
+    now = F.to_timestamp(F.lit("2024-01-03 00:00:00"))
+    wrong = seen.filter(
+        (F.col("created_at") != now)
+        | (
+            F.unix_timestamp("expires_at") - F.unix_timestamp("created_at")
+            != CFG.expire_days * 84600
+        )
+        | F.col("expires_at").isNull()
+    )
+    assert wrong.count() == 0
+
+
 def test_flush_crawler_resets_to_first_run(spark, runs, tmp_path_factory):
     """crawler.flush() (memorious/logic/crawler.py:89-96): after the
     flush, an incremental run behaves like the crawler's very first —

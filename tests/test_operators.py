@@ -114,17 +114,48 @@ def test_dedup_new_exact(spark):
     assert got == list(range(1, 1000, 2))
 
 
+def _cuckoo_tables(filt):
+    """The executor-resident shard tables, collected: {shard: (nb, 4)}."""
+    import numpy as np
+
+    from memorious_spark.operators.cuckoo import _BUCKET
+
+    return {
+        r["shard"]: np.frombuffer(r["tbl"], dtype=np.uint16).reshape(
+            filt.nb, _BUCKET
+        )
+        for r in filt.df.select("shard", "tbl").collect()
+    }
+
+
+def _cuckoo_contains(filt, hv):
+    """Membership of uint64 hashes, routed on the numpy side."""
+    import numpy as np
+
+    from memorious_spark.operators.cuckoo import _contains
+
+    sid = (hv & np.uint64(filt.shards - 1)).astype(np.int64)
+    out = np.zeros(len(hv), dtype=bool)
+    for s, t in _cuckoo_tables(filt).items():
+        m = sid == s
+        out[m] = _contains(t, hv[m])
+    return out
+
+
 def test_dedup_new_cuckoo_path(spark):
     """Forced cuckoo prefilter == plain anti-join (exactness survives
     the probe), including after incremental insert AND delete — the
     capability a bloom filter lacks."""
-    from memorious_spark.operators.cuckoo import (
-        build_cuckoo, delete_cuckoo, update_cuckoo,
-    )
+    import numpy as np
+
+    from memorious_spark.operators.cuckoo import build_cuckoo, delete_cuckoo
+    from memorious_spark.operators.sharded_filter import update_sharded_cuckoo
 
     seen0 = spark.range(0, 1000, 2).select(F.col("id").alias("url_hash"))
     filt = build_cuckoo(seen0, "url_hash", expected=4000, n_shards=4)
-    assert 0 < filt.fill_ratio() < 1
+    tables = _cuckoo_tables(filt)
+    used = sum(int((t != 0).sum()) for t in tables.values())
+    assert 0 < used / (filt.shards * filt.nb * 4) < 1  # fill ratio
     cands = spark.range(1000).select(F.col("id").alias("url_hash"))
     out = dedup_new(cands, seen0, cuckoo=filt)
     assert sorted(r["url_hash"] for r in out.collect()) == list(
@@ -133,7 +164,7 @@ def test_dedup_new_cuckoo_path(spark):
 
     # incremental insert of a later round's additions
     add = spark.range(5000, 5100).select(F.col("id").alias("url_hash"))
-    filt = update_cuckoo(filt, add)
+    filt = update_sharded_cuckoo(filt, add)
     seen_all = seen0.unionByName(add)
     cands2 = cands.unionByName(
         spark.range(5000, 5200).select(F.col("id").alias("url_hash"))
@@ -157,8 +188,9 @@ def test_dedup_new_cuckoo_path(spark):
     )
     # deleted keys genuinely left the filter (prefilter stays tight
     # modulo the ~1e-4 false-positive floor)
-    hv = __import__("numpy").arange(0, 500, 2, dtype="uint64")
-    assert filt.contains(hv).mean() < 0.05
+    hv = np.arange(0, 500, 2, dtype="uint64")
+    assert _cuckoo_contains(filt, hv).mean() < 0.05
+    filt.df.unpersist()
 
 
 def test_cuckoo_overfull_fails_loud(spark):
@@ -184,7 +216,9 @@ def test_cuckoo_negative_hash_routing(spark):
         [r["url_hash"] for r in df.collect()], dtype="int64"
     ).astype("uint64")
     filt = build_cuckoo(df, "url_hash", expected=8000, n_shards=8)
-    assert bool(filt.contains(hv).all())  # no false negatives, ever
+    assert bool(_cuckoo_contains(filt, hv).all())  # no false negatives, ever
+    assert dedup_new(df, df, cuckoo=filt).count() == 0
+    filt.df.unpersist()
 
 
 # ---- sinks ------------------------------------------------------------------

@@ -115,33 +115,6 @@ def test_sharded_cuckoo_exactness_and_delete(spark):
     filt.df.unpersist()
 
 
-def test_sharded_cuckoo_matches_driver_cuckoo(spark):
-    """The executor-resident filter stores EXACTLY the fingerprints
-    the driver CuckooFilter stores (shared kernel, shared routing) —
-    probing any candidate set gives identical maybe/new splits."""
-    from memorious_spark.operators.cuckoo import build_cuckoo
-    from memorious_spark.operators.sharded_filter import (
-        build_sharded_cuckoo, dedup_new_sharded_cuckoo,
-    )
-    from memorious_spark.operators.seen import dedup_new
-
-    seen = spark.range(0, 2000, 3).select(F.col("id").alias("url_hash"))
-    driver_f = build_cuckoo(seen, "url_hash", expected=4000, n_shards=4)
-    sharded_f = build_sharded_cuckoo(seen, "url_hash", expected=4000, shards=4)
-    assert (sharded_f.shards, sharded_f.nb) == (driver_f.n_shards, driver_f.nb)
-    cands = spark.range(0, 2500).select(F.col("id").alias("url_hash"))
-    a = sorted(
-        r["url_hash"]
-        for r in dedup_new(cands, seen, cuckoo=driver_f).collect()
-    )
-    b = sorted(
-        r["url_hash"]
-        for r in dedup_new_sharded_cuckoo(cands, seen, sharded_f).collect()
-    )
-    assert a == b
-    sharded_f.df.unpersist()
-
-
 def test_sharded_cuckoo_overfull_fails_loud(spark):
     """An over-full shard must raise (in its task), never drop a key —
     a dropped insert would be a false negative at probe time."""
