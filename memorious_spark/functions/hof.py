@@ -31,7 +31,7 @@ from typing import Callable
 
 from pyspark.sql import Column, functions as F
 
-__all__ = ["bind_once", "bind_struct"]
+__all__ = ["bind_once"]
 
 
 def bind_once(expr: Column, fn: Callable[[Column], Column]) -> Column:
@@ -40,14 +40,3 @@ def bind_once(expr: Column, fn: Callable[[Column], Column]) -> Column:
     (where Catalyst would otherwise inline and re-evaluate it per
     element)."""
     return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
-def bind_struct(fn: Callable[..., Column], **exprs: Column) -> Column:
-    """Bind several named expressions at once: each is evaluated once
-    per row and passed to ``fn`` as a keyword argument in declaration
-    order. Sugar for a ``bind_once`` over a struct."""
-    names = list(exprs)
-    return bind_once(
-        F.struct(*[exprs[n].alias(n) for n in names]),
-        lambda s: fn(**{n: s[n] for n in names}),
-    )

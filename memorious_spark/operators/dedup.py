@@ -36,7 +36,6 @@ __all__ = [
     "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
     "simhash_signature_cols",
-    "simhash_col",
     "simhash_pairs",
     "embedding_dup_pairs",
     "embedding_dup_pairs_lsh",
@@ -806,13 +805,6 @@ def simhash_signature_cols(
 
     return summed.select(
         "id", assemble(0).alias("sig_lo"), assemble(32).alias("sig_hi")
-    )
-
-
-def simhash_col(docs_or_text=None, **_kw):  # pragma: no cover - thin shim
-    raise NotImplementedError(
-        "simhash_col(text_col) was the round-1 Python-UDF path; use "
-        "simhash_signature_cols(docs) — the JVM-side replacement."
     )
 
 

@@ -1,5 +1,5 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata.
+"""Multimodal column plumbing: image/audio as opaque binary columns
+with typed metadata.
 
 The Spark-side machinery (schemas, Arrow batch shapes, mapInPandas
 partition flow, deterministic partitioning by content hash) is real
@@ -7,7 +7,7 @@ and tested. ``decode_image`` REALLY decodes the headerful
 uncompressed image formats (BMP BI_RGB, PPM P6) and ``decode_wav``
 the uncompressed audio one (RIFF PCM WAV, 8/16-bit) in pure
 python/numpy — feature extraction over those is genuine pixel/signal
-math; compressed codecs (JPEG/PNG/MP3/video) still raise
+math; compressed codecs (JPEG/PNG/MP3) still raise
 NotImplementedError because their libraries (Pillow/ffmpeg/librosa)
 are not in this container, and ``fake_image_features`` stands in so
 mixed corpora keep flowing through the one Arrow-batched UDF.
@@ -27,15 +27,10 @@ __all__ = [
     "attach_media_meta",
     "decode_image",
     "decode_wav",
-    "encode_ppm",
-    "resize_image",
-    "decode_video",
     "fake_image_features",
     "image_features",
     "audio_features",
     "extract_features",
-    "resize_images",
-    "sample_frames",
 ]
 
 # binary payload + typed metadata — the multimodal table contract
@@ -91,21 +86,16 @@ def decode_image(payload: bytes) -> "np.ndarray":
         img = np.stack(rows)
         return img if top_down else img[::-1]
     if buf[:2] == b"P6":
-        img, _ = _parse_ppm(buf, 0)
-        return img
+        return _parse_ppm(buf)
     raise NotImplementedError(
         "only BMP (BI_RGB) and PPM (P6) decode without an imaging library"
     )
 
 
-def _parse_ppm(buf: bytes, pos: int) -> tuple["np.ndarray", int]:
-    """Parse one P6 frame at ``pos`` → ``(HWC uint8 image, offset past
-    the frame)`` — the offset return is what lets frames concatenate
-    into the :func:`decode_video` container."""
-    if buf[pos : pos + 2] != b"P6":
-        raise ValueError(f"no P6 magic at offset {pos}")
+def _parse_ppm(buf: bytes) -> "np.ndarray":
+    """Parse one P6 frame → HWC uint8 image."""
     # header: P6 <ws> width <ws> height <ws> maxval <single ws> data
-    i, vals = pos + 2, []
+    i, vals = 2, []
     while len(vals) < 3:
         while i < len(buf) and buf[i : i + 1].isspace():
             i += 1
@@ -124,62 +114,11 @@ def _parse_ppm(buf: bytes, pos: int) -> tuple["np.ndarray", int]:
     n = width * height * 3
     if i + n > len(buf):
         raise ValueError("truncated PPM frame")
-    img = (
+    return (
         np.frombuffer(buf, dtype=np.uint8, count=n, offset=i)
         .reshape(height, width, 3)
         .copy()
     )
-    return img, i + n
-
-
-def encode_ppm(img: "np.ndarray") -> bytes:
-    """HWC uint8 RGB → binary PPM (P6, maxval 255) — the inverse of
-    the P6 branch of :func:`decode_image`, byte-for-byte stable."""
-    h, w = img.shape[0], img.shape[1]
-    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(
-        img[:, :, :3], dtype=np.uint8
-    ).tobytes()
-
-
-def resize_image(img: "np.ndarray", width: int, height: int) -> "np.ndarray":
-    """Nearest-neighbor resize (half-pixel centers: source index
-    ``floor((i + 0.5) · src/dst)``) — pure integer index math, so the
-    result is deterministic across numpy versions; the standard NN
-    convention (what OpenCV INTER_NEAREST approximates)."""
-    sh, sw = img.shape[0], img.shape[1]
-    rows = np.minimum(
-        ((np.arange(height) + 0.5) * sh / height).astype(np.int64), sh - 1
-    )
-    cols = np.minimum(
-        ((np.arange(width) + 0.5) * sw / width).astype(np.int64), sw - 1
-    )
-    return img[rows][:, cols]
-
-
-def decode_video(payload: bytes) -> list["np.ndarray"]:
-    """Pure-python video decode → list of HWC uint8 frames.
-
-    The parseable-without-codecs container is a raw CONCATENATED-PPM
-    stream (back-to-back P6 frames — the uncompressed video analogue
-    of the BMP/WAV choices above; yuv4mpeg/raw-RGB pipes are the same
-    idea). Real containers (MP4 ``ftyp``, AVI ``RIFF``, Matroska)
-    raise — their codecs (ffmpeg) are not in this container; the
-    frame-sampling plumbing downstream is container-agnostic, so a
-    library decoder slots into this one function."""
-    buf = bytes(payload)
-    if buf[4:8] == b"ftyp":
-        raise NotImplementedError("MP4 needs ffmpeg (not in container)")
-    if buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
-        raise NotImplementedError("AVI needs ffmpeg (not in container)")
-    if buf[:4] == b"\x1a\x45\xdf\xa3":
-        raise NotImplementedError("Matroska/WebM needs ffmpeg")
-    if buf[:2] != b"P6":
-        raise NotImplementedError("not a concatenated-PPM stream")
-    frames, pos = [], 0
-    while pos < len(buf):
-        img, pos = _parse_ppm(buf, pos)
-        frames.append(img)
-    return frames
 
 
 def decode_wav(payload: bytes) -> tuple[int, "np.ndarray"]:
@@ -320,97 +259,5 @@ def extract_features(
             pdf = pdf.copy()
             pdf[out_col] = pdf[payload_col].map(feature_fn)
             yield pdf
-
-    return df.mapInPandas(gen, out_schema)
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    payload_col: str = "payload",
-    out_col: str = "resized",
-) -> DataFrame:
-    """mapInPandas image resize: decode (BMP/PPM) → nearest-neighbor
-    resize → re-encode as PPM. Adds ``(out_col binary, orig_w int,
-    orig_h int)``; payloads that don't decode get NULLs (mixed
-    corpora keep flowing — the honest-fail stays in
-    :func:`decode_image` for callers who want it loud). Arrow-batched,
-    partition-parallel; per-row work is pure numpy."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} binary, orig_w int, orig_h int"
-
-    def one(payload):
-        if payload is None:
-            return None, None, None
-        try:
-            img = decode_image(payload)
-        except Exception:
-            return None, None, None
-        return (
-            encode_ppm(resize_image(img, width, height)),
-            img.shape[1],
-            img.shape[0],
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            cols = pdf[payload_col].map(one)
-            pdf[out_col] = cols.map(lambda t: t[0])
-            pdf["orig_w"] = cols.map(lambda t: t[1]).astype("Int32")
-            pdf["orig_h"] = cols.map(lambda t: t[2]).astype("Int32")
-            yield pdf
-
-    return df.mapInPandas(gen, out_schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_n: int,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """mapInPandas frame sampling — the EXPLODE-shaped multimodal op:
-    one output row per kept frame ``(id_col, frame_idx, frame binary
-    PPM, width int, height int)``, keeping frames ``0, every_n,
-    2·every_n, …`` of each video. Payloads that don't decode emit
-    zero rows (count them upstream via ``decode_video`` if loudness
-    is wanted). The Arrow batch shape fans out rows — exactly how a
-    real ffmpeg-backed sampler would sit in the pipeline."""
-    if every_n < 1:
-        raise ValueError(f"every_n must be ≥ 1, got {every_n}")
-    id_field = next(f for f in df.schema.fields if f.name == id_col)
-    out_schema = (
-        f"{id_col} {id_field.dataType.simpleString()}, frame_idx int, "
-        "frame binary, width int, height int"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames, ws, hs = [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    fr = decode_video(payload)
-                except Exception:
-                    continue
-                for i in range(0, len(fr), every_n):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(encode_ppm(fr[i]))
-                    ws.append(fr[i].shape[1])
-                    hs.append(fr[i].shape[0])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": frames,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
 
     return df.mapInPandas(gen, out_schema)

@@ -68,10 +68,11 @@ def pack_token_shards(
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     p = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
-    # advisory cache: the slim 2-column projection feeds three jobs
-    # (bounds, totals, the final window). Correctness does NOT depend
-    # on it — _pid is a pure function of the id — so eviction or
-    # recomputation is only ever a performance event.
+    # advisory cache: the slim 2-column projection feeds the bounds and
+    # totals jobs, then is released; the final window recomputes it
+    # from ``docs``. Correctness does NOT depend on it — _pid is a pure
+    # function of the id — so eviction or recomputation is only ever a
+    # performance event.
     base = docs.select(id_col, tokens_col).persist()
     row = base.agg(F.min(id_col).alias("lo"), F.max(id_col).alias("hi")).first()
     lo, hi = row["lo"], row["hi"]
@@ -88,6 +89,7 @@ def pack_token_shards(
     totals = (
         with_pid.groupBy("_pid").agg(F.sum(tokens_col).alias("_tot")).collect()
     )
+    base.unpersist()
     running = 0
     offsets = []
     for r in sorted(totals, key=lambda t: t["_pid"]):

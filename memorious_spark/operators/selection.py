@@ -39,10 +39,8 @@ from memorious_spark.functions.hof import bind_once
 
 __all__ = [
     "importance_weights",
-    "dsir_select",
     "feature_bucket_col",
     "lm_bigram_scores",
-    "perplexity_select",
 ]
 
 
@@ -169,29 +167,6 @@ def importance_weights(
     )
 
 
-def dsir_select(
-    docs: DataFrame,
-    target: DataFrame,
-    n_keep: int,
-    n_buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep the ``n_keep`` most target-like documents (ties → lower
-    id). ``orderBy().limit()`` plans as TakeOrdered — a per-partition
-    top-k plus one k-row merge, never a full global sort."""
-    w = importance_weights(docs, target, n_buckets, id_col, text_col)
-    kept = (
-        w.orderBy(F.col("logw").desc(), F.col(id_col))
-        .limit(n_keep)
-        .select(id_col, "logw")
-    )
-    # no broadcast hint: n_keep is typically a large fraction of the
-    # corpus — AQE picks broadcast on its own when the keep-list is
-    # actually small
-    return docs.join(kept, id_col, "inner")
-
-
 def _bigram_structs(text: Column) -> Column:
     """Array of (w1, w2) whitespace-bigram structs of the lowercased
     text — the split convention of :func:`_features`, tokens bound
@@ -310,22 +285,3 @@ def lm_bigram_scores(
         .otherwise(F.lit(0.0))
         .alias("avg_logp"),
     )
-
-
-def perplexity_select(
-    docs: DataFrame,
-    ref: DataFrame,
-    n_keep: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep the ``n_keep`` most fluent documents under the reference
-    bigram LM (CCNet's "head" slice; ties → lower id).
-    ``orderBy().limit()`` plans as TakeOrdered — no global sort."""
-    s = lm_bigram_scores(docs, ref, id_col, text_col)
-    kept = (
-        s.orderBy(F.col("avg_logp").desc(), F.col(id_col))
-        .limit(n_keep)
-        .select(id_col, "avg_logp")
-    )
-    return docs.join(kept, id_col, "inner")

@@ -21,11 +21,8 @@ __all__ = [
     "cosine_sim", "knn_brute_force", "lsh_bucket_col", "knn_lsh",
     "query_probe_buckets", "ivf_seed_centroids", "ivf_assign_col",
     "ivf_assign_udf", "ivf_train", "knn_ivf",
-    "build_ann_index", "knn_lsh_serve", "build_ivf_index", "knn_ivf_serve",
     "pq_seed_codebooks", "pq_encode_col", "pq_encode_udf", "pq_encode",
-    "knn_pq", "build_pq_index", "knn_pq_serve",
-    "append_ivf_index", "append_pq_index", "append_ann_index",
-    "knn_ivfpq",
+    "knn_pq", "knn_ivfpq",
 ]
 
 
@@ -138,128 +135,6 @@ def knn_lsh(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         bucketed.filter(F.col("_bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def build_ann_index(
-    emb: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int = 6,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the ANN SERVE layout: precompute each vector's
-    sign-LSH bucket and write the corpus **partitioned by bucket**
-    (one directory per bucket). This is the production posture the
-    on-the-fly :func:`knn_lsh` docstring promises: at serve time the
-    probe set becomes a partition filter, so the scan touches only
-    ~(planes+1)/2^planes of the files — verified by the plan test
-    asserting the pruned input-file set."""
-    emb.withColumn(
-        "bucket", lsh_bucket_col(F.col(vec_col), dim, n_planes)
-    ).write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
-def knn_lsh_serve(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """Top-k against a :func:`build_ann_index` layout. The
-    ``bucket IN (probes)`` predicate is a PARTITION filter (bucket is
-    a partition column), so Spark enumerates only the probed bucket
-    directories — no full-corpus scan, no bucket recomputation; exact
-    cosine re-rank inside the candidates. Result contract is identical
-    to :func:`knn_lsh` over the same vectors."""
-    probes = query_probe_buckets(query_vec, n_planes, multiprobe)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        spark.read.parquet(index_path)
-        .filter(F.col("bucket").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    spacing: int = 37,
-    n_iter: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """IVF serve layout: assign every vector to its coarse cell and
-    write the corpus **partitioned by cell**, with the centroid table
-    as a JSON sidecar (`_centroids.json`) so serve-time probe
-    selection needs no training scan. The cell twin of
-    :func:`build_ann_index`."""
-    import json
-
-    from pyarrow import fs as pa_fs
-
-    cents = (
-        ivf_train(emb, n_centroids, n_iter, spacing, id_col, vec_col)
-        if n_iter
-        else ivf_seed_centroids(emb, n_centroids, spacing, id_col, vec_col)
-    )
-    emb.withColumn("cell", _assign_bucket_col(vec_col, cents)).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-    uri = path if "://" in path else "file://" + path
-    filesystem, base = pa_fs.FileSystem.from_uri(uri)
-    with filesystem.open_output_stream(f"{base}/_centroids.json") as fh:
-        fh.write(json.dumps(cents).encode())
-
-
-def knn_ivf_serve(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k against a :func:`build_ivf_index` layout: the ``nprobe``
-    nearest cells (by centroid distance, from the sidecar — no scan)
-    become a PARTITION filter, exact cosine re-rank inside them."""
-    import json
-
-    from pyarrow import fs as pa_fs
-
-    uri = index_path if "://" in index_path else "file://" + index_path
-    filesystem, base = pa_fs.FileSystem.from_uri(uri)
-    with filesystem.open_input_stream(f"{base}/_centroids.json") as fh:
-        cents = json.loads(fh.read())
-    qdist = sorted(
-        (
-            sum((float(q) - float(c)) ** 2 for q, c in zip(query_vec, cv)),
-            cid,
-        )
-        for cid, cv in cents
-    )
-    probes = [cid for _d, cid in qdist[:nprobe]]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        spark.read.parquet(index_path)
-        .filter(F.col("cell").isin(probes))
         .select(
             F.col(id_col),
             F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
@@ -638,162 +513,6 @@ def knn_pq(
     )
 
 
-def build_pq_index(
-    emb: DataFrame,
-    path: str,
-    m: int = 4,
-    n_codes: int = 16,
-    spacing: int = 31,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """PQ serve layout: the encoded table (id + m small codes + the
-    raw vector for re-rank) written once, codebooks as a JSON sidecar
-    (`_codebooks.json`) — serve-time scoring needs neither a training
-    scan nor the raw-vector column (Parquet column pruning keeps the
-    ADC scan to the codes; only the ≤ k·refine re-rank rows ever
-    decode vectors). The PQ twin of :func:`build_ivf_index`."""
-    import json
-
-    from pyarrow import fs as pa_fs
-
-    books = pq_seed_codebooks(emb, m, n_codes, spacing, id_col, vec_col)
-    enc = pq_encode(emb, books, id_col, vec_col)
-    emb.join(enc, id_col).write.mode("overwrite").parquet(path)
-    uri = path if "://" in path else "file://" + path
-    filesystem, base = pa_fs.FileSystem.from_uri(uri)
-    with filesystem.open_output_stream(f"{base}/_codebooks.json") as fh:
-        fh.write(json.dumps(books).encode())
-
-
-def knn_pq_serve(
-    spark,
-    index_path: str,
-    query_vec: list[float],
-    k: int = 10,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k against a :func:`build_pq_index` layout: LUT from the
-    sidecar codebooks (no scan), ADC over the CODES COLUMN ONLY
-    (column-pruned scan — raw vectors stay cold), exact cosine
-    re-rank of the k·refine survivors."""
-    import json
-
-    from pyarrow import fs as pa_fs
-
-    uri = index_path if "://" in index_path else "file://" + index_path
-    filesystem, base = pa_fs.FileSystem.from_uri(uri)
-    with filesystem.open_input_stream(f"{base}/_codebooks.json") as fh:
-        books = json.loads(fh.read())
-    m = len(books)
-    sub = len(books[0][0][1])
-    lut = [
-        [
-            sum(
-                (float(query_vec[j * sub + t]) - float(cv[t])) ** 2
-                for t in range(sub)
-            )
-            for _code, cv in book
-        ]
-        for j, book in enumerate(books)
-    ]
-    idx = spark.read.parquet(index_path)
-    approx = F.round(
-        sum(
-            F.element_at(
-                F.array(*[F.lit(d) for d in lut[j]]),
-                F.element_at(F.col("pq_code"), j + 1) + 1,
-            )
-            for j in range(m)
-        ),
-        6,
-    )
-    cand = (
-        idx.select(F.col(id_col), approx.alias("_ad"))
-        .orderBy("_ad", id_col)
-        .limit(k * refine)
-    )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        idx.join(cand.select(id_col), id_col)
-        .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def append_ivf_index(
-    emb_new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """O(batch) growth of a :func:`build_ivf_index` layout: new
-    vectors are assigned with the SIDECAR centroids (no retrain, no
-    rescan of the existing index) and appended into their cell
-    partitions. A daily-growing 100 TB corpus pays for its delta, not
-    a rebuild; the centroids drift from optimal as the distribution
-    shifts — re-run ``build_ivf_index`` on whatever cadence recall
-    audits demand (the sidecar makes the staleness inspectable)."""
-    import json
-
-    from pyarrow import fs as pa_fs
-
-    uri = path if "://" in path else "file://" + path
-    filesystem, base = pa_fs.FileSystem.from_uri(uri)
-    with filesystem.open_input_stream(f"{base}/_centroids.json") as fh:
-        cents = [(int(c), v) for c, v in json.loads(fh.read())]
-    emb_new.withColumn(
-        "cell", _assign_bucket_col(vec_col, cents)
-    ).write.mode("append").partitionBy("cell").parquet(path)
-
-
-def append_pq_index(
-    emb_new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """O(batch) growth of a :func:`build_pq_index` layout: new vectors
-    are encoded against the SIDECAR codebooks and appended. Same
-    staleness contract as :func:`append_ivf_index`."""
-    import json
-
-    from pyarrow import fs as pa_fs
-
-    uri = path if "://" in path else "file://" + path
-    filesystem, base = pa_fs.FileSystem.from_uri(uri)
-    with filesystem.open_input_stream(f"{base}/_codebooks.json") as fh:
-        books = [
-            [(int(c), v) for c, v in book] for book in json.loads(fh.read())
-        ]
-    enc = pq_encode(emb_new, books, id_col, vec_col)
-    emb_new.join(enc, id_col).write.mode("append").parquet(path)
-
-
-def append_ann_index(
-    emb_new: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int = 6,
-    vec_col: str = "embedding",
-) -> None:
-    """O(batch) growth of a :func:`build_ann_index` layout. LSH needs
-    no sidecar — the hyperplanes are a pure function of
-    ``(plane, dim)`` — so appending is bucketing the delta with the
-    same deterministic planes and appending into its partitions. No
-    staleness either: unlike IVF/PQ codebooks, the planes never
-    drift."""
-    emb_new.withColumn(
-        "bucket", lsh_bucket_col(F.col(vec_col), dim, n_planes)
-    ).write.mode("append").partitionBy("bucket").parquet(path)
-
-
 def knn_ivfpq(
     emb: DataFrame,
     query_vec: list[float],
@@ -812,9 +531,8 @@ def knn_ivfpq(
     coarse quantizer prunes to the ``nprobe`` cells nearest the query,
     the ADC LUT scores only THOSE cells' codes, and the k·refine best
     get the exact re-rank. Per query the scan cost drops from PQ's
-    O(n) codes to ~nprobe/K of them — the 100 TB serve posture (cell =
-    partition column via ``build_ivf_index``'s layout, codes via
-    ``pq_encode``).
+    O(n) codes to ~nprobe/K of them (cells from the coarse centroids of
+    :func:`knn_ivf`, codes via :func:`pq_encode`).
 
     Deviation from FAISS, documented: codes come from the GLOBAL
     codebooks (:func:`pq_seed_codebooks`), not per-cell residual

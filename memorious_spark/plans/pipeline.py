@@ -149,7 +149,9 @@ class CrawlConfig:
         return compile_rule(self.fetch_rules)
 
     def store_rule_col(self):
-        return compile_rule(self.store_rules)
+        # store rules judge the fetched response, so they see the
+        # post-redirect url (memorious operations/parse.py:105-119)
+        return compile_rule(self.store_rules, url="final_url")
 
     def fetch_rule_py(self):
         return compile_py(self.fetch_rules)

@@ -154,6 +154,30 @@ def test_text_byte_identity(spark, engine_run, oracle_run):
         assert hashlib.sha256(o.encode("utf-8")).hexdigest() == h, url
 
 
+def test_store_rules_see_final_url(
+    spark, corpus, corpus_dict, tmp_path_factory
+):
+    """Store rules judge the fetched response, so they match the
+    post-redirect url: a redirect from another host into h0 is stored
+    under an h0 pattern, exactly as the oracle stores it."""
+    import dataclasses
+
+    cfg = dataclasses.replace(CFG, store_rules={"pattern": r"https://h0\."})
+    store = RunStore(tmp_path_factory.mktemp("runs_store"), "e2e", "runS")
+    CrawlRunner(spark, cfg, store).run(corpus)
+    oracle = run_oracle(cfg, corpus_dict)
+
+    rows = store.read_all(spark, "results", 60).select("url", "final_url").collect()
+    assert {r["final_url"] for r in rows} == {s["final_url"] for s in oracle.stored}
+    assert {(py_norm(r["url"]), r["final_url"]) for r in rows} == {
+        (s["url"], s["final_url"]) for s in oracle.stored
+    }
+    # not vacuous: some stored row was redirected across hosts
+    assert any(
+        r["url"].split("/")[2] != r["final_url"].split("/")[2] for r in rows
+    )
+
+
 def test_kill_resume_matches_uninterrupted(
     spark, corpus, tmp_path_factory, engine_run
 ):

@@ -1,4 +1,4 @@
-"""bind_once/bind_struct semantics: identical results to inlining the
+"""bind_once semantics: identical results to inlining the
 expression, including NULL propagation — the perf claim (expression
 evaluated once, not per lambda element) is covered by the measured
 notes in functions/hof.py; these pin the semantics the rewritten
@@ -7,7 +7,7 @@ _features, robots path check) rely on."""
 
 from pyspark.sql import functions as F
 
-from memorious_spark.functions.hof import bind_once, bind_struct
+from memorious_spark.functions.hof import bind_once
 
 
 def test_bind_once_equals_inline(spark):
@@ -100,15 +100,3 @@ def test_bind_once_plan_lock(spark):
     assert n_splits(gopher_keep(F.col("text"))) == 2  # words + lines
     assert n_splits(lang_guess(F.col("text"))) == 1
     assert n_splits(shingles(F.col("text"))) == 1
-
-
-def test_bind_struct_kwargs(spark):
-    df = spark.createDataFrame([("a b", "x\ny"),], "t string, u string")
-    out = df.select(
-        bind_struct(
-            lambda words, lines: F.size(words) + F.size(lines),
-            words=F.split("t", " "),
-            lines=F.split("u", "\n"),
-        ).alias("o")
-    ).collect()
-    assert out[0].o == 4

@@ -2,6 +2,9 @@
 Spark UDFs and the oracle share (mirrors the extraction assertions of
 the reference's test_operations.py:50-92 / test_http.py:11-132)."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from memorious_spark.functions import htmlkit as hk
 
 PAGE = (
@@ -330,3 +333,56 @@ def test_extract_links_fast_join_equals_urljoin():
                 seen.add(u)
                 want.append(u)
         assert got == want, (base, got, want)
+
+
+# the bases of test_extract_links_fast_join_equals_urljoin
+_LINK_BASES = [
+    "https://h0.example.com/doc/1",
+    "HTTP://MiXed.Example.com:8080/a/b?x=1#f",
+    "https://h1.example.com/",
+]
+# path segments: dot segments, empty ones ("//"), ;params, escapes,
+# whitespace and backslashes — every shape the fast path must leave to
+# urljoin or join identically
+_segment = st.sampled_from(
+    ["a", "doc", "5", "", ".", "..", "%", "%2e", "%20", ";", "a;p=1",
+     "a b", "t\tab", "n\nl", "a\\b", "x=1&y"]
+)
+_path = st.lists(_segment, min_size=1, max_size=5).map("/".join)
+_tail = st.sampled_from(["", "?", "?q=1", "#", "#f", "?q#f", "\n", "\r"])
+_href = st.one_of(
+    st.builds(lambda p, t: "/" + p + t, _path, _tail),
+    st.builds(
+        lambda scheme, p, t: scheme + "://abs.example.com/" + p + t,
+        st.sampled_from(["http", "https", "HTTP", "Https", "hTtPs"]),
+        _path,
+        _tail,
+    ),
+)
+# leading/trailing whitespace the kernel and the reference both strip
+_pad = st.sampled_from(["", " ", "\t", "\n"])
+
+
+@settings(derandomize=True, deadline=None, max_examples=1000)
+@given(st.lists(st.builds(lambda a, h, b: a + h + b, _pad, _href, _pad),
+                min_size=1, max_size=12))
+def test_extract_links_equals_urljoin_property(refs):
+    """Property form of the fast-join contract: for generated hrefs,
+    ``extract_links`` equals first-wins ``urljoin`` over the refs."""
+    import html
+    from urllib.parse import urljoin
+
+    from memorious_spark.functions.htmlkit import extract_links, parse_html
+
+    doc = "<html><body>" + "".join(
+        f'<a href="{html.escape(r)}">t</a>' for r in refs
+    ) + "</body></html>"
+    for base in _LINK_BASES:
+        got = extract_links(parse_html(doc), base)
+        seen, want = set(), []
+        for r in refs:
+            u = urljoin(base, r.strip())
+            if u and u not in seen:
+                seen.add(u)
+                want.append(u)
+        assert got == want, (base, refs, got, want)

@@ -187,202 +187,6 @@ def test_politeness_two_phase_has_salted_window(spark):
     assert carry.count() == 95
 
 
-def test_ann_serve_scans_only_probed_partitions(spark, tmp_path):
-    """The ANN serve posture, demonstrated (the analogue of the
-    bucketed-corpus join test for similarity): embeddings written
-    PARTITIONED BY the precomputed LSH bucket; a query's probe set
-    becomes a partition filter, so the scan enumerates ONLY the probed
-    bucket directories. Proof is empirical, not just plan-level: a
-    non-probed bucket's data file is corrupted AFTER the query plan is
-    built — the pruned query still answers (it never opens that file)
-    while a full scan chokes on it — and the result is identical to
-    the on-the-fly knn_lsh."""
-    import math
-
-    import pytest as _pytest
-
-    from memorious_spark.operators import similarity
-
-    n_planes, dim, k = 4, 8, 5
-    rows = [
-        (i, [math.sin(0.7 * i + d) + 0.05 * ((i * d) % 5) for d in range(dim)])
-        for i in range(400)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "ann_index")
-    similarity.build_ann_index(emb, idx, dim=dim, n_planes=n_planes)
-
-    q = rows[17][1]
-    probes = set(similarity.query_probe_buckets(q, n_planes, multiprobe=True))
-    served = similarity.knn_lsh_serve(
-        spark, idx, q, k=k, n_planes=n_planes
-    )
-    # 1) the bucket predicate lands in PartitionFilters (partition
-    # pruning), not as a post-scan data Filter
-    plan = _plan(served)
-    m = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert m and "bucket" in m[0], plan[:3000]
-    # 2) pruning is REAL: corrupt every data file of one non-probed
-    # bucket — the pruned query never opens them...
-    all_buckets = {
-        int(d.name.split("=")[1])
-        for d in (tmp_path / "ann_index").iterdir()
-        if d.name.startswith("bucket=")
-    }
-    assert probes & all_buckets, (probes, all_buckets)
-    victims = sorted(all_buckets - probes)
-    assert victims, "every bucket probed — widen the fixture"
-    full = spark.read.parquet(idx)  # resolved before corruption
-    for part in (tmp_path / "ann_index" / f"bucket={victims[0]}").glob(
-        "*.parquet"
-    ):
-        part.write_bytes(b"not a parquet file")
-    got = served.collect()
-    # ...while an unpruned scan of the same index chokes on them
-    with _pytest.raises(Exception):
-        full.select(F.sum("vec_id")).collect()
-    # 3) identical results to the on-the-fly path
-    flys = similarity.knn_lsh(emb, q, k=k, n_planes=n_planes).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in got] == [
-        (r["vec_id"], r["cosine"]) for r in flys
-    ]
-
-
-def test_pq_serve_column_pruned_adc_and_full_refine_exact(spark, tmp_path):
-    """PQ serve: the ADC candidate scan reads ONLY the code column
-    (ReadSchema pruning — raw vectors stay cold until the re-rank
-    join), the sidecar codebooks avoid any training scan, and with
-    k·refine covering the corpus the serve result equals brute
-    force."""
-    import math
-
-    from memorious_spark.operators import similarity
-
-    rows = [
-        (i, [math.sin(0.7 * i + 0.3 * d) for d in range(8)])
-        for i in range(24)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "pq_index")
-    similarity.build_pq_index(emb, idx, m=2, n_codes=4, spacing=3)
-    q = rows[5][1]
-    served = similarity.knn_pq_serve(spark, idx, q, k=5, refine=5)
-    brute = similarity.knn_brute_force(emb, q, k=5).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in served.collect()] == [
-        (r["vec_id"], r["cosine"]) for r in brute
-    ]
-    # column pruning: some scan reads pq_code WITHOUT embedding
-    plan = _plan(served)
-    schemas = [
-        ln for ln in plan.splitlines() if "ReadSchema" in ln
-    ]
-    assert any(
-        "pq_code" in ln and "embedding" not in ln for ln in schemas
-    ), plan[:3000]
-
-
-def test_index_appends_grow_without_rebuild(spark, tmp_path):
-    """append_ivf_index / append_pq_index: a new batch enters via the
-    SIDECAR parameters (no retrain, no rescan), and serve over the
-    grown index finds the appended vectors exactly where a fresh full
-    build would."""
-    import math
-
-    from memorious_spark.operators import similarity
-
-    def vecs(lo, hi):
-        return [
-            (i, [math.sin(0.7 * i + 0.3 * d) for d in range(8)])
-            for i in range(lo, hi)
-        ]
-
-    base = spark.createDataFrame(
-        vecs(0, 16), "vec_id long, embedding array<float>"
-    )
-    delta = spark.createDataFrame(
-        vecs(16, 24), "vec_id long, embedding array<float>"
-    )
-    both = base.unionByName(delta)
-    q = vecs(20, 21)[0][1]
-
-    ivf = str(tmp_path / "ivf")
-    similarity.build_ivf_index(base, ivf, n_centroids=4, spacing=3)
-    similarity.append_ivf_index(delta, ivf)
-    grown = similarity.knn_ivf_serve(spark, ivf, q, k=5, nprobe=4).collect()
-    brute = similarity.knn_brute_force(both, q, k=5).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in grown] == [
-        (r["vec_id"], r["cosine"]) for r in brute
-    ]
-    assert grown[0]["vec_id"] == 20  # the appended vector is served
-
-    pq = str(tmp_path / "pq")
-    similarity.build_pq_index(base, pq, m=2, n_codes=4, spacing=3)
-    similarity.append_pq_index(delta, pq)
-    served = similarity.knn_pq_serve(spark, pq, q, k=5, refine=5).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in served] == [
-        (r["vec_id"], r["cosine"]) for r in brute
-    ]
-
-    lsh = str(tmp_path / "lsh")
-    similarity.build_ann_index(base, lsh, dim=8, n_planes=2)
-    similarity.append_ann_index(delta, lsh, dim=8, n_planes=2)
-    lsh_got = similarity.knn_lsh_serve(
-        spark, lsh, q, k=5, n_planes=2
-    ).collect()
-    assert 20 in [r["vec_id"] for r in lsh_got]
-
-
-def test_ivf_serve_scans_only_probed_cells(spark, tmp_path):
-    """IVF twin of the LSH serve test: corpus partitioned by coarse
-    cell + centroid sidecar; the nprobe cells become a partition
-    filter (corrupting a non-probed cell after plan creation leaves
-    the query unharmed) and probing ALL cells is exact."""
-    import math
-
-    from memorious_spark.operators import similarity
-
-    rows = [
-        (i, [math.sin(0.3 * i + d) + 0.01 * ((i + d) % 7) for d in range(4)])
-        for i in range(60)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "ivf_index")
-    similarity.build_ivf_index(emb, idx, n_centroids=4, spacing=3)
-    q = rows[7][1]
-
-    served = similarity.knn_ivf_serve(spark, idx, q, k=5, nprobe=1)
-    plan = _plan(served)
-    m = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert m and "cell" in m[0], plan[:3000]
-    all_cells = {
-        int(d.name.split("=")[1])
-        for d in (tmp_path / "ivf_index").iterdir()
-        if d.name.startswith("cell=")
-    }
-    # corrupt a cell the nprobe=1 probe does not touch
-    import json
-
-    cents = json.loads((tmp_path / "ivf_index" / "_centroids.json").read_text())
-    qd = sorted(
-        (sum((a - b) ** 2 for a, b in zip(q, cv)), cid) for cid, cv in cents
-    )
-    probed = {qd[0][1]}
-    victim = sorted(all_cells - probed)[0]
-    for part in (tmp_path / "ivf_index" / f"cell={victim}").glob("*.parquet"):
-        part.write_bytes(b"garbage")
-    got = served.collect()
-    assert 7 in [r["vec_id"] for r in got]
-
-    # full-probe == brute force on an uncorrupted index
-    idx2 = str(tmp_path / "ivf_index2")
-    similarity.build_ivf_index(emb, idx2, n_centroids=4, spacing=3)
-    full = similarity.knn_ivf_serve(spark, idx2, q, k=5, nprobe=4).collect()
-    brute = similarity.knn_brute_force(emb, q, k=5).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in full] == [
-        (r["vec_id"], r["cosine"]) for r in brute
-    ]
-
-
 def test_delta_resolution_single_scan_single_shuffle(spark, tmp_path):
     """The upsert-shared read path must stay ONE delta scan + ONE
     keys-exchange (max_by aggregate) — the window+join formulation
