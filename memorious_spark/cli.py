@@ -167,7 +167,7 @@ def _cmd_run(args) -> int:
         "pages_stored": res.pages_stored,
         "urls_seen": res.urls_seen,
     }))
-    return 0 if res.status in ("done", "budget_exhausted") else 1
+    return 0 if res.status == "done" else 1
 
 
 def _cmd_list(args) -> int:

@@ -26,12 +26,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = [
-    "parse_robots",
-    "robots_table",
-    "parse_robots_sitemaps",
-    "robots_sitemap_table",
-]
+__all__ = ["parse_robots", "robots_table"]
 
 
 def parse_robots(
@@ -138,50 +133,3 @@ def robots_table(
     return robots_rows.mapInPandas(
         gen, "host string, disallow_prefixes array<string>, crawl_delay_budget int"
     )
-
-
-def parse_robots_sitemaps(text: str | None) -> list[str]:
-    """``Sitemap:`` directives of a robots.txt, in file order. Per the
-    sitemaps.org / REP spec these are GLOBAL (not scoped to any
-    User-agent group) and carry absolute URLs; relative values are
-    skipped (spec-invalid). Pure-python shared kernel — also the
-    oracle's."""
-    out: list[str] = []
-    if not text:
-        return out
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        k, _, v = line.partition(":")
-        if k.strip().lower() == "sitemap":
-            v = v.strip()
-            if v.lower().startswith(("http://", "https://")):
-                out.append(v)
-    return out
-
-
-def robots_sitemap_table(
-    corpus: DataFrame, url_col: str = "url", body_col: str = "html"
-) -> DataFrame:
-    """Distinct sitemap URLs advertised by the corpus's own
-    ``/robots.txt`` pages — ``(url string)``, the discovery half of
-    the sitemap chain (robots ``Sitemap:`` → sitemapindex → urlset →
-    pages; Heritrix/Nutch both seed from this). Tiny by construction
-    (≤ a few rows per host)."""
-    robots_rows = corpus.filter(
-        F.parse_url(F.col(url_col), F.lit("PATH")) == "/robots.txt"
-    ).select(F.col(body_col).alias("body"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls = []
-            for r in pdf.itertuples():
-                body = (
-                    bytes(r.body).decode("utf-8", "replace")
-                    if r.body is not None
-                    else None
-                )
-                urls.extend(parse_robots_sitemaps(body))
-            if urls:
-                yield pd.DataFrame({"url": urls})
-
-    return robots_rows.mapInPandas(gen, "url string").distinct()

@@ -1,11 +1,11 @@
-"""Link-graph authority scoring for frontier prioritization.
+"""Link-graph authority scoring.
 
-The north rule's frontier is a PRIORITY queue; the reference drains
-FIFO because a single-process crawler has no global view of the link
-graph. At 10^10 URLs the standard priority signal is link authority
+At 10^10 URLs the standard crawl-priority signal is link authority
 (PageRank over the hyperlink graph — Page et al. 1999; OPIC and
 friends are its online approximations), so crawl budget goes to the
-pages the web itself points at.
+pages the web itself points at. The crawl runner itself drains FIFO,
+as the reference does; :func:`pagerank` is a standalone operator
+(driver query ``link_pagerank``).
 
 Engine-reproducibility contract (what makes the DuckDB oracle exact):
 
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["pagerank", "rank_priority"]
+__all__ = ["pagerank"]
 
 UNIT = 10**6
 
@@ -159,34 +159,4 @@ def pagerank(
         "node",
         F.col("units").alias("rank_units"),
         (F.col("units") / F.lit(float(unit))).alias("rank"),
-    )
-
-
-def rank_priority(
-    frontier: DataFrame,
-    ranks: DataFrame,
-    id_col: str = "doc_id",
-    node_col: str = "node",
-) -> DataFrame:
-    """Overwrite the frontier's ``priority`` from link authority:
-    higher rank → smaller priority value → dequeued first by
-    :func:`frontier.politeness_dequeue` (order is ``(priority,
-    emit_seq)``, so FIFO stays the tiebreak within a rank). Unranked
-    rows (not yet in the graph) keep priority 0 — a discovered-first
-    bias, the behavior a fresh-URL queue wants. The rank table is a
-    per-node slim projection; AQE broadcasts it when it fits, else
-    this is one key-shuffle join. Priority is DOUBLE — the engine's
-    frontier schema (frontier.py FRONTIER_SCHEMA); rank_units < 2^53
-    by the fixed-point bound, so the negation stays exact."""
-    r = ranks.select(
-        F.col(node_col).alias(id_col),
-        F.col("rank_units").alias("_ru"),
-    )
-    return (
-        frontier.join(r, id_col, "left")
-        .withColumn(
-            "priority",
-            F.coalesce(-F.col("_ru"), F.lit(0)).cast("double"),
-        )
-        .drop("_ru")
     )

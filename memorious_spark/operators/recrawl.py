@@ -19,9 +19,10 @@ is the missing scheduling half: fold each URL's fetch history into
     priority = λ̂ · age_since_last_fetch
 
 (the expected number of unseen changes — Poisson mean over the gap;
-ordering by it is the freshness-maximizing greedy schedule). Feed it
-into the frontier's ``priority`` column (negated: the politeness
-dequeue sorts ascending) the same way ``linkrank.rank_priority`` does.
+ordering by it is the freshness-maximizing greedy schedule). To order
+a frontier by it, write it negated into the frontier's ``priority``
+column: the politeness dequeue sorts ``(priority, emit_seq)``
+ascending.
 
 Engine-reproducibility: the history fold is integer/timestamp
 arithmetic (no floats) until the single ``ln``; λ̂ and priority are

@@ -42,6 +42,20 @@ _SUPPORTED_METHODS = {
     "warc", "inspect",
 }
 
+# crawl options this engine no longer has. Ignoring one would change
+# what a crawl fetches (robots gating, a page bound, the frontier
+# order), so a config that still sets one fails at load instead.
+_REMOVED_TOP_LEVEL = ("robots", "robots_sitemaps", "max_pages")
+_REMOVED_FETCH_PARAMS = (
+    "prioritize", "rank_iters", "traps", "canonicalize", "error_backoff",
+)
+
+
+def _reject_removed(spec: dict, keys: tuple[str, ...], where: str) -> None:
+    for key in keys:
+        if key in spec:
+            raise ValueError(f"{where}{key!r} is no longer supported")
+
 
 @dataclass(frozen=True)
 class CrawlConfig:
@@ -57,13 +71,6 @@ class CrawlConfig:
     emit_errors: bool = False
     max_rounds: int = 25
     max_depth: int | None = None
-    # global page budget (Heritrix max-document-download / Nutch topN
-    # family; no reference analogue — a single-site crawler drains).
-    # Round-discretized like everything else: the run stops after the
-    # FIRST COMPLETE round at which total stored pages ≥ max_pages —
-    # rounds are never truncated mid-flight, so resume/commit
-    # semantics are untouched.
-    max_pages: int | None = None
     expire_days: int | None = None
     # incremental re-run mode: probe the crawler-scoped http_cache
     # (304 replay of unchanged pages) and skip re-storing content that
@@ -88,47 +95,11 @@ class CrawlConfig:
     inspect_enabled: bool = False
     # DEBUG emit sampling (memorious/logic/context.py:56-61)
     sampling_rate: float | None = None
-    # robots gating (north-rule addition, no reference analogue):
-    # top-level `robots: true` derives the per-host gate table from
-    # the corpus's own /robots.txt pages at run start
-    use_robots: bool = False
-    # sitemap discovery from robots.txt `Sitemap:` directives
-    # (top-level `robots_sitemaps: true`): advertised sitemap URLs
-    # join the round-0 frontier after the seeds; pair with
-    # parse.params.sitemaps to walk sitemapindex → urlset → pages
-    robots_sitemaps: bool = False
-    # frontier prioritization (the north rule's PRIORITY queue; no
-    # reference analogue — memorious drains FIFO): "pagerank" re-ranks
-    # budget-constrained rounds by link authority over the link graph
-    # discovered so far (operators/linkrank.py); None keeps the
-    # reference's FIFO order, and the crawl-order oracles require it.
-    prioritize: str | None = None
-    rank_iters: int = 3
     # politeness budget grouping: "host" (the reference's rate-limit
     # resource, logic/http.py:210-211) or "domain" — registrable
     # domain via functions/urls.py PSL-lite, so subdomain farms share
     # one budget instead of multiplying it (no reference analogue)
     politeness_group: str = "host"
-    # per-host error backoff (Heritrix retry-delay / queue-snooze
-    # family; no reference analogue): a host producing ≥ threshold
-    # HTTP-error responses (status ≥ 400) in one round is SNOOZED —
-    # its frontier rows carry over untouched for the next
-    # backoff_rounds rounds, then re-enter FIFO. None disables.
-    backoff_threshold: int | None = None
-    backoff_rounds: int = 2
-    # frontier dedup key: "conservative" hashes url_norm (the
-    # reference's seen contract — crawl-order oracles require it);
-    # "aggressive" hashes functions/urls.canon_col (sorted query
-    # params, tracking params stripped) so ?utm_* variants collapse
-    # to ONE seen entry. Fetch/corpus join stays on url_norm either
-    # way — the canon form keys dedup, never the request.
-    canonicalize: str = "conservative"
-    # crawler-trap frontier gate (functions/urls.py trap_signals —
-    # Heritrix's pathological-path/too-many-segments decide-rule
-    # family; no reference analogue, a single-site crawler never fills
-    # its queue with calendar loops). Off by default: the crawl-order
-    # oracles enumerate every link, traps included.
-    trap_filter: bool = False
     # generator init stage (initializers.py:21-109): method + params of
     # a sequence/dates/enumerate init, and the %-templated seed urls
     # its items format into (flattened over tee branches in handler
@@ -145,12 +116,13 @@ class CrawlConfig:
     # fetch → parse → clean → store pipeline shape.
     clean_html_paths: tuple[str, ...] | None = None
 
+    # fetch and store rules both judge the fetched response, so they
+    # see the post-redirect url (memorious operations/fetch.py:17-20,
+    # operations/parse.py:105-119)
     def fetch_rule_col(self):
-        return compile_rule(self.fetch_rules)
+        return compile_rule(self.fetch_rules, url="final_url")
 
     def store_rule_col(self):
-        # store rules judge the fetched response, so they see the
-        # post-redirect url (memorious operations/parse.py:105-119)
         return compile_rule(self.store_rules, url="final_url")
 
     def fetch_rule_py(self):
@@ -168,6 +140,7 @@ def load_config(spec: dict) -> CrawlConfig:
     name = spec.get("name")
     if not name or not all(c.isalnum() or c in "_-" for c in name):
         raise ValueError(f"invalid crawler name: {name!r}")
+    _reject_removed(spec, _REMOVED_TOP_LEVEL, "crawler option ")
     stages = spec.get("pipeline", {})
     init_name = spec.get("init", "init")
     if init_name not in stages:
@@ -274,55 +247,23 @@ def load_config(spec: dict) -> CrawlConfig:
     extract_enabled, extract_wildcard = False, None
     inspect_enabled = False
     clean_paths: tuple[str, ...] | None = None
-    prioritize, rank_iters = None, 3
-    trap_filter = False
     politeness_group = "host"
-    canonicalize = "conservative"
-    backoff_threshold, backoff_rounds = None, 2
     for stage in stages.values():
         method = stage.get("method")
         params = stage.get("params") or {}
         if method == "fetch":
+            _reject_removed(params, _REMOVED_FETCH_PARAMS, "fetch param ")
             fetch_rules = params.get("rules")
             retries = int(params.get("retry", 3))
             emit_errors = bool(params.get("emit_errors", False))
             if "rate_limit" in params:
                 budget = int(params["rate_limit"])
-            prioritize = params.get("prioritize")
-            if prioritize not in (None, "pagerank"):
-                raise ValueError(
-                    f"fetch prioritize: unknown scheme {prioritize!r} "
-                    "(supported: pagerank)"
-                )
-            rank_iters = int(params.get("rank_iters", 3))
-            trap_filter = bool(params.get("traps", False))
             politeness_group = params.get("politeness_group", "host")
             if politeness_group not in ("host", "domain"):
                 raise ValueError(
                     "fetch politeness_group: unknown grouping "
                     f"{politeness_group!r} (supported: host, domain)"
                 )
-            canonicalize = params.get("canonicalize", "conservative")
-            if canonicalize not in ("conservative", "aggressive"):
-                raise ValueError(
-                    "fetch canonicalize: unknown form "
-                    f"{canonicalize!r} (supported: conservative, "
-                    "aggressive)"
-                )
-            eb = params.get("error_backoff")
-            if eb is not None:
-                if not isinstance(eb, dict) or "threshold" not in eb:
-                    raise ValueError(
-                        "fetch error_backoff: expected a mapping with "
-                        f"'threshold' (and optional 'rounds'), got {eb!r}"
-                    )
-                backoff_threshold = int(eb["threshold"])
-                backoff_rounds = int(eb.get("rounds", 2))
-                if backoff_threshold < 1 or backoff_rounds < 1:
-                    raise ValueError(
-                        "fetch error_backoff: threshold and rounds "
-                        "must be >= 1"
-                    )
         elif method == "extract":
             extract_enabled = True
             extract_wildcard = params.get("wildcard")
@@ -394,10 +335,6 @@ def load_config(spec: dict) -> CrawlConfig:
         budget_per_host=budget,
         max_rounds=int(spec.get("max_rounds", 25)),
         max_depth=spec.get("max_depth"),
-        max_pages=(
-            int(spec["max_pages"]) if spec.get("max_pages") is not None
-            else None
-        ),
         expire_days=spec.get("expire"),
         incremental=bool(spec.get("incremental", False)),
         store_method=store_method,
@@ -407,17 +344,9 @@ def load_config(spec: dict) -> CrawlConfig:
         extract_enabled=extract_enabled,
         extract_wildcard=extract_wildcard,
         inspect_enabled=inspect_enabled,
-        use_robots=bool(spec.get("robots", False)),
-        robots_sitemaps=bool(spec.get("robots_sitemaps", False)),
         init_method=init_method,
         init_params=init_params,
         seed_templates=seed_templates,
         clean_html_paths=clean_paths,
-        prioritize=prioritize,
-        rank_iters=rank_iters,
-        trap_filter=trap_filter,
         politeness_group=politeness_group,
-        canonicalize=canonicalize,
-        backoff_threshold=backoff_threshold,
-        backoff_rounds=backoff_rounds,
     )

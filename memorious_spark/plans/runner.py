@@ -38,13 +38,12 @@ round launches exactly THREE Spark job waves on the default
   3. frontier + seen writes, submitted in parallel threads (both read
      only cached data; the next round's frontier size rides along as
      an observation, so empty rounds cost zero jobs).
-Politeness/robots rounds are ALSO three waves: their selection
+Per-host budget rounds are ALSO three waves: their selection
 histogram (count + lineage of the budget-selected cache) defers into
 wave 2 as a parallel thread beside the dedup sizes collect, and the
 fetch join's broadcast decision uses the frontier count as its safe
-upper bound. Only a resume with an unknown frontier count pays an
-up-front histogram, once. Everything else (metrics, manifest) is
-driver-local pyarrow/JSON.
+upper bound. Everything else (metrics, manifest) is driver-local
+pyarrow/JSON.
 
 State (frontier / seen / results / metrics) is checkpointed per round
 through :class:`RunStore`; a killed run resumes from the last complete
@@ -137,12 +136,10 @@ class CrawlRunner:
         spark: SparkSession,
         config: CrawlConfig,
         store: RunStore,
-        robots: DataFrame | None = None,
     ):
         self.spark = spark
         self.config = config
         self.store = store
-        self.robots = robots
         from memorious_spark.plans.rules import uses_text
 
         self._fetch_rule_needs_text = uses_text(config.fetch_rules)
@@ -155,24 +152,12 @@ class CrawlRunner:
         df = self.spark.createDataFrame(rows, "url string, emit_seq long")
         return self._frontier_shape(df, depth=F.lit(0))
 
-    def _dedup_hash(self, url_norm) -> "F.Column":
-        """The seen/dedup key: xxhash64 of url_norm, or of the
-        aggressive canonical form (sorted/stripped query params) when
-        ``canonicalize: aggressive`` — tracking-param variants then
-        collapse to one frontier entry. url_norm itself (the fetch /
-        corpus-join key) is never altered."""
-        if self.config.canonicalize == "aggressive":
-            from memorious_spark.functions.urls import canon_col
-
-            return hash_col(canon_col(F.col("url")))
-        return hash_col(url_norm)
-
     def _frontier_shape(self, df: DataFrame, depth) -> DataFrame:
         url_norm = norm_col(F.col("url"))
         return df.select(
             "url",
             url_norm.alias("url_norm"),
-            self._dedup_hash(url_norm).alias("url_hash"),
+            hash_col(url_norm).alias("url_hash"),
             host_col(F.col("url")).alias("host"),
             depth.cast("int").alias("depth"),
             F.lit(0.0).alias("priority"),
@@ -262,13 +247,6 @@ class CrawlRunner:
             inc_df = store.read_shared(spark, "inc_tags", INC_TAGS_SCHEMA)
         else:
             cache_df = inc_df = None
-        if cfg.use_robots and self.robots is None:
-            # derive the per-host gate from the corpus's own
-            # /robots.txt pages (functions.robots; YAML `robots: true`)
-            from memorious_spark.functions.robots import robots_table
-
-            self.robots = robots_table(corpus).persist()
-
         if resume and (m := store.read_manifest()) is not None:
             # a resume follows a crash: sweep shared-table compaction
             # leftovers ONCE here — per-op recovery only covers tables
@@ -280,7 +258,7 @@ class CrawlRunner:
             )
             next_seq = last["next_seq"]
             seen_count = last["urls_seen"]
-            frontier_rows = last.get("next_frontier", -1)  # -1 = unknown
+            frontier_rows = last["next_frontier"]
             totals = {
                 "fetched": sum(r["fetched"] for r in m["rounds"]),
                 "stored": sum(r["stored"] for r in m["rounds"]),
@@ -298,45 +276,6 @@ class CrawlRunner:
                 )
 
                 initial_frontier = compile_initial_frontier(spark, cfg, store)
-            if cfg.robots_sitemaps:
-                # robots.txt `Sitemap:` discovery: advertised sitemap
-                # URLs enter the round-0 frontier AFTER the seeds
-                # (emit order: seeds in list order, then sitemaps in
-                # URL order — the global window is safe, the table is
-                # ≤ a few rows per host)
-                from pyspark.sql import Window
-
-                from memorious_spark.functions.robots import (
-                    robots_sitemap_table,
-                )
-
-                if initial_frontier is None:
-                    initial_frontier = spark.createDataFrame(
-                        [(u, i) for i, u in enumerate(cfg.seeds)],
-                        "url string, emit_seq long",
-                    )
-                    n0 = len(cfg.seeds)
-                else:
-                    # emit_seq is an ORDER KEY, not a dense id
-                    # (sequence-tag skips leave gaps): offset by the
-                    # actual max so sitemap rows can never collide
-                    # with or sort before existing seed rows
-                    n0 = (
-                        initial_frontier.agg(F.max("emit_seq")).first()[0]
-                        or 0
-                    ) + 1
-                sm = robots_sitemap_table(corpus).join(
-                    initial_frontier.select("url"), "url", "left_anti"
-                )
-                sm = sm.select(
-                    "url",
-                    (
-                        F.row_number().over(Window.orderBy("url")) - 1 + n0
-                    ).cast("long").alias("emit_seq"),
-                )
-                initial_frontier = initial_frontier.select(
-                    "url", "emit_seq"
-                ).unionByName(sm)
             if initial_frontier is not None:
                 frontier0 = self._frontier_shape(initial_frontier, depth=F.lit(0))
                 obs0 = Observation()
@@ -364,76 +303,22 @@ class CrawlRunner:
                 break
             ph = _Phase(rnd)
             frontier = store.read_round(spark, "frontier", rnd, FRONTIER_SCHEMA)
-            if frontier is None or (frontier_rows < 0 and not frontier.head(1)):
+            if frontier is None:
                 break
 
             seen = store.read_all(spark, "seen", rnd - 1, SEEN_SCHEMA)
 
-            # per-host error backoff (CrawlConfig.backoff_threshold):
-            # hosts snoozed by an earlier round's error burst park
-            # their frontier rows untouched until until_round; the
-            # snooze table is ≤ one row per erroring host — broadcast
-            backoff_parked = None
-            if cfg.backoff_threshold is not None:
-                snooze = store.read_all(
-                    spark, "snooze", rnd - 1, "host string, until_round int"
-                )
-                if snooze is not None:
-                    live_snooze = (
-                        snooze.filter(F.col("until_round") > rnd)
-                        .select("host")
-                        .distinct()
-                    )
-                    backoff_parked = frontier.join(
-                        F.broadcast(live_snooze), "host", "left_semi"
-                    )
-                    frontier = frontier.join(
-                        F.broadcast(live_snooze), "host", "left_anti"
-                    )
-
             # politeness budget + hot-host salting. No configured rate
-            # limit and no robots → no parking semantics to enforce →
-            # skip the per-host window entirely (one less shuffle; the
-            # reference only parks stages when a limit exists,
+            # limit → no parking semantics to enforce → skip the
+            # per-host window entirely (one less shuffle; the reference
+            # only parks stages when a limit exists,
             # memorious/model/queue.py:30-37).
-            no_politeness = (
-                cfg.budget_per_host >= 1_000_000_000 and self.robots is None
-            )
-            # link-authority prioritization (opt-in; north-rule
-            # priority queue). Only meaningful when a budget parks
-            # rows — with no politeness the whole frontier is fetched
-            # and order is irrelevant. Ranks come from the link graph
-            # DISCOVERED so far (every frontier emission carries its
-            # src_url); recomputed per round here — at a 10^10-URL
-            # frontier you'd recompute every k rounds and reuse the
-            # checkpointed rank table, the seam being this one call.
-            if (
-                cfg.prioritize == "pagerank"
-                and not no_politeness
-                and rnd >= 2
-            ):
-                from memorious_spark.operators.linkrank import (
-                    pagerank, rank_priority,
-                )
-
-                hist = store.read_all(spark, "frontier", rnd, FRONTIER_SCHEMA)
-                edges = hist.filter(F.col("src_url").isNotNull()).select(
-                    F.col("src_url").alias("src"), F.col("url").alias("dst")
-                )
-                ranks = pagerank(edges, n_iter=cfg.rank_iters)
-                frontier = rank_priority(frontier, ranks, id_col="url")
+            no_politeness = cfg.budget_per_host >= 1_000_000_000
             if no_politeness:
                 selected, carryover = frontier, None
             else:
                 selected, carryover = politeness_dequeue(
-                    frontier, cfg.budget_per_host, self.robots,
-                    group=cfg.politeness_group,
-                )
-            if backoff_parked is not None:
-                carryover = (
-                    backoff_parked
-                    if carryover is None
-                    else carryover.unionByName(backoff_parked)
+                    frontier, cfg.budget_per_host, group=cfg.politeness_group
                 )
             selected = salt_partitions(selected).persist()
 
@@ -449,8 +334,7 @@ class CrawlRunner:
                     for r in hist
                 ]
 
-            defer_hist = False
-            if no_politeness and frontier_rows >= 0 and backoff_parked is None:
+            if no_politeness:
                 # fast path — ZERO jobs here: selection kept the whole
                 # frontier, whose exact row count rode last round's
                 # frontier-write observation, and per-partition lineage
@@ -464,7 +348,7 @@ class CrawlRunner:
                     dict(round=rnd, stage="fetch_input", partition_id=i, rows=n)
                     for i, n in enumerate(store.partition_rows("frontier", rnd))
                 ]
-            elif frontier_rows >= 0:
+            else:
                 # politeness path: the budget-selected count is data-
                 # dependent, but nothing needs it before the retry
                 # decision — so the histogram DEFERS into wave 2
@@ -474,11 +358,6 @@ class CrawlRunner:
                 # safe upper bound (selection only shrinks). Budget
                 # rounds therefore cost the same THREE waves.
                 n_selected, lineage = None, None
-                defer_hist = True
-            else:
-                # resume with unknown frontier count: one up-front
-                # histogram (materializes the cache, sizes the join)
-                n_selected, lineage = _histogram()
             ph.mark(
                 "politeness+salt "
                 f"({'deferred' if n_selected is None else n_selected})"
@@ -494,14 +373,7 @@ class CrawlRunner:
                 if cfg.incremental
                 else selected
             )
-            fetched = fetch_stage(
-                probe_in, corpus,
-                selected_count=(
-                    n_selected
-                    if n_selected is not None
-                    else (frontier_rows if frontier_rows >= 0 else None)
-                ),
-            )
+            fetched = fetch_stage(probe_in, corpus, selected_count=frontier_rows)
             if cfg.incremental:
                 fetched = apply_replay(fetched)
             parsed, members = self._gate_and_parse(fetched, fetch_rule)
@@ -573,13 +445,6 @@ class CrawlRunner:
             cands = extract_links_df(parsed.filter(F.col("_emit"))).filter(
                 scheme_ok_col(F.col("url"))
             )
-            if cfg.trap_filter:
-                # crawler-trap gate (Heritrix decide-rule family): drop
-                # pathological links BEFORE norm/hash/dedup — a trap
-                # chain otherwise grows the frontier round over round
-                from memorious_spark.functions.urls import is_trap_col
-
-                cands = cands.filter(~is_trap_col(F.col("url")))
             if cfg.sampling_rate is not None and cfg.sampling_rate < 1.0:
                 # DEBUG emit sampling (context.py:56-61: emit proceeds
                 # with probability p); seeded for reproducibility
@@ -587,7 +452,7 @@ class CrawlRunner:
             if cfg.max_depth is not None:
                 cands = cands.filter(F.col("depth") <= cfg.max_depth)
             cands = cands.withColumn("url_norm", norm_col(F.col("url"))).withColumn(
-                "url_hash", self._dedup_hash(F.col("url_norm"))
+                "url_hash", hash_col(F.col("url_norm"))
             )
             cands = dedup_within_round(cands, _ORDER)
             # same-round redirect tags block only later emitters
@@ -624,7 +489,7 @@ class CrawlRunner:
             # gone. A deferred politeness histogram rides this wave in
             # a parallel thread (it scans the selected cache job 1
             # materialized).
-            hist_fut = pool.submit(_histogram) if defer_hist else None
+            hist_fut = None if no_politeness else pool.submit(_histogram)
             rp = range_by_order(new0, _ORDER)
             sizes = {
                 int(r["_pid"]): int(r["cnt"])
@@ -681,24 +546,6 @@ class CrawlRunner:
                 pool.submit(store.write_round, "frontier", rnd + 1, next_frontier),
                 pool.submit(store.write_round, "seen", rnd, seen_rows),
             ]
-            if cfg.backoff_threshold is not None:
-                # snooze the hosts that error-burst THIS round (off the
-                # parsed cache — rides wave 3 like the other writes)
-                snooze_rows = (
-                    parsed.filter(F.col("status_code") >= 400)
-                    .groupBy("host")
-                    .agg(F.count("*").alias("n"))
-                    .filter(F.col("n") >= cfg.backoff_threshold)
-                    .select(
-                        "host",
-                        F.lit(rnd + 1 + cfg.backoff_rounds)
-                        .cast("int")
-                        .alias("until_round"),
-                    )
-                )
-                futs.append(pool.submit(
-                    store.write_round, "snooze", rnd, snooze_rows
-                ))
             if members is not None:
                 # extract stage output; re-runs the (broadcast) corpus
                 # join for the archive subset — only when configured
@@ -813,16 +660,6 @@ class CrawlRunner:
             new0.unpersist()
             ph.mark("metrics+commit")
             rnd += 1
-            if (
-                cfg.max_pages is not None
-                and totals["stored"] >= cfg.max_pages
-            ):
-                # global page budget hit AFTER a complete committed
-                # round (CrawlConfig.max_pages docstring) — the
-                # frontier checkpoint survives, so a later resume with
-                # a raised budget continues mid-crawl
-                status = "budget_exhausted"
-                break
 
         pool.shutdown(wait=False)
         # run-level sinks + the post-drain aggregator hook

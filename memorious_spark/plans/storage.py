@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["RunStore"]
 
-_TABLES = ("frontier", "seen", "results", "metrics", "members", "snooze")
+_TABLES = ("frontier", "seen", "results", "metrics", "members")
 
 
 class RunStore:

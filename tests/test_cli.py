@@ -84,15 +84,15 @@ def test_cli_full_surface(spark, tmp_path, capsys):
 
 
 def test_cli_budget_then_resume(spark, tmp_path, capsys):
-    corpus, yml, runs = _setup(spark, tmp_path, extra_yaml="max_pages: 10")
+    corpus, yml, runs = _setup(spark, tmp_path, extra_yaml="max_rounds: 2")
     rc = main(["run", yml, "--corpus", corpus, "--runs-dir", runs])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rc == 0 and out["status"] == "budget_exhausted"
+    assert rc == 0 and out["status"] == "done" and out["rounds"] == 2
 
-    # lift the budget and resume the latest run to the full crawl
+    # lift the round limit and resume the latest run to the full crawl
     (tmp_path / "clidemo.yml").write_text(
         (tmp_path / "clidemo.yml").read_text().replace(
-            "max_pages: 10\n", ""
+            "max_rounds: 2\n", ""
         )
     )
     rc = main(

@@ -178,6 +178,39 @@ def test_store_rules_see_final_url(
     )
 
 
+def test_fetch_rules_see_final_url(
+    spark, corpus, corpus_dict, tmp_path_factory
+):
+    """Fetch rules judge the fetched response too, so they match the
+    post-redirect url: a redirect from another host into h0 is gated
+    by a not-h0 rule, exactly as the oracle gates it, and the seen set
+    (which the gated rows' links would grow) stays the oracle's."""
+    import dataclasses
+
+    cfg = dataclasses.replace(
+        CFG, fetch_rules={"not": {"pattern": r"https://h0\."}}
+    )
+    store = RunStore(tmp_path_factory.mktemp("runs_fetch"), "e2e", "runF")
+    CrawlRunner(spark, cfg, store).run(corpus)
+    oracle = run_oracle(cfg, corpus_dict)
+
+    rows = store.read_all(spark, "results", 60).select("url", "final_url").collect()
+    assert {r["final_url"] for r in rows} == {s["final_url"] for s in oracle.stored}
+    assert not any(r["final_url"].startswith("https://h0.") for r in rows)
+    seen = store.read_all(spark, "seen", 60)
+    engine_hashes = {
+        r["key_hash"] for r in seen.select("key_hash").distinct().collect()
+    }
+    odf = spark.createDataFrame([(u,) for u in sorted(oracle.seen)], "u string")
+    assert engine_hashes == {
+        r["h"] for r in odf.select(F.xxhash64("u").alias("h")).collect()
+    }
+    # not vacuous: some stored row was redirected across hosts
+    assert any(
+        r["url"].split("/")[2] != r["final_url"].split("/")[2] for r in rows
+    )
+
+
 def test_kill_resume_matches_uninterrupted(
     spark, corpus, tmp_path_factory, engine_run
 ):
@@ -284,164 +317,6 @@ def test_domain_grouped_budget_caps_whole_corpus_domain(
     store_u = RunStore(tmp_path_factory.mktemp("runs_dom_u"), "e2e", "runU")
     unbudgeted = CrawlRunner(spark, CFG, store_u).run(corpus)
     assert total == unbudgeted.pages_stored
-
-
-def test_error_backoff_snoozes_bursting_host(spark, tmp_path_factory):
-    """error_backoff {threshold: 3, rounds: 2}: a host that returns
-    ≥3 HTTP errors in one round is snoozed — its NEXT url parks
-    untouched for exactly 2 rounds, then fetches; without backoff the
-    same url fetches immediately. Unaffected hosts never park."""
-    import dataclasses
-    from datetime import datetime
-
-    def page(url, links=(), status=200):
-        anchors = "".join(f'<a href="{u}">x</a>' for u in links)
-        html = f"<html><body>{anchors}</body></html>".encode()
-        return (
-            url, datetime(2024, 1, 1), html, "body", "en",
-            "text/html", status, None,
-        )
-
-    bad = [f"https://bad.test/e{i}" for i in range(3)]
-    corpus = spark.createDataFrame(
-        [
-            page("https://good.test/seed",
-                 bad + ["https://bad.test/ok", "https://good.test/g2"]),
-            *[page(u, status=500) for u in bad],
-            page("https://bad.test/ok", ["https://bad.test/next"]),
-            page("https://good.test/g2"),
-            page("https://bad.test/next"),
-        ],
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, content_type string, status_code int, "
-        "redirect_to string",
-    )
-    base = CrawlConfig(
-        name="backoff", seeds=("https://good.test/seed",), max_rounds=10,
-    )
-
-    def rounds_of(cfg, tag):
-        store = RunStore(tmp_path_factory.mktemp(f"runs_{tag}"), "bo", tag)
-        res = CrawlRunner(spark, cfg, store).run(corpus)
-        assert res.status == "done"
-        where = {}
-        for r in range(res.rounds):
-            df = store.read_round(spark, "results", r)
-            if df is not None:
-                for x in df.select("url").collect():
-                    where[x["url"]] = r
-        return where
-
-    plain = rounds_of(base, "off")
-    # without backoff: next is discovered in round 1, fetched round 2
-    assert plain["https://bad.test/next"] == 2
-    backed = rounds_of(
-        dataclasses.replace(base, backoff_threshold=3, backoff_rounds=2),
-        "on",
-    )
-    # round 1 fetches the 3 errors -> bad.test snoozed rounds 2 and 3;
-    # /next (discovered round 1) parks twice and fetches round 4
-    assert backed["https://bad.test/next"] == 4
-    # the good host was never parked
-    assert backed["https://good.test/g2"] == plain["https://good.test/g2"]
-    # same final coverage either way
-    assert set(backed) == set(plain)
-
-
-def test_max_pages_budget_stops_then_resumes_to_full_crawl(
-    spark, corpus, tmp_path_factory
-):
-    """max_pages: the run stops after the first COMPLETE round at
-    which stored ≥ budget (status 'budget_exhausted', frontier
-    checkpoint intact, aggregator never fires); resuming with the
-    budget lifted drains to exactly the unbudgeted crawl."""
-    import dataclasses
-
-    cfg = dataclasses.replace(CFG, max_pages=10)
-    store = RunStore(tmp_path_factory.mktemp("runs_mp"), "e2e", "runM")
-    res = CrawlRunner(spark, cfg, store).run(corpus)
-    assert res.status == "budget_exhausted"
-    assert res.pages_stored >= 10
-    res2 = CrawlRunner(
-        spark, dataclasses.replace(CFG, max_pages=None), store
-    ).run(corpus, resume=True)
-    assert res2.status == "done"
-    store_f = RunStore(tmp_path_factory.mktemp("runs_mpf"), "e2e", "runF")
-    full = CrawlRunner(spark, CFG, store_f).run(corpus)
-    assert res2.pages_stored == full.pages_stored
-    got = {
-        r["url"]
-        for r in store.read_all(spark, "results", 60).select("url").collect()
-    }
-    want = {
-        r["url"]
-        for r in store_f.read_all(spark, "results", 60).select("url").collect()
-    }
-    assert got == want
-
-
-def test_aggressive_canonicalize_collapses_tracking_variants(
-    spark, tmp_path_factory
-):
-    """canonicalize='aggressive': three /p variants that differ only
-    in param order / tracking params collapse to ONE seen entry (the
-    first emitter wins, FIFO), while the conservative default fetches
-    all three. The fetch key (url_norm) is untouched — the winning
-    variant is fetched under its REAL url."""
-    import dataclasses
-    from datetime import datetime
-
-    def page(url, links=()):
-        anchors = "".join(f'<a href="{u}">x</a>' for u in links)
-        html = f"<html><body>{anchors}</body></html>".encode()
-        return (
-            url, datetime(2024, 1, 1), html, "body", "en",
-            "text/html", 200, None,
-        )
-
-    variants = [
-        "https://x.test/p?b=2&a=1&utm_source=mail",
-        "https://x.test/p?a=1&b=2",
-        "https://x.test/p?a=1&b=2&fbclid=77",
-    ]
-    corpus = spark.createDataFrame(
-        [
-            page("https://x.test/a", [variants[0], "https://x.test/q"]),
-            page("https://x.test/b", [variants[1], variants[2]]),
-            page(variants[0]),
-            page(variants[1]),
-            page(variants[2]),
-            page("https://x.test/q"),
-        ],
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, content_type string, status_code int, "
-        "redirect_to string",
-    )
-    base = CrawlConfig(
-        name="canon", seeds=("https://x.test/a", "https://x.test/b"),
-        max_rounds=6,
-    )
-
-    def run(cfg, tag):
-        store = RunStore(tmp_path_factory.mktemp(f"runs_{tag}"), "canon", tag)
-        res = CrawlRunner(spark, cfg, store).run(corpus)
-        assert res.status == "done"
-        urls = {
-            r["url"]
-            for r in store.read_all(spark, "results", 10)
-            .select("url").collect()
-        }
-        return urls
-
-    cons = run(base, "cons")
-    aggr = run(
-        dataclasses.replace(base, canonicalize="aggressive"), "aggr"
-    )
-    assert {v for v in variants} <= cons  # conservative fetches all 3
-    # aggressive: exactly one /p variant survives — the FIRST emitted
-    # (seed a's link, emit order before seed b's links)
-    assert aggr & set(variants) == {variants[0]}
-    assert "https://x.test/q" in aggr  # unrelated links unaffected
 
 
 def test_hot_host_budgeted_crawl_matches_oracle(spark, tmp_path_factory):

@@ -1644,34 +1644,6 @@ def test_pagerank_integer_exact(spark):
         pagerank(df, n_iter=1, unit=2 * 10**17)
 
 
-def test_rank_priority_orders_dequeue(spark):
-    """Link authority drives the politeness dequeue: under a budget
-    of 1 per host, the HIGH-rank URL wins the round even though it
-    was emitted later (priority sorts before emit_seq); unranked URLs
-    keep priority 0 and beat nothing."""
-    from memorious_spark.operators.frontier import politeness_dequeue
-    from memorious_spark.operators.linkrank import rank_priority
-
-    frontier = spark.createDataFrame(
-        [
-            ("https://h0/doc/1", "h0", 0, 1),
-            ("https://h0/doc/2", "h0", 0, 2),
-            ("https://h1/doc/3", "h1", 0, 3),
-        ],
-        "url string, host string, priority long, emit_seq long",
-    )
-    ranks = spark.createDataFrame(
-        [("https://h0/doc/2", 900)], "node string, rank_units long"
-    )
-    ranked = rank_priority(frontier, ranks, id_col="url")
-    sel, carry = politeness_dequeue(ranked, budget=1)
-    assert {r.url for r in sel.collect()} == {
-        "https://h0/doc/2",  # rank −900 beats FIFO position 1
-        "https://h1/doc/3",  # unranked, alone on its host
-    }
-    assert [r.url for r in carry.collect()] == ["https://h0/doc/1"]
-
-
 def test_lm_bigram_scores_hand_math(spark):
     """Bigram-LM scoring recomputes exactly from the published
     formula: add-one smoothing over (prefix count + vocab), per-

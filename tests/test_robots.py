@@ -8,21 +8,6 @@ from memorious_spark.functions.robots import parse_robots, robots_table
 from memorious_spark.operators.frontier import politeness_dequeue
 
 
-def test_parse_robots_sitemaps():
-    from memorious_spark.functions.robots import parse_robots_sitemaps
-
-    text = (
-        "User-agent: *\nDisallow: /x\n"
-        "Sitemap: https://a.com/s1.xml\n"
-        "sitemap:   http://a.com/s2.xml   # comment\n"
-        "Sitemap: /relative-invalid.xml\n"
-    )
-    assert parse_robots_sitemaps(text) == [
-        "https://a.com/s1.xml", "http://a.com/s2.xml",
-    ]
-    assert parse_robots_sitemaps(None) == []
-    assert parse_robots_sitemaps("User-agent: *\nDisallow:") == []
-
 ROBOTS = """User-agent: *
 Disallow: /private/
 Crawl-delay: 30
@@ -76,68 +61,3 @@ def test_robots_table_and_dequeue(spark):
     ]
     carried = sorted(r["emit_seq"] for r in carry.collect())
     assert carried == [2, 3, 4]
-
-def test_yaml_robots_gates_crawl(spark, tmp_path_factory):
-    """`robots: true` in YAML: the runner derives the gate from the
-    corpus's own /robots.txt and the crawl never fetches disallowed
-    paths (north-rule robots gating, end to end)."""
-    from datetime import datetime, timezone
-
-    from pyspark.sql import functions as F
-
-    from memorious_spark.plans.pipeline import load_yaml
-    from memorious_spark.plans.runner import CrawlRunner
-    from memorious_spark.plans.storage import RunStore
-    from memorious_spark.sources.corpus import build_corpus, seed_urls
-
-    docs = spark.range(80).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("w"), F.col("id") % 9).alias("text"),
-        F.lit("en").alias("lang"),
-    )
-    pages = build_corpus(spark, docs, 80)
-    ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    # host h1 disallows /doc/1* — its own pages keep linking there
-    robots_rows = spark.createDataFrame(
-        [(
-            "https://h1.example.com/robots.txt", ts,
-            b"User-agent: *\nDisallow: /doc/1\n",
-            None, "en", "text/plain", 200, None,
-        )],
-        pages.schema,
-    )
-    corpus = pages.unionByName(robots_rows).persist()
-    corpus.count()
-
-    cfg = load_yaml(f"""
-name: robots_crawl
-robots: true
-max_rounds: 40
-pipeline:
-  init:
-    method: seed
-    params: {{urls: {list(seed_urls(3))}}}
-    handle: {{pass: fetch}}
-  fetch:
-    method: fetch
-    params: {{retry: 1}}
-    handle: {{pass: parse}}
-  parse:
-    method: parse
-    handle: {{store: store, fetch: fetch}}
-  store:
-    method: db
-""")
-    assert cfg.use_robots
-    store = RunStore(tmp_path_factory.mktemp("robruns"), cfg.name, "r1")
-    res = CrawlRunner(spark, cfg, store).run(corpus)
-    assert res.pages_fetched > 20
-    fetched = store.read_all(spark, "results", 60).select("url").collect()
-    blocked = [
-        r["url"] for r in fetched
-        if "h1.example.com/doc/1" in r["url"]
-    ]
-    assert blocked == []
-    # other hosts' /doc/1* pages are unaffected
-    assert any("h2.example.com/doc/1" in r["url"] for r in fetched)
-    corpus.unpersist()

@@ -272,61 +272,12 @@ def test_clean_html_stage_rewrites_and_rehashes(spark, corpus, tmp_path):
     assert checked > 10
 
 
-def test_prioritize_yaml_wiring_and_equivalent_seen_set(spark, corpus, tmp_path):
-    """`fetch.params.prioritize: pagerank` parses, an unknown scheme is
-    rejected at load, and a budgeted prioritized crawl reaches exactly
-    the same URL-seen set as FIFO (prioritization reorders dequeue,
-    never changes reachability) while actually engaging (some frontier
-    row carries a negative link-authority priority)."""
-    import dataclasses
-
-    from memorious_spark.plans.pipeline import load_config
-
-    y = _yaml(SEED_INIT, extra="")
-    import yaml as _y
-
-    spec = _y.safe_load(y)
-    spec["pipeline"]["fetch"]["params"]["prioritize"] = "pagerank"
-    spec["pipeline"]["fetch"]["params"]["rank_iters"] = 2
-    cfg = load_config(spec)
-    assert cfg.prioritize == "pagerank" and cfg.rank_iters == 2
-
-    spec["pipeline"]["fetch"]["params"]["prioritize"] = "hilbert"
-    with pytest.raises(ValueError, match="prioritize"):
-        load_config(spec)
-
-    cfg_b = dataclasses.replace(cfg, budget_per_host=2, max_rounds=60)
-    store_p = RunStore(tmp_path / "runs_p", "init_crawl", "runP")
-    res_p = CrawlRunner(spark, cfg_b, store_p).run(corpus)
-    store_f = RunStore(tmp_path / "runs_f", "init_crawl", "runF")
-    res_f = CrawlRunner(
-        spark, dataclasses.replace(cfg_b, prioritize=None), store_f
-    ).run(corpus)
-    assert res_p.status == res_f.status == "done"
-
-    def seen(store):
-        urls = set()
-        for r in range(60):
-            df = store.read_round(spark, "frontier", r)
-            if df is None:
-                break
-            urls |= {x.url for x in df.select("url").collect()}
-        return urls
-
-    assert seen(store_p) == seen(store_f)
-    # ranking engaged: some parked/selected row got a negative priority
-    pri = []
-    for r in range(2, 60):
-        df = store_p.read_round(spark, "frontier", r)
-        if df is None:
-            break
-        pri.extend(x.priority for x in df.select("priority").collect())
-    assert any(p < 0 for p in pri), "pagerank priority never engaged"
-
-
 def test_politeness_group_yaml_wiring(spark):
     """`fetch.params.politeness_group: domain` parses into the config;
-    an unknown grouping is rejected at load."""
+    an unknown grouping is rejected at load. Removed crawl options
+    fail at load, naming the key, instead of being ignored."""
+    import copy
+
     import yaml as _y
 
     from memorious_spark.plans.pipeline import load_config
@@ -339,219 +290,21 @@ def test_politeness_group_yaml_wiring(spark):
     with pytest.raises(ValueError, match="politeness_group"):
         load_config(spec)
     spec["pipeline"]["fetch"]["params"]["politeness_group"] = "host"
-    assert load_config(spec).canonicalize == "conservative"
-    spec["pipeline"]["fetch"]["params"]["canonicalize"] = "aggressive"
-    assert load_config(spec).canonicalize == "aggressive"
-    spec["pipeline"]["fetch"]["params"]["canonicalize"] = "surt"
-    with pytest.raises(ValueError, match="canonicalize"):
-        load_config(spec)
-    spec["pipeline"]["fetch"]["params"]["canonicalize"] = "aggressive"
-    assert load_config(spec).max_pages is None
-    spec["max_pages"] = 500
-    assert load_config(spec).max_pages == 500
-    assert load_config(spec).backoff_threshold is None
-    spec["pipeline"]["fetch"]["params"]["error_backoff"] = {
-        "threshold": 5, "rounds": 3,
-    }
-    cfg_eb = load_config(spec)
-    assert (cfg_eb.backoff_threshold, cfg_eb.backoff_rounds) == (5, 3)
-    spec["pipeline"]["fetch"]["params"]["error_backoff"] = {"rounds": 3}
-    with pytest.raises(ValueError, match="error_backoff"):
-        load_config(spec)
-    spec["pipeline"]["fetch"]["params"]["error_backoff"] = {"threshold": 0}
-    with pytest.raises(ValueError, match="error_backoff"):
-        load_config(spec)
-
-
-def test_trap_filter_gates_frontier(spark, tmp_path):
-    """`fetch.params.traps: true` drops pathological links before they
-    enter the frontier: the trap page is never fetched, every clean
-    page still is, and with the gate off the same crawl walks into the
-    trap (proving the corpus would have served it)."""
-    import datetime
-
-    from memorious_spark.plans.pipeline import load_yaml
-
-    trap_url = "https://t.example.com/cal/cal/cal/2026"
-
-    def page(url, hrefs):
-        body = "".join(f'<a href="{h}">x</a>' for h in hrefs)
-        return (
-            url, datetime.datetime(2026, 1, 1),
-            bytearray(f"<html><body>{body}</body></html>".encode()),
-            "t", "en", "text/html", 200, None,
-        )
-
-    corpus = spark.createDataFrame(
-        [
-            page("https://t.example.com/doc/1",
-                 ["https://t.example.com/doc/2", trap_url]),
-            page("https://t.example.com/doc/2", []),
-            page(trap_url, []),
-        ],
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, content_type string, status_code int, "
-        "redirect_to string",
-    )
-
-    def run(traps, tag):
-        y = f"""
-name: trapdemo
-max_rounds: 10
-pipeline:
-  init:
-    method: seed
-    params: {{urls: ["https://t.example.com/doc/1"]}}
-    handle: {{pass: fetch}}
-  fetch:
-    method: fetch
-    params: {{retry: 1, traps: {str(traps).lower()}, rules: {{mime_group: web}}}}
-    handle: {{pass: parse}}
-  parse:
-    method: parse
-    params:
-      store: {{mime_type: "text/html"}}
-    handle: {{store: store, fetch: fetch}}
-  store:
-    method: directory
-    params: {{}}
-"""
-        cfg = load_yaml(y)
-        assert cfg.trap_filter is traps
-        store = RunStore(tmp_path / f"runs_{tag}", "trapdemo", "r1")
-        res = CrawlRunner(spark, cfg, store).run(corpus)
-        assert res.status == "done"
-        urls = set()
-        for r in range(10):
-            df = store.read_round(spark, "frontier", r)
-            if df is None:
-                break
-            urls |= {x.url for x in df.select("url").collect()}
-        return urls
-
-    with_gate = run(True, "on")
-    without_gate = run(False, "off")
-    assert trap_url in without_gate
-    assert trap_url not in with_gate
-    assert with_gate == without_gate - {trap_url}
-
-
-def test_robots_sitemap_discovery_feeds_frontier(spark, tmp_path):
-    """`robots_sitemaps: true`: the sitemap URL advertised by a host's
-    robots.txt joins the round-0 frontier after the seeds, and with
-    `parse.params.sitemaps: true` its urlset pages are crawled; with
-    the flag off the same crawl never discovers them."""
-    import datetime
-
-    from memorious_spark.plans.pipeline import load_yaml
-
-    def page(url, body, ctype, text=None):
-        return (
-            url, datetime.datetime(2026, 1, 1), bytearray(body.encode()),
-            text, "en", ctype, 200, None,
-        )
-
-    robots = (
-        "User-agent: *\nDisallow:\n"
-        "Sitemap: https://r.example.com/pages.xml\n"
-    )
-    urlset = ('<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-              "<url><loc>https://r.example.com/p/1</loc></url>"
-              "<url><loc>https://r.example.com/p/2</loc></url></urlset>")
-    corpus = spark.createDataFrame(
-        [
-            page("https://r.example.com/robots.txt", robots, "text/plain"),
-            page("https://r.example.com/pages.xml", urlset,
-                 "application/xml"),
-            page("https://r.example.com/", "<html><body>home</body></html>",
-                 "text/html", "home"),
-            page("https://r.example.com/p/1",
-                 "<html><body>one</body></html>", "text/html", "one"),
-            page("https://r.example.com/p/2",
-                 "<html><body>two</body></html>", "text/html", "two"),
-        ],
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, content_type string, status_code int, "
-        "redirect_to string",
-    )
-
-    def run(flag, tag):
-        y = f"""
-name: robosmap
-max_rounds: 8
-robots_sitemaps: {str(flag).lower()}
-pipeline:
-  init:
-    method: seed
-    params: {{urls: ["https://r.example.com/"]}}
-    handle: {{pass: fetch}}
-  fetch:
-    method: fetch
-    params: {{retry: 1, rules: {{mime_group: web}}}}
-    handle: {{pass: parse}}
-  parse:
-    method: parse
-    params:
-      sitemaps: true
-      store: {{mime_type: "text/html"}}
-    handle: {{store: store, fetch: fetch}}
-  store:
-    method: db
-"""
-        cfg = load_yaml(y)
-        assert cfg.robots_sitemaps is flag
-        store = RunStore(tmp_path / f"runs_rs_{tag}", "robosmap", "r1")
-        res = CrawlRunner(spark, cfg, store).run(corpus)
-        assert res.status == "done"
-        stored = set()
-        for r in range(8):
-            df = store.read_round(spark, "results", r)
-            if df is not None:
-                stored |= {x.url for x in df.select("url").collect()}
-        return stored
-
-    on = run(True, "on")
-    assert {"https://r.example.com/p/1", "https://r.example.com/p/2"} <= on
-    off = run(False, "off")
-    assert off == {"https://r.example.com/"}
-
-    # ADVICE r4: emit_seq is an ORDER KEY with gaps (sequence-tag
-    # skips), so the sitemap offset must ride max(emit_seq)+1, not
-    # count() — a gapped frontier (2 rows, max 100) used to let
-    # sitemap rows collide with / sort before the seeds.
-    cfg = load_yaml(
-        """
-name: robosmap
-max_rounds: 2
-robots_sitemaps: true
-pipeline:
-  init:
-    method: seed
-    params: {urls: ["https://r.example.com/"]}
-    handle: {pass: fetch}
-  fetch:
-    method: fetch
-    handle: {pass: parse}
-  parse:
-    method: parse
-    handle: {store: store, fetch: fetch}
-  store:
-    method: db
-"""
-    )
-    gapped = spark.createDataFrame(
-        [("https://r.example.com/", 0), ("https://r.example.com/p/1", 100)],
-        "url string, emit_seq long",
-    )
-    store = RunStore(tmp_path / "runs_rs_gap", "robosmap", "r1")
-    CrawlRunner(spark, cfg, store).run(corpus, initial_frontier=gapped)
-    f0 = {
-        r["url"]: r["emit_seq"]
-        for r in store.read_round(spark, "frontier", 0).collect()
-    }
-    assert f0["https://r.example.com/"] == 0
-    assert f0["https://r.example.com/p/1"] == 100
-    assert f0["https://r.example.com/pages.xml"] > 100
+    for key, value in [
+        ("robots", True), ("robots_sitemaps", True), ("max_pages", 500),
+    ]:
+        bad = copy.deepcopy(spec)
+        bad[key] = value
+        with pytest.raises(ValueError, match=repr(key)):
+            load_config(bad)
+    for key, value in [
+        ("prioritize", "pagerank"), ("rank_iters", 2), ("traps", True),
+        ("canonicalize", "aggressive"), ("error_backoff", {"threshold": 5}),
+    ]:
+        bad = copy.deepcopy(spec)
+        bad["pipeline"]["fetch"]["params"][key] = value
+        with pytest.raises(ValueError, match=repr(key)):
+            load_config(bad)
 
 
 def test_sitemap_feeds_frontier(spark, tmp_path):
