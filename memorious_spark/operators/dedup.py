@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from memorious_spark.functions.textops import fingerprint, minhash_signature, shingles
 from memorious_spark.operators.frontier import ensure_parallelism
+from memorious_spark.operators.similarity import _dot, _norm
 
 __all__ = [
     "exact_dedup",
@@ -867,22 +868,6 @@ def simhash_pairs(
 
 
 # ---- embedding near-dup ------------------------------------------------------
-
-def _norm(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
 
 def embedding_dup_pairs(
     emb: DataFrame,

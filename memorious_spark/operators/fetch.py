@@ -10,13 +10,19 @@ left side of a LEFT OUTER join, so a naive ``frontier LEFT JOIN
 corpus`` degrades to a full corpus shuffle. Instead:
 
 - hits   = ``corpus INNER JOIN broadcast(frontier)`` — a broadcast
-  hash join: ONE scan of the corpus, zero shuffle, and Spark 4's
-  runtime bloom/DPP machinery can prune corpus files by the
-  broadcast side's key set.
+  hash join: zero shuffle, and Spark 4's runtime bloom/DPP machinery
+  can prune corpus files by the broadcast side's key set.
 - misses = ``frontier LEFT ANTI hit_keys`` (:func:`retry_rows`) —
   computed by the caller from the round's *persisted* parse output,
-  so the corpus is scanned exactly ONCE per round (a second scan for
-  retry bookkeeping measurably dominated small rounds).
+  so retry bookkeeping adds no corpus scan (one measurably dominated
+  small rounds).
+
+The corpus is scanned THREE times per round: ``hits`` is not cached
+and feeds both the direct-hit and the redirect filter, so the plan
+holds the direct-hit scan (reads ``html``), a narrow redirect-subset
+scan (``url, status_code, redirect_to``) and the redirect-target scan
+(reads ``html``). test_plans.py::test_fetch_join_broadcasts_frontier
+locks that count.
 
 Past ``_BROADCAST_MAX_ROWS`` the frontier side falls back to a
 SHUFFLE_HASH-hinted key-partitioned shuffle join (hash build on the
@@ -25,9 +31,9 @@ real deployment the corpus is bucketed by url so even that path
 avoids re-shuffling the 100 TB side — demonstrated, not asserted:
 test_plans.py::test_bucketed_corpus_join_never_shuffles_corpus shows
 the bucketed-table join with ZERO exchange above the corpus scan.
-``broadcast_frontier=False`` forces this fallback regardless of size
-(test_plans.py locks its plan; test_crawl_e2e.py lowers
-``_BROADCAST_MAX_ROWS`` to verify crawl equality).
+``selected_count=None`` takes this fallback (test_plans.py locks its
+plan; test_crawl_e2e.py lowers ``_BROADCAST_MAX_ROWS`` to verify crawl
+equality).
 
 Outcome taxonomy (reference-faithful):
 - ``ok`` = status < 400, exactly requests' ``Response.ok`` used by the
@@ -110,7 +116,6 @@ def _finalize(
 def fetch_stage(
     selected: DataFrame,
     corpus: DataFrame,
-    broadcast_frontier: bool | None = None,
     selected_count: int | None = None,
 ) -> DataFrame:
     """Join the budget-selected frontier rows against the corpus.
@@ -119,12 +124,13 @@ def fetch_stage(
     redirects resolved single-hop. Gating (rules, ok) and retry of
     misses are the runner's job — this stage never drops a joined row,
     so its output is the single source of truth for the round's fetch
-    outcomes (one corpus scan per round).
+    outcomes (three corpus scans per round, see the module docstring).
+    The frontier side is broadcast when ``selected_count`` is known and
+    at most ``_BROADCAST_MAX_ROWS``.
     """
-    if broadcast_frontier is None:
-        broadcast_frontier = (
-            selected_count is not None and selected_count <= _BROADCAST_MAX_ROWS
-        )
+    broadcast_frontier = (
+        selected_count is not None and selected_count <= _BROADCAST_MAX_ROWS
+    )
     # non-broadcast fallback: SHUFFLE_HASH builds the hash table on the
     # frontier side — a sort-merge join would SORT the corpus side,
     # which is exactly the 100 TB catastrophe the hint forbids
@@ -143,14 +149,16 @@ def fetch_stage(
     # NOT persisted: caching 10^5-10^6 rows of html measurably beats up
     # storage memory at high core counts; the downstream parse output IS
     # persisted (it's 10× smaller, no html) and carries the hit keys.
+    # The price: ``direct`` and ``redirects`` each re-scan the corpus.
     direct = hits.filter(
         ~F.col("f_status").isin(301, 302) | F.col("f_redirect_to").isNull()
     )
     fetched_direct = _finalize(direct, redirected_from=False, frontier_cols=frontier_cols)
 
-    # Single-hop redirect resolution: one more broadcast-inner scan,
-    # only for the (typically tiny) redirect subset. The target key is
-    # normalized like every other join key (corpus urls are canonical).
+    # Single-hop redirect resolution: a narrow scan for the redirect
+    # subset plus one more inner-join scan for its targets. The target
+    # key is normalized like every other join key (corpus urls are
+    # canonical).
     redirects = hits.filter(
         F.col("f_status").isin(301, 302) & F.col("f_redirect_to").isNotNull()
     ).select(

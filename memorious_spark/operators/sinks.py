@@ -120,10 +120,9 @@ def merge_upsert(
     - existing key → non-key columns take the batch values,
       ``__last_seen = now``, ``__first_seen`` preserved.
 
-    On an Iceberg catalog this compiles to MERGE INTO; the
-    parquet-fallback implementation below is the same logical plan
-    (anti-join survivors ∪ refreshed matches) and shuffles only on
-    the merge keys.
+    This is the logical plan of a lakehouse MERGE INTO (anti-join
+    survivors ∪ refreshed matches) and shuffles only on the merge
+    keys.
     """
     ts = F.to_timestamp(F.lit(now))
     batch = batch.dropDuplicates(keys)
@@ -185,7 +184,7 @@ def db_sink_run(
     def _merge_into(tname: str, tbatch: DataFrame, keys: list[str]) -> None:
         # O(batch) sink: one stamped delta append; merge_upsert's
         # contract is realized at read time by the store's delta
-        # resolution (storage.upsert_shared — the Iceberg-MERGE seam)
+        # resolution (storage.upsert_shared, the parquet delta stack)
         store.upsert_shared(spark, f"db_{tname}", tbatch, keys, now_ts)
 
     _merge_into(table, batch, unique)

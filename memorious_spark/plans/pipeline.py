@@ -39,7 +39,7 @@ __all__ = ["CrawlConfig", "load_yaml", "load_config"]
 _SUPPORTED_METHODS = {
     "seed", "sequence", "dates", "enumerate", "tee",
     "fetch", "parse", "extract", "clean_html", "directory", "db",
-    "warc", "inspect",
+    "inspect",
 }
 
 # crawl options this engine no longer has. Ignoring one would change
@@ -315,7 +315,7 @@ def load_config(spec: dict) -> CrawlConfig:
                 raise ValueError("clean_html handle chain too deep (cycle?)")
         if sink_name is not None:
             sink = stages[sink_name]
-            if sink.get("method") in ("directory", "db", "warc"):
+            if sink.get("method") in ("directory", "db"):
                 store_method = sink["method"]
                 store_params = dict(sink.get("params") or {})
     # fail fast on bad rule specs (reference raises per-task; we at load)

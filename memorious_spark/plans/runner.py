@@ -2,7 +2,7 @@
 
 One round = one generation of memorious's FIFO drain (SURVEY.md §3.1):
 
-    frontier → politeness dequeue → fetch (corpus join, ONE scan)
+    frontier → politeness dequeue → fetch (corpus join, three scans)
              → parse (Arrow UDF) → rule + ok gate → store sink
              → link explode → within-round dedup → seen anti-join
              → emit_seq assignment → next frontier
@@ -189,7 +189,7 @@ class CrawlRunner:
         """Apply the reference's emit gate (rules → ok) and parse.
 
         Emission ⇔ rule ∧ ok (fetch.py:17-26). Instead of filtering
-        gated rows out (which would force a SECOND corpus scan to
+        gated rows out (which would force one more corpus scan to
         learn which urls joined at all, for retry bookkeeping), every
         hit row flows through with an ``_emit`` flag and its ``html``
         masked to NULL when gated — the lazy-fetch economy
@@ -563,38 +563,6 @@ class CrawlRunner:
                 futs.append(pool.submit(
                     directory_sink, sink_rows, dir_path, cfg.name
                 ))
-            if cfg.store_method == "warc" and n_stored:
-                # YAML `warc` sink: the round's stored pages archived
-                # as member-per-record .warc.gz + CDXJ sidecars (the
-                # interchange layout a 100 TB crawl actually emits);
-                # one subdir per round so part files never collide
-                from memorious_spark.sources.warc import write_warc
-
-                wp = cfg.store_params or {}
-                warc_dir = wp.get("path", str(store.dir / "warc"))
-                warc_df = write_warc(
-                    sink_rows.select(
-                        F.col("url").alias("uri"),
-                        # NULL text (non-HTML page, decode failure)
-                        # must archive as an empty payload — a NULL
-                        # would raise bytes(None) in write_warc's
-                        # executor loop and fail the whole round for
-                        # one bad row
-                        F.encode(
-                            F.coalesce(F.col("text"), F.lit("")), "utf-8"
-                        ).alias("payload"),
-                        F.date_format(
-                            "retrieved_at", "yyyy-MM-dd'T'HH:mm:ss'Z'"
-                        ).alias("warc_date"),
-                        "content_type",
-                    ),
-                    f"{warc_dir}/round={rnd}",
-                    date_col="warc_date",
-                    content_type_col="content_type",
-                    compress=bool(wp.get("compress", True)),
-                    index=bool(wp.get("index", True)),
-                )
-                futs.append(pool.submit(warc_df.collect))
             if cfg.incremental:
                 run_id_str = store.dir.name
                 futs.append(pool.submit(

@@ -1,13 +1,12 @@
 """Run-state storage: per-round parquet snapshots + a JSON manifest.
 
-Plays the role Iceberg snapshots would on a real cluster (SURVEY.md §7
-keeps the layer thin so the Iceberg catalog can slot in where the
-sandbox lacks the connector): every round's frontier / seen / results
-/ metrics appends land in ``round=K`` directories, and the manifest is
-only advanced — by atomic rename — once all of round K's writes are
-complete. A killed run therefore resumes from the last *complete*
-round: re-read the manifest, load ``frontier/round=r`` and the union
-of ``seen/round<=r``, continue. This is the checkpoint/resume +
+Plays the role Iceberg snapshots would on a real cluster, over plain
+parquet directories (SURVEY.md §7): every round's frontier / seen /
+results / metrics appends land in ``round=K`` directories, and the
+manifest is only advanced — by atomic rename — once all of round K's
+writes are complete. A killed run therefore resumes from the last
+*complete* round: re-read the manifest, load ``frontier/round=r`` and
+the union of ``seen/round<=r``, continue. This is the checkpoint/resume +
 per-partition-lineage requirement of the north rule.
 """
 
@@ -29,16 +28,6 @@ class RunStore:
     def __init__(self, root: str | os.PathLike, crawler: str, run_id: str):
         self.dir = Path(root) / crawler / run_id
         self.dir.mkdir(parents=True, exist_ok=True)
-        # pluggable catalog IO for the upsert-managed sink tables
-        # (db_*/ftm_*): None keeps the built-in parquet delta stack;
-        # attach an IcebergIO (plans/catalog.py) and the same call
-        # sites issue MERGE INTO instead. Tags/cache/sequence shared
-        # tables stay on the parquet path either way.
-        self.catalog = None
-
-    @staticmethod
-    def _catalog_table(table: str) -> bool:
-        return table.startswith(("db_", "ftm_"))
 
     @property
     def manifest_path(self) -> Path:
@@ -136,7 +125,6 @@ class RunStore:
         spark: SparkSession,
         table: str,
         schema: str | None = None,
-        _direct: bool = False,
     ) -> DataFrame | None:
         """Reads a SNAPSHOT: the file list is pinned at call time, so a
         later append to the same directory cannot leak into this
@@ -149,8 +137,6 @@ class RunStore:
         Tables written through :meth:`upsert_shared` (db_*/ftm_* sink
         tables) resolve their delta stack transparently here — every
         consumer sees the merged view."""
-        if self.catalog is not None and not _direct and self._catalog_table(table):
-            return self.catalog.read(spark, table)
         p = self.shared_path(table)
         if not p.is_dir():
             return None
@@ -176,11 +162,10 @@ class RunStore:
     # versions — exactly ``merge_upsert``'s contract), and a minor
     # compaction folds the deltas into one base dir once their count
     # passes ``compact_after`` (amortized O(table)/compact_after per
-    # run). On an Iceberg catalog this whole layer is MERGE INTO +
-    # snapshot expiry; the delta-dir layout is the parquet analogue,
-    # and the seam (upsert_shared/read_shared) is where the catalog
-    # would plug in. Single-writer per crawler (one driver per run —
-    # the engine's execution model) is assumed, as with the manifest.
+    # run). The delta-dir layout is the parquet analogue of a
+    # lakehouse MERGE INTO + snapshot expiry. Single-writer per
+    # crawler (one driver per run — the engine's execution model) is
+    # assumed, as with the manifest.
 
     def _upsert_meta_path(self, table: str) -> Path:
         return self.shared_path(table) / "_upsert_meta.json"
@@ -193,21 +178,9 @@ class RunStore:
         keys: list[str],
         now_ts: str,
         compact_after: int = 8,
-        _direct: bool = False,
     ) -> None:
         from pyspark.sql import functions as F
 
-        # mirror read_shared's routing EXACTLY: only db_*/ftm_* sink
-        # tables live in the attached catalog — a non-sink table
-        # upserted there would be read back from the (empty) parquet
-        # path, silently invisible
-        if (
-            self.catalog is not None
-            and not _direct
-            and self._catalog_table(table)
-        ):
-            self.catalog.upsert(spark, table, batch, keys, now_ts)
-            return
         p = self.shared_path(table)
         self._recover_compaction(p)
         p.mkdir(parents=True, exist_ok=True)
@@ -241,8 +214,7 @@ class RunStore:
         return sorted(
             int(d.name.split("=")[1])
             for d in p.glob("delta=*")
-            # numeric-only: skips both in-flight ``__new`` dirs and
-            # retained ``__old`` snapshots awaiting vacuum
+            # numeric-only: skips in-flight ``__new`` dirs
             if d.is_dir() and d.name.split("=")[1].isdigit()
         )
 
@@ -277,29 +249,17 @@ class RunStore:
             else:
                 shutil.rmtree(pend, ignore_errors=True)
 
-    def vacuum_shared(self, grace_seconds: float = 0.0) -> None:
-        """Sweep every shared table's compaction leftovers: crashed
-        ``delta=*__new`` dirs (completed writes rolled FORWARD,
-        partial writes dropped) and retained ``delta=*__old``
-        snapshots older than ``grace_seconds`` (kept by
-        ``compact_shared(retain_old=True)`` so in-flight readers on an
-        object store finish against the files they listed). The
+    def vacuum_shared(self) -> None:
+        """Sweep every shared table's crashed ``delta=*__new`` dirs
+        (completed writes rolled FORWARD, partial writes dropped). The
         per-op recovery already handles the table being touched; this
-        covers tables a resumed run never writes again. The Iceberg
-        analogue is snapshot expiry + orphan-file removal."""
-        import time
-
+        covers tables a resumed run never writes again."""
         shared_root = self.dir.parent / "_shared"
         if not shared_root.is_dir():
             return
-        cutoff = time.time() - grace_seconds
         for tdir in shared_root.iterdir():
-            if not tdir.is_dir():
-                continue
-            self._recover_compaction(tdir)
-            for old in tdir.glob("delta=*__old"):
-                if old.stat().st_mtime <= cutoff:
-                    shutil.rmtree(old, ignore_errors=True)
+            if tdir.is_dir():
+                self._recover_compaction(tdir)
 
     def _read_resolved(
         self, spark: SparkSession, table: str
@@ -337,27 +297,13 @@ class RunStore:
             "__first_seen",
         )
 
-    def compact_shared(
-        self, spark: SparkSession, table: str, retain_old: bool = False
-    ) -> None:
+    def compact_shared(self, spark: SparkSession, table: str) -> None:
         """Minor compaction: fold every delta into one base dir whose
         rows carry the RESOLVED values at the next version number.
         Write-new → remove-old → rename, with read-side recovery for
-        the one non-atomic window.
-
-        ``retain_old=True`` renames the folded deltas to
-        ``delta=V__old`` instead of deleting them — on an
-        eventually-consistent object store a reader that listed the
-        table before the compaction can still finish its scan against
-        the snapshot it saw (rename keeps the blobs; readers hold
-        paths, not names, on a real store — locally this models the
-        retention window). ``__old`` dirs are invisible to
-        ``_delta_versions`` and reclaimed by
-        :meth:`vacuum_shared(grace_seconds=...)` — Iceberg's snapshot
-        expiry. Default stays delete-now: single-writer AND
-        single-reader per crawler is the engine's own execution
-        model; retention only matters when external readers share the
-        table."""
+        the one non-atomic window. The folded deltas are deleted at
+        once: single-writer AND single-reader per crawler is the
+        engine's own execution model."""
         from pyspark.sql import functions as F
 
         p = self.shared_path(table)
@@ -371,10 +317,7 @@ class RunStore:
         tmp = p / f"delta={v_new}__new"
         resolved.write.mode("overwrite").parquet(str(tmp))
         for v in versions:
-            if retain_old:
-                (p / f"delta={v}").rename(p / f"delta={v}__old")
-            else:
-                shutil.rmtree(p / f"delta={v}", ignore_errors=True)
+            shutil.rmtree(p / f"delta={v}", ignore_errors=True)
         tmp.rename(p / f"delta={v_new}")
 
     def flush_crawler(self) -> None:

@@ -42,10 +42,11 @@ Scale posture:
   (a whole-file gzip stream would force decompress-from-zero).
   Members come from ``zlib.compressobj(9, DEFLATED, wbits=31)``:
   header has MTIME=0, no name — byte-deterministic.
-- Determinism: ``WARC-Record-ID`` is derived from sha1(uri, payload),
-  ``WARC-Date`` comes from the caller's timestamp column — no wall
-  clock, no uuid4 — so write → read round-trips are bit-stable and
-  oracle-checkable.
+- One record shape: ``resource`` records typed
+  ``application/octet-stream``, dated ``1970-01-01T00:00:00Z``.
+- Determinism: ``WARC-Record-ID`` is derived from sha1(uri, payload)
+  and ``WARC-Date`` is that constant — no wall clock, no uuid4 — so
+  write → read round-trips are bit-stable and oracle-checkable.
 """
 
 from __future__ import annotations
@@ -61,9 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -76,11 +75,13 @@ __all__ = [
     "read_warc_records",
     "surt_key",
     "WARC_RECORD_SCHEMA",
-    "WARC_HTTP_SCHEMA",
     "CDX_SCHEMA",
 ]
 
 _CRLF = b"\r\n"
+_WARC_DATE = "1970-01-01T00:00:00Z"
+_CDX_TIMESTAMP = "19700101000000"
+_CTYPE = "application/octet-stream"
 
 WARC_RECORD_SCHEMA = StructType(
     [
@@ -101,37 +102,6 @@ _WRITE_SUMMARY_SCHEMA = StructType(
         StructField("n_bytes", LongType()),
     ]
 )
-
-WARC_HTTP_SCHEMA = StructType(
-    list(WARC_RECORD_SCHEMA.fields)
-    + [
-        StructField("http_status", IntegerType()),
-        StructField("http_headers", MapType(StringType(), StringType())),
-        StructField("http_body", BinaryType()),
-    ]
-)
-
-
-def _augment_http(row: dict) -> dict:
-    res = (
-        _http_split(row["payload"])
-        if (
-            row.get("warc_type") == "response"
-            and (row.get("content_type") or "").startswith(
-                "application/http"
-            )
-        )
-        else None
-    )
-    if res is None:
-        row.update(http_status=None, http_headers=None, http_body=None)
-    else:
-        status, headers, body = res
-        row.update(
-            http_status=status, http_headers=headers, http_body=body
-        )
-    return row
-
 
 CDX_SCHEMA = StructType(
     [
@@ -171,14 +141,6 @@ def surt_key(url: str) -> str:
     return ",".join(reversed(host.split("."))) + ")/" + (rest if sep else "")
 
 
-def _cdx_timestamp(date: str) -> str:
-    """CDX 14-digit timestamp from an ISO-ish date string: keep the
-    digits, left-pad the tail with zeros (``1970-01-01T00:00:00Z`` →
-    ``19700101000000``)."""
-    digits = "".join(ch for ch in date if ch.isdigit())
-    return (digits + "0" * 14)[:14]
-
-
 def _gzip_member(raw: bytes) -> bytes:
     co = zlib.compressobj(9, zlib.DEFLATED, 31)
     return co.compress(raw) + co.flush()
@@ -196,66 +158,17 @@ def _fs_for(path: str):
     return pafs.FileSystem.from_uri(path)
 
 
-_HTTP_REASONS = {
-    200: "OK", 204: "No Content", 301: "Moved Permanently",
-    302: "Found", 304: "Not Modified", 400: "Bad Request",
-    403: "Forbidden", 404: "Not Found", 429: "Too Many Requests",
-    500: "Internal Server Error", 503: "Service Unavailable",
-}
-
-
-def _http_envelope(
-    status: int, ctype: str, body: bytes, extra: dict | None = None
-) -> bytes:
-    """Deterministic HTTP/1.1 response head for a ``response`` record:
-    status line, Content-Type, Content-Length, then any extra headers
-    sorted by name (Content-Type/Length always ours — they describe
-    the body as archived)."""
-    lines = [
-        f"HTTP/1.1 {status} {_HTTP_REASONS.get(status, 'Status')}",
-        f"Content-Type: {ctype}",
-        f"Content-Length: {len(body)}",
-    ]
-    for k in sorted(extra or {}):
-        if k.lower() not in ("content-type", "content-length"):
-            lines.append(f"{k}: {extra[k]}")
-    return "\r\n".join(lines).encode("latin-1") + _CRLF * 2 + body
-
-
-def _http_split(payload: bytes):
-    """(status, headers, body) of an ``application/http`` response
-    payload, or None when it isn't one."""
-    if not payload.startswith(b"HTTP/"):
-        return None
-    sep = payload.find(b"\r\n\r\n")
-    if sep < 0:
-        return None
-    head = payload[:sep].decode("latin-1").split("\r\n")
-    parts = head[0].split(" ", 2)
-    try:
-        status = int(parts[1])
-    except (IndexError, ValueError):
-        return None
-    headers = {}
-    for h in head[1:]:
-        k, _, v = h.partition(":")
-        headers[k.strip()] = v.strip()
-    return status, headers, payload[sep + 4:]
-
-
-def _record_bytes(
-    uri: str, date: str, ctype: str, payload: bytes, warc_type: str
-) -> bytes:
+def _record_bytes(uri: str, payload: bytes) -> bytes:
     rid = hashlib.sha1(
         uri.encode("utf-8") + b"\x00" + payload
     ).hexdigest()
     head = [
         b"WARC/1.0",
-        b"WARC-Type: " + warc_type.encode(),
+        b"WARC-Type: resource",
         b"WARC-Record-ID: <urn:sha1:" + rid.encode() + b">",
-        b"WARC-Date: " + date.encode(),
+        b"WARC-Date: " + _WARC_DATE.encode(),
         b"WARC-Target-URI: " + uri.encode("utf-8"),
-        b"Content-Type: " + ctype.encode(),
+        b"Content-Type: " + _CTYPE.encode(),
         b"Content-Length: " + str(len(payload)).encode(),
     ]
     return _CRLF.join(head) + _CRLF * 2 + payload + _CRLF * 2
@@ -266,14 +179,9 @@ def write_warc(
     path: str,
     uri_col: str = "uri",
     payload_col: str = "payload",
-    date_col: str | None = None,
-    content_type_col: str | None = None,
-    warc_type: str = "resource",
     prefix: str = "part",
     compress: bool = False,
     index: bool = False,
-    http_status_col: str | None = None,
-    http_headers_col: str | None = None,
 ) -> DataFrame:
     """Write one ``<prefix>-NNNNN.warc`` file per partition of ``df``
     under ``path`` (any ``pyarrow.fs`` URI). Returns the per-file
@@ -289,45 +197,13 @@ def write_warc(
     sha1 hex of the UNCOMPRESSED payload, ``offset``/``length`` the
     record's byte range in the archive as written (the gzip member's
     range when compressed). Both sidecar and archive come from the
-    same single pass — no second scan, no driver involvement.
-
-    ``http_status_col`` switches to the Common Crawl ``response``
-    record shape: the payload becomes a full HTTP/1.1 response
-    (deterministic status line + Content-Type/Length + optional
-    ``http_headers_col`` map sorted by name + body), the record's
-    Content-Type becomes ``application/http; msgtype=response``, and
-    the CDX ``mime``/``digest`` keep describing the ENTITY (the page's
-    content type, sha1 of the body) exactly as CC's index does. Read
-    back with ``parse_http=True``.
-
-    ``date_col``/``content_type_col`` default to constant
-    ``1970-01-01T00:00:00Z`` / ``application/octet-stream`` when
-    absent, keeping output a pure function of the data."""
+    same single pass — no second scan, no driver involvement."""
     fs, root = _fs_for(path)
     fs.create_dir(root, recursive=True)
     ext = ".warc.gz" if compress else ".warc"
-    http_mode = http_status_col is not None
-    if http_mode:
-        warc_type = "response"
     sel = [
         F.col(uri_col).cast("string").alias("uri"),
         F.col(payload_col).cast("binary").alias("payload"),
-        (
-            F.col(date_col) if date_col else F.lit("1970-01-01T00:00:00Z")
-        ).cast("string").alias("date"),
-        (
-            F.col(content_type_col)
-            if content_type_col
-            else F.lit("application/octet-stream")
-        ).cast("string").alias("ctype"),
-        (
-            F.col(http_status_col) if http_mode else F.lit(None)
-        ).cast("int").alias("status"),
-        (
-            F.col(http_headers_col)
-            if http_headers_col
-            else F.lit(None)
-        ).cast("map<string,string>").alias("hdrs"),
     ]
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -352,10 +228,7 @@ def write_warc(
         )
         try:
             for b in batches:
-                for uri, payload, date, ctype, status, hdrs in zip(
-                    b["uri"], b["payload"], b["date"], b["ctype"],
-                    b["status"], b["hdrs"],
-                ):
+                for uri, payload in zip(b["uri"], b["payload"]):
                     if payload is None:
                         # fail loud per-row: a NULL payload would
                         # raise an anonymous TypeError from bytes()
@@ -365,17 +238,7 @@ def write_warc(
                             " — coalesce to b'' or filter null rows"
                         )
                     body = bytes(payload)
-                    if http_mode:
-                        rec_payload = _http_envelope(
-                            int(status), ctype, body,
-                            dict(hdrs) if hdrs is not None else None,
-                        )
-                        rec_ctype = "application/http; msgtype=response"
-                    else:
-                        rec_payload, rec_ctype = body, ctype
-                    rec = _record_bytes(
-                        uri, date, rec_ctype, rec_payload, warc_type
-                    )
+                    rec = _record_bytes(uri, body)
                     if compress:
                         rec = _gzip_member(rec)
                     out.write(rec)
@@ -383,13 +246,13 @@ def write_warc(
                         meta = {
                             "url": uri,
                             "digest": hashlib.sha1(body).hexdigest(),
-                            "mime": ctype,
+                            "mime": _CTYPE,
                             "offset": total,
                             "length": len(rec),
                             "filename": f"{base}{ext}",
                         }
                         line = (
-                            f"{surt_key(uri)} {_cdx_timestamp(date)} "
+                            f"{surt_key(uri)} {_CDX_TIMESTAMP} "
                             f"{json.dumps(meta, separators=(',', ':'))}\n"
                         )
                         cdx_out.write(line.encode("utf-8"))
@@ -448,21 +311,14 @@ def _parse_warc_bytes(blob: bytes, fname: str) -> Iterator[dict]:
         }
 
 
-def read_warc(
-    spark: SparkSession, path: str, parse_http: bool = False
-) -> DataFrame:
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Scan ``path`` (glob ok) for ``.warc``/``.warc.gz`` files and
     return one row per record with :data:`WARC_RECORD_SCHEMA`.
     File-level parallelism (see module docstring); gzip archives are
     decompressed member-by-member (``gzip`` handles the concatenated-
     member layout natively); malformed records raise with the file
-    name — a corrupt archive fails loud, never truncates silently.
-
-    ``parse_http=True`` adds ``http_status/http_headers/http_body``
-    columns, split out of ``application/http`` response records (null
-    for other record types)."""
+    name — a corrupt archive fails loud, never truncates silently."""
     files = spark.read.format("binaryFile").load(path)
-    schema = WARC_HTTP_SCHEMA if parse_http else WARC_RECORD_SCHEMA
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -471,12 +327,12 @@ def read_warc(
                 if fpath.endswith(".gz"):
                     blob = gzip.decompress(blob)
                 rows = list(_parse_warc_bytes(blob, fpath))
-                if parse_http:
-                    rows = [_augment_http(r) for r in rows]
                 if rows:
                     yield pd.DataFrame(rows)
 
-    return files.select("path", "content").mapInPandas(_parse, schema)
+    return files.select("path", "content").mapInPandas(
+        _parse, WARC_RECORD_SCHEMA
+    )
 
 
 _CDX_JSON_SCHEMA = (
@@ -514,7 +370,7 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_warc_records(cdx: DataFrame, parse_http: bool = False) -> DataFrame:
+def read_warc_records(cdx: DataFrame) -> DataFrame:
     """Random-access fetch of exactly the records a (filtered) CDX
     DataFrame names: seek ``offset``, read ``length`` bytes, gunzip
     the member when the archive is ``.gz``, parse the one record.
@@ -560,15 +416,11 @@ def read_warc_records(cdx: DataFrame, parse_http: bool = False) -> DataFrame:
                             f"{fpath}: CDX range [{off}, {off}+{length}) "
                             f"holds {len(recs)} records, expected 1"
                         )
-                    rows.append(
-                        _augment_http(recs[0]) if parse_http else recs[0]
-                    )
+                    rows.append(recs[0])
                 if rows:
                     yield pd.DataFrame(rows)
         finally:
             if handle is not None:
                 handle.close()
 
-    return sel.mapInPandas(
-        _fetch, WARC_HTTP_SCHEMA if parse_http else WARC_RECORD_SCHEMA
-    )
+    return sel.mapInPandas(_fetch, WARC_RECORD_SCHEMA)

@@ -40,6 +40,16 @@ def test_fetch_join_broadcasts_frontier(spark, tmp_path):
     assert "BroadcastHashJoin" in plan, plan[:2000]
     # the corpus side must never shuffle for the fetch join
     assert "SortMergeJoin" not in plan, plan[:2000]
+    # scans per round over a parquet corpus: direct hits and redirect
+    # targets read html, the redirect subset is a narrow scan (`hits`
+    # is not cached, so it is planned once per consumer)
+    path = str(tmp_path / "corpus")
+    corpus.write.parquet(path)
+    plan = _plan(fetch_stage(frontier, spark.read.parquet(path), selected_count=10))
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 3, plan
+    read_html = [ln for ln in scans if "html:" in ln.split("ReadSchema:")[1]]
+    assert len(read_html) == 2, scans
 
 
 def test_fetch_join_shuffle_fallback_plan(spark, tmp_path):
@@ -58,7 +68,7 @@ def test_fetch_join_shuffle_fallback_plan(spark, tmp_path):
         F.lit(None).cast("int").alias("link_idx"),
         F.lit(0).cast("long").alias("emit_seq"), F.lit(0).alias("attempt"),
     )
-    fetched = fetch_stage(frontier, corpus, broadcast_frontier=False)
+    fetched = fetch_stage(frontier, corpus)
     plan = _plan(fetched)
     assert "ShuffledHashJoin" in plan, plan[:2000]
     assert "BroadcastHashJoin" not in plan, plan[:2000]
@@ -91,7 +101,7 @@ def test_bucketed_corpus_join_never_shuffles_corpus(spark, tmp_path):
             F.lit(None).cast("int").alias("link_idx"),
             F.lit(0).cast("long").alias("emit_seq"), F.lit(0).alias("attempt"),
         )
-        fetched = fetch_stage(frontier, bucketed, broadcast_frontier=False)
+        fetched = fetch_stage(frontier, bucketed)
         plan = _plan(fetched)
         assert "Bucketed: true" in plan, plan[:2000]
         # the corpus side NEVER exchanges on its join key...

@@ -78,52 +78,6 @@ def test_directory_sink_from_yaml(spark, corpus, tmp_path_factory):
     assert any(f.read_text() for f in datas)
 
 
-def test_warc_sink_from_yaml(spark, corpus, tmp_path_factory):
-    """`store: {method: warc}`: every stored page lands in per-round
-    member-per-record .warc.gz archives with CDXJ sidecars; the full
-    gz scan AND the CDX-ranged fetch both reproduce the engine's
-    stored (url, text-bytes) exactly."""
-    out = tmp_path_factory.mktemp("warcsink")
-    cfg = load_yaml(_yaml(f"""
-  store:
-    method: warc
-    params: {{path: {out}}}
-"""))
-    assert cfg.store_method == "warc"
-    store = RunStore(tmp_path_factory.mktemp("runs_w"), cfg.name, "r1")
-    res = CrawlRunner(spark, cfg, store).run(corpus)
-    assert res.pages_stored > 50
-
-    from memorious_spark.sources.warc import (
-        read_cdx, read_warc, read_warc_records,
-    )
-
-    stored = {
-        r["url"]: r["text"].encode()
-        for r in store.read_all(spark, "results", 40)
-        .select("url", "text").collect()
-    }
-    back = {
-        r["uri"]: bytes(r["payload"])
-        for r in read_warc(spark, f"{out}/round=*/*.warc.gz").collect()
-    }
-    assert back == stored
-    cdx = read_cdx(spark, f"{out}/round=*/*.cdx")
-    assert cdx.count() == res.pages_stored
-    ranged = {
-        r["uri"]: bytes(r["payload"])
-        for r in read_warc_records(cdx).collect()
-    }
-    assert ranged == stored
-    # WARC-Date carries the engine's retrieved_at, not a constant
-    dates = {
-        r["warc_date"]
-        for r in read_warc(spark, f"{out}/round=*/*.warc.gz")
-        .select("warc_date").collect()
-    }
-    assert dates and all(d.startswith("20") for d in dates)
-
-
 def test_db_sink_with_children_and_merge(spark, corpus, tmp_path_factory):
     root = tmp_path_factory.mktemp("dbruns")
     yaml_text = _yaml("""
@@ -399,63 +353,3 @@ def test_compaction_crash_recovery(spark, tmp_path):
     assert sorted(
         (r["k"], r["v"]) for r in store.read_shared(spark, "db_q").collect()
     ) == [(1, "z")]
-
-
-def test_compaction_retain_old_snapshot(spark, tmp_path):
-    """``compact_shared(retain_old=True)`` keeps the folded deltas as
-    ``delta=V__old`` (object-store retention window: a reader that
-    listed the table pre-compaction finishes against its snapshot)
-    while the live view resolves only the new base; ``vacuum_shared``
-    reclaims expired ``__old`` dirs but honours the grace period."""
-    from pyspark.sql import functions as F
-
-    from memorious_spark.plans.storage import RunStore
-
-    store = RunStore(tmp_path, "lsm", "r1")
-    store.upsert_shared(
-        spark, "db_t",
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        ["k"], "2024-01-01 00:00:00",
-    )
-    store.upsert_shared(
-        spark, "db_t",
-        spark.createDataFrame([(2, "B")], "k int, v string"),
-        ["k"], "2024-02-01 00:00:00",
-    )
-    p = store.shared_path("db_t")
-
-    store.compact_shared(spark, "db_t", retain_old=True)
-    names = sorted(d.name for d in p.glob("delta=*"))
-    assert names == ["delta=0__old", "delta=1__old", "delta=2"]
-    # retained snapshot is intact parquet — an in-flight reader's
-    # listing (the pre-compaction dirs) still resolves to the same rows
-    old_rows = sorted(
-        (r["k"], r["v"])
-        for r in spark.read.parquet(
-            str(p / "delta=0__old"), str(p / "delta=1__old")
-        ).groupBy("k").agg(F.max_by("v", "__v").alias("v")).collect()
-    )
-    assert old_rows == [(1, "a"), (2, "B")]
-    # live view ignores __old dirs entirely
-    assert sorted(
-        (r["k"], r["v"]) for r in store.read_shared(spark, "db_t").collect()
-    ) == [(1, "a"), (2, "B")]
-    # upserts continue above the compacted version, never colliding
-    store.upsert_shared(
-        spark, "db_t",
-        spark.createDataFrame([(3, "c")], "k int, v string"),
-        ["k"], "2024-03-01 00:00:00",
-    )
-    assert (p / "delta=3").is_dir()
-
-    # inside the grace window nothing is reclaimed...
-    store.vacuum_shared(grace_seconds=3600)
-    assert sorted(d.name for d in p.glob("delta=*__old")) == [
-        "delta=0__old", "delta=1__old",
-    ]
-    # ...expired → swept
-    store.vacuum_shared(grace_seconds=0)
-    assert list(p.glob("delta=*__old")) == []
-    assert sorted(
-        (r["k"], r["v"]) for r in store.read_shared(spark, "db_t").collect()
-    ) == [(1, "a"), (2, "B"), (3, "c")]

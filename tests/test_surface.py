@@ -16,6 +16,12 @@ string constant (YAML ``method:`` names resolve through strings).
 ``__all__`` lists are not uses. Matching is by bare name, so the scan
 over-approximates reachability: it can miss dead code but never flags
 live code.
+
+The same holds one level down, for parameters: a defaulted parameter
+of a reached function or method that only calls under ``tests/`` ever
+pass is a mode nothing else selects. The pinned ``TEST_ONLY_PARAMS``
+are the threshold hooks, stat sinks and fixture shapes tests need;
+any other test-only parameter fails the scan.
 """
 
 from __future__ import annotations
@@ -43,12 +49,42 @@ UNREACHED_BY_DESIGN = {
     "aleph_folders", "rest_emit", "rest_emit_waves",
     # operators/sinks.py
     "ftm_store",
-    # plans/catalog.py — Iceberg / Delta catalog seam
-    "DeltaStackIO", "IcebergIO", "iceberg_available", "merge_into_sql",
-    "resolve_catalog",
     # sources/listing_source.py, sources/rest_source.py
     "listing_source", "retrieve_files", "mark_processed", "paginated_source",
     "skip_processed",
+}
+
+# (function or Class.method, parameter) pairs only tests pass
+TEST_ONLY_PARAMS = {
+    # thresholds and partition counts lowered so a toy input takes the
+    # at-scale path
+    ("RunStore.upsert_shared", "compact_after"),
+    ("flag_contaminated", "broadcast_max"),
+    ("strip_boilerplate_lines", "broadcast_max"),
+    ("pack_token_shards", "num_partitions"),
+    # oversampling margins cut to force the counted exact-fill fallback
+    ("quota_sample", "safety"),
+    ("temperature_mix", "safety"),
+    # caller-supplied dicts that receive an operator's counters
+    ("flag_contaminated", "stats"),
+    ("ngram_jaccard_pairs", "stats"),
+    ("quota_sample", "stats"),
+    ("strip_boilerplate_lines", "stats"),
+    ("temperature_mix", "stats"),
+    # fixture generators: hot-host corpora for the skew tests
+    ("build_corpus", "hot_mod"),
+    ("seed_urls", "hot_mod"),
+    # fixed inputs for hand-derived expectations, and an oversized
+    # unit that trips pagerank's fixed-point overflow check
+    ("semantic_dedup", "centroids"),
+    ("temperature_mix", "total"),
+    ("pagerank", "unit"),
+    # operator variants a test checks beside the contract's default
+    ("corpus_dedup", "normalize"),
+    ("knn_lsh", "multiprobe"),
+    ("ngram_jaccard_pairs", "max_df"),
+    # CLI argv (the console entry point reads sys.argv)
+    ("main", "argv"),
 }
 
 
@@ -90,8 +126,8 @@ def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(), str(path))
 
 
-def unreached_definitions() -> set[str]:
-    entry_files = [
+def _entry_files() -> list[Path]:
+    return [
         ROOT / "__spark_entry__.py",
         ROOT / "bench.py",
         ENGINE / "cli.py",
@@ -99,6 +135,10 @@ def unreached_definitions() -> set[str]:
         *sorted((ROOT / "crawlbench").glob("*.py")),
         *sorted((ROOT / "tools").glob("*.py")),
     ]
+
+
+def unreached_definitions() -> set[str]:
+    entry_files = _entry_files()
     roots: set[str] = set()
     for path in entry_files:
         roots |= _uses(_parse(path))
@@ -136,4 +176,117 @@ def test_only_pinned_definitions_are_unreached():
     )
     assert UNREACHED_BY_DESIGN - unreached == set(), (
         "pinned definitions now reached or gone; unpin them"
+    )
+
+
+def _callees() -> dict[str, list[tuple[str, ast.AST, bool, bool]]]:
+    """Called name → ``(label, def, skips_first_param, method_only)``
+    for every reached top-level function, method and constructor."""
+    out: dict[str, list] = {}
+    for path in sorted(ENGINE.rglob("*.py")):
+        for stmt in _parse(path).body:
+            if getattr(stmt, "name", None) in UNREACHED_BY_DESIGN:
+                continue
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out.setdefault(stmt.name, []).append(
+                    (stmt.name, stmt, False, False)
+                )
+            elif isinstance(stmt, ast.ClassDef):
+                for m in stmt.body:
+                    if not isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        continue
+                    static = any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod"
+                        for d in m.decorator_list
+                    )
+                    label = f"{stmt.name}.{m.name}"
+                    out.setdefault(m.name, []).append(
+                        (label, m, not static, True)
+                    )
+                    if m.name == "__init__":
+                        out.setdefault(stmt.name, []).append(
+                            (label, m, True, False)
+                        )
+    return out
+
+
+def _defaulted(fn: ast.AST) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    names = [p.arg for p in pos[len(pos) - len(a.defaults):]]
+    return names + [
+        p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _passed(call: ast.Call, fn: ast.AST, skip: bool, star_passes_all: bool):
+    """Parameter names ``call`` binds, by position or keyword. A
+    ``*args``/``**kwargs`` splat binds every parameter it could reach
+    when ``star_passes_all`` and none otherwise."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args][int(skip):]
+    out: set[str] = set()
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            if star_passes_all:
+                out |= set(pos[i:])
+            break
+        if i < len(pos):
+            out.add(pos[i])
+    for kw in call.keywords:
+        if kw.arg is not None:
+            out.add(kw.arg)
+        elif star_passes_all:
+            out |= set(pos) | {p.arg for p in a.kwonlyargs}
+    return out
+
+
+def _params_passed(paths, callees, star_passes_all: bool) -> set[tuple]:
+    used: set[tuple[str, str]] = set()
+    for path in paths:
+        for n in ast.walk(_parse(path)):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            if isinstance(f, ast.Name):
+                name, via_attr = f.id, False
+            elif isinstance(f, ast.Attribute):
+                name, via_attr = f.attr, True
+            else:
+                continue
+            for label, fn, skip, method_only in callees.get(name, ()):
+                if method_only and not via_attr:
+                    continue
+                used |= {
+                    (label, p)
+                    for p in _passed(n, fn, skip, star_passes_all)
+                }
+    return used
+
+
+def params_only_tests_pass() -> set[tuple[str, str]]:
+    callees = _callees()
+    defaulted = {
+        (label, p)
+        for defs in callees.values()
+        for label, fn, _, _ in defs
+        for p in _defaulted(fn)
+    }
+    live = _params_passed(
+        {*_entry_files(), *ENGINE.rglob("*.py")}, callees, True
+    )
+    tests = _params_passed(
+        sorted((ROOT / "tests").rglob("*.py")), callees, False
+    )
+    return (tests - live) & defaulted
+
+
+def test_no_unpinned_test_only_parameters():
+    found = params_only_tests_pass()
+    assert found - TEST_ONLY_PARAMS == set(), (
+        "defaulted parameters only tests pass; delete the mode or pass "
+        "it from the contract"
+    )
+    assert TEST_ONLY_PARAMS - found == set(), (
+        "pinned parameters now passed outside tests or gone; unpin them"
     )

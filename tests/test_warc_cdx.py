@@ -154,65 +154,6 @@ def test_cdx_bad_range_fails_loud(spark, tmp_path):
         read_warc_records(past_eof).collect()
 
 
-def test_http_response_records_roundtrip(spark, tmp_path):
-    """http_status_col switches to CC's `response` record shape: the
-    archived payload is a full HTTP/1.1 response whose envelope is
-    deterministic (status line, Content-Type/Length ours, extra
-    headers sorted), parse_http splits it back out (status, headers,
-    exact body bytes) on BOTH read paths, and the CDX mime/digest
-    keep describing the entity."""
-    import hashlib
-
-    rows = [
-        (f"http://e.org/{i}", f"body {i}".encode(), 200 + (i % 2) * 104,
-         {"Server": "x", "ETag": f'"{i}"'})
-        for i in range(8)
-    ]
-    docs = spark.createDataFrame(
-        rows,
-        "uri string, payload binary, status int, hdrs map<string,string>",
-    )
-    dest = str(tmp_path / "w")
-    write_warc(
-        docs.repartition(2), dest, compress=True, index=True,
-        content_type_col=None, http_status_col="status",
-        http_headers_col="hdrs",
-    ).collect()
-    back = {
-        r["uri"]: r
-        for r in read_warc(
-            spark, f"{dest}/*.warc.gz", parse_http=True
-        ).collect()
-    }
-    for uri, body, status, hdrs in rows:
-        r = back[uri]
-        assert r["warc_type"] == "response"
-        assert r["content_type"].startswith("application/http")
-        assert r["http_status"] == status
-        assert bytes(r["http_body"]) == body
-        assert r["http_headers"]["Server"] == "x"
-        assert r["http_headers"]["Content-Length"] == str(len(body))
-        # raw payload leads with a deterministic status line
-        assert bytes(r["payload"]).startswith(
-            f"HTTP/1.1 {status} ".encode()
-        )
-    # ranged path agrees, and CDX describes the ENTITY
-    cdx = read_cdx(spark, f"{dest}/*.cdx")
-    for r in cdx.collect():
-        body = dict((u, b) for u, b, _s, _h in rows)[r["url"]]
-        assert r["digest"] == hashlib.sha1(body).hexdigest()
-        assert r["mime"] == "application/octet-stream"
-    ranged = read_warc_records(cdx, parse_http=True).collect()
-    assert {r["uri"]: bytes(r["http_body"]) for r in ranged} == {
-        u: b for u, b, _s, _h in rows
-    }
-    # resource-type archives parse_http to nulls
-    plain = str(tmp_path / "plain")
-    write_warc(docs.select("uri", "payload").coalesce(1), plain).collect()
-    pr = read_warc(spark, f"{plain}/*.warc", parse_http=True).head(1)[0]
-    assert pr["http_status"] is None and pr["http_body"] is None
-
-
 def test_warc_gz_write_is_deterministic(spark, tmp_path):
     """Two writes of the same partitioned input produce byte-identical
     archives and sidecars (MTIME=0 members, derived record ids)."""

@@ -223,6 +223,12 @@ def test_load_rejects_unwired_shapes():
     params: {start: 0, stop: 3}
     handle: {pass: fetch}
 """))
+    # a WARC store sink is not wired: it fails at load, not silently
+    with pytest.raises(ValueError, match="unsupported method"):
+        load_yaml(_yaml(SEED_INIT, """  store:
+    method: warc
+    params: {}
+"""))
 
 
 def test_template_unknown_field_fails_at_compile(spark):
