@@ -154,38 +154,30 @@ def line_metrics(text: Column) -> dict[str, Column]:
 
 
 def gopher_keep(
-    text: Column,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    min_frac_alpha_words: float = 0.8,
-    min_stop_hits: int = 2,
-    max_bullet_frac: float = 0.1,
-    max_ellipsis_frac: float = 0.3,
-    max_dup_line_char_frac: float = 0.2,
+    text: Column, min_words: int = 50, min_stop_hits: int = 2
 ) -> Column:
     """The conjunction of the Gopher quality rules as ONE boolean
-    Column (defaults = the paper's thresholds; loosen ``min_words``
-    for short-document corpora). A full-corpus quality gate is one
-    scan, no shuffle; the token and line arrays are each computed
-    exactly once per row (one shared bind across all eight rules)."""
+    Column, at the paper's thresholds (loosen ``min_words`` for
+    short-document corpora, ``min_stop_hits`` for a small
+    vocabulary): 50-100,000 words of mean length 3-10, symbol/word ≤
+    0.1, ≥ 80% alphabetic words, ≥ 2 stop words, bullet lines ≤ 10%,
+    ellipsis lines ≤ 30%, duplicate-line characters ≤ 20%. A
+    full-corpus quality gate is one scan, no shuffle; the token and
+    line arrays are each computed exactly once per row (one shared
+    bind across all eight rules)."""
 
     def keep(s: Column) -> Column:
         wm = _word_metrics_of(text, s["w"])
         lm = _line_metrics_of(s["l"])
         return (
-            wm["n_words"].between(min_words, max_words)
-            & wm["mean_word_len"].between(
-                min_mean_word_len, max_mean_word_len
-            )
-            & (wm["symbol_word_ratio"] <= max_symbol_word_ratio)
-            & (wm["frac_alpha_words"] >= min_frac_alpha_words)
+            wm["n_words"].between(min_words, 100_000)
+            & wm["mean_word_len"].between(3.0, 10.0)
+            & (wm["symbol_word_ratio"] <= 0.1)
+            & (wm["frac_alpha_words"] >= 0.8)
             & (wm["stop_hits"] >= min_stop_hits)
-            & (lm["frac_bullet_lines"] <= max_bullet_frac)
-            & (lm["frac_ellipsis_lines"] <= max_ellipsis_frac)
-            & (lm["dup_line_char_frac"] <= max_dup_line_char_frac)
+            & (lm["frac_bullet_lines"] <= 0.1)
+            & (lm["frac_ellipsis_lines"] <= 0.3)
+            & (lm["dup_line_char_frac"] <= 0.2)
         )
 
     return bind_once(
@@ -196,39 +188,32 @@ def gopher_keep(
     )
 
 
-def c4_clean_lines(
-    text: Column,
-    min_line_words: int = 3,
-    banned: tuple[str, ...] = ("javascript", "{"),
-) -> Column:
+def c4_clean_lines(text: Column) -> Column:
     """C4's line-level cleaning (Raffel et al. §2.2): keep only lines
-    that end in terminal punctuation (. ! ? "), carry at least
-    ``min_line_words`` words, and contain none of ``banned``
+    that end in terminal punctuation (. ! ? "), carry at least 3
+    words, and contain neither ``javascript`` nor ``{``
     (case-insensitive). Returns the cleaned text ('\\n'-joined
     survivors; empty string when nothing survives)."""
     lines = F.split(text, "\n")
 
     def _ok(l: Column) -> Column:
         n_words = F.size(F.split(F.trim(l), r"\s+"))
-        cond = l.rlike('[.!?"]\\s*$') & (n_words >= min_line_words)
         low = F.lower(l)
-        for b in banned:
-            cond = cond & ~low.contains(b.lower())
-        return cond
+        return (
+            l.rlike('[.!?"]\\s*$')
+            & (n_words >= 3)
+            & ~low.contains("javascript")
+            & ~low.contains("{")
+        )
 
     return F.array_join(F.filter(lines, _ok), "\n")
 
 
-def top_ngram_char_frac(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
+def top_ngram_char_frac(docs: DataFrame, n: int = 2) -> DataFrame:
     """Gopher's top-n-gram repetition rule: per doc, the fraction of
     characters covered by the single most frequent word n-gram
     (``count × len(gram) / len(text)`` — the standard occurrence
-    approximation). Returns ``(id_col, top_gram, top_gram_count,
+    approximation). Returns ``(doc_id, top_gram, top_gram_count,
     top_gram_char_frac)``; docs with fewer than ``n`` words have no
     n-gram and are absent.
 
@@ -248,13 +233,13 @@ def top_ngram_char_frac(
         )
 
     grams = docs.select(
-        F.col(id_col),
-        F.length(text_col).alias("_tlen"),
-        F.explode(bind_once(_words(F.col(text_col)), gram_arr)).alias(
+        F.col("doc_id"),
+        F.length("text").alias("_tlen"),
+        F.explode(bind_once(_words(F.col("text")), gram_arr)).alias(
             "gram"
         ),
     )
-    counts = grams.groupBy(id_col, "_tlen", "gram").agg(
+    counts = grams.groupBy("doc_id", "_tlen", "gram").agg(
         F.count(F.lit(1)).alias("c")
     )
     # argmax with a string payload is sort-based in Spark (string/
@@ -262,14 +247,14 @@ def top_ngram_char_frac(
     # for max(struct), max_by, even max(string)); the partial
     # SortAggregate still combines map-side, so the exchange carries
     # one row per (doc, partition), not per gram
-    top = counts.groupBy(id_col, "_tlen").agg(
+    top = counts.groupBy("doc_id", "_tlen").agg(
         F.max_by(
             F.struct(F.col("gram"), F.col("c")),
             F.struct(F.col("c"), F.col("gram")),
         ).alias("_t")
     )
     return top.select(
-        id_col,
+        "doc_id",
         F.col("_t.gram").alias("top_gram"),
         F.col("_t.c").alias("top_gram_count"),
         F.round(

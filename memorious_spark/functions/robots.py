@@ -99,18 +99,16 @@ def robots_table(
     corpus: DataFrame,
     agent: str = "memorious",
     round_seconds: float = 60.0,
-    url_col: str = "url",
-    body_col: str = "html",
 ) -> DataFrame:
     """Build the politeness gate table from the corpus's own
     ``/robots.txt`` pages: ``(host, disallow_prefixes,
     crawl_delay_budget)``. Tiny by construction (one row per host) —
     always broadcastable into the dequeue join."""
     robots_rows = corpus.filter(
-        F.parse_url(F.col(url_col), F.lit("PATH")) == "/robots.txt"
+        F.parse_url(F.col("url"), F.lit("PATH")) == "/robots.txt"
     ).select(
-        F.lower(F.parse_url(F.col(url_col), F.lit("HOST"))).alias("host"),
-        F.col(body_col).alias("body"),
+        F.lower(F.parse_url(F.col("url"), F.lit("HOST"))).alias("host"),
+        F.col("html").alias("body"),
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

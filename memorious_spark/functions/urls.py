@@ -196,23 +196,18 @@ def trap_signals(url: Column) -> dict[str, Column]:
     }
 
 
-def is_trap_col(
-    url: Column,
-    max_segments: int = 20,
-    max_seg_run: int = 2,
-    max_qparams: int = 16,
-    max_len: int = 2048,
-) -> Column:
-    """True when any trap signal fires — the frontier gate. Defaults
+def is_trap_col(url: Column) -> Column:
+    """True when any trap signal fires — the frontier gate. Limits
     follow Heritrix's shipped decide-rules: >20 path segments, a path
-    segment repeated ≥3× consecutively, plus query-blowup and raw
-    length caps for session-id/calendar loops."""
+    segment repeated ≥3× consecutively, plus query-blowup (>16
+    parameters) and raw length (>2048) caps for session-id/calendar
+    loops."""
     s = trap_signals(url)
     return (
-        (s["n_segments"] > max_segments)
-        | (s["max_seg_run"] > max_seg_run)
-        | (s["n_qparams"] > max_qparams)
-        | (s["url_len"] > max_len)
+        (s["n_segments"] > 20)
+        | (s["max_seg_run"] > 2)
+        | (s["n_qparams"] > 16)
+        | (s["url_len"] > 2048)
     )
 
 
@@ -311,23 +306,21 @@ def _default_psl(include_private: bool = True) -> PSLRules:
 
 
 def registrable_domain_col(
-    host: Column,
-    rules: PSLRules | None = None,
-    include_private: bool = True,
+    host: Column, include_private: bool = True
 ) -> Column:
     """Registrable domain of a (lowercased) hostname: the label left
     of the public suffix — ``news.bbc.co.uk`` → ``bbc.co.uk``,
     ``a.b.example.com`` → ``example.com``, ``alice.github.io`` →
     ``alice.github.io`` (private-section registry).
 
-    Two consumers, two section choices (``include_private``, ignored
-    when explicit ``rules`` are passed): eTLD+1 semantics (dedup
-    keys, cookie-style scoping) want the FULL list — each github.io
-    site is its own registrant. POLITENESS wants ICANN-only
-    (``include_private=False``): ten thousand ``*.blogspot.com``
-    subdomains resolve to ONE origin infrastructure, and a
-    per-registrant budget would multiply the configured rate by the
-    subdomain count — exactly what domain grouping exists to stop.
+    Two consumers, two section choices (``include_private``): eTLD+1
+    semantics (dedup keys, cookie-style scoping) want the FULL list —
+    each github.io site is its own registrant. POLITENESS wants
+    ICANN-only (``include_private=False``): ten thousand
+    ``*.blogspot.com`` subdomains resolve to ONE origin
+    infrastructure, and a per-registrant budget would multiply the
+    configured rate by the subdomain count — exactly what domain
+    grouping exists to stop.
 
     Full PSL semantics over the vendored snapshot (:func:`load_psl`):
     longest-rule match with wildcard (``*.ck``) and exception
@@ -338,7 +331,7 @@ def registrable_domain_col(
     per-depth sets would ship as a broadcast join on the suffix key).
     Hosts that ARE a public suffix, 1-label hosts, and IPv4 literals
     pass through unchanged."""
-    rules = rules or _default_psl(include_private)
+    rules = _default_psl(include_private)
     parts = F.split(host, r"\.")
     n = F.size(parts)
 

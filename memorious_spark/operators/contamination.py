@@ -69,14 +69,11 @@ def word_ngrams(text: Column, n: int) -> Column:
 def flag_contaminated(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
     n: int = 13,
     broadcast_max: int = 5_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Return ``(id_col, n_hit_grams, contaminated)`` for every input
+    """Return ``(doc_id, n_hit_grams, contaminated)`` for every input
     document: ``n_hit_grams`` = how many DISTINCT word ``n``-grams of
     the doc occur anywhere in ``benchmark``; ``contaminated`` =
     ``n_hit_grams > 0`` (the drop rule).
@@ -86,7 +83,7 @@ def flag_contaminated(
     """
     bench_grams = (
         ensure_parallelism(benchmark)
-        .select(F.explode(word_ngrams(F.col(bench_text_col), n)).alias("g"))
+        .select(F.explode(word_ngrams(F.col("text"), n)).alias("g"))
         .distinct()
         .persist()
     )
@@ -103,9 +100,9 @@ def flag_contaminated(
     # rebuilds its hash set PER ROW, where a broadcast hash join builds
     # it once per task. The count-back joins onto docs' bare id column
     # — never re-evaluating the gram expression for a second scan.
-    doc_grams = word_ngrams(F.col(text_col), n)
+    doc_grams = word_ngrams(F.col("text"), n)
     exploded = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode_outer(F.array_distinct(doc_grams)).alias("g"),
     )
     bench_side = (
@@ -119,15 +116,11 @@ def flag_contaminated(
     # it to broadcast at runtime when hits are small (the normal
     # case) without risking a driver OOM when a pathological corpus
     # is wholly contaminated.
-    hit_counts = hits.groupBy(id_col).agg(
+    hit_counts = hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_hit_grams")
     )
-    out = docs.select(id_col).join(
-        hit_counts,
-        id_col,
-        "left",
-    ).select(
-        id_col,
+    out = docs.select("doc_id").join(hit_counts, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_hit_grams", F.lit(0).cast("long")).alias(
             "n_hit_grams"
         ),

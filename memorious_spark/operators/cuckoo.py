@@ -66,7 +66,6 @@ _BUCKET = 4  # slots per bucket
 _FP_MULT = np.uint64(0x5BD1E995)  # fp → partner-bucket offset hash
 _MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 _MAX_KICKS = 500
-_DEFAULT_LOAD = 0.84
 
 
 def _next_pow2(n: int) -> int:
@@ -171,14 +170,15 @@ def _insert_batch(table: np.ndarray, hv: np.ndarray) -> None:
             )
 
 
-def _size_for(expected: int, n_shards: int, load: float) -> int:
+def _size_for(expected: int, n_shards: int) -> int:
     per_shard = expected / max(1, n_shards)
     # Poisson skew headroom: keys route by hash, so a shard draws
     # ~N(mean, sqrt(mean)) keys — at production scale the sqrt term
     # is noise, at test scale it's the difference between fitting
     # and a spurious over-full error
     per_shard += 4.0 * math.sqrt(per_shard) + 16.0
-    return _next_pow2(math.ceil(per_shard / _BUCKET / load))
+    # sized for a 0.84 load factor
+    return _next_pow2(math.ceil(per_shard / _BUCKET / 0.84))
 
 
 
@@ -219,24 +219,21 @@ def build_cuckoo(
     key: str,
     expected: int,
     n_shards: int | None = None,
-    load: float = _DEFAULT_LOAD,
 ) -> ShardedCuckoo:
     """Build a :class:`~memorious_spark.operators.sharded_filter.
     ShardedCuckoo` over ``df[key]`` (``n_shards`` rounds up to a power
     of two; default: the session's shuffle parallelism)."""
     from memorious_spark.operators.sharded_filter import build_sharded_cuckoo
 
-    return build_sharded_cuckoo(df, key, expected, shards=n_shards, load=load)
+    return build_sharded_cuckoo(df, key, expected, shards=n_shards)
 
 
-def delete_cuckoo(
-    filt: ShardedCuckoo, df: DataFrame, key: str = "url_hash"
-) -> int:
-    """Remove expired tags' hashes from ``filt`` IN PLACE (its ``df``
-    is replaced) — the operation the bloom cannot do. Returns the
-    number of fingerprints actually removed."""
+def delete_cuckoo(filt: ShardedCuckoo, df: DataFrame) -> int:
+    """Remove expired tags' ``url_hash`` values from ``filt`` IN PLACE
+    (its ``df`` is replaced) — the operation the bloom cannot do.
+    Returns the number of fingerprints actually removed."""
     from memorious_spark.operators.sharded_filter import delete_sharded_cuckoo
 
-    new, removed = delete_sharded_cuckoo(filt, df, key)
+    new, removed = delete_sharded_cuckoo(filt, df)
     filt.df = new.df
     return removed

@@ -15,7 +15,7 @@ reference's only dedup is the URL-seen tag set; these deduplicate
 - SimHash: 64-bit signature computed ENTIRELY JVM-side (token explode
   → md5 word-hash bits → 64 conditional sums → bit assembly; no
   Python anywhere), candidates by 16-bit banding, pairs kept only at
-  ``hamming ≤ max_hamming`` — the ≤3-bit pigeonhole guarantee the
+  ``hamming ≤ 3`` — the ≤3-bit pigeonhole guarantee the
   banding provides.
 - embedding near-dup: EXACT pairs via the block-grid self-join (each
   row replicated to its block row/column; every pair meets in exactly
@@ -50,14 +50,16 @@ __all__ = [
     "remove_duplicate_spans",
 ]
 
+# block-grid side of the exact cosine self-joins (embedding_dup_pairs,
+# semantic_dedup): every row lands in one of this many hash blocks
+_GRID_BLOCKS = 8
+
 
 def dedup_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 50,
     stats: dict | None = None,
-    label_rounds: int = 4,
 ) -> DataFrame:
     """Connected components over dup-pair edges → ``(id, component)``
     with ``component`` = the smallest id in the cluster (the canonical
@@ -69,9 +71,9 @@ def dedup_components(
     the standard second half of corpus dedup. HYBRID implementation,
     measured both ways at sf0.1:
 
-    - Phase 1 — **min-label propagation** for up to ``label_rounds``
-      rounds: one edges⋈labels shuffle join + one map-side-combined
-      min aggregate per round, convergence riding the materializing
+    - Phase 1 — **min-label propagation** for up to 4 rounds: one
+      edges⋈labels shuffle join + one map-side-combined min
+      aggregate per round, convergence riding the materializing
       action as an Observation (NO separate count job). Near-dup
       clusters are shallow (diameter ≲ 4), so this phase almost always
       finishes — at roughly half the per-round cost of a star round.
@@ -88,7 +90,8 @@ def dedup_components(
     lineage TRUNCATION the logical plan grows geometrically and the
     driver dies building plan strings long before the data is big. A
     512-node path graph converges in ≤ 3·log2(n)+5 total rounds
-    (pytest-asserted); ``stats`` (optional dict) receives
+    (pytest-asserted); both phases together are capped at 50 rounds,
+    past which phase 2 raises. ``stats`` (optional dict) receives
     ``{"iterations": k}``.
     """
     from pyspark.sql import Observation
@@ -118,7 +121,7 @@ def dedup_components(
     labels = None
     iters = 0
     converged = False
-    for _ in range(min(label_rounds, max_iter)):
+    for _ in range(4):
         iters += 1
         if labels is None:
             # round 1 FOLDED: with identity initial labels, one round
@@ -168,13 +171,6 @@ def dedup_components(
         if int(obs.get["changed"] or 0) == 0:
             converged = True
             break
-    if labels is None:  # label_rounds == 0: identity labels for phase 2
-        labels = (
-            sym.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-            .localCheckpoint(eager=True)
-        )
     if not converged:
         # contract by current labels (collapses everything phase 1
         # already solved), then the O(log n) star algorithm finishes
@@ -187,9 +183,7 @@ def dedup_components(
                 F.col("lb.label").alias("id_b"),
             )
         )
-        star, star_iters = _star_components(
-            contracted, max_iter=max_iter - iters
-        )
+        star, star_iters = _star_components(contracted, 50 - iters)
         iters += star_iters
         out = (
             labels.join(star, labels["label"] == star["sid"], "left")
@@ -204,9 +198,7 @@ def dedup_components(
     return out
 
 
-def _star_components(
-    pairs: DataFrame, max_iter: int = 50
-) -> tuple[DataFrame, int]:
+def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star connected components over an
     (id_a, id_b) edge DF → ((sid, scomp) labels, rounds used).
 
@@ -286,8 +278,8 @@ def _star_components(
         # emitting labels from it would silently duplicate/mislabel
         raise RuntimeError(
             f"_star_components: no fixpoint after {iters} star rounds "
-            f"(O(log n) expected — raise max_iter only if the graph "
-            f"really has >2^{max_iter // 2} nodes)"
+            f"(O(log n) expected: only a graph of >2^{max_iter // 2} "
+            f"nodes needs this many)"
         )
     # at the star-forest fixpoint every edge is (member → root); roots
     # and isolated input nodes label themselves
@@ -306,12 +298,8 @@ def _star_components(
 
 def corpus_dedup(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_perm: int = 16,
     bands: int = 4,
-    k_shingle: int = 3,
-    max_iter: int = 50,
     stats: dict | None = None,
     normalize: bool = False,
 ) -> DataFrame:
@@ -345,13 +333,13 @@ def corpus_dedup(
     star rounds for components, and two slim id-keyed joins to stitch
     the manifest — no step is quadratic in the corpus.
     """
-    text_in = F.col(text_col)
+    text_in = F.col("text")
     if normalize:
         from memorious_spark.functions.textops import normalize_text_udf
 
         text_in = normalize_text_udf()(text_in)
     base = docs.select(
-        F.col(id_col).cast("long").alias("id"), text_in.alias("_t")
+        F.col("doc_id").cast("long").alias("id"), text_in.alias("_t")
     )
     # exact stage: canonical = min id per normalized-text fingerprint,
     # computed as aggregate + join-back (skew-safe), not a window.
@@ -369,13 +357,8 @@ def corpus_dedup(
     # least/greatest + distinct anyway, so the public
     # minhash_lsh_pairs' trailing distinct would be a pure extra
     # shuffle+aggregate of the pair stream here
-    pairs = _minhash_band_pairs(
-        survivors, id_col="id", text_col="_t",
-        n_perm=n_perm, bands=bands, k_shingle=k_shingle,
-    )
-    comp = dedup_components(
-        pairs, id_a="id_a", id_b="id_b", max_iter=max_iter, stats=stats
-    )
+    pairs = _minhash_band_pairs(survivors, "id", "_t", n_perm, bands)
+    comp = dedup_components(pairs, id_a="id_a", id_b="id_b", stats=stats)
     # near canonical over survivors (docs in no component keep themselves)
     near = (
         survivors.select("id")
@@ -389,7 +372,7 @@ def corpus_dedup(
         ecanon.select("id", "ecanon")
         .join(near, F.col("ecanon") == F.col("_sid"))
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("ncanon").alias("canonical_id"),
             F.when(F.col("id") != F.col("ecanon"), F.lit("exact"))
             .when(F.col("id") != F.col("ncanon"), F.lit("near"))
@@ -402,18 +385,13 @@ def corpus_dedup(
 
 def curate_corpus(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     quality_filter: Column | None = None,
     n_perm: int = 16,
     bands: int = 4,
-    k_shingle: int = 3,
-    max_iter: int = 50,
-    stats: dict | None = None,
 ) -> DataFrame:
     """The full curation composition a training-data pipeline runs:
     **quality gate → exact dedup → MinHash-LSH → components →
-    manifest**. One row per input doc: ``(id_col, canonical_id,
+    manifest**. One row per input doc: ``(doc_id, canonical_id,
     reason ∈ {'kept', 'exact', 'near', 'low_quality'})``.
 
     The quality gate (default: :func:`functions.quality.gopher_keep`
@@ -433,22 +411,17 @@ def curate_corpus(
     keep = (
         quality_filter
         if quality_filter is not None
-        else gopher_keep(F.col(text_col))
+        else gopher_keep(F.col("text"))
     )
     base = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(text_col).alias(text_col),
-        keep.alias("_q"),
+        F.col("doc_id").cast("long").alias("doc_id"), "text", keep.alias("_q")
     )
     man = corpus_dedup(
-        base.filter(F.col("_q")).drop("_q"),
-        id_col=id_col, text_col=text_col,
-        n_perm=n_perm, bands=bands, k_shingle=k_shingle,
-        max_iter=max_iter, stats=stats,
+        base.filter(F.col("_q")).drop("_q"), n_perm=n_perm, bands=bands
     )
     low = base.filter(~F.col("_q")).select(
-        F.col(id_col),
-        F.col(id_col).alias("canonical_id"),
+        "doc_id",
+        F.col("doc_id").alias("canonical_id"),
         F.lit("low_quality").alias("reason"),
     )
     return man.unionByName(low)
@@ -456,8 +429,6 @@ def curate_corpus(
 
 def strip_boilerplate_lines(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_docs: int = 2,
     broadcast_max: int = 200_000,
     stats: dict | None = None,
@@ -466,7 +437,7 @@ def strip_boilerplate_lines(
     boilerplate cut): a non-empty line whose trimmed form appears in
     ``min_docs`` or more documents is boilerplate — nav bars, cookie
     banners, footers — and is removed from EVERY document. Returns the
-    input columns with ``text_col`` rewritten (blank lines and line
+    input columns with ``text`` rewritten (blank lines and line
     order preserved).
 
     Plan: one line-explode + hash-aggregate finds the hot set (the
@@ -487,7 +458,7 @@ def strip_boilerplate_lines(
     """
     trimmed_lines = F.filter(
         F.transform(
-            F.split(F.col(text_col), "\n"), lambda l: F.trim(l)
+            F.split(F.col("text"), "\n"), lambda l: F.trim(l)
         ),
         lambda t: t != "",
     )
@@ -523,10 +494,10 @@ def strip_boilerplate_lines(
         out = (
             docs.crossJoin(F.broadcast(hotarr))
             .withColumn(
-                text_col,
+                "text",
                 F.array_join(
                     F.filter(
-                        F.split(F.col(text_col), "\n"),
+                        F.split(F.col("text"), "\n"),
                         lambda l: (F.trim(l) == F.lit(""))
                         | ~F.array_contains(F.col("_hot"), F.trim(l)),
                     ),
@@ -537,8 +508,8 @@ def strip_boilerplate_lines(
         )
     else:
         pos = docs.select(
-            F.col(id_col).alias("_sid"),
-            F.posexplode(F.split(F.col(text_col), "\n")).alias(
+            F.col("doc_id").alias("_sid"),
+            F.posexplode(F.split(F.col("text"), "\n")).alias(
                 "_pos", "_line"
             ),
         )
@@ -555,36 +526,29 @@ def strip_boilerplate_lines(
             ).alias("_clean")
         )
         out = (
-            docs.join(rebuilt, docs[id_col] == rebuilt["_sid"], "left")
-            .withColumn(text_col, F.coalesce("_clean", F.lit("")))
+            docs.join(rebuilt, docs["doc_id"] == rebuilt["_sid"], "left")
+            .withColumn("text", F.coalesce("_clean", F.lit("")))
             .select(*cols)
         )
     return out
 
 
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep the lowest-id representative per exact (fingerprinted)
     text; returns (doc_id, fingerprint, dup_count)."""
     return (
-        docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint"))
+        docs.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias(id_col),
+            F.min("doc_id").alias("doc_id"),
             F.count("*").alias("dup_count"),
         )
-        .select(id_col, "fingerprint", "dup_count")
+        .select("doc_id", "fingerprint", "dup_count")
     )
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_perm: int = 16,
-    bands: int = 4,
-    k_shingle: int = 3,
+    docs: DataFrame, n_perm: int = 16, bands: int = 4
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash banding.
 
@@ -595,17 +559,12 @@ def minhash_lsh_pairs(
     where an O(n²) crossJoin cannot.
     """
     return _minhash_band_pairs(
-        docs, id_col, text_col, n_perm, bands, k_shingle
+        docs, "doc_id", "text", n_perm, bands
     ).distinct()
 
 
 def _minhash_band_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_perm: int = 16,
-    bands: int = 4,
-    k_shingle: int = 3,
+    docs: DataFrame, id_col: str, text_col: str, n_perm: int, bands: int
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs` WITHOUT the trailing ``distinct`` —
     for compositions (``corpus_dedup`` → ``dedup_components``) whose
@@ -617,7 +576,7 @@ def _minhash_band_pairs(
     # permutation (16× blowup, measured 57s → ~2s at 500 docs)
     sig = ensure_parallelism(docs).select(
         F.col(id_col).alias("id"),
-        shingles(F.col(text_col), k_shingle).alias("sh"),
+        shingles(F.col(text_col)).alias("sh"),
     ).select("id", minhash_signature(F.col("sh"), n_perm).alias("sig"))
     banded = sig.select(
         "id",
@@ -655,9 +614,6 @@ def _minhash_band_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k_shingle: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
     stats: dict | None = None,
@@ -685,8 +641,8 @@ def ngram_jaccard_pairs(
     is passed.
     """
     sh = ensure_parallelism(docs).select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles(F.col(text_col), k_shingle)).alias("sh"),
+        F.col("doc_id").alias("id"),
+        F.array_distinct(shingles(F.col("text"))).alias("sh"),
     ).withColumn("n", F.size("sh"))
     exploded = sh.select("id", "n", F.explode("sh").alias("s"))
     if max_df is not None:
@@ -755,9 +711,7 @@ def _word_bits(tok: Column) -> tuple[Column, Column]:
     return lo, hi
 
 
-def simhash_signature_cols(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_signature_cols(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc as two 32-bit halves (sig_lo, sig_hi).
 
     Entirely JVM-side: lower+split tokens → explode → per-bit ±1 sums
@@ -768,12 +722,12 @@ def simhash_signature_cols(
     """
     toks = F.array_compact(
         F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
             lambda t: t != "",
         )
     )
     ex = ensure_parallelism(docs).select(
-        F.col(id_col).alias("id"), F.explode_outer(toks).alias("tok")
+        F.col("doc_id").alias("id"), F.explode_outer(toks).alias("tok")
     )
     lo, hi = _word_bits(F.col("tok"))
     ex = ex.select("id", lo.alias("w_lo"), hi.alias("w_hi"))
@@ -809,35 +763,28 @@ def simhash_signature_cols(
     )
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    band_bits: int = 16,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """Near-duplicate pairs by SimHash banding + hamming threshold.
 
-    Docs sharing any ``band_bits``-bit band of the 64-bit signature
-    become candidates (with 4 bands, any pair at hamming ≤ 3 shares a
-    band by pigeonhole — zero false negatives up to the threshold);
-    candidates are then FILTERED to ``hamming ≤ max_hamming`` — the
-    round-1 version returned raw band collisions, which is a candidate
-    generator, not a dedup operator."""
-    assert 64 % band_bits == 0
-    sig = simhash_signature_cols(docs, id_col, text_col)
-    mask = (1 << band_bits) - 1
-    per_word = 32 // band_bits
+    Docs sharing any 16-bit band of the 64-bit signature become
+    candidates (with 4 bands, any pair at hamming ≤ 3 shares a band by
+    pigeonhole — zero false negatives up to the threshold); candidates
+    are then FILTERED to ``hamming ≤ 3`` — the round-1 version
+    returned raw band collisions, which is a candidate generator, not
+    a dedup operator."""
+    sig = simhash_signature_cols(docs)
+    mask = 0xFFFF
+    per_word = 2  # 16-bit bands per 32-bit signature half
     bands = [
         F.struct(
             F.lit(b).alias("band"),
-            F.shiftright("sig_lo", b * band_bits).bitwiseAND(F.lit(mask)).alias("key"),
+            F.shiftright("sig_lo", b * 16).bitwiseAND(F.lit(mask)).alias("key"),
         )
         for b in range(per_word)
     ] + [
         F.struct(
             F.lit(per_word + b).alias("band"),
-            F.shiftright("sig_hi", b * band_bits).bitwiseAND(F.lit(mask)).alias("key"),
+            F.shiftright("sig_hi", b * 16).bitwiseAND(F.lit(mask)).alias("key"),
         )
         for b in range(per_word)
     ]
@@ -862,20 +809,14 @@ def simhash_pairs(
             F.col("r.id").alias("id_b"),
             hamming.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )
 
 
 # ---- embedding near-dup ------------------------------------------------------
 
-def embedding_dup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_blocks: int = 8,
-) -> DataFrame:
+def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """EXACT cosine-similarity pairs ≥ threshold via the block-grid
     self-join.
 
@@ -890,13 +831,13 @@ def embedding_dup_pairs(
     all-pairs compute is inherently O(n²) — for sub-quadratic scale
     use :func:`embedding_dup_pairs_lsh`."""
     v = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("b"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        _norm(F.col("embedding")).alias("nrm"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_GRID_BLOCKS)).alias("b"),
     )
     l = v.withColumn(
-        "q", F.explode(F.sequence(F.col("b"), F.lit(n_blocks - 1)))
+        "q", F.explode(F.sequence(F.col("b"), F.lit(_GRID_BLOCKS - 1)))
     ).select(
         F.col("id").alias("id_a"), F.col("v").alias("v_a"),
         F.col("nrm").alias("nrm_a"), F.col("b").alias("p"), "q",
@@ -928,8 +869,6 @@ def embedding_dup_pairs(
 def embedding_dup_pairs_lsh(
     emb: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     bands: int = 4,
     planes_per_band: int = 4,
@@ -946,12 +885,13 @@ def embedding_dup_pairs_lsh(
     from memorious_spark.operators.similarity import lsh_bucket_col
 
     v = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        _norm(F.col("embedding")).alias("nrm"),
         *[
             lsh_bucket_col(
-                F.col(vec_col), dim, planes_per_band, plane_offset=b * planes_per_band
+                F.col("embedding"), dim, planes_per_band,
+                plane_offset=b * planes_per_band,
             ).alias(f"bucket{b}")
             for b in range(bands)
         ],
@@ -988,13 +928,10 @@ def embedding_dup_pairs_lsh(
 
 def semantic_dedup(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.85,
     n_centroids: int = 8,
     spacing: int = 37,
     centroids: list[tuple[int, list[float]]] | None = None,
-    n_blocks: int = 8,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the embedding space into K cells with
@@ -1013,7 +950,7 @@ def semantic_dedup(
     Identical vectors that land in different cells are NOT compared —
     the known SemDeDup blind spot; run :func:`exact_dedup` first.
 
-    Returns ``(id_col, cell int, canonical_id, reason ∈
+    Returns ``(vec_id, cell int, canonical_id, reason ∈
     kept|semantic)`` — one row per input vector.
 
     Scale posture: centroid assignment auto-routes by K exactly like
@@ -1039,17 +976,15 @@ def semantic_dedup(
         ivf_seed_centroids,
     )
 
-    cents = centroids or ivf_seed_centroids(
-        emb, n_centroids, spacing, id_col, vec_col
-    )
+    cents = centroids or ivf_seed_centroids(emb, n_centroids, spacing)
     # respread a few-partition input BEFORE the CPU-heavy assignment
     # and pair stages: a small parquet arrives as one split, the tiny
     # right side then broadcasts, and the whole interpreted-cosine
     # pair scan would run narrow on a single core
     base = ensure_parallelism(emb).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        _norm(F.col("embedding")).alias("nrm"),
     )
     if len(cents) <= _IVF_LITERAL_MAX_K:
         dists = F.array(
@@ -1079,14 +1014,14 @@ def semantic_dedup(
             )
         )
     assigned = assigned.withColumn(
-        "b", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
+        "b", F.pmod(F.xxhash64(F.col("id")), F.lit(_GRID_BLOCKS)).cast("int")
     ).persist()
 
     # block-grid within the cell (embedding_dup_pairs' meeting rule,
     # keyed (cell, p, q)): a cross-block pair meets once with its
     # min-block row on the left; same-block pairs are id-ordered
     l = assigned.withColumn(
-        "q", F.explode(F.sequence(F.col("b"), F.lit(n_blocks - 1)))
+        "q", F.explode(F.sequence(F.col("b"), F.lit(_GRID_BLOCKS - 1)))
     ).select(
         F.col("id").alias("id_l"), F.col("v").alias("v_l"),
         F.col("nrm").alias("nrm_l"), F.col("d2").alias("d2_l"),
@@ -1129,7 +1064,7 @@ def semantic_dedup(
     return (
         assigned.join(dropped, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             "cell",
             F.coalesce(F.col("dom_id"), F.col("id")).alias("canonical_id"),
             F.when(F.col("dom_id").isNull(), F.lit("kept"))
@@ -1138,12 +1073,7 @@ def semantic_dedup(
     )
 
 
-def duplicate_span_fraction(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicate_span_fraction(docs: DataFrame, k: int = 8) -> DataFrame:
     """Cross-document duplicated-span fraction — the practical form of
     exact-substring deduplication (Lee et al. 2021, arXiv:2107.06499,
     "Deduplicating Training Data Makes Language Models Better"): for
@@ -1156,7 +1086,7 @@ def duplicate_span_fraction(
     paper removes the spans; flagging the document is the Dolma-style
     batch variant).
 
-    Returns ``(id_col, n_spans, dup_frac double)`` — one row per
+    Returns ``(doc_id, n_spans, dup_frac double)`` — one row per
     document; ``dup_frac`` counts window occurrences WITH multiplicity
     (a document that repeats a shared span twice has both windows
     flagged). Windows use the corpus-wide shingle convention
@@ -1174,8 +1104,8 @@ def duplicate_span_fraction(
     substring-level dedup at any engine; nothing is driver-side.
     """
     spans = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col), k)).alias("s"),
+        F.col("doc_id").alias("id"),
+        F.explode(shingles(F.col("text"), k)).alias("s"),
     ).select("id", F.md5(F.col("s")).alias("h"))
     # ONE evaluation of the explode+hash stream: aggregate to
     # (id, h, multiplicity) first. The (id, h) exchange under this
@@ -1203,14 +1133,10 @@ def duplicate_span_fraction(
                 6,
             ).alias("dup_frac"),
         )
-        .select(F.col("id").alias(id_col), "n_spans", "dup_frac")
+        .select(F.col("id").alias("doc_id"), "n_spans", "dup_frac")
     )
 
-def paragraph_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """CCNet paragraph-level deduplication (Wenzek et al. 2020,
     arXiv:1911.00359 §3.1): hash every normalized paragraph and keep
     exactly ONE copy corpus-wide — the first occurrence in
@@ -1225,7 +1151,7 @@ def paragraph_dedup(
     fingerprint normalization (lower → collapse whitespace → trim —
     :func:`~memorious_spark.functions.textops.fingerprint`) so
     reflowed copies collide. Empty/whitespace-only paragraphs are
-    dropped. Returns ``(id_col, text_col, n_paras, n_kept)`` with the
+    dropped. Returns ``(doc_id, text, n_paras, n_kept)`` with the
     kept paragraphs re-joined by ``\\n`` in original order; a document
     whose every paragraph was seen earlier (or was blank) falls out of
     the result entirely — the CCNet drop.
@@ -1243,8 +1169,8 @@ def paragraph_dedup(
     paras = (
         ensure_parallelism(docs)
         .select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(F.split(F.col(text_col), "\n")).alias(
+            F.col("doc_id").alias("_id"),
+            F.posexplode(F.split(F.col("text"), "\n")).alias(
                 "_idx", "_para"
             ),
         )
@@ -1276,21 +1202,16 @@ def paragraph_dedup(
                 lambda s: s["_para"],
             ),
             "\n",
-        ).alias(text_col),
+        ).alias("text"),
         F.count(F.when(F.col("_keep"), 1)).alias("n_kept"),
         F.count(F.lit(1)).alias("n_paras"),
     )
     return rebuilt.filter(F.col("n_kept") > 0).select(
-        F.col("_id").alias(id_col), text_col, "n_paras", "n_kept"
+        F.col("_id").alias("doc_id"), "text", "n_paras", "n_kept"
     )
 
 
-def remove_duplicate_spans(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_duplicate_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """Exact-substring span REMOVAL (Lee et al. 2021,
     arXiv:2107.06499 §4: delete repeated substrings, keep one
     occurrence) — the surgical sibling of
@@ -1303,7 +1224,7 @@ def remove_duplicate_spans(
     Windows use the corpus shingle convention (``split(trim(text),
     ' ')``; texts shorter than k yield one truncated window), so the
     DuckDB twin is exact. Returns the full document list —
-    ``(id_col, text_col, n_tokens, n_removed)``; a document that was
+    ``(doc_id, text, n_tokens, n_removed)``; a document that was
     entirely assembled from elsewhere-kept spans comes back with
     ``text = ''`` (the caller drops or flags it), never silently
     vanishes.
@@ -1318,9 +1239,9 @@ def remove_duplicate_spans(
     final regroup all shuffle on the id — co-partitioned by AQE.
     Nothing driver-side.
     """
-    toks_arr = F.split(F.trim(F.col(text_col)), " ")
+    toks_arr = F.split(F.trim(F.col("text")), " ")
     base = ensure_parallelism(docs).select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
+        F.col("doc_id").alias("_id"), F.col("text").alias("_text")
     )
     toks = base.select(
         "_id",
@@ -1367,13 +1288,13 @@ def remove_duplicate_spans(
     )
     return (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(toks_arr).alias("n_tokens"),
         )
-        .join(rebuilt, F.col(id_col) == rebuilt["_id"], "left")
+        .join(rebuilt, F.col("doc_id") == rebuilt["_id"], "left")
         .select(
-            id_col,
-            F.coalesce("_clean", F.lit("")).alias(text_col),
+            "doc_id",
+            F.coalesce("_clean", F.lit("")).alias("text"),
             "n_tokens",
             (F.col("n_tokens") - F.coalesce("_n_kept", F.lit(0))).alias(
                 "n_removed"

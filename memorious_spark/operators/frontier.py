@@ -38,7 +38,6 @@ def politeness_dequeue(
     frontier: DataFrame,
     budget: int,
     robots: DataFrame | None = None,
-    n_salts: int = 32,
     group: str = "host",
 ) -> tuple[DataFrame, DataFrame]:
     """Select ≤ budget rows per host this round; rest carries over.
@@ -63,12 +62,12 @@ def politeness_dequeue(
     Skew-safe two-phase top-k: a single ``Window.partitionBy(host)``
     would funnel a mega-host's entire frontier (10^8 rows on a
     10^10-URL frontier) through ONE task's sort only to keep
-    ``budget`` of them. Phase 1 ranks within ``(host, salt)`` and
-    keeps ≤ budget per salt — any row ranked past the budget inside
-    its salt already has ≥ budget same-host rows ahead of it
-    globally, so dropping it to carryover is exact. Phase 2 runs the
-    precise per-host window over the ≤ salts·budget survivors. Same
-    output as the naive window, no single-task stage.
+    ``budget`` of them. Phase 1 ranks within ``(host, salt)`` (32
+    salts) and keeps ≤ budget per salt — any row ranked past the
+    budget inside its salt already has ≥ budget same-host rows ahead
+    of it globally, so dropping it to carryover is exact. Phase 2 runs
+    the precise per-host window over the ≤ salts·budget survivors.
+    Same output as the naive window, no single-task stage.
     """
     if robots is not None:
         frontier = frontier.join(F.broadcast(robots), "host", "left")
@@ -107,7 +106,7 @@ def politeness_dequeue(
         frontier.withColumn("_budget", host_budget)
         .withColumn("_grp", grp)
         .withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("emit_seq")), F.lit(n_salts))
+            "_salt", F.pmod(F.xxhash64(F.col("emit_seq")), F.lit(32))
         )
     )
     w1 = Window.partitionBy("_grp", "_salt").orderBy(*_order_cols())
@@ -178,14 +177,13 @@ def order_bucket_expr(col: "F.Column", lo, hi, n_buckets: int) -> "F.Column":
     )
 
 
-def range_by_order(
-    df: DataFrame, order_cols: list[str], n_buckets: int | None = None
-) -> DataFrame:
+def range_by_order(df: DataFrame, order_cols: list[str]) -> DataFrame:
     """Deterministic order-bucket assignment — the distributed half of
     dense sequence assignment. One tiny min/max aggregate job over the
     FIRST order key (which doubles as the materializing action for a
     caller-persisted ``df``), then ``_pid`` = equal-width bucket of
-    that key (:func:`order_bucket_expr`) — contiguous ranges in key
+    that key (:func:`order_bucket_expr`, one bucket per default-
+    parallelism slot) — contiguous ranges in key
     order, so :func:`seq_from_sizes`' per-bucket offsets are exact.
 
     vs the former ``repartitionByRange + spark_partition_id()``: no
@@ -194,8 +192,7 @@ def range_by_order(
     verdict's directive — ``_pid`` is a pure function of the data, so
     a recomputed partition (persist is advisory) can never disagree
     with the sizes a caller already collected."""
-    spark = df.sparkSession
-    n = n_buckets or max(spark.sparkContext.defaultParallelism, 1)
+    n = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     first = order_cols[0]
     row = df.agg(F.min(first).alias("lo"), F.max(first).alias("hi")).first()
     lo, hi = row["lo"], row["hi"]
@@ -211,15 +208,14 @@ def seq_from_sizes(
     order_cols: list[str],
     sizes: dict[int, int],
     start: int,
-    out_col: str = "emit_seq",
 ) -> DataFrame:
-    """Dense global sequence from per-partition sizes: rank within
+    """Dense global ``emit_seq`` from per-partition sizes: rank within
     ``_pid`` + broadcast offsets. The order is total (callers dedup to
     unique keys first), so the numbering is deterministic regardless
     of partition boundaries."""
     keys = [F.col(c) for c in order_cols]
     if not sizes:  # empty input
-        return rp.withColumn(out_col, F.lit(None).cast("long")).drop("_pid")
+        return rp.withColumn("emit_seq", F.lit(None).cast("long")).drop("_pid")
     offsets, acc = {}, start
     for pid in sorted(sizes):
         offsets[pid] = acc
@@ -230,12 +226,15 @@ def seq_from_sizes(
     w = Window.partitionBy("_pid").orderBy(*keys)
     return (
         rp.withColumn("_rn", F.row_number().over(w))
-        .withColumn(out_col, (offset_map[F.col("_pid")] + F.col("_rn") - 1).cast("long"))
+        .withColumn(
+            "emit_seq",
+            (offset_map[F.col("_pid")] + F.col("_rn") - 1).cast("long"),
+        )
         .drop("_pid", "_rn")
     )
 
 
-def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Respread a DataFrame that arrives in too few partitions (e.g. a
     single small parquet split) so CPU-bound stages actually fan out.
     No-op when the input is already parallel enough — never adds a
@@ -243,14 +242,13 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(target // 2, 2):
         return df
-    return df.repartition(target, key) if key else df.repartition(target)
+    return df.repartition(target)
 
 
-def salt_partitions(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Re-spread budget-selected rows by url hash so a hot host's rows
-    don't pin one task through fetch/parse (the explicit hot-host
-    salting of the north rule). AQE skew-join is the backstop; this is
-    the guarantee."""
-    spark = df.sparkSession
-    n = n_partitions or spark.sparkContext.defaultParallelism
+def salt_partitions(df: DataFrame) -> DataFrame:
+    """Re-spread budget-selected rows by url hash over the default
+    parallelism so a hot host's rows don't pin one task through
+    fetch/parse (the explicit hot-host salting of the north rule). AQE
+    skew-join is the backstop; this is the guarantee."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, F.xxhash64("url"))

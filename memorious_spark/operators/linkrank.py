@@ -13,13 +13,13 @@ Engine-reproducibility contract (what makes the DuckDB oracle exact):
   10^6), and every step is integer arithmetic: per-edge contribution
   is ``units div outdeg`` (truncating division — all values are
   non-negative, so Spark's ``div`` and DuckDB's ``//`` agree), the
-  damping ``d = dnum/dden`` is applied as ``(dnum·x) div dden``.
+  damping ``d = 17/20`` is applied as ``(17·x) div 20``.
   There is NO floating point anywhere in the iteration, so the result
   is independent of aggregation order and bit-identical across
   engines. Truncation leaks ≤ 1 unit per edge per round out of the
   mass total — ranking-irrelevant at unit = 10^6 and exactly mirrored
   by the oracle.
-- the fixed-point bound: intermediate sums stay ≤ dnum·N·unit, so
+- the fixed-point bound: intermediate sums stay ≤ 17·N·unit, so
   int64 is safe while ``N·unit < 5·10^17`` — at the 10^10-node target
   frontier use ``unit = 10^6`` (5·10^16) as here.
 
@@ -46,24 +46,18 @@ UNIT = 10**6
 
 
 def pagerank(
-    edges: DataFrame,
-    n_iter: int = 5,
-    dnum: int = 17,
-    dden: int = 20,
-    unit: int = UNIT,
-    src: str = "src",
-    dst: str = "dst",
+    edges: DataFrame, n_iter: int = 5, unit: int = UNIT
 ) -> DataFrame:
     """Fixed-iteration integer PageRank → ``(node, rank_units, rank)``.
 
     ``edges`` is a directed (src, dst) edge list (deduplicated here —
     multigraph edges count once, matching a link-dedup'd parse). The
-    node universe is every id appearing as src or dst. Per round, for
-    damping ``d = dnum/dden`` (default 17/20 = 0.85)::
+    node universe is every id appearing as src or dst. Per round, at
+    damping ``d = 17/20 = 0.85``::
 
-        units'(v) = ((dden-dnum)·unit) div dden
-                  + (dnum · (Σ_{u→v} units(u) div outdeg(u)
-                             + dangling_mass div N)) div dden
+        units'(v) = (3·unit) div 20
+                  + (17 · (Σ_{u→v} units(u) div outdeg(u)
+                           + dangling_mass div N)) div 20
 
     Dangling nodes (no out-links) spread their mass uniformly, the
     standard correction. Returns one row per node; ``rank`` is the
@@ -73,7 +67,7 @@ def pagerank(
     # node ids stay whatever type the caller uses (doc ids OR raw
     # urls — the crawl face keys the graph by url)
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select("src", "dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -116,7 +110,7 @@ def pagerank(
             "≥ 5e17; lower `unit`"
         )
 
-    base = ((dden - dnum) * unit) // dden
+    base = (3 * unit) // 20
     ranks = nodes.select(
         "node", "dangling", F.lit(unit).cast("long").alias("units")
     ).localCheckpoint(eager=True)
@@ -140,8 +134,7 @@ def pagerank(
             (
                 F.lit(base)
                 + F.expr(
-                    f"({dnum} * (coalesce(insum, 0) + {dang_share})) "
-                    f"div {dden}"
+                    f"(17 * (coalesce(insum, 0) + {dang_share})) div 20"
                 )
             ).cast("long").alias("units"),
         )

@@ -42,10 +42,10 @@ MEDIA_SCHEMA = (
 _FEATURE_DIM = 8
 
 
-def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Content-hash + size metadata, JVM-side (no UDF)."""
-    return df.withColumn("content_hash", F.sha1(F.col(payload_col))).withColumn(
-        "n_bytes", F.length(F.col(payload_col)).cast("long")
+def attach_media_meta(df: DataFrame) -> DataFrame:
+    """Content-hash + size metadata of ``payload``, JVM-side (no UDF)."""
+    return df.withColumn("content_hash", F.sha1(F.col("payload"))).withColumn(
+        "n_bytes", F.length(F.col("payload")).cast("long")
     )
 
 
@@ -238,26 +238,21 @@ def audio_features(payload: bytes | None) -> list[float]:
     ]
 
 
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    out_col: str = "features",
-    feature_fn=image_features,
-) -> DataFrame:
-    """mapInPandas feature extraction: Arrow-batched, schema-stable,
-    partition-parallel — the real scale plumbing around the codec
-    (``feature_fn``: :func:`image_features` or
-    :func:`audio_features`)."""
+def extract_features(df: DataFrame, feature_fn=image_features) -> DataFrame:
+    """mapInPandas feature extraction of ``payload`` into
+    ``features``: Arrow-batched, schema-stable, partition-parallel —
+    the real scale plumbing around the codec (``feature_fn``:
+    :func:`image_features` or :func:`audio_features`)."""
     # double, not float: keeps the feature values bit-comparable to a
     # float64 oracle (f32 truncation shifts the 6th decimal)
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} array<double>"
+    ) + ", features array<double>"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = pdf[payload_col].map(feature_fn)
+            pdf["features"] = pdf["payload"].map(feature_fn)
             yield pdf
 
     return df.mapInPandas(gen, out_schema)

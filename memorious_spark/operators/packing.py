@@ -53,17 +53,14 @@ __all__ = ["pack_token_shards"]
 def pack_token_shards(
     docs: DataFrame,
     budget: int,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign each document to its token-budget shard.
 
-    Input must carry a UNIQUE orderable numeric ``id_col`` (the layout
-    order) and a ``tokens_col`` count. Returns ``(id_col, tokens_col,
-    offset, shard)`` where ``offset`` is the exclusive prefix sum of
-    tokens in ``id_col`` order and ``shard = floor(offset /
-    budget)``.
+    Input must carry a UNIQUE orderable numeric ``doc_id`` (the layout
+    order) and a ``tokens`` count. Returns ``(doc_id, tokens, offset,
+    shard)`` where ``offset`` is the exclusive prefix sum of tokens in
+    ``doc_id`` order and ``shard = floor(offset / budget)``.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
@@ -73,13 +70,15 @@ def pack_token_shards(
     # from ``docs``. Correctness does NOT depend on it — _pid is a pure
     # function of the id — so eviction or recomputation is only ever a
     # performance event.
-    base = docs.select(id_col, tokens_col).persist()
-    row = base.agg(F.min(id_col).alias("lo"), F.max(id_col).alias("hi")).first()
+    base = docs.select("doc_id", "tokens").persist()
+    row = base.agg(
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+    ).first()
     lo, hi = row["lo"], row["hi"]
     pid = (
         F.lit(0).cast("int")
         if lo is None
-        else order_bucket_expr(F.col(id_col), lo, hi, p)
+        else order_bucket_expr(F.col("doc_id"), lo, hi, p)
     )
     with_pid = base.withColumn("_pid", pid)
     # Phase 2: P-row rollup; the collect ships P (pid, total) longs to
@@ -87,7 +86,7 @@ def pack_token_shards(
     # order (equal-width buckets are contiguous ranges), so the
     # exclusive offsets accumulate in _pid order.
     totals = (
-        with_pid.groupBy("_pid").agg(F.sum(tokens_col).alias("_tot")).collect()
+        with_pid.groupBy("_pid").agg(F.sum("tokens").alias("_tot")).collect()
     )
     base.unpersist()
     running = 0
@@ -98,17 +97,17 @@ def pack_token_shards(
     off_df = docs.sparkSession.createDataFrame(
         offsets, "_pid int, _part_off long"
     )
-    local = Window.partitionBy("_pid").orderBy(id_col).rowsBetween(
+    local = Window.partitionBy("_pid").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, -1
     )
     return (
         with_pid.join(F.broadcast(off_df), "_pid")
         .select(
-            id_col,
-            tokens_col,
+            "doc_id",
+            "tokens",
             (
                 F.col("_part_off")
-                + F.coalesce(F.sum(tokens_col).over(local), F.lit(0))
+                + F.coalesce(F.sum("tokens").over(local), F.lit(0))
             ).alias("offset"),
         )
         .withColumn(

@@ -44,22 +44,18 @@ from pyspark.sql import Column, DataFrame, functions as F
 __all__ = ["change_stats", "recrawl_priority"]
 
 
-def change_stats(
-    history: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "fetch_ts",
-    hash_col: str = "content_hash",
-) -> DataFrame:
-    """Fold fetch observations → per-URL ``(n_fetches, n_intervals,
-    n_changes, span_seconds, first_ts, last_ts)``.
+def change_stats(history: DataFrame) -> DataFrame:
+    """Fold fetch observations ``(url, fetch_ts, content_hash)`` →
+    per-URL ``(n_fetches, n_intervals, n_changes, span_seconds,
+    first_ts, last_ts)``.
 
     ``n_changes`` counts consecutive-fetch pairs whose content hash
     differs (the X of the estimator); ``span_seconds`` is last−first
     (so ī = span/n_intervals). One groupBy; the per-URL event array is
     sorted in the aggregate fold, not a shuffle-wide window."""
     ev = F.array_sort(
-        F.collect_list(F.struct(F.col(ts_col).alias("ts"),
-                                F.col(hash_col).alias("h")))
+        F.collect_list(F.struct(F.col("fetch_ts").alias("ts"),
+                                F.col("content_hash").alias("h")))
     )
 
     def stats(e: Column) -> Column:
@@ -96,20 +92,14 @@ def change_stats(
     from memorious_spark.functions.hof import bind_once
 
     return (
-        history.groupBy(F.col(url_col).alias("url"))
+        history.groupBy("url")
         .agg(ev.alias("_ev"))
         .select("url", bind_once(F.col("_ev"), stats).alias("_s"))
         .select("url", "_s.*")
     )
 
 
-def recrawl_priority(
-    history: DataFrame,
-    now_ts: str,
-    url_col: str = "url",
-    ts_col: str = "fetch_ts",
-    hash_col: str = "content_hash",
-) -> DataFrame:
+def recrawl_priority(history: DataFrame, now_ts: str) -> DataFrame:
     """Per-URL ``(url, n_fetches, n_changes, lambda_hat, priority)``.
 
     ``lambda_hat`` is the Cho & Garcia-Molina bias-reduced Poisson
@@ -120,7 +110,7 @@ def recrawl_priority(
     deterministic-now doctrine). URLs with fewer than 2 fetches get
     ``lambda_hat = NULL`` and priority 0 — no evidence yet; the
     discovery path (link authority) owns their ordering."""
-    s = change_stats(history, url_col, ts_col, hash_col)
+    s = change_stats(history)
     now = F.lit(now_ts).cast("timestamp").cast("long")
     ibar = F.col("span_seconds") / F.col("n_intervals")
     lam = F.round(

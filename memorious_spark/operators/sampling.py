@@ -60,7 +60,6 @@ def quota_sample(
     docs: DataFrame,
     group_col: str,
     quota: int,
-    id_col: str = "doc_id",
     safety: float = 2.0,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -69,7 +68,7 @@ def quota_sample(
     ``row_number() OVER (PARTITION BY group ORDER BY md5(id), id) <=
     quota`` would keep. Returns the input columns unchanged.
 
-    ``id_col`` must be unique. ``stats`` receives ``n_groups``,
+    ``doc_id`` must be unique. ``stats`` receives ``n_groups``,
     ``groups_pruned`` (went through the candidate window),
     ``groups_small`` (kept whole), ``groups_fallback`` (sketch missed;
     exact full-group window used).
@@ -77,7 +76,7 @@ def quota_sample(
     if quota <= 0:
         raise ValueError(f"quota must be positive, got {quota}")
     cols = docs.columns
-    key = _num_key(id_col)
+    key = _num_key("doc_id")
     max_key = float(16**15)
     # one map-side-combinable pass: group sizes; thresholds follow
     # from md5 uniformity (no sketch, no extra scan)
@@ -113,7 +112,7 @@ def quota_sample(
     )
     n_short = short.count()
 
-    w = Window.partitionBy(group_col).orderBy(sample_key(id_col), id_col)
+    w = Window.partitionBy(group_col).orderBy(sample_key("doc_id"), "doc_id")
     kept_big = (
         cand.join(F.broadcast(short), group_col, "left_anti")
         .withColumn("_rn", F.row_number().over(w))
@@ -159,8 +158,6 @@ def split_bounds(weights: dict[str, float]) -> list[str]:
 def hash_split(
     docs: DataFrame,
     weights: dict[str, float],
-    id_col: str = "doc_id",
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment: each row's split is a
     pure function of its id (``md5(cast(id AS string))`` against fixed
@@ -181,11 +178,11 @@ def hash_split(
     # comparison stays a plain string compare in any engine
     names = list(weights)
     bounds = split_bounds(weights)
-    key = F.substring(sample_key(id_col), 1, 15)
+    key = F.substring(sample_key("doc_id"), 1, 15)
     expr = F.lit(names[-1])
     for name, b in zip(reversed(names[:-1]), reversed(bounds)):
         expr = F.when(key < F.lit(b), F.lit(name)).otherwise(expr)
-    return docs.withColumn(split_col, expr)
+    return docs.withColumn("split", expr)
 
 
 def temperature_mix(
@@ -193,7 +190,6 @@ def temperature_mix(
     group_col: str,
     tau: float,
     total: int | None = None,
-    id_col: str = "doc_id",
     safety: float = 2.0,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -229,7 +225,7 @@ def temperature_mix(
     if tau < 0:
         raise ValueError(f"tau must be >= 0, got {tau}")
     cols = docs.columns
-    key = _num_key(id_col)
+    key = _num_key("doc_id")
     max_key = float(16**15)
     n_total = docs.count()
     if n_total == 0:
@@ -290,7 +286,7 @@ def temperature_mix(
     )
     n_short = short.count()
 
-    w = Window.partitionBy(group_col).orderBy(sample_key(id_col), id_col)
+    w = Window.partitionBy(group_col).orderBy(sample_key("doc_id"), "doc_id")
 
     def _with_copies(df):
         return (

@@ -70,11 +70,10 @@ def unexpired(df: DataFrame, now_ts: str | None) -> DataFrame:
 def dedup_new(
     candidates: DataFrame,
     seen: DataFrame | None,
-    key: str = "url_hash",
     seen_count: int | None = None,
     cuckoo=None,
 ) -> DataFrame:
-    """Rows of ``candidates`` whose ``key`` is not in ``seen``.
+    """Rows of ``candidates`` whose ``url_hash`` is not in ``seen``.
 
     Exactness is guaranteed by the ``left_anti`` join. ``seen_count``
     is accepted for callers that track it and no longer affects the
@@ -87,13 +86,15 @@ def dedup_new(
     if seen is None:
         return candidates
     if cuckoo is not None:
-        return dedup_new_sharded_cuckoo(candidates, seen, cuckoo, key)
-    seen_keys = seen.select(key).distinct()
+        return dedup_new_sharded_cuckoo(candidates, seen, cuckoo)
+    seen_keys = seen.select("url_hash").distinct()
     # SHUFFLE_HASH: candidates arrive already hash-partitioned by
     # url_hash (the within-round dedup aggregate), so only the seen
     # side shuffles — parallel — where a broadcast would serialize the
     # whole seen key set through the driver every round.
-    return candidates.join(seen_keys.hint("shuffle_hash"), key, "left_anti")
+    return candidates.join(
+        seen_keys.hint("shuffle_hash"), "url_hash", "left_anti"
+    )
 
 
 def seen_entries(
@@ -101,7 +102,6 @@ def seen_entries(
     crawler: str,
     run_id: str,
     kind: str,
-    key: str = "url_hash",
     value: str | None = None,
     expire_days: int | None = None,
     now_ts: str = "2024-01-01 00:00:00",
@@ -112,7 +112,7 @@ def seen_entries(
     stores JSON values, memorious/logic/context.py:114-117; we keep
     the normalized URL for link tags — optional at scale)."""
     return df.select(
-        F.col(key).alias("key_hash"),
+        F.col("url_hash").alias("key_hash"),
         F.lit(crawler).alias("crawler"),
         F.lit(run_id).alias("run_id"),
         F.lit(kind).alias("kind"),

@@ -76,13 +76,9 @@ def _features(text: Column) -> Column:
     return bind_once(F.split(F.lower(F.trim(text)), " "), feats)
 
 
-def _bucket_counts(
-    df: DataFrame, text_col: str, n_buckets: int
-) -> DataFrame:
+def _bucket_counts(df: DataFrame, n_buckets: int) -> DataFrame:
     return (
-        df.select(
-            F.explode(_features(F.col(text_col))).alias("_f")
-        )
+        df.select(F.explode(_features(F.col("text"))).alias("_f"))
         .select(feature_bucket_col(F.col("_f"), n_buckets).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -93,17 +89,15 @@ def importance_weights(
     docs: DataFrame,
     target: DataFrame,
     n_buckets: int = 8192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document DSIR importance weight: ``logw = Σ_features
     ln(q(bucket)/p(bucket))`` where ``p`` is the corpus bucket
     distribution and ``q`` the target's, both add-one smoothed over
-    ``n_buckets``. Returns ``(id_col, logw double)`` — one row per
+    ``n_buckets``. Returns ``(doc_id, logw double)`` — one row per
     input document (feature-free documents score 0). Higher = more
     target-like.
 
-    ``target`` needs only ``text_col``. The ratio for bucket ``b``
+    ``target`` needs only ``text``. The ratio for bucket ``b``
     with corpus count ``cc``, target count ``ct``, corpus feature
     total ``Tc`` and target total ``Tt`` is computed in BOTH engines
     as ``ln(((ct+1)·(Tc+B)) / ((cc+1)·(Tt+B)))`` — all-integer
@@ -116,10 +110,10 @@ def importance_weights(
     # serialized — cheaper to keep than to recompute even at corpus
     # scale; spills to disk past memory)
     per_feat = docs.select(
-        F.col(id_col),
-        F.explode_outer(_features(F.col(text_col))).alias("_f"),
+        F.col("doc_id"),
+        F.explode_outer(_features(F.col("text"))).alias("_f"),
     ).select(
-        id_col, feature_bucket_col(F.col("_f"), n_buckets).alias("bucket")
+        "doc_id", feature_bucket_col(F.col("_f"), n_buckets).alias("bucket")
     ).persist()
     # (the explode is _outer_ so a null-text doc still gets a row —
     # its NULL bucket must not leak a pseudo-count into p)
@@ -128,7 +122,7 @@ def importance_weights(
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    q = _bucket_counts(target, text_col, n_buckets)
+    q = _bucket_counts(target, n_buckets)
     totals = (
         p.agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("Tc"))
         .crossJoin(
@@ -158,7 +152,7 @@ def importance_weights(
     )
     return (
         per_feat.join(F.broadcast(ratios), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.coalesce(
                 F.sum("logr"), F.lit(0).cast("decimal(18,6)")
@@ -191,8 +185,6 @@ def _bigram_structs(text: Column) -> Column:
 def lm_bigram_scores(
     docs: DataFrame,
     ref: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """CCNet-style language-model fluency scoring (Wenzek et al. 2020,
     arXiv:1911.00359): train an add-one-smoothed bigram LM on a clean
@@ -209,7 +201,7 @@ def lm_bigram_scores(
 
     with ``c2`` the reference bigram count, ``c1`` the count of
     ``w1`` in bigram-prefix position, and ``V`` the reference unigram
-    vocabulary size. Returns ``(id_col, n_bigrams, avg_logp)`` — one
+    vocabulary size. Returns ``(doc_id, n_bigrams, avg_logp)`` — one
     row per input document; higher ``avg_logp`` (= lower perplexity)
     is more fluent. Documents with < 2 tokens score ``(0, 0.0)``.
 
@@ -227,16 +219,16 @@ def lm_bigram_scores(
     Python anywhere.
     """
     per = docs.select(
-        F.col(id_col),
-        F.explode_outer(_bigram_structs(F.col(text_col))).alias("_bg"),
+        F.col("doc_id"),
+        F.explode_outer(_bigram_structs(F.col("text"))).alias("_bg"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("_bg.w1").alias("w1"),
         F.col("_bg.w2").alias("w2"),
     )
     c2 = (
         ref.select(
-            F.explode(_bigram_structs(F.col(text_col))).alias("_bg")
+            F.explode(_bigram_structs(F.col("text"))).alias("_bg")
         )
         .groupBy(
             F.col("_bg.w1").alias("w1"), F.col("_bg.w2").alias("w2")
@@ -247,7 +239,7 @@ def lm_bigram_scores(
     vocab = ref.select(
         F.explode(
             bind_once(
-                F.split(F.lower(F.trim(F.col(text_col))), " "),
+                F.split(F.lower(F.trim(F.col("text"))), " "),
                 lambda t: t,
             )
         ).alias("_t")
@@ -257,7 +249,7 @@ def lm_bigram_scores(
         .join(c1, "w1", "left")
         .crossJoin(F.broadcast(vocab))
         .select(
-            id_col,
+            "doc_id",
             "w1",
             F.when(
                 F.col("w1").isNotNull(),
@@ -276,7 +268,7 @@ def lm_bigram_scores(
             ).alias("logp"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("w1").alias("n_bigrams"),
         F.when(
             F.count("w1") > 0,

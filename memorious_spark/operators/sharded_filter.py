@@ -55,7 +55,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from memorious_spark.operators.cuckoo import (
-    _BUCKET, _DEFAULT_LOAD, _contains, _delete_batch, _insert_batch,
+    _BUCKET, _contains, _delete_batch, _insert_batch,
     _next_pow2, _size_for,
 )
 
@@ -243,10 +243,10 @@ def build_sharded_bloom(
     key: str,
     expected: int,
     shards: int | None = None,
-    fpp: float = 0.01,
 ) -> ShardedBloom:
     """Distributed build: size each shard's bitmap for
-    ``expected / shards`` keys (xxhash64 routing is uniform), then run
+    ``expected / shards`` keys at a 1% false-positive rate (xxhash64
+    routing is uniform), then run
     one :func:`update_sharded` pass over ``df``. Nothing but task
     statuses reaches the driver."""
     spark = df.sparkSession
@@ -254,7 +254,7 @@ def build_sharded_bloom(
         shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if shards < 1:
         raise ValueError(f"shards must be >= 1, got {shards}")
-    m, k = _bloom_params(max(1, expected // shards), fpp)
+    m, k = _bloom_params(max(1, expected // shards), 0.01)
     empty = ShardedBloom(
         df=spark.createDataFrame([], _BLOOM_SCHEMA), shards=shards, m=m, k=k
     )
@@ -285,10 +285,9 @@ def dedup_new_sharded(
     candidates: DataFrame,
     seen: DataFrame | None,
     bloom: ShardedBloom,
-    key: str = "url_hash",
 ) -> DataFrame:
-    """Rows of ``candidates`` whose ``key`` is not in ``seen`` — the
-    sharded-bloom-probe twin of :func:`seen.dedup_new`."""
+    """Rows of ``candidates`` whose ``url_hash`` is not in ``seen`` —
+    the sharded-bloom-probe twin of :func:`seen.dedup_new`."""
     m, k = bloom.m, bloom.k
 
     def contains(row, hv: np.ndarray) -> np.ndarray:
@@ -299,8 +298,8 @@ def dedup_new_sharded(
         return hit
 
     return _probe_anti_join(
-        candidates, seen, bloom.df, _bloom_shard(key, bloom.shards), key,
-        contains,
+        candidates, seen, bloom.df, _bloom_shard("url_hash", bloom.shards),
+        "url_hash", contains,
     )
 
 
@@ -346,7 +345,6 @@ def build_sharded_cuckoo(
     key: str,
     expected: int,
     shards: int | None = None,
-    load: float = _DEFAULT_LOAD,
 ) -> ShardedCuckoo:
     """Distributed build: route keys to shards (one shuffle), build
     every shard table vectorized IN ITS OWN TASK, keep the tables on
@@ -359,7 +357,7 @@ def build_sharded_cuckoo(
     shards = _next_pow2(shards)
     empty = ShardedCuckoo(
         df=spark.createDataFrame([], _CUCKOO_SCHEMA),
-        shards=shards, nb=_size_for(expected, shards, load),
+        shards=shards, nb=_size_for(expected, shards),
     )
     return update_sharded_cuckoo(empty, df, key=key)
 
@@ -379,12 +377,12 @@ def update_sharded_cuckoo(
 
 
 def delete_sharded_cuckoo(
-    filt: ShardedCuckoo, expired_df: DataFrame, key: str = "url_hash"
+    filt: ShardedCuckoo, expired_df: DataFrame
 ) -> tuple[ShardedCuckoo, int]:
     """Remove expired hashes' fingerprints shard-locally — the
     operation the bloom can't do. Returns (new filter, number of
     fingerprints removed)."""
-    out = _cuckoo_update(filt, expired_df, key, _delete_batch)
+    out = _cuckoo_update(filt, expired_df, "url_hash", _delete_batch)
     removed = out.df.agg(F.sum("removed")).first()[0] or 0
     return out, int(removed)
 
@@ -393,10 +391,9 @@ def dedup_new_sharded_cuckoo(
     candidates: DataFrame,
     seen: DataFrame | None,
     filt: ShardedCuckoo,
-    key: str = "url_hash",
 ) -> DataFrame:
-    """Rows of ``candidates`` whose ``key`` is not in ``seen`` — the
-    sharded-cuckoo-probe twin of :func:`seen.dedup_new`."""
+    """Rows of ``candidates`` whose ``url_hash`` is not in ``seen`` —
+    the sharded-cuckoo-probe twin of :func:`seen.dedup_new`."""
     nb = filt.nb
 
     def contains(row, hv: np.ndarray) -> np.ndarray:
@@ -404,6 +401,6 @@ def dedup_new_sharded_cuckoo(
         return _contains(t, hv)
 
     return _probe_anti_join(
-        candidates, seen, filt.df, _cuckoo_shard(key, filt.shards), key,
-        contains,
+        candidates, seen, filt.df, _cuckoo_shard("url_hash", filt.shards),
+        "url_hash", contains,
     )

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 __all__ = [
     "cosine_sim", "knn_brute_force", "lsh_bucket_col", "knn_lsh",
     "query_probe_buckets", "ivf_seed_centroids", "ivf_assign_col",
-    "ivf_assign_udf", "ivf_train", "knn_ivf",
+    "ivf_assign_udf", "knn_ivf",
     "pq_seed_codebooks", "pq_encode_col", "pq_encode_udf", "pq_encode",
     "knn_pq", "knn_ivfpq",
 ]
@@ -50,8 +50,6 @@ def knn_brute_force(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine to a literal query vector. One scan, one
     small top-k sort (orderBy+limit compiles to TakeOrdered — no full
@@ -59,10 +57,10 @@ def knn_brute_force(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         emb.select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_sim(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -116,8 +114,6 @@ def knn_lsh(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 6,
     multiprobe: bool = True,
 ) -> DataFrame:
@@ -130,16 +126,16 @@ def knn_lsh(
     dim = len(query_vec)
     probes = query_probe_buckets(query_vec, n_planes, multiprobe)
     bucketed = emb.withColumn(
-        "_bucket", lsh_bucket_col(F.col(vec_col), dim, n_planes)
+        "_bucket", lsh_bucket_col(F.col("embedding"), dim, n_planes)
     )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         bucketed.filter(F.col("_bucket").isin(probes))
         .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_sim(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -153,9 +149,7 @@ def knn_lsh(
 # (~nprobe/K of the table) — the IVF of FAISS/Milvus re-expressed as
 # plain DataFrame ops. Seeding is deterministic (vec_id-strided rows,
 # no RNG) so the engine and the DuckDB oracle derive identical
-# centroids; ``ivf_train`` adds Lloyd refinement (distributed mean per
-# bucket, one posexplode + groupBy per iteration — map-side partials,
-# no collect of vectors).
+# centroids.
 
 
 def _dist2(a: Column, b: Column) -> Column:
@@ -174,8 +168,6 @@ def ivf_seed_centroids(
     emb: DataFrame,
     n_centroids: int = 8,
     spacing: int = 37,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic seed centroids: the vectors at
     ``vec_id = i · spacing`` for ``i < n_centroids`` (strided over the
@@ -183,11 +175,13 @@ def ivf_seed_centroids(
     [(cid, vector)] sorted by cid; K is tiny, so driver-side rows."""
     ids = [i * spacing for i in range(n_centroids)]
     rows = (
-        emb.filter(F.col(id_col).isin(ids))
-        .select((F.col(id_col) / spacing).cast("int").alias("cid"), vec_col)
+        emb.filter(F.col("vec_id").isin(ids))
+        .select(
+            (F.col("vec_id") / spacing).cast("int").alias("cid"), "embedding"
+        )
         .collect()
     )
-    cents = sorted((r["cid"], [float(x) for x in r[vec_col]]) for r in rows)
+    cents = sorted((r["cid"], [float(x) for x in r["embedding"]]) for r in rows)
     if len(cents) != n_centroids:
         # Fail LOUD: downstream assignment paths index centroids by
         # position == cid; a missing strided seed row would compress
@@ -255,53 +249,14 @@ def ivf_assign_udf(centroids: list[tuple[int, list[float]]]):
     return _assign
 
 
-def _assign_bucket_col(
-    vec_col: str, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """Pick the assignment strategy by K: literal Column while it still
-    codegens (fastest at tiny K — benched), Arrow-vectorized numpy
-    argmin beyond (shuffle-free, unbounded K)."""
+def _assign_bucket_col(centroids: list[tuple[int, list[float]]]) -> Column:
+    """Nearest centroid of ``embedding``. Picks the assignment strategy
+    by K: literal Column while it still codegens (fastest at tiny K —
+    benched), Arrow-vectorized numpy argmin beyond (shuffle-free,
+    unbounded K)."""
     if len(centroids) <= _IVF_LITERAL_MAX_K:
-        return ivf_assign_col(F.col(vec_col), centroids)
-    return ivf_assign_udf(centroids)(F.col(vec_col))
-
-
-def ivf_train(
-    emb: DataFrame,
-    n_centroids: int = 8,
-    n_iter: int = 1,
-    spacing: int = 37,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Lloyd refinement of the seed centroids: each iteration assigns
-    every vector to its nearest centroid and recomputes the centroid
-    as the bucket mean — one ``posexplode`` + groupBy((bucket, dim))
-    average per iteration, fully distributed with map-side partial
-    aggregation; only the K·dim means cross to the driver. Empty
-    buckets keep their previous centroid."""
-    cents = ivf_seed_centroids(emb, n_centroids, spacing, id_col, vec_col)
-    for _ in range(n_iter):
-        assigned = emb.withColumn("_b", _assign_bucket_col(vec_col, cents))
-        means = (
-            assigned.select("_b", F.posexplode(vec_col).alias("d", "x"))
-            .groupBy("_b", "d")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .collect()
-        )
-        by_bucket: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_bucket.setdefault(int(r["_b"]), {})[int(r["d"])] = float(r["m"])
-        cents = [
-            (
-                cid,
-                [by_bucket[cid][d] for d in sorted(by_bucket[cid])]
-                if cid in by_bucket
-                else old,
-            )
-            for cid, old in cents
-        ]
-    return cents
+        return ivf_assign_col(F.col("embedding"), centroids)
+    return ivf_assign_udf(centroids)(F.col("embedding"))
 
 
 def knn_ivf(
@@ -311,20 +266,12 @@ def knn_ivf(
     n_centroids: int = 8,
     nprobe: int = 2,
     spacing: int = 37,
-    n_iter: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF top-k: assign vectors to their nearest centroid, probe the
-    ``nprobe`` centroids nearest the query, exact cosine re-rank
-    inside those posting lists. ``n_iter=0`` keeps the deterministic
-    seed centroids (the oracle-paired configuration); ``n_iter>0``
-    runs Lloyd refinement first."""
-    cents = (
-        ivf_train(emb, n_centroids, n_iter, spacing, id_col, vec_col)
-        if n_iter
-        else ivf_seed_centroids(emb, n_centroids, spacing, id_col, vec_col)
-    )
+    """IVF top-k: assign vectors to their nearest deterministic seed
+    centroid (the oracle-paired configuration), probe the ``nprobe``
+    centroids nearest the query, exact cosine re-rank inside those
+    posting lists."""
+    cents = ivf_seed_centroids(emb, n_centroids, spacing)
     qdist = sorted(
         (
             sum((float(q) - float(c)) ** 2 for q, c in zip(query_vec, cv)),
@@ -333,15 +280,15 @@ def knn_ivf(
         for cid, cv in cents
     )
     probes = [cid for _d, cid in qdist[:nprobe]]
-    assigned = emb.withColumn("_b", _assign_bucket_col(vec_col, cents))
+    assigned = emb.withColumn("_b", _assign_bucket_col(cents))
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         assigned.filter(F.col("_b").isin(probes))
         .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_sim(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -364,18 +311,15 @@ def pq_seed_codebooks(
     m: int = 4,
     n_codes: int = 16,
     spacing: int = 31,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[tuple[int, list[float]]]]:
     """Deterministic PQ codebooks: the vector dimension splits into
     ``m`` contiguous subspaces, and subspace ``j``'s code ``i`` is the
     j-th slice of the vector at ``vec_id = i · spacing`` (the same
     strided-seed convention as :func:`ivf_seed_centroids`, so the
-    DuckDB oracle rebuilds the codebooks closed-form; production would
-    Lloyd-refine per subspace through the ``ivf_train`` seam).
+    DuckDB oracle rebuilds the codebooks closed-form).
     Returns ``codebooks[j] = [(code, subvector)]`` sorted by code;
     fails LOUD on missing seed rows — positions index codes."""
-    seeds = ivf_seed_centroids(emb, n_codes, spacing, id_col, vec_col)
+    seeds = ivf_seed_centroids(emb, n_codes, spacing)
     dim = len(seeds[0][1])
     if dim % m:
         raise ValueError(f"pq: dim {dim} not divisible by m={m}")
@@ -436,23 +380,18 @@ def pq_encode_udf(codebooks):
     return _enc
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``(id_col, pq_code array<int>)`` — auto-routes literal Column
+def pq_encode(emb: DataFrame, codebooks) -> DataFrame:
+    """``(vec_id, pq_code array<int>)`` — auto-routes literal Column
     vs numpy by ``m · n_codes`` (``_PQ_LITERAL_MAX``). At 100 TB the
     encoded table is the ARTIFACT: m bytes-ish per vector instead of
     4·dim, scanned for every query while the raw vectors stay cold."""
     n = len(codebooks) * len(codebooks[0])
     enc = (
-        pq_encode_col(F.col(vec_col), codebooks)
+        pq_encode_col(F.col("embedding"), codebooks)
         if n <= _PQ_LITERAL_MAX
-        else pq_encode_udf(codebooks)(F.col(vec_col))
+        else pq_encode_udf(codebooks)(F.col("embedding"))
     )
-    return emb.select(F.col(id_col), enc.alias("pq_code"))
+    return emb.select(F.col("vec_id"), enc.alias("pq_code"))
 
 
 def knn_pq(
@@ -463,8 +402,6 @@ def knn_pq(
     n_codes: int = 16,
     spacing: int = 31,
     refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ-ADC top-k: encode the corpus (m small codes per vector),
     score every vector by the asymmetric-distance LUT (query-to-code
@@ -473,7 +410,7 @@ def knn_pq(
     then exact-cosine re-rank only those. The approximate distance is
     rounded to 6 dp before ranking so the candidate cut is
     engine-reproducible bit-for-bit (ties → vec_id)."""
-    codebooks = pq_seed_codebooks(emb, m, n_codes, spacing, id_col, vec_col)
+    codebooks = pq_seed_codebooks(emb, m, n_codes, spacing)
     sub = len(codebooks[0][0][1])
     lut = [
         [
@@ -485,7 +422,7 @@ def knn_pq(
         ]
         for j, book in enumerate(codebooks)
     ]
-    encoded = pq_encode(emb, codebooks, id_col, vec_col)
+    encoded = pq_encode(emb, codebooks)
     approx = F.round(
         sum(
             F.element_at(
@@ -497,18 +434,18 @@ def knn_pq(
         6,
     )
     cand = (
-        encoded.select(F.col(id_col), approx.alias("_ad"))
-        .orderBy("_ad", id_col)
+        encoded.select(F.col("vec_id"), approx.alias("_ad"))
+        .orderBy("_ad", "vec_id")
         .limit(k * refine)
     )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
-        emb.join(cand.select(id_col), id_col)
+        emb.join(cand.select("vec_id"), "vec_id")
         .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_sim(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -524,8 +461,6 @@ def knn_ivfpq(
     n_codes: int = 16,
     pq_spacing: int = 31,
     refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF + PQ composed (the FAISS IVFPQ shape, non-residual): the
     coarse quantizer prunes to the ``nprobe`` cells nearest the query,
@@ -547,20 +482,22 @@ def knn_ivfpq(
     ivf_ids = [i * spacing for i in range(n_centroids)]
     pq_ids = [i * pq_spacing for i in range(n_codes)]
     rows = (
-        emb.filter(F.col(id_col).isin(sorted(set(ivf_ids + pq_ids))))
-        .select(id_col, vec_col)
+        emb.filter(F.col("vec_id").isin(sorted(set(ivf_ids + pq_ids))))
+        .select("vec_id", "embedding")
         .collect()
     )
     # a dict over duplicate ids would keep whichever row the collect
     # returned last — nondeterministic codebooks
-    counts = Counter(int(r[id_col]) for r in rows)
+    counts = Counter(int(r["vec_id"]) for r in rows)
     dups = sorted(i for i, n in counts.items() if n > 1)
     if dups:
         raise ValueError(
-            f"knn_ivfpq: duplicate seed rows at ids {dups}; {id_col} "
+            f"knn_ivfpq: duplicate seed rows at ids {dups}; vec_id "
             "must be unique"
         )
-    by_id = {int(r[id_col]): [float(x) for x in r[vec_col]] for r in rows}
+    by_id = {
+        int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows
+    }
 
     def _seeds(ids: list[int], label: str) -> list[tuple[int, list[float]]]:
         missing = [i for i in ids if i not in by_id]
@@ -604,9 +541,9 @@ def knn_ivfpq(
         for j, book in enumerate(books)
     ]
     cell_rows = emb.withColumn(
-        "_cell", _assign_bucket_col(vec_col, cents)
+        "_cell", _assign_bucket_col(cents)
     ).filter(F.col("_cell").isin(probes))
-    encoded = pq_encode(cell_rows, books, id_col, vec_col)
+    encoded = pq_encode(cell_rows, books)
     approx = F.round(
         sum(
             F.element_at(
@@ -618,17 +555,17 @@ def knn_ivfpq(
         6,
     )
     cand = (
-        encoded.select(F.col(id_col), approx.alias("_ad"))
-        .orderBy("_ad", id_col)
+        encoded.select(F.col("vec_id"), approx.alias("_ad"))
+        .orderBy("_ad", "vec_id")
         .limit(k * refine)
     )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
-        emb.join(cand.select(id_col), id_col)
+        emb.join(cand.select("vec_id"), "vec_id")
         .select(
-            F.col(id_col),
-            F.round(cosine_sim(F.col(vec_col), q), 6).alias("cosine"),
+            F.col("vec_id"),
+            F.round(cosine_sim(F.col("embedding"), q), 6).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )

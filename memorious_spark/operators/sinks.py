@@ -55,9 +55,7 @@ _EXT = {
 }
 
 
-def directory_sink(
-    results: DataFrame, path: str, crawler: str, text_col: str = "text"
-) -> None:
+def directory_sink(results: DataFrame, path: str, crawler: str) -> None:
     """Write one ``<content_hash>.data.<ext>`` + ``<content_hash>.json``
     per row under ``<path>/<crawler>/`` (store.py:42-70 layout: the
     reference names blobs ``content_hash + '.' + safe_filename('data',
@@ -90,7 +88,7 @@ def directory_sink(
             d = row.asDict(recursive=True)
             ch = d["content_hash"]
             ext = _EXT.get(d.get("content_type") or "", "raw")
-            text = d.get(text_col)
+            text = d.get("text")
             with filesystem.open_output_stream(
                 f"{base}/{ch}.data.{ext}"
             ) as fh:
@@ -98,7 +96,7 @@ def directory_sink(
             meta = {
                 k: (v.isoformat() if hasattr(v, "isoformat") else v)
                 for k, v in d.items()
-                if k != text_col
+                if k != "text"
             }
             meta["_file_name"] = f"{ch}.data.{ext}"
             with filesystem.open_output_stream(f"{base}/{ch}.json") as fh:

@@ -87,19 +87,19 @@ def check_tags(
     crawler: str,
     kind: str,
     key_col: str = "key",
-    out_col: str = "tagged",
     now_ts: str | None = None,
 ) -> DataFrame:
-    """Batch check_tag (context.py:122-125): boolean membership."""
+    """Batch check_tag (context.py:122-125): boolean membership as
+    ``tagged``."""
     live = _live(spark, store, crawler, kind, now_ts)
     if live is None:
-        return df.withColumn(out_col, F.lit(False))
+        return df.withColumn("tagged", F.lit(False))
     keys = live.select("key_hash").distinct().withColumn("_hit", F.lit(True))
     joined = df.withColumn(
         "_kh", tag_key_hash(crawler, kind, F.col(key_col))
     ).join(keys.hint("shuffle_hash"), F.col("_kh") == F.col("key_hash"), "left")
     return joined.withColumn(
-        out_col, F.coalesce(F.col("_hit"), F.lit(False))
+        "tagged", F.coalesce(F.col("_hit"), F.lit(False))
     ).drop("_kh", "key_hash", "_hit")
 
 
@@ -109,24 +109,22 @@ def get_tags(
     df: DataFrame,
     crawler: str,
     kind: str,
-    key_col: str = "key",
-    out_col: str = "tag_value",
-    now_ts: str | None = None,
 ) -> DataFrame:
-    """Batch get_tag (context.py:118-121): latest unexpired value per
-    key (newest created_at/run_id wins, like the KV overwrite)."""
-    live = _live(spark, store, crawler, kind, now_ts)
+    """Batch get_tag (context.py:118-121): latest value per ``key`` as
+    ``tag_value`` (newest created_at/run_id wins, like the KV
+    overwrite). No clock is passed, so expired tags still count."""
+    live = _live(spark, store, crawler, kind, None)
     if live is None:
-        return df.withColumn(out_col, F.lit(None).cast("string"))
+        return df.withColumn("tag_value", F.lit(None).cast("string"))
     w = Window.partitionBy("key_hash").orderBy(
         F.col("created_at").desc(), F.col("run_id").desc()
     )
     latest = (
         live.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select("key_hash", F.col("value").alias(out_col))
+        .select("key_hash", F.col("value").alias("tag_value"))
     )
     joined = df.withColumn(
-        "_kh", tag_key_hash(crawler, kind, F.col(key_col))
+        "_kh", tag_key_hash(crawler, kind, F.col("key"))
     ).join(latest.hint("shuffle_hash"), F.col("_kh") == F.col("key_hash"), "left")
     return joined.drop("_kh", "key_hash")

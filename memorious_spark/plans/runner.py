@@ -23,7 +23,7 @@ engine's spec, SURVEY.md §4.3):
   any global sort in the hot path.
 
 Driver-job economy (the N→4N scaling-efficiency lever): a frontier
-round launches exactly THREE Spark job waves on the default
+round issues exactly THREE waves of driver actions on the default
 (no-politeness) path —
   1. results write (fetch join + parse UDF; the selected cache
      materializes inside this job; row counts ride along as
@@ -45,6 +45,13 @@ fetch join's broadcast decision uses the frontier count as its safe
 upper bound. Everything else (metrics, manifest) is driver-local
 pyarrow/JSON.
 
+A wave is one driver action (or one set of parallel actions), not one
+Spark job: with adaptive query execution on, every action runs as one
+stage job per shuffle exchange in its plan, re-planned between them.
+Traced crawl-benchmark runs (``crawlbench --trace 1``, ``local[4]``)
+count ``runner.jobs_per_round`` = 20.5 on ``bulk_drain`` and 29 on
+``bfs_polite``.
+
 State (frontier / seen / results / metrics) is checkpointed per round
 through :class:`RunStore`; a killed run resumes from the last complete
 round. Metrics carry per-partition lineage rows
@@ -53,8 +60,6 @@ round. Metrics carry per-partition lineage rows
 
 from __future__ import annotations
 
-import os
-import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -90,8 +95,6 @@ SEEN_SCHEMA = (
 
 _ORDER = ["src_emit_seq", "link_idx"]
 
-_TIMING = os.environ.get("MEMSPARK_TIMING") == "1"
-
 
 def _obs_counts(obs: Observation, *names: str) -> dict:
     """``Observation.get`` with an empty-plan fallback: when AQE's
@@ -106,18 +109,9 @@ def _obs_counts(obs: Observation, *names: str) -> dict:
         return {n: 0 for n in names}
 
 
-class _Phase:
-    """Opt-in per-phase wall-clock tracing (MEMSPARK_TIMING=1)."""
-
-    def __init__(self, rnd: int):
-        self.rnd = rnd
-        self.t = time.time()
-
-    def mark(self, label: str) -> None:
-        if _TIMING:
-            now = time.time()
-            print(f"  [round {self.rnd}] {label}: {now - self.t:.1f}s", flush=True)
-            self.t = now
+def _unpersist_all(cached: list[DataFrame]) -> None:
+    while cached:
+        cached.pop().unpersist()
 
 
 @dataclass
@@ -295,341 +289,339 @@ class CrawlRunner:
         rnd = start_round
         status = "done"
         pool = ThreadPoolExecutor(max_workers=4)
-        while rnd < cfg.max_rounds:
-            if store.abort_requested():
-                status = "aborted"
-                break
-            if frontier_rows == 0:
-                break
-            ph = _Phase(rnd)
-            frontier = store.read_round(spark, "frontier", rnd, FRONTIER_SCHEMA)
-            if frontier is None:
-                break
+        cached: list[DataFrame] = []  # this round's persists
+        try:
+            while rnd < cfg.max_rounds:
+                if store.abort_requested():
+                    status = "aborted"
+                    break
+                if frontier_rows == 0:
+                    break
+                frontier = store.read_round(spark, "frontier", rnd, FRONTIER_SCHEMA)
+                if frontier is None:
+                    break
 
-            seen = store.read_all(spark, "seen", rnd - 1, SEEN_SCHEMA)
+                seen = store.read_all(spark, "seen", rnd - 1, SEEN_SCHEMA)
 
-            # politeness budget + hot-host salting. No configured rate
-            # limit → no parking semantics to enforce → skip the
-            # per-host window entirely (one less shuffle; the reference
-            # only parks stages when a limit exists,
-            # memorious/model/queue.py:30-37).
-            no_politeness = cfg.budget_per_host >= 1_000_000_000
-            if no_politeness:
-                selected, carryover = frontier, None
-            else:
-                selected, carryover = politeness_dequeue(
-                    frontier, cfg.budget_per_host, group=cfg.politeness_group
-                )
-            selected = salt_partitions(selected).persist()
-
-            def _histogram():
-                hist = (
-                    selected.groupBy(F.spark_partition_id().alias("pid"))
-                    .agg(F.count("*").alias("rows"))
-                    .collect()
-                )
-                return sum(int(r["rows"]) for r in hist), [
-                    dict(round=rnd, stage="fetch_input",
-                         partition_id=int(r["pid"]), rows=int(r["rows"]))
-                    for r in hist
-                ]
-
-            if no_politeness:
-                # fast path — ZERO jobs here: selection kept the whole
-                # frontier, whose exact row count rode last round's
-                # frontier-write observation, and per-partition lineage
-                # comes from the checkpointed frontier's parquet
-                # footers (driver-local). The selected cache
-                # materializes inside the results-write job instead of
-                # a dedicated histogram wave (N→4N efficiency: one
-                # fewer fixed scheduling wave per round).
-                n_selected = frontier_rows
-                lineage = [
-                    dict(round=rnd, stage="fetch_input", partition_id=i, rows=n)
-                    for i, n in enumerate(store.partition_rows("frontier", rnd))
-                ]
-            else:
-                # politeness path: the budget-selected count is data-
-                # dependent, but nothing needs it before the retry
-                # decision — so the histogram DEFERS into wave 2
-                # (parallel thread beside the dedup sizes collect,
-                # scanning the by-then-materialized selected cache) and
-                # the broadcast decision uses the frontier count as its
-                # safe upper bound (selection only shrinks). Budget
-                # rounds therefore cost the same THREE waves.
-                n_selected, lineage = None, None
-            ph.mark(
-                "politeness+salt "
-                f"({'deferred' if n_selected is None else n_selected})"
-            )
-
-            # fetch = corpus join (broadcast frontier side when small),
-            # then gate+parse; ONE persisted DataFrame carries every
-            # fetch outcome of the round. Incremental runs probe the
-            # http cache first (the conditional-GET of http.py:145-152)
-            # and replay 304s after the join.
-            probe_in = (
-                cache_probe(selected, cache_df, now_ts)
-                if cfg.incremental
-                else selected
-            )
-            fetched = fetch_stage(probe_in, corpus, selected_count=frontier_rows)
-            if cfg.incremental:
-                fetched = apply_replay(fetched)
-            parsed, members = self._gate_and_parse(fetched, fetch_rule)
-            # serialized persist: deserialized caching of row objects with
-            # long text columns causes GC/storage contention at high core
-            # counts (local[32] measured SLOWER than local[8] without this)
-            from pyspark.storagelevel import StorageLevel as _SL
-            parsed = parsed.persist(_SL.MEMORY_AND_DISK)
-
-            obs_parse = Observation()
-            obs_store = Observation()
-            observed = parsed.observe(
-                obs_parse,
-                F.count(F.lit(1)).alias("hits"),
-                F.count(F.when(F.col("_emit"), 1)).alias("emitted"),
-            )
-            def _store_projection(df):
-                # clean_html store-path transform (operations/clean.py:
-                # 11-26): stored rows carry the re-serialized cleaned
-                # DOM + its new hash; a failed/non-HTML clean passes
-                # the original through (the reference emits data
-                # unchanged when the doc is None). The reference mutates
-                # data['content_hash'] BEFORE any skip_incremental, so
-                # every downstream consumer — store skip AND inc_tags —
-                # must see the cleaned hash (one shared projection).
-                df = df.filter(F.col("_emit") & store_rule)
-                if cfg.clean_html_paths:
-                    df = df.withColumn(
-                        "text", F.coalesce("clean_text", "text")
-                    ).withColumn(
-                        "content_hash", F.coalesce("clean_hash", "content_hash")
+                # politeness budget + hot-host salting. No configured rate
+                # limit → no parking semantics to enforce → skip the
+                # per-host window entirely (one less shuffle; the reference
+                # only parks stages when a limit exists,
+                # memorious/model/queue.py:30-37).
+                no_politeness = cfg.budget_per_host >= 1_000_000_000
+                if no_politeness:
+                    selected, carryover = frontier, None
+                else:
+                    selected, carryover = politeness_dequeue(
+                        frontier, cfg.budget_per_host, group=cfg.politeness_group
                     )
-                return df
+                selected = salt_partitions(selected).persist()
+                cached.append(selected)
 
-            store_pre = _store_projection(observed)
-            if cfg.incremental:
-                # skip_incremental: unchanged (url, content_hash) pairs
-                # — replayed rows and same-content re-fetches — are not
-                # re-stored (context.py:127-148)
-                store_pre = skip_unchanged(store_pre, inc_df, now_ts)
-            # the un-observed twin of `stored` for extra sinks (a plan
-            # node with an Observation cannot appear in two queries)
-            sink_rows = store_pre.select(*_RESULT_COLS)
-            stored = sink_rows.observe(
-                obs_store, F.count(F.lit(1)).alias("rows")
-            )
-            # wave 1: results write (counts ride along as observations)
-            store.write_round("results", rnd, stored)
-            parse_counts = _obs_counts(obs_parse, "hits", "emitted")
-            n_hits = int(parse_counts["hits"])
-            n_emitted = int(parse_counts["emitted"])
-            n_stored = int(_obs_counts(obs_store, "rows")["rows"])
-            ph.mark(f"fetch+parse+store ({n_hits}/{n_emitted}/{n_stored})")
+                def _histogram():
+                    hist = (
+                        selected.groupBy(F.spark_partition_id().alias("pid"))
+                        .agg(F.count("*").alias("rows"))
+                        .collect()
+                    )
+                    return sum(int(r["rows"]) for r in hist), [
+                        dict(round=rnd, stage="fetch_input",
+                             partition_id=int(r["pid"]), rows=int(r["rows"]))
+                        for r in hist
+                    ]
 
-            # fetch-time seen tags: the redirect SOURCE url, tagged only
-            # for rows that passed the rule+ok gates (fetch.py:30-33).
-            # tagger_seq preserves the sequential-interleaving contract:
-            # in the single-threaded reference, the tag placed by the
-            # task with emit_seq s blocks link emissions only from tasks
-            # processed AFTER s — not from earlier ones whose emits
-            # already happened.
-            redirect_tags = (
-                parsed.filter(F.col("_emit") & F.col("redirected_from").isNotNull())
-                .groupBy("url_hash", "url_norm")
-                .agg(F.min("emit_seq").alias("tagger_seq"))
-            )
+                if no_politeness:
+                    # fast path — ZERO jobs here: selection kept the whole
+                    # frontier, whose exact row count rode last round's
+                    # frontier-write observation, and per-partition lineage
+                    # comes from the checkpointed frontier's parquet
+                    # footers (driver-local). The selected cache
+                    # materializes inside the results-write job instead of
+                    # a dedicated histogram wave (N→4N efficiency: one
+                    # fewer fixed scheduling wave per round).
+                    n_selected = frontier_rows
+                    lineage = [
+                        dict(round=rnd, stage="fetch_input", partition_id=i, rows=n)
+                        for i, n in enumerate(store.partition_rows("frontier", rnd))
+                    ]
+                else:
+                    # politeness path: the budget-selected count is data-
+                    # dependent, but nothing needs it before the retry
+                    # decision — so the histogram DEFERS into wave 2
+                    # (parallel thread beside the dedup sizes collect,
+                    # scanning the by-then-materialized selected cache) and
+                    # the broadcast decision uses the frontier count as its
+                    # safe upper bound (selection only shrinks). Budget
+                    # rounds therefore cost the same THREE waves.
+                    n_selected, lineage = None, None
 
-            # link candidates → within-round dedup → seen anti-join
-            cands = extract_links_df(parsed.filter(F.col("_emit"))).filter(
-                scheme_ok_col(F.col("url"))
-            )
-            if cfg.sampling_rate is not None and cfg.sampling_rate < 1.0:
-                # DEBUG emit sampling (context.py:56-61: emit proceeds
-                # with probability p); seeded for reproducibility
-                cands = cands.sample(cfg.sampling_rate, seed=42)
-            if cfg.max_depth is not None:
-                cands = cands.filter(F.col("depth") <= cfg.max_depth)
-            cands = cands.withColumn("url_norm", norm_col(F.col("url"))).withColumn(
-                "url_hash", hash_col(F.col("url_norm"))
-            )
-            cands = dedup_within_round(cands, _ORDER)
-            # same-round redirect tags block only later emitters
-            cands = (
-                cands.join(
-                    F.broadcast(redirect_tags.select("url_hash", "tagger_seq")),
-                    "url_hash",
-                    "left",
+                # fetch = corpus join (broadcast frontier side when small),
+                # then gate+parse; ONE persisted DataFrame carries every
+                # fetch outcome of the round. Incremental runs probe the
+                # http cache first (the conditional-GET of http.py:145-152)
+                # and replay 304s after the join.
+                probe_in = (
+                    cache_probe(selected, cache_df, now_ts)
+                    if cfg.incremental
+                    else selected
                 )
-                .filter(
-                    F.col("tagger_seq").isNull()
-                    | (F.col("tagger_seq") > F.col("src_emit_seq"))
-                )
-                .drop("tagger_seq")
-            )
-            seen_keys = (
-                seen.select(F.col("key_hash").alias("url_hash"))
-                if seen is not None
-                else None
-            )
-            # new0 persisted: the dedup chain feeds the bounds job, the
-            # sizes collect, and every wave-3 consumer (frontier/seen
-            # writes) — advisory only, since _pid is a pure function of
-            # the data (below)
-            new0 = dedup_new(cands, seen_keys).persist()
-            # wave 2: materialize the dedup chain (the bounds aggregate
-            # inside range_by_order is the materializing action), then
-            # ONE cached-scan collect yields the per-bucket sizes (→
-            # emit_seq offsets) and their sum (→ n_new). ``_pid`` is a
-            # deterministic key-range bucket — a recomputed partition
-            # can never disagree with the collected sizes (the round-5
-            # emit_seq two-consumer hole, closed structurally), and the
-            # former repartitionByRange shuffle + second persist are
-            # gone. A deferred politeness histogram rides this wave in
-            # a parallel thread (it scans the selected cache job 1
-            # materialized).
-            hist_fut = None if no_politeness else pool.submit(_histogram)
-            rp = range_by_order(new0, _ORDER)
-            sizes = {
-                int(r["_pid"]): int(r["cnt"])
-                for r in rp.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-            }
-            if hist_fut is not None:
-                n_selected, lineage = hist_fut.result()
-            n_new = sum(sizes.values())
-            new_links = seq_from_sizes(rp, _ORDER, sizes, start=next_seq)
-            ph.mark(f"dedup+emit_seq ({n_new})")
-            next_seq += n_new
-            new_frontier_rows = new_links.select(
-                "url", "url_norm", "url_hash",
-                host_col(F.col("url")).alias("host"),
-                F.col("depth").cast("int"),
-                F.lit(0.0).alias("priority"),
-                "src_url",
-                F.col("link_idx").cast("int"),
-                "emit_seq",
-                F.lit(0).alias("attempt"),
-            )
-            # retry = corpus misses, from the round's persisted hit keys
-            # (no second corpus scan); the observed counts prove the
-            # all-hit case, where the anti-join is skipped outright
-            if n_hits >= n_selected:
-                next_frontier = new_frontier_rows
-            else:
-                retry = retry_rows(
-                    selected, parsed.select("url_norm").distinct(), cfg.retries
-                )
-                next_frontier = retry.unionByName(new_frontier_rows)
-            if carryover is not None:
-                next_frontier = carryover.unionByName(next_frontier)
-            obs_frontier = Observation()
-            next_frontier = next_frontier.observe(
-                obs_frontier, F.count(F.lit(1)).alias("rows")
-            )
+                fetched = fetch_stage(probe_in, corpus, selected_count=frontier_rows)
+                if cfg.incremental:
+                    fetched = apply_replay(fetched)
+                parsed, members = self._gate_and_parse(fetched, fetch_rule)
+                # serialized persist: deserialized caching of row objects with
+                # long text columns causes GC/storage contention at high core
+                # counts (local[32] measured SLOWER than local[8] without this)
+                from pyspark.storagelevel import StorageLevel as _SL
+                parsed = parsed.persist(_SL.MEMORY_AND_DISK)
+                cached.append(parsed)
 
-            # seen append: emitted links + redirect-source tags
-            seen_rows = seen_entries(
-                new_links, cfg.name, store.dir.name, "link",
-                value="url_norm", expire_days=cfg.expire_days, now_ts=now_ts,
-            ).unionByName(
-                seen_entries(
-                    redirect_tags, cfg.name, store.dir.name, "redirect",
-                    value="url_norm", expire_days=cfg.expire_days,
-                    now_ts=now_ts,
+                obs_parse = Observation()
+                obs_store = Observation()
+                observed = parsed.observe(
+                    obs_parse,
+                    F.count(F.lit(1)).alias("hits"),
+                    F.count(F.when(F.col("_emit"), 1)).alias("emitted"),
                 )
-            )
-            # wave 3: frontier + seen (+ cache/inc-tag appends in
-            # incremental mode) in parallel threads — all read only
-            # cached data, so the jobs overlap fully
-            futs = [
-                pool.submit(store.write_round, "frontier", rnd + 1, next_frontier),
-                pool.submit(store.write_round, "seen", rnd, seen_rows),
-            ]
-            if members is not None:
-                # extract stage output; re-runs the (broadcast) corpus
-                # join for the archive subset — only when configured
-                futs.append(pool.submit(
-                    store.write_round, "members", rnd, members
-                ))
-            if cfg.store_method == "directory" and n_stored:
-                # YAML `directory` sink: blob + JSON sidecar per stored
-                # row (operations/store.py:42-70), off the parsed cache
-                from memorious_spark.operators.sinks import directory_sink
+                def _store_projection(df):
+                    # clean_html store-path transform (operations/clean.py:
+                    # 11-26): stored rows carry the re-serialized cleaned
+                    # DOM + its new hash; a failed/non-HTML clean passes
+                    # the original through (the reference emits data
+                    # unchanged when the doc is None). The reference mutates
+                    # data['content_hash'] BEFORE any skip_incremental, so
+                    # every downstream consumer — store skip AND inc_tags —
+                    # must see the cleaned hash (one shared projection).
+                    df = df.filter(F.col("_emit") & store_rule)
+                    if cfg.clean_html_paths:
+                        df = df.withColumn(
+                            "text", F.coalesce("clean_text", "text")
+                        ).withColumn(
+                            "content_hash", F.coalesce("clean_hash", "content_hash")
+                        )
+                    return df
 
-                dir_path = (cfg.store_params or {}).get(
-                    "path", str(store.dir / "store")
+                store_pre = _store_projection(observed)
+                if cfg.incremental:
+                    # skip_incremental: unchanged (url, content_hash) pairs
+                    # — replayed rows and same-content re-fetches — are not
+                    # re-stored (context.py:127-148)
+                    store_pre = skip_unchanged(store_pre, inc_df, now_ts)
+                # the un-observed twin of `stored` for extra sinks (a plan
+                # node with an Observation cannot appear in two queries)
+                sink_rows = store_pre.select(*_RESULT_COLS)
+                stored = sink_rows.observe(
+                    obs_store, F.count(F.lit(1)).alias("rows")
                 )
-                futs.append(pool.submit(
-                    directory_sink, sink_rows, dir_path, cfg.name
-                ))
-            if cfg.incremental:
-                run_id_str = store.dir.name
-                futs.append(pool.submit(
-                    store.append_shared, "http_cache",
-                    cache_entries(parsed, run_id_str, cfg.expire_days, now_ts),
-                ))
-                # inc_tags key off the SAME cleaned-hash projection the
-                # store skip used — otherwise the test-and-set compares
-                # a raw fetch hash against a stored cleaned hash and
-                # never matches (context.py:127-148 + operations/clean.py)
-                inc_keys = skip_unchanged(
-                    _store_projection(parsed), inc_df, now_ts
-                ).select("url_hash", "content_hash")
-                futs.append(pool.submit(
-                    store.append_shared, "inc_tags",
-                    inc_tag_entries(inc_keys, run_id_str, cfg.expire_days, now_ts),
-                ))
-            for fut in futs:
-                fut.result()
-            frontier_rows = int(_obs_counts(obs_frontier, "rows")["rows"])
-            ph.mark(f"frontier+seen write (next={frontier_rows})")
-            seen_count = seen_count + n_new  # redirect-source tags (few) not counted
+                # wave 1: results write (counts ride along as observations)
+                store.write_round("results", rnd, stored)
+                parse_counts = _obs_counts(obs_parse, "hits", "emitted")
+                n_hits = int(parse_counts["hits"])
+                n_emitted = int(parse_counts["emitted"])
+                n_stored = int(_obs_counts(obs_store, "rows")["rows"])
 
-            # metrics: round summary + per-partition lineage (footer- or
-            # histogram-derived above); a driver-local 1-partition
-            # parquet (a distributed union-write of 36 rows costs whole
-            # Spark jobs of scheduling latency per round)
-            metrics_rows = lineage + [
-                dict(round=rnd, stage=stage, partition_id=-1, rows=n)
-                for stage, n in [
-                    ("round_summary", n_selected), ("fetched", n_hits),
-                    ("emitted", n_emitted), ("stored", n_stored),
-                    ("new_links", n_new),
+                # fetch-time seen tags: the redirect SOURCE url, tagged only
+                # for rows that passed the rule+ok gates (fetch.py:30-33).
+                # tagger_seq preserves the sequential-interleaving contract:
+                # in the single-threaded reference, the tag placed by the
+                # task with emit_seq s blocks link emissions only from tasks
+                # processed AFTER s — not from earlier ones whose emits
+                # already happened.
+                redirect_tags = (
+                    parsed.filter(F.col("_emit") & F.col("redirected_from").isNotNull())
+                    .groupBy("url_hash", "url_norm")
+                    .agg(F.min("emit_seq").alias("tagger_seq"))
+                )
+
+                # link candidates → within-round dedup → seen anti-join
+                cands = extract_links_df(parsed.filter(F.col("_emit"))).filter(
+                    scheme_ok_col(F.col("url"))
+                )
+                if cfg.sampling_rate is not None and cfg.sampling_rate < 1.0:
+                    # DEBUG emit sampling (context.py:56-61: emit proceeds
+                    # with probability p); seeded for reproducibility
+                    cands = cands.sample(cfg.sampling_rate, seed=42)
+                if cfg.max_depth is not None:
+                    cands = cands.filter(F.col("depth") <= cfg.max_depth)
+                cands = cands.withColumn("url_norm", norm_col(F.col("url"))).withColumn(
+                    "url_hash", hash_col(F.col("url_norm"))
+                )
+                cands = dedup_within_round(cands, _ORDER)
+                # same-round redirect tags block only later emitters
+                cands = (
+                    cands.join(
+                        F.broadcast(redirect_tags.select("url_hash", "tagger_seq")),
+                        "url_hash",
+                        "left",
+                    )
+                    .filter(
+                        F.col("tagger_seq").isNull()
+                        | (F.col("tagger_seq") > F.col("src_emit_seq"))
+                    )
+                    .drop("tagger_seq")
+                )
+                seen_keys = (
+                    seen.select(F.col("key_hash").alias("url_hash"))
+                    if seen is not None
+                    else None
+                )
+                # new0 persisted: the dedup chain feeds the bounds job, the
+                # sizes collect, and every wave-3 consumer (frontier/seen
+                # writes) — advisory only, since _pid is a pure function of
+                # the data (below)
+                new0 = dedup_new(cands, seen_keys).persist()
+                cached.append(new0)
+                # wave 2: materialize the dedup chain (the bounds aggregate
+                # inside range_by_order is the materializing action), then
+                # ONE cached-scan collect yields the per-bucket sizes (→
+                # emit_seq offsets) and their sum (→ n_new). ``_pid`` is a
+                # deterministic key-range bucket — a recomputed partition
+                # can never disagree with the collected sizes (the round-5
+                # emit_seq two-consumer hole, closed structurally), and the
+                # former repartitionByRange shuffle + second persist are
+                # gone. A deferred politeness histogram rides this wave in
+                # a parallel thread (it scans the selected cache job 1
+                # materialized).
+                hist_fut = None if no_politeness else pool.submit(_histogram)
+                rp = range_by_order(new0, _ORDER)
+                sizes = {
+                    int(r["_pid"]): int(r["cnt"])
+                    for r in rp.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
+                }
+                if hist_fut is not None:
+                    n_selected, lineage = hist_fut.result()
+                n_new = sum(sizes.values())
+                new_links = seq_from_sizes(rp, _ORDER, sizes, start=next_seq)
+                next_seq += n_new
+                new_frontier_rows = new_links.select(
+                    "url", "url_norm", "url_hash",
+                    host_col(F.col("url")).alias("host"),
+                    F.col("depth").cast("int"),
+                    F.lit(0.0).alias("priority"),
+                    "src_url",
+                    F.col("link_idx").cast("int"),
+                    "emit_seq",
+                    F.lit(0).alias("attempt"),
+                )
+                # retry = corpus misses, from the round's persisted hit keys
+                # (no second corpus scan); the observed counts prove the
+                # all-hit case, where the anti-join is skipped outright
+                if n_hits >= n_selected:
+                    next_frontier = new_frontier_rows
+                else:
+                    retry = retry_rows(
+                        selected, parsed.select("url_norm").distinct(), cfg.retries
+                    )
+                    next_frontier = retry.unionByName(new_frontier_rows)
+                if carryover is not None:
+                    next_frontier = carryover.unionByName(next_frontier)
+                obs_frontier = Observation()
+                next_frontier = next_frontier.observe(
+                    obs_frontier, F.count(F.lit(1)).alias("rows")
+                )
+
+                # seen append: emitted links + redirect-source tags
+                seen_rows = seen_entries(
+                    new_links, cfg.name, store.dir.name, "link",
+                    value="url_norm", expire_days=cfg.expire_days, now_ts=now_ts,
+                ).unionByName(
+                    seen_entries(
+                        redirect_tags, cfg.name, store.dir.name, "redirect",
+                        value="url_norm", expire_days=cfg.expire_days,
+                        now_ts=now_ts,
+                    )
+                )
+                # wave 3: frontier + seen (+ cache/inc-tag appends in
+                # incremental mode) in parallel threads — all read only
+                # cached data, so the jobs overlap fully
+                futs = [
+                    pool.submit(store.write_round, "frontier", rnd + 1, next_frontier),
+                    pool.submit(store.write_round, "seen", rnd, seen_rows),
                 ]
-            ]
-            store.write_round_local("metrics", rnd, metrics_rows)
+                if members is not None:
+                    # extract stage output; re-runs the (broadcast) corpus
+                    # join for the archive subset — only when configured
+                    futs.append(pool.submit(
+                        store.write_round, "members", rnd, members
+                    ))
+                if cfg.store_method == "directory" and n_stored:
+                    # YAML `directory` sink: blob + JSON sidecar per stored
+                    # row (operations/store.py:42-70), off the parsed cache
+                    from memorious_spark.operators.sinks import directory_sink
 
-            if cfg.inspect_enabled:
-                # `inspect` debug stage (operations/debug.py:4-6):
-                # pretty-log a sample of this round's parsed rows
-                for r in parsed.select(
-                    "url", "status_code", "content_type", "title"
-                ).head(3):
-                    print(f"[inspect round={rnd}] {r.asDict()}", flush=True)
+                    dir_path = (cfg.store_params or {}).get(
+                        "path", str(store.dir / "store")
+                    )
+                    futs.append(pool.submit(
+                        directory_sink, sink_rows, dir_path, cfg.name
+                    ))
+                if cfg.incremental:
+                    run_id_str = store.dir.name
+                    futs.append(pool.submit(
+                        store.append_shared, "http_cache",
+                        cache_entries(parsed, run_id_str, cfg.expire_days, now_ts),
+                    ))
+                    # inc_tags key off the SAME cleaned-hash projection the
+                    # store skip used — otherwise the test-and-set compares
+                    # a raw fetch hash against a stored cleaned hash and
+                    # never matches (context.py:127-148 + operations/clean.py)
+                    inc_keys = skip_unchanged(
+                        _store_projection(parsed), inc_df, now_ts
+                    ).select("url_hash", "content_hash")
+                    futs.append(pool.submit(
+                        store.append_shared, "inc_tags",
+                        inc_tag_entries(inc_keys, run_id_str, cfg.expire_days, now_ts),
+                    ))
+                for fut in futs:
+                    fut.result()
+                frontier_rows = int(_obs_counts(obs_frontier, "rows")["rows"])
+                seen_count = seen_count + n_new  # redirect-source tags (few) not counted
 
-            totals["fetched"] += n_hits
-            totals["stored"] += n_stored
-            store.commit_round(
-                rnd,
-                {
-                    "selected": n_selected,
-                    "fetched": n_hits,
-                    "emitted": n_emitted,
-                    "stored": n_stored,
-                    "new_links": n_new,
-                    "next_seq": next_seq,
-                    "urls_seen": seen_count,
-                    "next_frontier": frontier_rows,
-                },
-            )
-            selected.unpersist()
-            parsed.unpersist()
-            new0.unpersist()
-            ph.mark("metrics+commit")
-            rnd += 1
+                # metrics: round summary + per-partition lineage (footer- or
+                # histogram-derived above); a driver-local 1-partition
+                # parquet (a distributed union-write of 36 rows costs whole
+                # Spark jobs of scheduling latency per round)
+                metrics_rows = lineage + [
+                    dict(round=rnd, stage=stage, partition_id=-1, rows=n)
+                    for stage, n in [
+                        ("round_summary", n_selected), ("fetched", n_hits),
+                        ("emitted", n_emitted), ("stored", n_stored),
+                        ("new_links", n_new),
+                    ]
+                ]
+                store.write_round_local("metrics", rnd, metrics_rows)
 
-        pool.shutdown(wait=False)
+                if cfg.inspect_enabled:
+                    # `inspect` debug stage (operations/debug.py:4-6):
+                    # pretty-log a sample of this round's parsed rows
+                    for r in parsed.select(
+                        "url", "status_code", "content_type", "title"
+                    ).head(3):
+                        print(f"[inspect round={rnd}] {r.asDict()}", flush=True)
+
+                totals["fetched"] += n_hits
+                totals["stored"] += n_stored
+                store.commit_round(
+                    rnd,
+                    {
+                        "selected": n_selected,
+                        "fetched": n_hits,
+                        "emitted": n_emitted,
+                        "stored": n_stored,
+                        "new_links": n_new,
+                        "next_seq": next_seq,
+                        "urls_seen": seen_count,
+                        "next_frontier": frontier_rows,
+                    },
+                )
+                _unpersist_all(cached)
+                rnd += 1
+
+        finally:
+            # a round that raises must not leave its caches on the
+            # session or its writes running behind the caller
+            pool.shutdown(wait=True, cancel_futures=True)
+            _unpersist_all(cached)
         # run-level sinks + the post-drain aggregator hook
         # (crawler.py:66-87 fires `aggregate` when pending hits 0)
         if status == "done" and (

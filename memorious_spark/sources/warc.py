@@ -177,21 +177,19 @@ def _record_bytes(uri: str, payload: bytes) -> bytes:
 def write_warc(
     df: DataFrame,
     path: str,
-    uri_col: str = "uri",
-    payload_col: str = "payload",
-    prefix: str = "part",
     compress: bool = False,
     index: bool = False,
 ) -> DataFrame:
-    """Write one ``<prefix>-NNNNN.warc`` file per partition of ``df``
-    under ``path`` (any ``pyarrow.fs`` URI). Returns the per-file
+    """Write ``df``'s ``uri``/``payload`` rows as one
+    ``part-NNNNN.warc`` file per partition under ``path`` (any
+    ``pyarrow.fs`` URI). Returns the per-file
     summary DataFrame ``(warc_file, n_records, n_bytes)`` — an ACTION
     has not run yet; the caller materializes it.
 
     ``compress=True`` emits ``.warc.gz`` with ONE GZIP MEMBER PER
     RECORD (the Common Crawl layout — the property that makes CDX
     offsets independently seekable). ``index=True`` additionally
-    streams a ``<prefix>-NNNNN.cdx`` CDXJ sidecar beside each archive:
+    streams a ``part-NNNNN.cdx`` CDXJ sidecar beside each archive:
     ``urlkey timestamp {json}`` per record, json carrying
     ``url/digest/mime/offset/length/filename``; ``digest`` is the
     sha1 hex of the UNCOMPRESSED payload, ``offset``/``length`` the
@@ -202,15 +200,15 @@ def write_warc(
     fs.create_dir(root, recursive=True)
     ext = ".warc.gz" if compress else ".warc"
     sel = [
-        F.col(uri_col).cast("string").alias("uri"),
-        F.col(payload_col).cast("binary").alias("payload"),
+        F.col("uri").cast("string").alias("uri"),
+        F.col("payload").cast("binary").alias("payload"),
     ]
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        base = f"{prefix}-{pid:05d}"
+        base = f"part-{pid:05d}"
         fname = f"{root}/{base}{ext}"
         wfs, wroot = _fs_for(path)
         n = 0

@@ -244,6 +244,31 @@ def test_kill_resume_matches_uninterrupted(
     )
 
 
+def test_failed_round_releases_its_caches(
+    spark, corpus, tmp_path_factory, monkeypatch
+):
+    """A round that raises (here: its seen write) propagates the error
+    and releases the round's persisted frames on the way out: the
+    session's persistent-RDD count is what it was before ``run``."""
+    import dataclasses
+
+    write_round = RunStore.write_round
+
+    def failing_seen_write(self, table, rnd, df):
+        if table == "seen":
+            raise OSError("seen write failed")
+        write_round(self, table, rnd, df)
+
+    monkeypatch.setattr(RunStore, "write_round", failing_seen_write)
+    jsc = spark.sparkContext._jsc
+    store = RunStore(tmp_path_factory.mktemp("runs_fail"), "e2e", "runX")
+    runner = CrawlRunner(spark, dataclasses.replace(CFG, max_rounds=1), store)
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(OSError, match="seen write failed"):
+        runner.run(corpus)
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_budgeted_crawl_matches_budgeted_oracle(
     spark, corpus, corpus_dict, tmp_path_factory
 ):

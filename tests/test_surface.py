@@ -21,7 +21,10 @@ The same holds one level down, for parameters: a defaulted parameter
 of a reached function or method that only calls under ``tests/`` ever
 pass is a mode nothing else selects. The pinned ``TEST_ONLY_PARAMS``
 are the threshold hooks, stat sinks and fixture shapes tests need;
-any other test-only parameter fails the scan.
+any other test-only parameter fails the scan. A defaulted parameter
+that no call passes at all — entry files, engine and tests together —
+is a constant spelled as an option; only the two deployment and
+memorious-parity hooks in ``UNPASSED_BY_DESIGN`` may stay.
 """
 
 from __future__ import annotations
@@ -85,6 +88,14 @@ TEST_ONLY_PARAMS = {
     ("ngram_jaccard_pairs", "max_df"),
     # CLI argv (the console entry point reads sys.argv)
     ("main", "argv"),
+}
+
+# (function or Class.method, parameter) pairs no call passes
+UNPASSED_BY_DESIGN = {
+    # deployment path: production swaps in the full PSL file
+    ("load_psl", "path"),
+    # memorious parse_date/iso_date helper surface (SURVEY.md)
+    ("py_iso_date", "format_hint"),
 }
 
 
@@ -264,14 +275,18 @@ def _params_passed(paths, callees, star_passes_all: bool) -> set[tuple]:
     return used
 
 
-def params_only_tests_pass() -> set[tuple[str, str]]:
-    callees = _callees()
-    defaulted = {
+def _all_defaulted(callees) -> set[tuple[str, str]]:
+    return {
         (label, p)
         for defs in callees.values()
         for label, fn, _, _ in defs
         for p in _defaulted(fn)
     }
+
+
+def params_only_tests_pass() -> set[tuple[str, str]]:
+    callees = _callees()
+    defaulted = _all_defaulted(callees)
     live = _params_passed(
         {*_entry_files(), *ENGINE.rglob("*.py")}, callees, True
     )
@@ -289,4 +304,25 @@ def test_no_unpinned_test_only_parameters():
     )
     assert TEST_ONLY_PARAMS - found == set(), (
         "pinned parameters now passed outside tests or gone; unpin them"
+    )
+
+
+def params_no_call_passes() -> set[tuple[str, str]]:
+    callees = _callees()
+    passed = _params_passed(
+        {*_entry_files(), *ENGINE.rglob("*.py"),
+         *(ROOT / "tests").rglob("*.py")},
+        callees, True,
+    )
+    return _all_defaulted(callees) - passed
+
+
+def test_no_unpinned_parameters_no_call_passes():
+    found = params_no_call_passes()
+    assert found - UNPASSED_BY_DESIGN == set(), (
+        "defaulted parameters no call passes; write the default in "
+        "where it is used and delete the parameter"
+    )
+    assert UNPASSED_BY_DESIGN - found == set(), (
+        "pinned parameters now passed or gone; unpin them"
     )
