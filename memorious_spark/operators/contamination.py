@@ -36,34 +36,12 @@ Design posture for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from memorious_spark.functions.hof import bind_once
+from memorious_spark.functions.quality import word_ngrams
 from memorious_spark.operators.frontier import ensure_parallelism
 
-__all__ = ["word_ngrams", "flag_contaminated"]
-
-
-def word_ngrams(text: Column, n: int) -> Column:
-    """Array of space-joined word ``n``-grams of ``text`` (whitespace
-    tokenization; docs under ``n`` words yield an empty array). Pure
-    Column — shared by both overlap paths and by the oracle twin.
-
-    The token array is bound ONCE (:func:`bind_once`): inlining the
-    split into the transform lambda re-tokenizes the document per
-    gram (HOF lambdas are interpreted, no CSE — measured 3.3× on the
-    sf0.1 scan)."""
-
-    def grams(w: Column) -> Column:
-        # sequence(0, -1) DESCENDS in Spark — guard the short-doc case
-        idx = F.when(
-            F.size(w) >= n, F.sequence(F.lit(0), F.size(w) - n)
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(
-            idx, lambda i: F.concat_ws(" ", F.slice(w, i + 1, n))
-        )
-
-    return bind_once(F.split(F.trim(text), r"\s+"), grams)
+__all__ = ["flag_contaminated"]
 
 
 def flag_contaminated(

@@ -30,7 +30,14 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from memorious_spark.functions.textops import fingerprint, minhash_signature, shingles
 from memorious_spark.operators.frontier import ensure_parallelism
-from memorious_spark.operators.similarity import _dot, _norm
+from memorious_spark.operators.similarity import (
+    _dist2,
+    _dot,
+    _norm,
+    ivf_seed_centroids,
+    lsh_bucket_col,
+    nearest_codes,
+)
 
 __all__ = [
     "exact_dedup",
@@ -57,14 +64,13 @@ _GRID_BLOCKS = 8
 
 def dedup_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     stats: dict | None = None,
 ) -> DataFrame:
-    """Connected components over dup-pair edges → ``(id, component)``
-    with ``component`` = the smallest id in the cluster (the canonical
-    representative a training-data pipeline KEEPS; everything else in
-    the component is a near-duplicate to drop).
+    """Connected components over ``(id_a, id_b)`` dup-pair edges →
+    ``(id, component)`` with ``component`` = the smallest id in the
+    cluster (the canonical representative a training-data pipeline
+    KEEPS; everything else in the component is a near-duplicate to
+    drop).
 
     Pair generators (minhash/simhash/embedding LSH) emit EDGES; near-
     duplication is transitive only through its clusters, so this is
@@ -104,10 +110,10 @@ def dedup_components(
     e0 = (
         pairs.select(
             F.least(
-                F.col(id_a).cast("long"), F.col(id_b).cast("long")
+                F.col("id_a").cast("long"), F.col("id_b").cast("long")
             ).alias("src"),
             F.greatest(
-                F.col(id_a).cast("long"), F.col(id_b).cast("long")
+                F.col("id_a").cast("long"), F.col("id_b").cast("long")
             ).alias("dst"),
         )
         .distinct()
@@ -358,7 +364,7 @@ def corpus_dedup(
     # minhash_lsh_pairs' trailing distinct would be a pure extra
     # shuffle+aggregate of the pair stream here
     pairs = _minhash_band_pairs(survivors, "id", "_t", n_perm, bands)
-    comp = dedup_components(pairs, id_a="id_a", id_b="id_b", stats=stats)
+    comp = dedup_components(pairs, stats=stats)
     # near canonical over survivors (docs in no component keep themselves)
     near = (
         survivors.select("id")
@@ -816,52 +822,59 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
 
 # ---- embedding near-dup ------------------------------------------------------
 
+def _grid_pairs(v: DataFrame, *keys: str) -> DataFrame:
+    """Block-grid self-join of ``v`` (an ``id`` column plus payload):
+    every unordered pair of distinct rows that agree on ``keys`` comes
+    back exactly once, its columns suffixed ``_l``/``_r``.
+
+    Every row gets block ``b = xxhash64(id) % B`` and joins as the LEFT
+    of block-pairs ``(b, q≥b)`` and as the RIGHT of ``(p≤b, b)``: a
+    cross-block pair meets in ONE equi-join bucket, its min-block row
+    on the left; a same-block pair meets in both orientations (plus
+    self-pairs), so only ``id_l < id_r`` is kept there. Replication
+    factor ~B per side into B² balanced buckets — a plain shuffled
+    equi-join AQE can split, where an ``l.id < r.id`` non-equi join
+    plans a BroadcastNestedLoopJoin (single broadcast of the whole
+    table + O(n²) on one executor's threads)."""
+    cols = [c for c in v.columns if c not in keys]
+    vb = v.withColumn(
+        "_b", F.pmod(F.xxhash64(F.col("id")), F.lit(_GRID_BLOCKS)).cast("int")
+    )
+    l = vb.select(
+        *[F.col(c).alias(f"{c}_l") for c in cols], *keys,
+        F.col("_b").alias("p"),
+        F.explode(F.sequence(F.col("_b"), F.lit(_GRID_BLOCKS - 1))).alias("q"),
+    )
+    r = vb.select(
+        *[F.col(c).alias(f"{c}_r") for c in cols], *keys,
+        F.explode(F.sequence(F.lit(0), F.col("_b"))).alias("p"),
+        F.col("_b").alias("q"),
+    )
+    return l.join(r, [*keys, "p", "q"]).filter(
+        (F.col("p") != F.col("q")) | (F.col("id_l") < F.col("id_r"))
+    )
+
+
 def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """EXACT cosine-similarity pairs ≥ threshold via the block-grid
-    self-join.
-
-    Every row gets block ``b = xxhash64(id) % B``; a row joins as the
-    LEFT of block-pairs ``(b, q≥b)`` and as the RIGHT of ``(p≤b, b)``,
-    so each unordered pair meets in exactly ONE equi-join bucket (the
-    ``id_a < id_b`` predicate resolves the same-block double-match).
-    Replication factor ~B per side, B² balanced buckets — a plain
-    shuffled equi-join AQE can split, where the round-1 ``l.id < r.id``
-    non-equi join planned a BroadcastNestedLoopJoin (single broadcast
-    of the whole table + O(n²) on one executor's threads). Exact
-    all-pairs compute is inherently O(n²) — for sub-quadratic scale
-    use :func:`embedding_dup_pairs_lsh`."""
+    self-join (:func:`_grid_pairs`). Exact all-pairs compute is
+    inherently O(n²) — for sub-quadratic scale use
+    :func:`embedding_dup_pairs_lsh`."""
     v = emb.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").alias("v"),
         _norm(F.col("embedding")).alias("nrm"),
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(_GRID_BLOCKS)).alias("b"),
     )
-    l = v.withColumn(
-        "q", F.explode(F.sequence(F.col("b"), F.lit(_GRID_BLOCKS - 1)))
-    ).select(
-        F.col("id").alias("id_a"), F.col("v").alias("v_a"),
-        F.col("nrm").alias("nrm_a"), F.col("b").alias("p"), "q",
-    )
-    r = v.withColumn(
-        "p", F.explode(F.sequence(F.lit(0), F.col("b")))
-    ).select(
-        F.col("id").alias("id_b"), F.col("v").alias("v_b"),
-        F.col("nrm").alias("nrm_b"), "p", F.col("b").alias("q"),
-    )
-    dot = _dot(F.col("v_a"), F.col("v_b"))
-    # a cross-block pair meets exactly once (its min-block row as left,
-    # max-block row as right) regardless of id order → normalize ids
-    # with least/greatest; same-block pairs (p == q) match in both
-    # orientations plus self-pairs → keep only id_a < id_b there
+    dot = _dot(F.col("v_l"), F.col("v_r"))
+    # a cross-block pair meets with its min-block row as left,
+    # whatever the id order → normalize ids with least/greatest
     return (
-        l.join(r, ["p", "q"])
-        .filter((F.col("p") != F.col("q")) | (F.col("id_a") < F.col("id_b")))
+        _grid_pairs(v)
         .select(
-            F.least("id_a", "id_b").alias("pid_a"),
-            F.greatest("id_a", "id_b").alias("pid_b"),
-            F.round(dot / (F.col("nrm_a") * F.col("nrm_b")), 6).alias("cosine"),
+            F.least("id_l", "id_r").alias("id_a"),
+            F.greatest("id_l", "id_r").alias("id_b"),
+            F.round(dot / (F.col("nrm_l") * F.col("nrm_r")), 6).alias("cosine"),
         )
-        .withColumnsRenamed({"pid_a": "id_a", "pid_b": "id_b"})
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -882,8 +895,6 @@ def embedding_dup_pairs_lsh(
     n·bands·E[bucket]/2 — one equi-join shuffle on (band, bucket).
     Recall follows the standard banding curve (1-(1-s^r)^b for sign-
     collision prob s); pairs missed by every band are not reported."""
-    from memorious_spark.operators.similarity import lsh_bucket_col
-
     v = emb.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").alias("v"),
@@ -931,7 +942,6 @@ def semantic_dedup(
     threshold: float = 0.85,
     n_centroids: int = 8,
     spacing: int = 37,
-    centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the embedding space into K cells with
@@ -953,86 +963,41 @@ def semantic_dedup(
     Returns ``(vec_id, cell int, canonical_id, reason ∈
     kept|semantic)`` — one row per input vector.
 
-    Scale posture: centroid assignment auto-routes by K exactly like
-    the IVF ANN family (literal Column ≤ 16 centroids, Arrow-batched
-    numpy matmul beyond — K ≈ 10³-10⁵ at 100 TB). The within-cell
-    pair scan joins on ``(cell, block-row, block-col)`` — the same
-    block-grid as :func:`embedding_dup_pairs`, nested inside the cell
-    — so a fat cell splits into B² balanced join buckets instead of
-    one task (keying on ``cell`` alone put the whole corpus on K
-    tasks: unusable when K < cores, a skew cliff when a cell runs
-    hot). Roles are assigned AFTER the join (block position, not
-    priority, decides which side a row enters on): each unordered
-    pair meets exactly once, then a conditional select routes the
-    higher-priority member to the dominator role. d2 is always
-    computed with the JVM-side ``_dist2`` (broadcast centroid join on
-    the UDF path), so the priority order is engine-reproducible
-    bit-for-bit.
+    Scale posture: the cell is the nearest centroid through the
+    Arrow-batched numpy kernel the IVF ANN family uses
+    (:func:`similarity.nearest_codes`; K ≈ 10³-10⁵ at 100 TB). The
+    within-cell pair scan joins on ``(cell, block-row, block-col)`` —
+    the block-grid of :func:`embedding_dup_pairs` nested inside the
+    cell (:func:`_grid_pairs`) — so a fat cell splits into B² balanced
+    join buckets instead of one task (keying on ``cell`` alone put the
+    whole corpus on K tasks: unusable when K < cores, a skew cliff
+    when a cell runs hot). Roles are assigned AFTER the join (block
+    position, not priority, decides which side a row enters on): each
+    unordered pair meets exactly once, then a conditional select
+    routes the higher-priority member to the dominator role. d2 is
+    computed with the JVM-side ``_dist2`` against the cell's centroid
+    (picked from a K×dim literal), so the priority order is
+    engine-reproducible bit-for-bit.
     """
-    from memorious_spark.operators.similarity import (
-        _IVF_LITERAL_MAX_K,
-        _dist2,
-        ivf_assign_udf,
-        ivf_seed_centroids,
+    cents = ivf_seed_centroids(emb, n_centroids, spacing)
+    centroid = F.element_at(
+        F.array(*[F.array(*[F.lit(float(x)) for x in c]) for _cid, c in cents]),
+        F.col("cell") + 1,
     )
-
-    cents = centroids or ivf_seed_centroids(emb, n_centroids, spacing)
     # respread a few-partition input BEFORE the CPU-heavy assignment
     # and pair stages: a small parquet arrives as one split, the tiny
     # right side then broadcasts, and the whole interpreted-cosine
     # pair scan would run narrow on a single core
-    base = ensure_parallelism(emb).select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        _norm(F.col("embedding")).alias("nrm"),
-    )
-    if len(cents) <= _IVF_LITERAL_MAX_K:
-        dists = F.array(
-            *[
-                _dist2(F.col("v"), F.array(*[F.lit(float(x)) for x in c]))
-                for _cid, c in cents
-            ]
+    assigned = (
+        ensure_parallelism(emb)
+        .select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("v"),
+            _norm(F.col("embedding")).alias("nrm"),
         )
-        assigned = base.select(
-            "id", "v", "nrm",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int").alias("cell"),
-            F.array_min(dists).alias("d2"),
-        )
-    else:
-        spark = emb.sparkSession
-        cents_df = spark.createDataFrame(
-            [(cid, [float(x) for x in c]) for cid, c in cents],
-            "cell int, centroid array<double>",
-        )
-        assigned = (
-            base.withColumn("cell", ivf_assign_udf(cents)(F.col("v")))
-            .join(F.broadcast(cents_df), "cell")
-            .select(
-                "id", "v", "nrm", "cell",
-                _dist2(F.col("v"), F.col("centroid")).alias("d2"),
-            )
-        )
-    assigned = assigned.withColumn(
-        "b", F.pmod(F.xxhash64(F.col("id")), F.lit(_GRID_BLOCKS)).cast("int")
-    ).persist()
-
-    # block-grid within the cell (embedding_dup_pairs' meeting rule,
-    # keyed (cell, p, q)): a cross-block pair meets once with its
-    # min-block row on the left; same-block pairs are id-ordered
-    l = assigned.withColumn(
-        "q", F.explode(F.sequence(F.col("b"), F.lit(_GRID_BLOCKS - 1)))
-    ).select(
-        F.col("id").alias("id_l"), F.col("v").alias("v_l"),
-        F.col("nrm").alias("nrm_l"), F.col("d2").alias("d2_l"),
-        "cell", F.col("b").alias("p"), "q",
-    )
-    r = assigned.withColumn(
-        "p", F.explode(F.sequence(F.lit(0), F.col("b")))
-    ).select(
-        F.col("id").alias("id_r"), F.col("v").alias("v_r"),
-        F.col("nrm").alias("nrm_r"), F.col("d2").alias("d2_r"),
-        "cell", "p", F.col("b").alias("q"),
+        .withColumn("cell", nearest_codes(F.col("v"), [cents])[0])
+        .withColumn("d2", _dist2(F.col("v"), centroid))
+        .persist()
     )
     cos = _dot(F.col("v_l"), F.col("v_r")) / (F.col("nrm_l") * F.col("nrm_r"))
     # dominance is a strict total order, so every distinct pair has
@@ -1041,8 +1006,7 @@ def semantic_dedup(
         (F.col("d2_l") == F.col("d2_r")) & (F.col("id_l") < F.col("id_r"))
     )
     dropped = (
-        l.join(r, ["cell", "p", "q"])
-        .filter((F.col("p") != F.col("q")) | (F.col("id_l") < F.col("id_r")))
+        _grid_pairs(assigned, "cell")
         # round-6 before the threshold compare: the engine-parity
         # convention of the whole embedding family (a raw-double
         # boundary compare is the one place two engines may disagree)

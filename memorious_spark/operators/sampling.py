@@ -40,18 +40,18 @@ from pyspark.sql import DataFrame, Window, functions as F
 __all__ = ["quota_sample", "sample_key", "hash_split", "split_bounds"]
 
 
-def sample_key(id_col: str) -> F.Column:
-    """The deterministic selection key: lowercase-hex md5 of the id's
-    decimal string form. Identical in Spark and DuckDB."""
-    return F.md5(F.col(id_col).cast("string"))
+def sample_key() -> F.Column:
+    """The deterministic selection key: lowercase-hex md5 of
+    ``doc_id``'s decimal string form. Identical in Spark and DuckDB."""
+    return F.md5(F.col("doc_id").cast("string"))
 
 
-def _num_key(id_col: str) -> F.Column:
+def _num_key() -> F.Column:
     # First 15 hex chars as a bigint (60 bits < long). Hex-string
     # lexicographic order == numeric prefix order (0-9a-f are
     # ASCII-ascending), so a numeric threshold prunes a prefix of
     # the md5-string order.
-    return F.conv(F.substring(sample_key(id_col), 1, 15), 16, 10).cast(
+    return F.conv(F.substring(sample_key(), 1, 15), 16, 10).cast(
         "long"
     )
 
@@ -76,7 +76,7 @@ def quota_sample(
     if quota <= 0:
         raise ValueError(f"quota must be positive, got {quota}")
     cols = docs.columns
-    key = _num_key("doc_id")
+    key = _num_key()
     max_key = float(16**15)
     # one map-side-combinable pass: group sizes; thresholds follow
     # from md5 uniformity (no sketch, no extra scan)
@@ -112,7 +112,7 @@ def quota_sample(
     )
     n_short = short.count()
 
-    w = Window.partitionBy(group_col).orderBy(sample_key("doc_id"), "doc_id")
+    w = Window.partitionBy(group_col).orderBy(sample_key(), "doc_id")
     kept_big = (
         cand.join(F.broadcast(short), group_col, "left_anti")
         .withColumn("_rn", F.row_number().over(w))
@@ -178,7 +178,7 @@ def hash_split(
     # comparison stays a plain string compare in any engine
     names = list(weights)
     bounds = split_bounds(weights)
-    key = F.substring(sample_key("doc_id"), 1, 15)
+    key = F.substring(sample_key(), 1, 15)
     expr = F.lit(names[-1])
     for name, b in zip(reversed(names[:-1]), reversed(bounds)):
         expr = F.when(key < F.lit(b), F.lit(name)).otherwise(expr)
@@ -225,7 +225,7 @@ def temperature_mix(
     if tau < 0:
         raise ValueError(f"tau must be >= 0, got {tau}")
     cols = docs.columns
-    key = _num_key("doc_id")
+    key = _num_key()
     max_key = float(16**15)
     n_total = docs.count()
     if n_total == 0:
@@ -286,7 +286,7 @@ def temperature_mix(
     )
     n_short = short.count()
 
-    w = Window.partitionBy(group_col).orderBy(sample_key("doc_id"), "doc_id")
+    w = Window.partitionBy(group_col).orderBy(sample_key(), "doc_id")
 
     def _with_copies(df):
         return (

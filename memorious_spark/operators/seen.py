@@ -102,20 +102,18 @@ def seen_entries(
     crawler: str,
     run_id: str,
     kind: str,
-    value: str | None = None,
     expire_days: int | None = None,
     now_ts: str = "2024-01-01 00:00:00",
 ) -> DataFrame:
     """Project rows into the seen-table schema (FIXTURES.md §4).
 
-    ``value`` names a column to keep as the tag payload (the reference
-    stores JSON values, memorious/logic/context.py:114-117; we keep
-    the normalized URL for link tags — optional at scale)."""
+    The tag payload ``value`` is the normalized URL ``url_norm`` (the
+    reference stores JSON values, memorious/logic/context.py:114-117)."""
     return df.select(
         F.col("url_hash").alias("key_hash"),
         F.lit(crawler).alias("crawler"),
         F.lit(run_id).alias("run_id"),
         F.lit(kind).alias("kind"),
-        (F.col(value) if value else F.lit(None).cast("string")).alias("value"),
+        F.col("url_norm").alias("value"),
         *expiry_stamp(now_ts, expire_days),
     )

@@ -83,12 +83,12 @@ _MASK = (1 << 64) - 1
 
 
 def _keys_by_shard(df: DataFrame, key: str, route, shards: int) -> DataFrame:
-    """Non-null ``key`` values as ``_h`` with their ``_shard`` id;
-    ``route(column name, shards)`` is the filter's routing expression."""
+    """Non-null ``key`` values as ``url_hash`` with their ``_shard`` id;
+    ``route(shards)`` is the filter's routing expression."""
     return (
-        df.select(F.col(key).alias("_h"))
-        .where(F.col("_h").isNotNull())
-        .withColumn("_shard", route("_h", shards))
+        df.select(F.col(key).alias("url_hash"))
+        .where(F.col("url_hash").isNotNull())
+        .withColumn("_shard", route(shards))
     )
 
 
@@ -110,7 +110,7 @@ def _cogroup_update(filt_df: DataFrame, keys: DataFrame, schema: str, apply):
             shard, row = right["_shard"].iloc[0], None
         else:
             shard, row = left["shard"].iloc[0], left.iloc[0]
-        hv = right["_h"].to_numpy(dtype=np.uint64, na_value=0)
+        hv = right["url_hash"].to_numpy(dtype=np.uint64, na_value=0)
         cols = apply(row, hv)
         return pd.DataFrame(
             {"shard": [int(shard)], **{c: [v] for c, v in cols.items()}}
@@ -129,21 +129,19 @@ def _cogroup_update(filt_df: DataFrame, keys: DataFrame, schema: str, apply):
     return df
 
 
-def _anti_join_maybe(
-    flagged: DataFrame, seen_keys: DataFrame, key: str
-) -> DataFrame:
+def _anti_join_maybe(flagged: DataFrame, seen_keys: DataFrame) -> DataFrame:
     """One-pass exactness backstop for a probabilistic probe: the
     probe's ``_maybe_seen`` flag folds into the anti-join CONDITION —
-    a row is dropped only when its key matches ``seen_keys`` AND the
+    a row is dropped only when its ``url_hash`` is in ``seen_keys`` AND the
     probe flagged it. ``_maybe_seen = false`` rows never match, so
     they are kept without ever entering the hash lookup. (A
     split-and-union of flagged/unflagged rows would run the whole
     cogrouped probe subtree twice.)"""
-    sk = seen_keys.select(F.col(key).alias("_seen_key"))
+    sk = seen_keys.select(F.col("url_hash").alias("_seen_key"))
     return (
         flagged.join(
             sk.hint("shuffle_hash"),
-            (F.col(key) == F.col("_seen_key")) & F.col("_maybe_seen"),
+            (F.col("url_hash") == F.col("_seen_key")) & F.col("_maybe_seen"),
             "left_anti",
         )
         .drop("_maybe_seen")
@@ -155,10 +153,9 @@ def _probe_anti_join(
     seen: DataFrame | None,
     filt_df: DataFrame,
     shard_col: Column,
-    key: str,
     contains,
 ) -> DataFrame:
-    """Rows of ``candidates`` whose ``key`` is not in ``seen``: probe
+    """Rows of ``candidates`` whose ``url_hash`` is not in ``seen``: probe
     each shard's candidates against that shard's filter row in its own
     task (``contains(row, hv)`` → bool array), then send the flagged
     rows through the exact anti-join. NULL-key rows probe as not-seen
@@ -179,7 +176,7 @@ def _probe_anti_join(
         if right.empty:
             left["_maybe_seen"] = False
             return left
-        h = left[key]
+        h = left["url_hash"]
         hv = h.to_numpy(dtype=np.uint64, na_value=0)
         left["_maybe_seen"] = contains(right.iloc[0], hv) & h.notna().to_numpy()
         return left
@@ -190,15 +187,17 @@ def _probe_anti_join(
         .applyInPandas(probe, out_schema)
     )
     return _anti_join_maybe(
-        probed, seen.select(key).distinct(), key
+        probed, seen.select("url_hash").distinct()
     ).drop("_shard")
 
 
 # ---- sharded BLOOM (append-only) ---------------------------------------
 
 
-def _bloom_params(expected: int, fpp: float) -> tuple[int, int]:
-    m = max(1024, int(-expected * math.log(fpp) / (math.log(2) ** 2)))
+def _bloom_params(expected: int) -> tuple[int, int]:
+    """Bits and probes for ``expected`` keys at a 1% false-positive
+    rate."""
+    m = max(1024, int(-expected * math.log(0.01) / (math.log(2) ** 2)))
     k = max(1, round(m / expected * math.log(2)))
     return m, min(k, 8)
 
@@ -234,8 +233,8 @@ class ShardedBloom:
     k: int  # probes per key
 
 
-def _bloom_shard(key: str, shards: int) -> Column:
-    return F.pmod(F.col(key), F.lit(shards)).cast("int")
+def _bloom_shard(shards: int) -> Column:
+    return F.pmod(F.col("url_hash"), F.lit(shards)).cast("int")
 
 
 def build_sharded_bloom(
@@ -254,7 +253,7 @@ def build_sharded_bloom(
         shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if shards < 1:
         raise ValueError(f"shards must be >= 1, got {shards}")
-    m, k = _bloom_params(max(1, expected // shards), 0.01)
+    m, k = _bloom_params(max(1, expected // shards))
     empty = ShardedBloom(
         df=spark.createDataFrame([], _BLOOM_SCHEMA), shards=shards, m=m, k=k
     )
@@ -298,8 +297,7 @@ def dedup_new_sharded(
         return hit
 
     return _probe_anti_join(
-        candidates, seen, bloom.df, _bloom_shard("url_hash", bloom.shards),
-        "url_hash", contains,
+        candidates, seen, bloom.df, _bloom_shard(bloom.shards), contains,
     )
 
 
@@ -318,8 +316,8 @@ class ShardedCuckoo:
     nb: int  # buckets per shard table
 
 
-def _cuckoo_shard(key: str, shards: int) -> Column:
-    return F.expr(f"int({key} & {shards - 1})")
+def _cuckoo_shard(shards: int) -> Column:
+    return F.expr(f"int(url_hash & {shards - 1})")
 
 
 def _cuckoo_update(filt: ShardedCuckoo, df: DataFrame, key: str, op):
@@ -401,6 +399,5 @@ def dedup_new_sharded_cuckoo(
         return _contains(t, hv)
 
     return _probe_anti_join(
-        candidates, seen, filt.df, _cuckoo_shard("url_hash", filt.shards),
-        "url_hash", contains,
+        candidates, seen, filt.df, _cuckoo_shard(filt.shards), contains,
     )

@@ -342,7 +342,7 @@ class CrawlRunner:
                     n_selected = frontier_rows
                     lineage = [
                         dict(round=rnd, stage="fetch_input", partition_id=i, rows=n)
-                        for i, n in enumerate(store.partition_rows("frontier", rnd))
+                        for i, n in enumerate(store.partition_rows(rnd))
                     ]
                 else:
                     # politeness path: the budget-selected count is data-
@@ -523,12 +523,11 @@ class CrawlRunner:
                 # seen append: emitted links + redirect-source tags
                 seen_rows = seen_entries(
                     new_links, cfg.name, store.dir.name, "link",
-                    value="url_norm", expire_days=cfg.expire_days, now_ts=now_ts,
+                    expire_days=cfg.expire_days, now_ts=now_ts,
                 ).unionByName(
                     seen_entries(
                         redirect_tags, cfg.name, store.dir.name, "redirect",
-                        value="url_norm", expire_days=cfg.expire_days,
-                        now_ts=now_ts,
+                        expire_days=cfg.expire_days, now_ts=now_ts,
                     )
                 )
                 # wave 3: frontier + seen (+ cache/inc-tag appends in

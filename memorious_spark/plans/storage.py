@@ -68,15 +68,15 @@ class RunStore:
             pa.Table.from_pylist(rows), path / "part-00000.parquet"
         )
 
-    def partition_rows(self, table: str, rnd: int) -> list[int]:
-        """Per-partition row counts of a checkpointed round table, read
+    def partition_rows(self, rnd: int) -> list[int]:
+        """Per-partition row counts of a checkpointed round frontier, read
         from the parquet FOOTERS (driver-local, microseconds) — each
         written file is one partition of the job that produced it, so
         this is per-partition lineage with zero Spark jobs. (Iceberg
         manifests carry the same per-file row counts.)"""
         import pyarrow.parquet as pq
 
-        p = Path(self.round_path(table, rnd))
+        p = Path(self.round_path("frontier", rnd))
         if not p.is_dir():
             return []
         return [

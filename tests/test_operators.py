@@ -640,10 +640,20 @@ def test_checks(spark):
         checks.assert_valid(df, checks.is_numeric(F.col("a")), "numeric-a")
 
 
+def _nearest_code_reference(vecs, book):
+    """Explicit Σ(x−c)² argmin over ``book``'s vectors, first
+    occurrence on ties — the reference the numpy kernel must match."""
+    out = []
+    for x in vecs:
+        d = [sum((a - b) ** 2 for a, b in zip(x, c)) for c in book]
+        out.append(d.index(min(d)))
+    return out
+
+
 def test_ivf_assignment_paths_agree(spark):
-    """Centroids-as-data parity: the Arrow-UDF argmin must assign every
-    vector to the same cell as the literal-Column path (same lowest-cid
-    tie rule)."""
+    """The nearest_codes kernel (‖c‖² − 2x·c argmin) assigns every
+    vector to the same cell as an explicit Σ(x−c)² argmin with the
+    lowest-cid tie rule."""
     import math
 
     rows = [
@@ -652,28 +662,22 @@ def test_ivf_assignment_paths_agree(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = similarity.ivf_seed_centroids(emb, n_centroids=4, spacing=3)
-    lit = {
-        r["vec_id"]: r["_b"]
-        for r in emb.select(
-            "vec_id",
-            similarity.ivf_assign_col(F.col("embedding"), cents).alias("_b"),
-        ).collect()
-    }
-    udf = {
-        r["vec_id"]: r["_b"]
-        for r in emb.select(
-            "vec_id",
-            similarity.ivf_assign_udf(cents)(F.col("embedding")).alias("_b"),
-        ).collect()
-    }
-    assert lit == udf
+    got = emb.select(
+        "vec_id",
+        "embedding",
+        similarity.nearest_codes(F.col("embedding"), [cents])[0].alias("_b"),
+    ).orderBy("vec_id").collect()
+    want = _nearest_code_reference(
+        [list(r["embedding"]) for r in got], [c for _cid, c in cents]
+    )
+    assert [r["_b"] for r in got] == want
 
 
 def test_pq_encode_hand_math_and_paths_agree(spark):
     """PQ encode on a hand-checkable fixture (dim 4, m=2, 2 codes):
     codes = per-subspace argmin vs the strided seed slices, lowest
-    code wins ties; the literal Column path and the numpy UDF path
-    produce identical code arrays."""
+    code wins ties; the kernel agrees with the explicit Σ(x−c)²
+    reference per subspace."""
     from pyspark.sql import functions as F
 
     # seeds (spacing=1): vec 0 = [0,0, 10,10], vec 1 = [4,4, 0,0]
@@ -688,18 +692,18 @@ def test_pq_encode_hand_math_and_paths_agree(spark):
     books = similarity.pq_seed_codebooks(emb, m=2, n_codes=2, spacing=1)
     assert books[0] == [(0, [0.0, 0.0]), (1, [4.0, 4.0])]
     got = {
-        r["vec_id"]: list(r["pq_code"])
-        for r in similarity.pq_encode(emb, books).collect()
-    }
-    assert got == {0: [0, 0], 1: [1, 1], 2: [1, 0], 3: [0, 1], 4: [0, 0]}
-    via_udf = {
         r["vec_id"]: list(r["c"])
         for r in emb.select(
             "vec_id",
-            similarity.pq_encode_udf(books)(F.col("embedding")).alias("c"),
+            similarity.nearest_codes(F.col("embedding"), books).alias("c"),
         ).collect()
     }
-    assert via_udf == got
+    assert got == {0: [0, 0], 1: [1, 1], 2: [1, 0], 3: [0, 1], 4: [0, 0]}
+    for j, book in enumerate(books):
+        want = _nearest_code_reference(
+            [v[2 * j:2 * j + 2] for _i, v in rows], [c for _c, c in book]
+        )
+        assert [got[i][j] for i, _v in rows] == want
 
 
 def test_knn_pq_full_refine_equals_brute_force(spark):
@@ -821,11 +825,9 @@ def test_knn_ivfpq_duplicate_seed_rows_fail_loud(spark):
         )
 
 
-def test_ivf_k256_beyond_literal_codegen(spark):
-    """K=256 — far past the literal-expression codegen ceiling
-    (_IVF_LITERAL_MAX_K=16): knn_ivf auto-routes assignment through the
-    vectorized numpy path; probing ALL 256 cells is exact, so the
-    result must equal brute force over the sf0.01 embeddings table."""
+def test_ivf_k256_full_probe_is_exact(spark):
+    """K=256 cells: probing ALL of them is exact, so the result must
+    equal brute force over the sf0.01 embeddings table."""
     import os
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.01")
@@ -1409,26 +1411,29 @@ def test_semantic_dedup_fixture_semantics(spark):
     }
 
 
-def test_semantic_dedup_assignment_paths_agree(spark, monkeypatch):
-    """The literal-Column and Arrow-UDF centroid assignments must
-    produce the SAME manifest for the same centroids (K=18 is past
-    the literal ceiling; forcing the ceiling up runs the literal
-    path on identical inputs)."""
-    from memorious_spark.operators import similarity
+def test_semantic_dedup_assignment_paths_agree(spark):
+    """semantic_dedup's cell is each vector's nearest centroid by an
+    explicit Σ(x−c)² argmin with the lowest-cid tie rule (K=18 seed
+    centroids), and the manifest drops something."""
     from memorious_spark.operators.dedup import semantic_dedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = similarity.ivf_seed_centroids(emb, 18, 23)
-
-    udf_rows = sorted(
-        map(tuple, semantic_dedup(emb, threshold=0.4, centroids=cents).collect())
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    got = sorted(
+        map(
+            tuple,
+            semantic_dedup(
+                emb, threshold=0.4, n_centroids=18, spacing=23
+            ).collect(),
+        )
     )
-    monkeypatch.setattr(similarity, "_IVF_LITERAL_MAX_K", 99)
-    lit_rows = sorted(
-        map(tuple, semantic_dedup(emb, threshold=0.4, centroids=cents).collect())
+    ids = [r[0] for r in got]
+    want = _nearest_code_reference(
+        [vecs[i] for i in ids], [c for _cid, c in cents]
     )
-    assert udf_rows == lit_rows
-    assert any(r[3] == "semantic" for r in udf_rows)  # non-vacuous
+    assert [r[1] for r in got] == want
+    assert any(r[3] == "semantic" for r in got)  # non-vacuous
 
 
 def test_hash_split_deterministic_and_stable(spark):

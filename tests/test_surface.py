@@ -21,10 +21,15 @@ The same holds one level down, for parameters: a defaulted parameter
 of a reached function or method that only calls under ``tests/`` ever
 pass is a mode nothing else selects. The pinned ``TEST_ONLY_PARAMS``
 are the threshold hooks, stat sinks and fixture shapes tests need;
-any other test-only parameter fails the scan. A defaulted parameter
-that no call passes at all — entry files, engine and tests together —
-is a constant spelled as an option; only the two deployment and
-memorious-parity hooks in ``UNPASSED_BY_DESIGN`` may stay.
+any other test-only parameter fails the scan. A parameter that every
+call — entry files, engine and tests together — binds to the same
+literal (an omitted one binds its default) is a constant spelled as an
+option, unless an entry-file call binds it as a contract argument;
+only the hooks in ``ONE_VALUE_BY_DESIGN`` may stay.
+
+And for statements: the same run of consecutive statements spanning 6
+or more lines may not appear twice in the engine; a copied block is
+one helper that every site calls.
 """
 
 from __future__ import annotations
@@ -77,9 +82,8 @@ TEST_ONLY_PARAMS = {
     # fixture generators: hot-host corpora for the skew tests
     ("build_corpus", "hot_mod"),
     ("seed_urls", "hot_mod"),
-    # fixed inputs for hand-derived expectations, and an oversized
+    # a fixed input for hand-derived expectations, and an oversized
     # unit that trips pagerank's fixed-point overflow check
-    ("semantic_dedup", "centroids"),
     ("temperature_mix", "total"),
     ("pagerank", "unit"),
     # operator variants a test checks beside the contract's default
@@ -90,12 +94,15 @@ TEST_ONLY_PARAMS = {
     ("main", "argv"),
 }
 
-# (function or Class.method, parameter) pairs no call passes
-UNPASSED_BY_DESIGN = {
+# (function or Class.method, parameter) pairs every call binds to one
+# value
+ONE_VALUE_BY_DESIGN = {
     # deployment path: production swaps in the full PSL file
     ("load_psl", "path"),
     # memorious parse_date/iso_date helper surface (SURVEY.md)
     ("py_iso_date", "format_hint"),
+    # crawlbench's TracingStore overrides it with this signature
+    ("RunStore.write_round_local", "table"),
 }
 
 
@@ -221,39 +228,46 @@ def _callees() -> dict[str, list[tuple[str, ast.AST, bool, bool]]]:
     return out
 
 
-def _defaulted(fn: ast.AST) -> list[str]:
+def _signature(fn: ast.AST) -> dict[str, ast.AST | None]:
+    """Parameter name → its default expression (None when required)."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    names = [p.arg for p in pos[len(pos) - len(a.defaults):]]
-    return names + [
-        p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
-    ]
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    return {
+        **{p.arg: d for p, d in zip(pos, defaults)},
+        **{p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults)},
+    }
 
 
-def _passed(call: ast.Call, fn: ast.AST, skip: bool, star_passes_all: bool):
-    """Parameter names ``call`` binds, by position or keyword. A
-    ``*args``/``**kwargs`` splat binds every parameter it could reach
-    when ``star_passes_all`` and none otherwise."""
+def _defaulted(fn: ast.AST) -> list[str]:
+    return [p for p, d in _signature(fn).items() if d is not None]
+
+
+def _bindings(call: ast.Call, fn: ast.AST, skip: bool, star_passes_all: bool):
+    """Parameter → the argument ``call`` binds it to, by position or
+    keyword. A ``*args``/``**kwargs`` splat binds every parameter it
+    could reach to None when ``star_passes_all`` and none otherwise."""
     a = fn.args
     pos = [p.arg for p in a.posonlyargs + a.args][int(skip):]
-    out: set[str] = set()
+    out: dict[str, ast.AST | None] = {}
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
             if star_passes_all:
-                out |= set(pos[i:])
+                out |= dict.fromkeys(pos[i:])
             break
         if i < len(pos):
-            out.add(pos[i])
+            out[pos[i]] = arg
     for kw in call.keywords:
         if kw.arg is not None:
-            out.add(kw.arg)
+            out[kw.arg] = kw.value
         elif star_passes_all:
-            out |= set(pos) | {p.arg for p in a.kwonlyargs}
+            out |= dict.fromkeys(pos + [p.arg for p in a.kwonlyargs])
     return out
 
 
-def _params_passed(paths, callees, star_passes_all: bool) -> set[tuple]:
-    used: set[tuple[str, str]] = set()
+def _calls(paths, callees):
+    """``(path, call, callee)`` for every call in ``paths`` whose name
+    matches a reached engine function, method or constructor."""
     for path in paths:
         for n in ast.walk(_parse(path)):
             if not isinstance(n, ast.Call):
@@ -265,14 +279,17 @@ def _params_passed(paths, callees, star_passes_all: bool) -> set[tuple]:
                 name, via_attr = f.attr, True
             else:
                 continue
-            for label, fn, skip, method_only in callees.get(name, ()):
-                if method_only and not via_attr:
-                    continue
-                used |= {
-                    (label, p)
-                    for p in _passed(n, fn, skip, star_passes_all)
-                }
-    return used
+            for callee in callees.get(name, ()):
+                if via_attr or not callee[3]:
+                    yield path, n, callee
+
+
+def _params_passed(paths, callees, star_passes_all: bool) -> set[tuple]:
+    return {
+        (label, p)
+        for _, call, (label, fn, skip, _) in _calls(paths, callees)
+        for p in _bindings(call, fn, skip, star_passes_all)
+    }
 
 
 def _all_defaulted(callees) -> set[tuple[str, str]]:
@@ -307,22 +324,90 @@ def test_no_unpinned_test_only_parameters():
     )
 
 
-def params_no_call_passes() -> set[tuple[str, str]]:
+def _literal(node: ast.AST) -> str | None:
+    """Source text of a literal argument, None for anything else."""
+    try:
+        ast.literal_eval(node)
+    except ValueError:
+        return None
+    return ast.unparse(node)
+
+
+def params_bound_to_one_value() -> set[tuple[str, str]]:
+    """Parameters of reached engine functions and methods that every
+    call (entry files, engine and tests together) binds to the same
+    literal. A call that leaves a parameter unset binds its default; a
+    defaulted parameter no call reaches is bound to its default; any
+    argument other than a literal, or a splat, binds None (a value
+    that varies). A binding in an entry file is a contract argument
+    and exempts the parameter."""
     callees = _callees()
-    passed = _params_passed(
-        {*_entry_files(), *ENGINE.rglob("*.py"),
-         *(ROOT / "tests").rglob("*.py")},
-        callees, True,
-    )
-    return _all_defaulted(callees) - passed
+    entry_files = set(_entry_files())
+    values: dict[tuple[str, str], set[str | None]] = {}
+    contract: set[tuple[str, str]] = set()
+    paths = {*entry_files, *ENGINE.rglob("*.py"), *(ROOT / "tests").rglob("*.py")}
+    for path, call, (label, fn, skip, _) in _calls(paths, callees):
+        bound = _bindings(call, fn, skip, True)
+        if path in entry_files:
+            contract |= {(label, p) for p in bound}
+        for p, default in _signature(fn).items():
+            if p in bound or default is not None:
+                arg = bound.get(p, default)
+                values.setdefault((label, p), set()).add(arg and _literal(arg))
+    for pair in _all_defaulted(callees):
+        values.setdefault(pair, {"default"})
+    return {
+        pair for pair, vals in values.items()
+        if len(vals) == 1 and None not in vals and pair not in contract
+    }
 
 
-def test_no_unpinned_parameters_no_call_passes():
-    found = params_no_call_passes()
-    assert found - UNPASSED_BY_DESIGN == set(), (
-        "defaulted parameters no call passes; write the default in "
+def test_no_unpinned_one_value_parameters():
+    found = params_bound_to_one_value()
+    assert found - ONE_VALUE_BY_DESIGN == set(), (
+        "parameters every call binds to one value; write the value in "
         "where it is used and delete the parameter"
     )
-    assert UNPASSED_BY_DESIGN - found == set(), (
-        "pinned parameters now passed or gone; unpin them"
+    assert ONE_VALUE_BY_DESIGN - found == set(), (
+        "pinned parameters now take several values or are gone; unpin them"
+    )
+
+
+def _statement_lists(tree: ast.AST):
+    for n in ast.walk(tree):
+        for field in ("body", "orelse", "finalbody"):
+            stmts = getattr(n, field, None)
+            if isinstance(stmts, list) and stmts and isinstance(
+                stmts[0], ast.stmt
+            ):
+                yield stmts
+
+
+def repeated_statement_blocks() -> set[tuple[str, str]]:
+    """Pairs of ``file:line`` where the same run of consecutive
+    statements (compared by ``ast.unparse``) spanning 6 or more source
+    lines starts twice in ``memorious_spark/``."""
+    seen: dict[tuple[str, ...], list[str]] = {}
+    for path in sorted(ENGINE.rglob("*.py")):
+        rel = path.relative_to(ENGINE).as_posix()
+        for stmts in _statement_lists(_parse(path)):
+            src = [ast.unparse(s) for s in stmts]
+            for i, first in enumerate(stmts):
+                for j in range(i, len(stmts)):
+                    if stmts[j].end_lineno - first.lineno >= 5:
+                        seen.setdefault(tuple(src[i:j + 1]), []).append(
+                            f"{rel}:{first.lineno}"
+                        )
+    return {
+        (a, b)
+        for where in seen.values()
+        for k, a in enumerate(where)
+        for b in where[k + 1:]
+        if a != b
+    }
+
+
+def test_no_repeated_statement_blocks():
+    assert repeated_statement_blocks() == set(), (
+        "the same statements appear twice; fold them into one helper"
     )

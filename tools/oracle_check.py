@@ -4,11 +4,17 @@ count, sorted column names, and a value hash of the sorted tuples.
 
 Usage: python tools/oracle_check.py [query ...]   (default: all with an
 oracle entry; env SPARK_GRAFT_SF_DIR_SMALL overrides /root/testdata/sf0.01)
+
+Several queries write scratch run dirs and archives under
+``tempfile.mkdtemp`` (prefixes in ``TEMP_PREFIXES``); the ones a query
+creates are deleted once its rows are collected.
 """
 
 import hashlib
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -16,6 +22,17 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+TEMP_PREFIXES = ("msrun_", "tags_", "dbq_", "warc_")
+
+
+def temp_dirs() -> set[str]:
+    tmp = tempfile.gettempdir()
+    return {
+        os.path.join(tmp, n)
+        for n in os.listdir(tmp)
+        if n.startswith(TEMP_PREFIXES)
+    }
 
 
 def norm_cell(v):
@@ -66,13 +83,15 @@ def main():
             )
     failed = []
     for name in names:
-        if name not in oracles:
-            print(f"{name}: NO ORACLE (rows-only)")
-            df = qs[name](spark, sf_dir)
-            print(f"  spark rows={df.count()}")
-            continue
+        before = temp_dirs()
         df = qs[name](spark, sf_dir)
         srows = [tuple(r) for r in df.collect()]
+        for d in temp_dirs() - before:
+            shutil.rmtree(d, ignore_errors=True)
+        if name not in oracles:
+            print(f"{name}: NO ORACLE (rows-only)")
+            print(f"  spark rows={len(srows)}")
+            continue
         scols = df.columns
         ores = con.execute(oracles[name]).fetchall()
         ocols = [d[0] for d in con.description]
