@@ -238,7 +238,8 @@ def _cmd_flush(args) -> int:
 def _cmd_flush_tags(args) -> int:
     """Reference parity (cli.py:159-164): tags only — the http cache,
     incremental markers and sequence state are tag families in the
-    reference's model; persistent SINK tables (db_*/ftm_*) survive."""
+    reference's model; persistent SINK tables survive (db_*, and the
+    ftm_* tables earlier versions wrote)."""
     shared = Path(args.runs_dir) / args.crawler / "_shared"
     dropped = []
     if shared.is_dir():

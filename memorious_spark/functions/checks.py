@@ -1,17 +1,17 @@
 """Data-quality predicates — the ContextCheck validators of
 memorious/logic/check.py:17-72 as Column expressions.
 
-The reference logs-or-raises per row; at scale the equivalent is
-counting violations (one aggregate) and failing the job when strict.
+The reference logs-or-raises per row; here each validator is a boolean
+Column, so a caller filters or counts violations in one pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 __all__ = [
-    "is_not_empty", "is_numeric", "is_integer", "match_date",
-    "match_regexp", "has_length", "must_contain", "assert_valid",
+    "is_not_empty", "is_integer", "match_regexp", "has_length",
+    "must_contain",
 ]
 
 
@@ -19,16 +19,8 @@ def is_not_empty(c: Column) -> Column:
     return c.isNotNull() & (F.length(F.trim(c.cast("string"))) > 0)
 
 
-def is_numeric(c: Column) -> Column:
-    return c.cast("string").rlike(r"^[0-9]+(\.[0-9]+)?$")
-
-
 def is_integer(c: Column) -> Column:
     return c.cast("string").rlike(r"^-?[0-9]+$")
-
-
-def match_date(c: Column) -> Column:
-    return F.to_date(c.cast("string")).isNotNull()
 
 
 def match_regexp(c: Column, pattern: str) -> Column:
@@ -41,11 +33,3 @@ def has_length(c: Column, n: int) -> Column:
 
 def must_contain(c: Column, needle: str) -> Column:
     return c.cast("string").contains(needle)
-
-
-def assert_valid(df: DataFrame, predicate: Column, name: str = "check") -> None:
-    """Strict mode: one aggregate over the violation count; raises like
-    the reference's strict ContextCheck (check.py:24-28)."""
-    bad = df.filter(~predicate).count()
-    if bad:
-        raise ValueError(f"{name}: {bad} rows failed validation")

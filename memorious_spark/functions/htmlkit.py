@@ -44,7 +44,6 @@ __all__ = [
     "extract_links",
     "extract_meta",
     "extract_properties",
-    "view_form_fields",
     "URL_TAGS",
     "VOID_ELEMENTS",
 ]
@@ -389,27 +388,6 @@ def extract_properties(
                 values.append(value)
         if values:
             out[key] = values
-    return out
-
-
-def view_form_fields(
-    root: Element | None, data: dict | None = None
-) -> dict[str, str]:
-    """The DOM half of ``ViewForm`` (memorious/helpers/asp.py:1-19 —
-    the ASP VIEWSTATE scraping helper): harvest every named ``<input>``
-    into ``{name: value}`` ('' when the value attribute is absent),
-    seeded with ``data`` overrides exactly like the reference's
-    constructor. The other half — POSTing the form back in a live
-    session — stays out of scope in the corpus model; the harvested
-    dict is what a crawler stores/forwards."""
-    out = dict(data or {})
-    if root is None:
-        return out
-    for inp in _findall(root, ".//input"):
-        name = inp.get("name")
-        if name is None:
-            continue
-        out[name] = inp.get("value", "")
     return out
 
 

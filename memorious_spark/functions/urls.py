@@ -35,11 +35,9 @@ __all__ = [
     "trap_signals",
     "is_trap_col",
     "registrable_domain_col",
-    "py_registrable_domain",
     "PSLRules",
     "load_psl",
     "canon_col",
-    "py_canon",
     "TWO_LEVEL_SUFFIXES",
     "TRACKING_PARAMS",
 ]
@@ -366,64 +364,6 @@ def registrable_domain_col(
         F.when(is_ip | (n <= ps), host)
         .otherwise(F.concat_ws(".", F.slice(parts, n - ps, ps + 1)))
     )
-
-
-def py_registrable_domain(
-    host: str,
-    rules: PSLRules | None = None,
-    include_private: bool = True,
-) -> str:
-    """Pure-Python mirror of :func:`registrable_domain_col` (oracle/
-    test face) — identical precedence: exception > longest rule > the
-    implicit ``*``."""
-    import re
-
-    rules = rules or _default_psl(include_private)
-    if re.fullmatch(r"\d+\.\d+\.\d+\.\d+", host):
-        return host
-    parts = host.split(".")
-    n = len(parts)
-    ps = None
-    for k in sorted(rules.exc, reverse=True):
-        if n >= k and ".".join(parts[-k:]) in rules.exc[k]:
-            ps = k - 1
-            break
-    if ps is None:
-        for k in range(rules.max_labels, 1, -1):
-            if k in rules.exact and n >= k and ".".join(parts[-k:]) in rules.exact[k]:
-                ps = k
-                break
-            if (
-                (k - 1) in rules.wild and n >= k
-                and ".".join(parts[-(k - 1):]) in rules.wild[k - 1]
-            ):
-                ps = k
-                break
-    if ps is None:
-        ps = 1
-    if n <= ps:
-        return host
-    return ".".join(parts[-(ps + 1):])
-
-
-def py_canon(url: str) -> str | None:
-    """Pure-Python mirror of :func:`canon_col` (oracle/test face)."""
-    base = py_norm(url)
-    if base is None:
-        return None
-    try:
-        query = urlsplit(url).query
-    except ValueError:
-        return None
-    path_part = base.split("?", 1)[0]
-    kept = sorted(
-        p
-        for p in query.split("&")
-        if p != ""
-        and not p.startswith("utm_")
-        and p.split("=", 1)[0] not in TRACKING_PARAMS
-    )
-    return path_part + ("?" + "&".join(kept) if kept else "")
 
 
 def canon_col(url: Column) -> Column:

@@ -37,7 +37,6 @@ __all__ = [
     "directory_sink",
     "merge_upsert",
     "db_sink_run",
-    "ftm_store",
     "run_aggregator",
 ]
 
@@ -201,33 +200,6 @@ def db_sink_run(
         if isinstance(child_unique, str):
             child_unique = [child_unique]
         _merge_into(f"{table}_{suffix}", child_batch, child_unique)
-
-
-def ftm_store(
-    spark: SparkSession,
-    store,
-    entities: DataFrame,
-    dataset: str,
-    now_ts: str = "2024-01-01 00:00:00",
-) -> DataFrame:
-    """``ftm_store`` (memorious/operations/ftm.py:22-34): bulk-write
-    FollowTheMoney entities into the crawler's ftm dataset table.
-
-    Entities carry (id, schema, properties[, fragment]); ftmstore's
-    ``bulk.put(entity, fragment)`` upserts per (id, fragment) — the
-    same MERGE shape as the db sink, into the crawler-scoped
-    ``ftm_<dataset>`` table. Returns the merged table."""
-    if "fragment" not in entities.columns:
-        entities = entities.withColumn("fragment", F.lit(None).cast("string"))
-    # null fragments normalize to '' — SQL null-equality would keep
-    # re-inserting the default fragment on every run
-    entities = entities.withColumn(
-        "fragment", F.coalesce(F.col("fragment"), F.lit(""))
-    )
-    keys = ["id", "fragment"]
-    # O(batch) delta append; the (id, fragment) MERGE resolves at read
-    store.upsert_shared(spark, f"ftm_{dataset}", entities, keys, now_ts)
-    return store.read_shared(spark, f"ftm_{dataset}")
 
 
 def run_aggregator(

@@ -1,8 +1,8 @@
 """The tag KV surface: set_tag / get_tag / check_tag as batch joins.
 
 memorious tags are a SQL KV store keyed ``make_key(crawler, "tag",
-key)`` with JSON values and per-crawler expiry
-(memorious/logic/context.py:114-125; storage memorious/core.py:40-43).
+key)`` with JSON values (memorious/logic/context.py:114-125; storage
+memorious/core.py:40-43).
 The engine's equivalent is a crawler-scoped ``tags`` table in the
 RunStore's shared area:
 
@@ -14,19 +14,20 @@ RunStore's shared area:
 - ``check_tags``  — batch ``check_tag``: boolean membership column via
   a left join on the key hash (the anti-join of the seen set applies
   when used as a filter — see operators.seen).
-- ``get_tags``    — batch ``get_tag``: attach the latest unexpired
-  value per key.
+- ``get_tags``    — batch ``get_tag``: attach the latest value per
+  key.
 
-All keyed by ``xxhash64(crawler:kind:key)`` so lookups co-partition
-with a bucketed tags table at scale; expiry reproduces the
-``expire × 84600`` reference quirk via operators.seen.
+All keyed by ``xxhash64(crawler:kind:key)`` on the input's ``key``
+column, so lookups co-partition with a bucketed tags table at scale.
+Tags do not expire: ``set_tags`` writes ``expires_at`` NULL and the
+readers ignore it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from memorious_spark.operators.seen import expiry_stamp, unexpired
+from memorious_spark.operators.seen import expiry_stamp
 
 __all__ = ["TAGS_SCHEMA", "tag_key_hash", "set_tags", "check_tags", "get_tags"]
 
@@ -49,35 +50,33 @@ def set_tags(
     df: DataFrame,
     crawler: str,
     kind: str,
-    key_col: str = "key",
     value_col: str | None = None,
     run_id: str = "run",
-    expire_days: int | None = None,
     now_ts: str = "2024-01-01 00:00:00",
 ) -> None:
-    """Batch set_tag (context.py:114-117): one tags row per input row."""
+    """Batch set_tag (context.py:114-117): one tags row per input row,
+    stamped ``now_ts``."""
     rows = df.select(
-        tag_key_hash(crawler, kind, F.col(key_col)).alias("key_hash"),
+        tag_key_hash(crawler, kind, F.col("key")).alias("key_hash"),
         F.lit(crawler).alias("crawler"),
         F.lit(kind).alias("kind"),
-        F.col(key_col).cast("string").alias("key"),
+        F.col("key").cast("string").alias("key"),
         (F.col(value_col).cast("string") if value_col else F.lit(None).cast("string")).alias("value"),
         F.lit(run_id).alias("run_id"),
-        *expiry_stamp(now_ts, expire_days),
+        *expiry_stamp(now_ts, None),
     )
     store.append_shared(TAGS_TABLE, rows)
 
 
 def _live(
-    spark: SparkSession, store, crawler: str, kind: str, now_ts: str | None
+    spark: SparkSession, store, crawler: str, kind: str
 ) -> DataFrame | None:
     tags = store.read_shared(spark, TAGS_TABLE, TAGS_SCHEMA)
     if tags is None:
         return None
-    tags = tags.filter(
+    return tags.filter(
         (F.col("crawler") == crawler) & (F.col("kind") == kind)
     )
-    return unexpired(tags, now_ts)
 
 
 def check_tags(
@@ -86,17 +85,15 @@ def check_tags(
     df: DataFrame,
     crawler: str,
     kind: str,
-    key_col: str = "key",
-    now_ts: str | None = None,
 ) -> DataFrame:
     """Batch check_tag (context.py:122-125): boolean membership as
     ``tagged``."""
-    live = _live(spark, store, crawler, kind, now_ts)
+    live = _live(spark, store, crawler, kind)
     if live is None:
         return df.withColumn("tagged", F.lit(False))
     keys = live.select("key_hash").distinct().withColumn("_hit", F.lit(True))
     joined = df.withColumn(
-        "_kh", tag_key_hash(crawler, kind, F.col(key_col))
+        "_kh", tag_key_hash(crawler, kind, F.col("key"))
     ).join(keys.hint("shuffle_hash"), F.col("_kh") == F.col("key_hash"), "left")
     return joined.withColumn(
         "tagged", F.coalesce(F.col("_hit"), F.lit(False))
@@ -112,8 +109,8 @@ def get_tags(
 ) -> DataFrame:
     """Batch get_tag (context.py:118-121): latest value per ``key`` as
     ``tag_value`` (newest created_at/run_id wins, like the KV
-    overwrite). No clock is passed, so expired tags still count."""
-    live = _live(spark, store, crawler, kind, None)
+    overwrite)."""
+    live = _live(spark, store, crawler, kind)
     if live is None:
         return df.withColumn("tag_value", F.lit(None).cast("string"))
     w = Window.partitionBy("key_hash").orderBy(

@@ -134,7 +134,7 @@ class RunStore:
         that erased its own batch). Iceberg gives this for free via
         snapshot ids; pinned file lists are the parquet-dir analogue.
 
-        Tables written through :meth:`upsert_shared` (db_*/ftm_* sink
+        Tables written through :meth:`upsert_shared` (the db_* sink
         tables) resolve their delta stack transparently here — every
         consumer sees the merged view."""
         p = self.shared_path(table)
@@ -152,7 +152,7 @@ class RunStore:
         df.write.mode("append").parquet(str(self.shared_path(table)))
 
     # ---- upsert-shared: append + minor-compact (LSM over parquet) ---
-    # The db_*/ftm_* sink tables used to be rewritten whole per run
+    # The db_* sink tables used to be rewritten whole per run
     # (read → merge → swap): correct, but O(table) per crawl — at a
     # 10^9-row sink that full rewrite dominates the run. This scheme
     # makes a run's sink cost O(batch): each run APPENDS one stamped
@@ -324,7 +324,7 @@ class RunStore:
         """The reference's ``crawler.flush()`` (memorious/logic/
         crawler.py:89-96): drop EVERY crawler-scoped shared table —
         tags, http cache, incremental markers, sequence once-only
-        state, db/ftm sink tables — so the next run behaves like the
+        state, db sink tables — so the next run behaves like the
         crawler's very first (everything re-fetches and re-stores).
         Per-run round data (frontier/seen/results under run dirs) is
         untouched: the reference flushes its Redis/SQL state, not its

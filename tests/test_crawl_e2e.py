@@ -263,10 +263,12 @@ def test_failed_round_releases_its_caches(
     jsc = spark.sparkContext._jsc
     store = RunStore(tmp_path_factory.mktemp("runs_fail"), "e2e", "runX")
     runner = CrawlRunner(spark, dataclasses.replace(CFG, max_rounds=1), store)
-    before = jsc.getPersistentRDDs().size()
+    # by RDD id: the persistent-RDD map holds weak values, so another
+    # test's RDD can drop out of it mid-run
+    before = set(jsc.getPersistentRDDs().keySet())
     with pytest.raises(OSError, match="seen write failed"):
         runner.run(corpus)
-    assert jsc.getPersistentRDDs().size() == before
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
 def test_budgeted_crawl_matches_budgeted_oracle(

@@ -208,28 +208,6 @@ def test_relative_dates():
     assert py_parse_date("2024-01-02") == datetime(2024, 1, 2)
 
 
-def test_view_form_fields():
-    """ViewForm field harvest (memorious/helpers/asp.py:1-19): named
-    inputs → {name: value}, '' default, data overrides pre-seed."""
-    page = (
-        "<html><body><form>"
-        '<input name="__VIEWSTATE" value="abc123"/>'
-        '<input name="__EVENTVALIDATION" value="ev"/>'
-        '<input name="novalue"/>'
-        '<input value="anonymous"/>'
-        "</form></body></html>"
-    )
-    root = hk.parse_html(page)
-    fields = hk.view_form_fields(root, data={"seeded": "x"})
-    assert fields == {
-        "seeded": "x",
-        "__VIEWSTATE": "abc123",
-        "__EVENTVALIDATION": "ev",
-        "novalue": "",
-    }
-    assert hk.view_form_fields(None) == {}
-
-
 def test_parse_sitemap():
     """sitemaps.org protocol: namespaced urlset, bare sitemapindex,
     whitespace-trimmed locs, document order; non-sitemap XML / HTML /

@@ -391,31 +391,27 @@ def test_sequence_tag_once_only(spark, tmp_path):
     assert sorted(r["number"] for r in second.collect()) == list(range(10, 15))
 
 
-def test_ftm_store_merges_fragments(spark, tmp_path):
-    from memorious_spark.operators.sinks import ftm_store
+def test_tags_membership_and_newest_value(spark, tmp_path):
+    """set_tag / check_tag / get_tag (context.py:114-125) over the
+    shared tags table: two writes at two clocks, membership for exactly
+    the written keys, and the newer write's value wins."""
+    from memorious_spark.operators import tags as T
     from memorious_spark.plans.storage import RunStore
 
-    store = RunStore(tmp_path, "ftmc", "r1")
-    e1 = spark.createDataFrame(
-        [("e1", "Person", "Alice"), ("e2", "Company", "Acme")],
-        "id string, schema string, name string",
-    )
-    out1 = ftm_store(spark, store, e1, "ds", now_ts="2024-01-01 00:00:00")
-    assert out1.count() == 2
-    # same id re-put updates (not duplicates); new fragment adds a row
-    e2 = spark.createDataFrame(
-        [("e1", "Person", "Alice B."), ("e1", "Person", "addr")],
-        "id string, schema string, name string",
-    ).withColumn(
-        "fragment",
-        F.when(F.col("name") == "addr", "f2"),
-    )
-    out2 = ftm_store(spark, store, e2, "ds", now_ts="2024-02-01 00:00:00")
-    rows = {(r["id"], r["fragment"]): r for r in out2.collect()}
-    assert len(rows) == 3
-    assert rows[("e1", "")]["name"] == "Alice B."
-    assert str(rows[("e1", "")]["__first_seen"]) == "2024-01-01 00:00:00"
-    assert str(rows[("e1", "f2")]["__first_seen"]) == "2024-02-01 00:00:00"
+    store = RunStore(tmp_path, "tagc", "r1")
+    first = spark.createDataFrame([("a", "1"), ("b", "1")], "key string, v string")
+    second = spark.createDataFrame([("b", "2"), ("c", "2")], "key string, v string")
+    T.set_tags(store, first, "tagc", "t", value_col="v", run_id="r1",
+               now_ts="2024-01-01 00:00:00")
+    T.set_tags(store, second, "tagc", "t", value_col="v", run_id="r2",
+               now_ts="2024-02-01 00:00:00")
+    keys = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], "key string")
+    out = T.get_tags(spark, store, T.check_tags(spark, store, keys, "tagc", "t"),
+                     "tagc", "t")
+    got = {r["key"]: (r["tagged"], r["tag_value"]) for r in out.collect()}
+    assert got == {
+        "a": (True, "1"), "b": (True, "2"), "c": (True, "2"), "d": (False, None),
+    }
 
 
 def test_meta_date_normalizes_in_parse(spark):
@@ -629,15 +625,9 @@ def test_multimodal_plumbing(spark):
 # ---- checks ---------------------------------------------------------------------
 
 def test_checks(spark):
-    df = spark.createDataFrame([("12", "ab"), ("x3", "")], "a string, b string")
-    got = df.select(
-        checks.is_numeric(F.col("a")).alias("num"),
-        checks.is_not_empty(F.col("b")).alias("ne"),
-    ).collect()
-    assert [r["num"] for r in got] == [True, False]
+    df = spark.createDataFrame([("ab",), ("",)], "b string")
+    got = df.select(checks.is_not_empty(F.col("b")).alias("ne")).collect()
     assert [r["ne"] for r in got] == [True, False]
-    with pytest.raises(ValueError):
-        checks.assert_valid(df, checks.is_numeric(F.col("a")), "numeric-a")
 
 
 def _nearest_code_reference(vecs, book):
@@ -1175,16 +1165,18 @@ def test_pack_token_shards_matches_global_prefix_sum(spark):
 
 def test_pack_token_shards_releases_its_cache(spark):
     """The advisory persist is released inside the call: a call plus a
-    collect leaves the session's persistent-RDD count unchanged."""
+    collect leaves no new persistent RDD. (Compared by RDD id: the
+    JVM's persistent-RDD map holds weak values, so an earlier test's
+    RDD can drop out of it mid-call and shrink a bare count.)"""
     from memorious_spark.operators.packing import pack_token_shards
 
     jsc = spark.sparkContext._jsc
     docs = spark.range(200).select(
         F.col("id").alias("doc_id"), (F.col("id") % 7 + 1).alias("tokens")
     )
-    before = jsc.getPersistentRDDs().size()
+    before = set(jsc.getPersistentRDDs().keySet())
     pack_token_shards(docs, budget=100, num_partitions=4).collect()
-    assert jsc.getPersistentRDDs().size() == before
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
 def test_range_by_order_emit_seq_survives_recompute(spark):

@@ -362,7 +362,9 @@ def test_lsh_pair_self_joins_never_broadcast(spark):
     index; a BroadcastHashJoin there re-evaluates the signature stage
     once per side (and could not broadcast a corpus-scale index at
     all). Lock the SHUFFLE_HASH shape — both sides through the same
-    exchange, one materialization."""
+    exchange, one materialization: the final plans of the MinHash,
+    n-gram and SimHash generators read the second side as a
+    ``ReusedExchange``. (The embedding LSH plans none at this size.)"""
     import os
 
     from memorious_spark.operators import dedup
@@ -376,9 +378,14 @@ def test_lsh_pair_self_joins_never_broadcast(spark):
         ("simhash", dedup.simhash_pairs(docs)),
         ("emb_lsh", dedup.embedding_dup_pairs_lsh(emb, dim=64)),
     ]:
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = _plan(df)
         assert "ShuffledHashJoin" in plan, name
         assert "BroadcastHashJoin" not in plan, name
+        if name != "emb_lsh":
+            df.collect()
+            plan = _plan(df)
+            assert "isFinalPlan=true" in plan, name
+            assert "ReusedExchange" in plan, (name, plan[:3000])
 
 
 def test_seen_anti_join_reuses_within_round_partitioning(spark):

@@ -5,11 +5,9 @@ top-level function and class must be reachable from a non-test entry
 point — the driver contract (``__spark_entry__.py``), the frozen
 ``bench.py``, the crawl benchmark (``crawlbench/``), ``tools/``, the
 CLI, or an engine module's own top-level statements other than
-imports. The only
-exceptions are the pinned memorious-parity surface and the reference
-implementations ``tests/test_urls.py`` compares against. Adding engine
-code that only a test calls fails here instead of growing the surface
-silently.
+imports. There are no exceptions: engine code that only a test calls
+fails here instead of growing the surface silently, and a reference
+implementation only tests use lives in the test that uses it.
 
 A "use" is a name, an attribute, an import alias or an identifier-like
 string constant (YAML ``method:`` names resolve through strings).
@@ -25,7 +23,10 @@ any other test-only parameter fails the scan. A parameter that every
 call — entry files, engine and tests together — binds to the same
 literal (an omitted one binds its default) is a constant spelled as an
 option, unless an entry-file call binds it as a contract argument;
-only the hooks in ``ONE_VALUE_BY_DESIGN`` may stay.
+only the hooks in ``ONE_VALUE_BY_DESIGN`` may stay. A function whose
+name appears as a value outside the tests (``route=_bloom_shard``) is
+called through a parameter the scan cannot follow, so it counts as
+called with unknown arguments in both parameter scans.
 
 And for statements: the same run of consecutive statements spanning 6
 or more lines may not appear twice in the engine; a copied block is
@@ -41,26 +42,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 ENGINE = ROOT / "memorious_spark"
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-
-# memorious-parity operators (SURVEY §2) that no entry point calls, and
-# the pure-Python references tests/test_urls.py checks the kernels against
-UNREACHED_BY_DESIGN = {
-    # functions/checks.py — memorious ContextCheck
-    "assert_valid", "is_numeric", "match_date",
-    # functions/scraper_utils.py, functions/htmlkit.py
-    "convert_snakecase", "search_results_last_url", "search_results_total",
-    "soviet_checksum", "view_form_fields",
-    # functions/urls.py — reference implementations
-    "py_canon", "py_registrable_domain",
-    # operators/rest_sink.py — aleph / REST emit
-    "TransientApiError", "aleph_emit_documents", "aleph_emit_entities",
-    "aleph_folders", "rest_emit", "rest_emit_waves",
-    # operators/sinks.py
-    "ftm_store",
-    # sources/listing_source.py, sources/rest_source.py
-    "listing_source", "retrieve_files", "mark_processed", "paginated_source",
-    "skip_processed",
-}
 
 # (function or Class.method, parameter) pairs only tests pass
 TEST_ONLY_PARAMS = {
@@ -187,13 +168,9 @@ def unreached_definitions() -> set[str]:
 
 
 def test_only_pinned_definitions_are_unreached():
-    unreached = unreached_definitions()
-    assert unreached - UNREACHED_BY_DESIGN == set(), (
+    assert unreached_definitions() == set(), (
         "engine definitions no entry point reaches; delete them or call "
         "them from the contract"
-    )
-    assert UNREACHED_BY_DESIGN - unreached == set(), (
-        "pinned definitions now reached or gone; unpin them"
     )
 
 
@@ -203,8 +180,6 @@ def _callees() -> dict[str, list[tuple[str, ast.AST, bool, bool]]]:
     out: dict[str, list] = {}
     for path in sorted(ENGINE.rglob("*.py")):
         for stmt in _parse(path).body:
-            if getattr(stmt, "name", None) in UNREACHED_BY_DESIGN:
-                continue
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 out.setdefault(stmt.name, []).append(
                     (stmt.name, stmt, False, False)
@@ -265,22 +240,41 @@ def _bindings(call: ast.Call, fn: ast.AST, skip: bool, star_passes_all: bool):
     return out
 
 
+# how a function passed as a value (``route=_bloom_shard``) is later
+# called through the parameter that received it: with any arguments
+_UNKNOWN_ARGS = ast.parse("f(*args, **kwargs)", mode="eval").body
+
+
+def _name(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
 def _calls(paths, callees):
     """``(path, call, callee)`` for every call in ``paths`` whose name
-    matches a reached engine function, method or constructor."""
+    matches a reached engine function, method or constructor. A
+    top-level function whose name appears as a value outside
+    ``tests/`` — anything but the callee of a call, e.g. a call
+    argument — yields ``_UNKNOWN_ARGS`` (a test that keeps a reference
+    to restore a monkeypatch calls nothing)."""
     for path in paths:
-        for n in ast.walk(_parse(path)):
+        tree = _parse(path)
+        called = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        in_tests = ROOT / "tests" in path.parents
+        for n in ast.walk(tree):
+            name = _name(n)
+            if name is not None and id(n) not in called and not in_tests:
+                for callee in callees.get(name, ()):
+                    if callee[0] == name:  # not Class.method / __init__
+                        yield path, _UNKNOWN_ARGS, callee
             if not isinstance(n, ast.Call):
                 continue
-            f = n.func
-            if isinstance(f, ast.Name):
-                name, via_attr = f.id, False
-            elif isinstance(f, ast.Attribute):
-                name, via_attr = f.attr, True
-            else:
-                continue
+            name = _name(n.func)
             for callee in callees.get(name, ()):
-                if via_attr or not callee[3]:
+                if isinstance(n.func, ast.Attribute) or not callee[3]:
                     yield path, n, callee
 
 

@@ -1,8 +1,71 @@
-"""Column URL kernel ↔ pure-Python mirror equivalence."""
+"""Column URL kernel ↔ pure-Python mirror equivalence.
+
+``py_registrable_domain`` and ``py_canon`` are the reference mirrors
+the Column kernels are checked against; they live here because only
+these tests use them."""
+
+import re
+from urllib.parse import urlsplit
 
 from pyspark.sql import functions as F
 
 from memorious_spark.functions import urls
+
+
+def py_registrable_domain(
+    host: str,
+    rules: urls.PSLRules | None = None,
+    include_private: bool = True,
+) -> str:
+    """Pure-Python mirror of :func:`urls.registrable_domain_col` —
+    identical precedence: exception > longest rule > the implicit
+    ``*``."""
+    rules = rules or urls._default_psl(include_private)
+    if re.fullmatch(r"\d+\.\d+\.\d+\.\d+", host):
+        return host
+    parts = host.split(".")
+    n = len(parts)
+    ps = None
+    for k in sorted(rules.exc, reverse=True):
+        if n >= k and ".".join(parts[-k:]) in rules.exc[k]:
+            ps = k - 1
+            break
+    if ps is None:
+        for k in range(rules.max_labels, 1, -1):
+            if k in rules.exact and n >= k and ".".join(parts[-k:]) in rules.exact[k]:
+                ps = k
+                break
+            if (
+                (k - 1) in rules.wild and n >= k
+                and ".".join(parts[-(k - 1):]) in rules.wild[k - 1]
+            ):
+                ps = k
+                break
+    if ps is None:
+        ps = 1
+    if n <= ps:
+        return host
+    return ".".join(parts[-(ps + 1):])
+
+
+def py_canon(url: str) -> str | None:
+    """Pure-Python mirror of :func:`urls.canon_col`."""
+    base = urls.py_norm(url)
+    if base is None:
+        return None
+    try:
+        query = urlsplit(url).query
+    except ValueError:
+        return None
+    path_part = base.split("?", 1)[0]
+    kept = sorted(
+        p
+        for p in query.split("&")
+        if p != ""
+        and not p.startswith("utm_")
+        and p.split("=", 1)[0] not in urls.TRACKING_PARAMS
+    )
+    return path_part + ("?" + "&".join(kept) if kept else "")
 
 CASES = [
     "https://EXAMPLE.com/path?q=1#frag",
@@ -60,7 +123,7 @@ def test_registrable_domain(spark):
     ).collect()
     for r in got:
         assert r["dom"] == r["want"], r["host"]
-        assert urls.py_registrable_domain(r["host"]) == r["want"], r["host"]
+        assert py_registrable_domain(r["host"]) == r["want"], r["host"]
 
 
 def test_canon_col_sorts_and_strips_tracking(spark):
@@ -132,7 +195,7 @@ def test_canon_col_matches_python_mirror_property(spark):
         "url", urls.canon_col(F.col("url")).alias("c")
     ).collect()
     for r in got:
-        assert r["c"] == urls.py_canon(r["url"]), r["url"]
+        assert r["c"] == py_canon(r["url"]), r["url"]
 
 
 def test_hash_col_deterministic(spark):
@@ -222,7 +285,7 @@ def test_registrable_domain_full_psl(spark):
     ).collect()
     for r in got:
         assert r["dom"] == r["want"], (r["host"], r["dom"])
-        assert urls.py_registrable_domain(r["host"]) == r["want"], r["host"]
+        assert py_registrable_domain(r["host"]) == r["want"], r["host"]
 
 
 def test_load_psl_parses_real_format():
@@ -259,7 +322,7 @@ def test_registrable_domain_property_py_mirror(spark):
         "host", urls.registrable_domain_col(F.col("host")).alias("dom")
     ).collect()
     for r in got:
-        assert r["dom"] == urls.py_registrable_domain(r["host"]), r["host"]
+        assert r["dom"] == py_registrable_domain(r["host"]), r["host"]
 
 
 def test_registrable_domain_icann_vs_private(spark):
@@ -291,8 +354,8 @@ def test_registrable_domain_icann_vs_private(spark):
     for r in got:
         assert r["full"] == r["want_full"], (r["host"], r["full"])
         assert r["icann"] == r["want_icann"], (r["host"], r["icann"])
-        assert urls.py_registrable_domain(r["host"]) == r["want_full"]
-        assert urls.py_registrable_domain(
+        assert py_registrable_domain(r["host"]) == r["want_full"]
+        assert py_registrable_domain(
             r["host"], include_private=False
         ) == r["want_icann"]
 
@@ -309,9 +372,9 @@ def test_psl_missing_file_falls_back(monkeypatch):
 
     monkeypatch.setattr(urls, "load_psl", boom)
     rules = urls._default_psl()
-    assert urls.py_registrable_domain("news.bbc.co.uk", rules) == "bbc.co.uk"
+    assert py_registrable_domain("news.bbc.co.uk", rules) == "bbc.co.uk"
     # private-section registries are absent from the fallback
-    assert urls.py_registrable_domain(
+    assert py_registrable_domain(
         "blog.myname.github.io", rules
     ) == "github.io"
     monkeypatch.setattr(urls, "load_psl", real_open)
