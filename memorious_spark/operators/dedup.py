@@ -22,6 +22,14 @@ reference's only dedup is the URL-seen tag set; these deduplicate
   one equi-join bucket — an AQE-splittable shuffle join, never a
   BroadcastNestedLoopJoin); the sub-quadratic approximate path is
   :func:`embedding_dup_pairs_lsh` (banded sign-LSH + exact re-rank).
+
+Shared jobs have one helper each: ``_explode_bands`` +
+``_band_self_join`` (the banded shuffle-hash self-join of MinHash,
+SimHash and embedding LSH; n-gram Jaccard keys it on the shingle),
+``_span_windows`` (the k-token window stream of both span operators)
+and ``_rejoin`` (the ordered regroup that rebuilds a text from its
+kept parts). :func:`dedup_components` releases every superseded
+round's checkpoint.
 """
 
 from __future__ import annotations
@@ -38,6 +46,7 @@ from memorious_spark.operators.similarity import (
     lsh_bucket_col,
     nearest_codes,
 )
+from memorious_spark.session import release_checkpoint
 
 __all__ = [
     "exact_dedup",
@@ -94,11 +103,13 @@ def dedup_components(
     Both phases ``localCheckpoint`` per round: the iteration's unions/
     joins reference the previous round several times, so without
     lineage TRUNCATION the logical plan grows geometrically and the
-    driver dies building plan strings long before the data is big. A
-    512-node path graph converges in ≤ 3·log2(n)+5 total rounds
-    (pytest-asserted); both phases together are capped at 50 rounds,
-    past which phase 2 raises. ``stats`` (optional dict) receives
-    ``{"iterations": k}``.
+    driver dies building plan strings long before the data is big.
+    Each superseded round's checkpoint is released as soon as the next
+    one is materialized; the result reads at most three — the edges,
+    the last labels and the last star edges. A 512-node path graph
+    converges in ≤ 3·log2(n)+5 total rounds (pytest-asserted); both
+    phases together are capped at 50 rounds, past which phase 2
+    raises. ``stats`` (optional dict) receives ``{"iterations": k}``.
     """
     from pyspark.sql import Observation
 
@@ -172,7 +183,7 @@ def dedup_components(
             .localCheckpoint(eager=True)  # metrics ride this action
         )
         if labels is not None:
-            labels.unpersist()
+            release_checkpoint(labels)
         labels = new_labels
         if int(obs.get["changed"] or 0) == 0:
             converged = True
@@ -198,6 +209,7 @@ def dedup_components(
             )
         )
     else:
+        release_checkpoint(e0)
         out = labels.select("id", F.col("label").alias("component"))
     if stats is not None:
         stats["iterations"] = iters
@@ -271,7 +283,7 @@ def _star_components(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
             F.sum(F.col("dst").cast("decimal(38,0)")).alias("lsum"),
             F.expr("bit_xor(xxhash64(src, dst))").alias("fp"),
         ).localCheckpoint(eager=True)  # the one materializing action
-        e.unpersist()
+        release_checkpoint(e)
         e = new_e
         got = obs.get
         cur = (got["n"], got["lsum"], got["fp"])
@@ -307,18 +319,15 @@ def corpus_dedup(
     n_perm: int = 16,
     bands: int = 4,
     stats: dict | None = None,
-    normalize: bool = False,
 ) -> DataFrame:
     """One-call corpus deduplication — the composition a training-data
     pipeline actually runs: **exact → MinHash-LSH pairs over the exact
     survivors → connected components → canonical keep-list**.
 
-    ``normalize=True`` canonicalizes the text FIRST
-    (``functions.textops.normalize_text_udf``: NFC + space/control
-    classes) so unicode twins — NFD vs NFC accents, NBSP vs space —
-    fingerprint and shingle together (the CCNet ordering: normalize,
-    then dedup). Off by default: the driver oracle pins the
-    non-normalized path, and normalization crosses Arrow once.
+    Unicode twins — NFD vs NFC accents, NBSP vs space — stay distinct
+    unless the caller canonicalizes ``text`` first with
+    ``functions.textops.normalize_text_udf`` (the CCNet ordering:
+    normalize, then dedup).
 
     Returns the full drop manifest, one row per input doc:
     ``(doc_id, canonical_id, reason)`` with ``reason ∈ {'kept',
@@ -339,13 +348,8 @@ def corpus_dedup(
     star rounds for components, and two slim id-keyed joins to stitch
     the manifest — no step is quadratic in the corpus.
     """
-    text_in = F.col("text")
-    if normalize:
-        from memorious_spark.functions.textops import normalize_text_udf
-
-        text_in = normalize_text_udf()(text_in)
     base = docs.select(
-        F.col("doc_id").cast("long").alias("id"), text_in.alias("_t")
+        F.col("doc_id").cast("long").alias("id"), F.col("text").alias("_t")
     )
     # exact stage: canonical = min id per normalized-text fingerprint,
     # computed as aggregate + join-back (skew-safe), not a window.
@@ -431,6 +435,20 @@ def curate_corpus(
         F.lit("low_quality").alias("reason"),
     )
     return man.unionByName(low)
+
+
+def _rejoin(
+    pos: str, value: str, sep: str, keep: str | None = None
+) -> Column:
+    """Aggregate that rebuilds a text from its exploded parts: the
+    group's ``value`` strings in ``pos`` order — only those whose
+    boolean ``keep`` column is true, when given — joined by ``sep``."""
+    parts = F.array_sort(
+        F.collect_list(F.struct(pos, value, *([] if keep is None else [keep])))
+    )
+    if keep is not None:
+        parts = F.filter(parts, lambda s: s[keep])
+    return F.array_join(F.transform(parts, lambda s: s[value]), sep)
 
 
 def strip_boilerplate_lines(
@@ -523,13 +541,7 @@ def strip_boilerplate_lines(
             hot.select("k"), F.trim(pos["_line"]) == F.col("k"), "left_anti"
         )
         rebuilt = kept.groupBy("_sid").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_line"))),
-                    lambda s: s["_line"],
-                ),
-                "\n",
-            ).alias("_clean")
+            _rejoin("_pos", "_line", "\n").alias("_clean")
         )
         out = (
             docs.join(rebuilt, docs["doc_id"] == rebuilt["_sid"], "left")
@@ -551,6 +563,40 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
         )
         .select("doc_id", "fingerprint", "dup_count")
     )
+
+
+# ---- banded pair generation (MinHash, SimHash, embedding LSH) ------------
+
+def _explode_bands(
+    df: DataFrame, keep: list[str], keys: list[Column]
+) -> DataFrame:
+    """One ``(*keep, band, key)`` row per input row and band: band ``b``
+    carries ``keys[b]``."""
+    bk = F.explode(
+        F.array(*[
+            F.struct(F.lit(b).alias("band"), key.alias("key"))
+            for b, key in enumerate(keys)
+        ])
+    ).alias("bk")
+    return df.select(*keep, bk).select(*keep, "bk.band", "bk.key")
+
+
+def _band_self_join(banded: DataFrame, *keys: str) -> DataFrame:
+    """Every pair of ``banded`` rows that agree on ``keys``, once, as
+    ``l.id < r.id``; callers select their payload from ``l.*``/``r.*``.
+
+    SHUFFLE_HASH, not broadcast: a broadcast self-join evaluates the
+    stage under ``banded`` (signatures, shingle explode — the dominant
+    cost) TWICE, once per side; forcing both sides through the same
+    exchange on ``keys`` lets the runtime reuse ONE materialization of
+    it (measured 3.2s → 1.9s for MinHash at sf0.1). At 100 TB a
+    broadcast of the banded table is impossible anyway — this is also
+    the only plan that scales."""
+    l, r = banded.alias("l"), banded.hint("shuffle_hash").alias("r")
+    return l.join(r, [
+        *[F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys],
+        F.col("l.id") < F.col("r.id"),
+    ])
 
 
 def minhash_lsh_pairs(
@@ -584,37 +630,12 @@ def _minhash_band_pairs(
         F.col(id_col).alias("id"),
         shingles(F.col(text_col)).alias("sh"),
     ).select("id", minhash_signature(F.col("sh"), n_perm).alias("sig"))
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws("|", F.slice(F.col("sig"), b * r + 1, r))
-                    ).alias("key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
-    left = banded.alias("l")
-    # SHUFFLE_HASH, not broadcast: a broadcast self-join evaluates the
-    # signature stage (the dominant cost — shingles × n_perm hashes)
-    # TWICE, once per side; forcing both sides through the same
-    # (band, key) exchange lets the runtime reuse ONE materialization
-    # of it (measured 3.2s → 1.9s at sf0.1). At 100 TB a broadcast of
-    # the banded table is impossible anyway — this is also the only
-    # plan that scales.
-    right = banded.hint("shuffle_hash").alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+    banded = _explode_bands(sig, ["id"], [
+        F.md5(F.concat_ws("|", F.slice(F.col("sig"), b * r + 1, r)))
+        for b in range(bands)
+    ])
+    return _band_self_join(banded, "band", "key").select(
+        F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
     )
 
 
@@ -680,13 +701,8 @@ def ngram_jaccard_pairs(
         exploded = exploded.join(
             F.broadcast(hot.select("s")), "s", "left_anti"
         )
-    # shuffle-hash self-join: both sides ride ONE materialization of
-    # the exploded shingle index (a broadcast side would re-run the
-    # shingle explode — the dominant cost — a second time), and at
-    # corpus scale the index can't broadcast anyway
-    l, r = exploded.alias("l"), exploded.hint("shuffle_hash").alias("r")
     shared = (
-        l.join(r, (F.col("l.s") == F.col("r.s")) & (F.col("l.id") < F.col("r.id")))
+        _band_self_join(exploded, "s")
         .groupBy(
             F.col("l.id").alias("id_a"),
             F.col("r.id").alias("id_b"),
@@ -779,37 +795,17 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     returned raw band collisions, which is a candidate generator, not
     a dedup operator."""
     sig = simhash_signature_cols(docs)
-    mask = 0xFFFF
-    per_word = 2  # 16-bit bands per 32-bit signature half
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright("sig_lo", b * 16).bitwiseAND(F.lit(mask)).alias("key"),
-        )
-        for b in range(per_word)
-    ] + [
-        F.struct(
-            F.lit(per_word + b).alias("band"),
-            F.shiftright("sig_hi", b * 16).bitwiseAND(F.lit(mask)).alias("key"),
-        )
-        for b in range(per_word)
-    ]
-    banded = sig.select(
-        "id", "sig_lo", "sig_hi", F.explode(F.array(*bands)).alias("bk")
-    ).select("id", "sig_lo", "sig_hi", "bk.band", "bk.key")
-    # shuffle-hash: one materialization of the signature aggregation
-    # for both sides (minhash_lsh_pairs has the measured rationale)
-    l, r = banded.alias("l"), banded.hint("shuffle_hash").alias("r")
+    # four 16-bit bands: two per 32-bit signature half
+    banded = _explode_bands(sig, ["id", "sig_lo", "sig_hi"], [
+        F.shiftright(half, b * 16).bitwiseAND(F.lit(0xFFFF))
+        for half in ("sig_lo", "sig_hi")
+        for b in range(2)
+    ])
     hamming = F.bit_count(
         F.col("l.sig_lo").bitwiseXOR(F.col("r.sig_lo"))
     ) + F.bit_count(F.col("l.sig_hi").bitwiseXOR(F.col("r.sig_hi")))
     return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
+        _band_self_join(banded, "band", "key")
         .select(
             F.col("l.id").alias("id_a"),
             F.col("r.id").alias("id_b"),
@@ -821,6 +817,15 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
 
 
 # ---- embedding near-dup ------------------------------------------------------
+
+def _vectors(emb: DataFrame) -> DataFrame:
+    """``(id, v, nrm)``: each embedding with its L2 norm."""
+    return emb.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        _norm(F.col("embedding")).alias("nrm"),
+    )
+
 
 def _grid_pairs(v: DataFrame, *keys: str) -> DataFrame:
     """Block-grid self-join of ``v`` (an ``id`` column plus payload):
@@ -860,11 +865,7 @@ def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     self-join (:func:`_grid_pairs`). Exact all-pairs compute is
     inherently O(n²) — for sub-quadratic scale use
     :func:`embedding_dup_pairs_lsh`."""
-    v = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        _norm(F.col("embedding")).alias("nrm"),
-    )
+    v = _vectors(emb)
     dot = _dot(F.col("v_l"), F.col("v_r"))
     # a cross-block pair meets with its min-block row as left,
     # whatever the id order → normalize ids with least/greatest
@@ -895,38 +896,16 @@ def embedding_dup_pairs_lsh(
     n·bands·E[bucket]/2 — one equi-join shuffle on (band, bucket).
     Recall follows the standard banding curve (1-(1-s^r)^b for sign-
     collision prob s); pairs missed by every band are not reported."""
-    v = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        _norm(F.col("embedding")).alias("nrm"),
-        *[
-            lsh_bucket_col(
-                F.col("embedding"), dim, planes_per_band,
-                plane_offset=b * planes_per_band,
-            ).alias(f"bucket{b}")
-            for b in range(bands)
-        ],
-    )
-    banded = v.select(
-        "id", "v", "nrm",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), F.col(f"bucket{b}").alias("key"))
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("id", "v", "nrm", "bk.band", "bk.key")
-    # shuffle-hash: one materialization of the bucketed vectors for
-    # both sides (minhash_lsh_pairs has the measured rationale)
-    l, r = banded.alias("l"), banded.hint("shuffle_hash").alias("r")
+    v = _vectors(emb)
+    banded = _explode_bands(v, ["id", "v", "nrm"], [
+        lsh_bucket_col(
+            F.col("v"), dim, planes_per_band, plane_offset=b * planes_per_band
+        )
+        for b in range(bands)
+    ])
     dot = _dot(F.col("l.v"), F.col("r.v"))
     return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
+        _band_self_join(banded, "band", "key")
         .select(
             F.col("l.id").alias("id_a"),
             F.col("r.id").alias("id_b"),
@@ -989,12 +968,7 @@ def semantic_dedup(
     # right side then broadcasts, and the whole interpreted-cosine
     # pair scan would run narrow on a single core
     assigned = (
-        ensure_parallelism(emb)
-        .select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").alias("v"),
-            _norm(F.col("embedding")).alias("nrm"),
-        )
+        _vectors(ensure_parallelism(emb))
         .withColumn("cell", nearest_codes(F.col("v"), [cents])[0])
         .withColumn("d2", _dist2(F.col("v"), centroid))
         .persist()
@@ -1037,6 +1011,17 @@ def semantic_dedup(
     )
 
 
+def _span_windows(docs: DataFrame, k: int) -> DataFrame:
+    """``(id, pos, h)``: every k-token window of every document, its
+    position, and the md5 of its text. Windows use the corpus shingle
+    convention (``split(trim(text), ' ')``; a text shorter than k
+    yields one truncated window)."""
+    return docs.select(
+        F.col("doc_id").alias("id"),
+        F.posexplode(shingles(F.col("text"), k)).alias("pos", "s"),
+    ).select("id", "pos", F.md5(F.col("s")).alias("h"))
+
+
 def duplicate_span_fraction(docs: DataFrame, k: int = 8) -> DataFrame:
     """Cross-document duplicated-span fraction — the practical form of
     exact-substring deduplication (Lee et al. 2021, arXiv:2107.06499,
@@ -1067,10 +1052,7 @@ def duplicate_span_fraction(docs: DataFrame, k: int = 8) -> DataFrame:
     O(total tokens) rows of slim (hash, id) pairs — inherent to
     substring-level dedup at any engine; nothing is driver-side.
     """
-    spans = docs.select(
-        F.col("doc_id").alias("id"),
-        F.explode(shingles(F.col("text"), k)).alias("s"),
-    ).select("id", F.md5(F.col("s")).alias("h"))
+    spans = _span_windows(docs, k)
     # ONE evaluation of the explode+hash stream: aggregate to
     # (id, h, multiplicity) first. The (id, h) exchange under this
     # aggregate is IDENTICAL in the df-table branch and the join
@@ -1155,18 +1137,7 @@ def paragraph_dedup(docs: DataFrame) -> DataFrame:
         "_keep", F.struct("_id", "_idx") == F.col("_kp")
     )
     rebuilt = joined.groupBy("_id").agg(
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(F.struct("_idx", "_para", "_keep"))
-                    ),
-                    lambda s: s["_keep"],
-                ),
-                lambda s: s["_para"],
-            ),
-            "\n",
-        ).alias("text"),
+        _rejoin("_idx", "_para", "\n", keep="_keep").alias("text"),
         F.count(F.when(F.col("_keep"), 1)).alias("n_kept"),
         F.count(F.lit(1)).alias("n_paras"),
     )
@@ -1204,58 +1175,40 @@ def remove_duplicate_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     Nothing driver-side.
     """
     toks_arr = F.split(F.trim(F.col("text")), " ")
-    base = ensure_parallelism(docs).select(
-        F.col("doc_id").alias("_id"), F.col("text").alias("_text")
+    src = ensure_parallelism(docs)
+    toks = src.select(
+        F.col("doc_id").alias("id"),
+        F.posexplode(toks_arr).alias("pos", "tok"),
     )
-    toks = base.select(
-        "_id",
-        F.posexplode(F.split(F.trim(F.col("_text")), " ")).alias(
-            "_idx", "_tok"
-        ),
+    # the stream is evaluated twice (span_tbl and the join below): one
+    # evaluation — persisted, or a window over h — timed within noise
+    # on a 10× replicated corpus, and a window pins a hot span on one
+    # task
+    wins = _span_windows(src, k)
+    span_tbl = wins.groupBy("h").agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.min(F.struct("id", "pos")).alias("kp"),
     )
-    wins = base.select(
-        "_id",
-        F.size(F.split(F.trim(F.col("_text")), " ")).alias("_n"),
-        F.posexplode(shingles(F.col("_text"), k)).alias("_j", "_s"),
-    ).select("_id", "_n", "_j", F.md5(F.col("_s")).alias("_h"))
-    span_tbl = wins.groupBy("_h").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.min(F.struct("_id", "_j")).alias("_kp"),
-    )
+    # a window covers tokens pos..pos+k-1; the indices past a short
+    # text's last token match no token and drop out in the anti-join
     removed = (
-        wins.join(span_tbl, "_h")
-        .filter(
-            (F.col("_cnt") >= 2)
-            & (F.struct("_id", "_j") != F.col("_kp"))
-        )
+        wins.join(span_tbl, "h")
+        .filter((F.col("cnt") >= 2) & (F.struct("id", "pos") != F.col("kp")))
         .select(
-            "_id",
-            F.explode(
-                F.sequence(
-                    F.col("_j"),
-                    F.least(F.col("_j") + F.lit(k - 1), F.col("_n") - 1),
-                )
-            ).alias("_idx"),
+            "id",
+            F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1)))
+            .alias("pos"),
         )
         .distinct()
     )
-    survivors = toks.join(removed, ["_id", "_idx"], "left_anti")
-    rebuilt = survivors.groupBy("_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_idx", "_tok"))),
-                lambda s: s["_tok"],
-            ),
-            " ",
-        ).alias("_clean"),
+    survivors = toks.join(removed, ["id", "pos"], "left_anti")
+    rebuilt = survivors.groupBy("id").agg(
+        _rejoin("pos", "tok", " ").alias("_clean"),
         F.count(F.lit(1)).alias("_n_kept"),
     )
     return (
-        docs.select(
-            F.col("doc_id"),
-            F.size(toks_arr).alias("n_tokens"),
-        )
-        .join(rebuilt, F.col("doc_id") == rebuilt["_id"], "left")
+        docs.select("doc_id", F.size(toks_arr).alias("n_tokens"))
+        .join(rebuilt, F.col("doc_id") == rebuilt["id"], "left")
         .select(
             "doc_id",
             F.coalesce("_clean", F.lit("")).alias("text"),

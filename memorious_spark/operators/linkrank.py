@@ -33,12 +33,18 @@ Scale posture (per iteration, at 10^10 edges):
   separate aggregation job (the ``dedup_components`` doctrine,
   ``operators/dedup.py``).
 - ``localCheckpoint`` per round truncates the lineage (the plan
-  otherwise grows geometrically with iterations).
+  otherwise grows geometrically with iterations). Each checkpoint is
+  released once nothing reads it: the superseded ranks every round,
+  the edge set once the fanout and node tables are built, those two
+  after the last round. The result reads one checkpoint, the final
+  ranks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from memorious_spark.session import release_checkpoint
 
 __all__ = ["pagerank"]
 
@@ -98,13 +104,16 @@ def pagerank(
             ),
         ).first()
     )
+    release_checkpoint(e)
     if n_nodes == 0:
+        release_checkpoint(edeg)
         return nodes.select(
             "node",
             F.lit(0).cast("long").alias("rank_units"),
             F.lit(0.0).alias("rank"),
         )
     if n_nodes * unit >= 5 * 10**17:
+        release_checkpoint(edeg, nodes)
         raise ValueError(
             f"pagerank fixed-point overflow: N·unit = {n_nodes * unit} "
             "≥ 5e17; lower `unit`"
@@ -140,13 +149,16 @@ def pagerank(
         )
         # next round's dangling mass rides this round's checkpoint job
         obs = Observation()
-        ranks = nxt.observe(
+        new_ranks = nxt.observe(
             obs,
             F.coalesce(
                 F.sum(F.when(F.col("dangling"), F.col("units"))), F.lit(0)
             ).alias("dang"),
         ).localCheckpoint(eager=True)
+        release_checkpoint(ranks)
+        ranks = new_ranks
         dang_mass = obs.get["dang"]
+    release_checkpoint(edeg, nodes)
 
     return ranks.select(
         "node",

@@ -58,6 +58,7 @@ from memorious_spark.operators.cuckoo import (
     _BUCKET, _contains, _delete_batch, _insert_batch,
     _next_pow2, _size_for,
 )
+from memorious_spark.session import release_checkpoint
 
 __all__ = [
     "ShardedBloom",
@@ -73,7 +74,8 @@ __all__ = [
 
 _BLOOM_SCHEMA = "shard int, bm binary"
 # `removed` is delete's per-shard ledger; the handle keeps it in the
-# checkpointed frame so unpersist() releases the actual checkpoint
+# checkpointed frame so that frame stays the bare checkpoint
+# release_checkpoint can free
 _CUCKOO_SCHEMA = "shard int, tbl binary, removed long"
 _MULT = 0x9E3779B97F4A7C15
 _MASK = (1 << 64) - 1
@@ -95,9 +97,11 @@ def _keys_by_shard(df: DataFrame, key: str, route, shards: int) -> DataFrame:
 def _cogroup_update(filt_df: DataFrame, keys: DataFrame, schema: str, apply):
     """cogroup(filter-by-shard, keys-by-shard) → one rewritten row per
     shard → eager ``localCheckpoint``; the superseded table's storage
-    is released. ``apply(row, hv)`` gets the shard's stored filter row
-    (None for a shard never written) and its uint64 hashes, and returns
-    the new row's non-``shard`` columns as a dict.
+    is then released (:func:`session.release_checkpoint`), so the
+    handle that held it must not be read again. ``apply(row, hv)``
+    gets the shard's stored filter row (None for a shard never
+    written) and its uint64 hashes, and returns the new row's
+    non-``shard`` columns as a dict.
 
     The checkpoint is EAGER: the update must be a materialized fact
     before the next probe reads it (and the lineage must not re-run a
@@ -122,10 +126,7 @@ def _cogroup_update(filt_df: DataFrame, keys: DataFrame, schema: str, apply):
         .applyInPandas(per_shard, schema)
         .localCheckpoint(eager=True)
     )
-    try:
-        filt_df.unpersist()
-    except Exception:
-        pass
+    release_checkpoint(filt_df)
     return df
 
 

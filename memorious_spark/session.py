@@ -5,6 +5,9 @@ Arrow on (every UDF in this engine is pandas/Arrow-batched), shuffle
 partitions sized from the environment. On a real cluster these are the
 same knobs; nothing here is local-mode-specific except the master
 default.
+
+:func:`release_checkpoint` frees a ``localCheckpoint`` frame's storage,
+which ``DataFrame.unpersist`` cannot reach.
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ import tempfile
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -70,3 +73,20 @@ def ship_package(spark: SparkSession) -> None:
                 zf.write(py, py.relative_to(pkg_dir.parent))
     spark.sparkContext.addPyFile(str(zip_path))
     spark._memorious_shipped = True
+
+
+def release_checkpoint(*dfs: DataFrame) -> None:
+    """Free the storage of each bare ``localCheckpoint`` frame in
+    ``dfs``; any other frame is left alone.
+
+    A local checkpoint is an RDD-level persist, not a CacheManager
+    entry, so ``DataFrame.unpersist`` is a no-op on it and an iterative
+    operator's superseded rounds would stay in memory and on disk until
+    the JVM happens to collect them. Release only a frame nothing reads
+    any more: reading it afterwards fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+    """
+    for df in dfs:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)

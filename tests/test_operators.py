@@ -730,9 +730,9 @@ def test_knn_pq_full_refine_equals_brute_force(spark):
 
 
 def test_corpus_dedup_normalize_collapses_unicode_twins(spark):
-    """corpus_dedup(normalize=True): NFD vs NFC accents and NBSP vs
-    space fingerprint together (the CCNet ordering); without the flag
-    the twins survive as distinct docs."""
+    """normalize_text_udf, then corpus_dedup: NFD vs NFC accents and
+    NBSP vs space fingerprint together (the CCNet ordering); without
+    the normalization the twins survive as distinct docs."""
     rows = [
         (0, "café au lait"),
         (1, "cafe\u0301\u00a0au lait"),   # NFD + NBSP twin of 0
@@ -746,7 +746,9 @@ def test_corpus_dedup_normalize_collapses_unicode_twins(spark):
     assert plain == {0: "kept", 1: "kept", 2: "kept"}
     norm = {
         r["doc_id"]: (r["canonical_id"], r["reason"])
-        for r in dedup.corpus_dedup(docs, normalize=True).collect()
+        for r in dedup.corpus_dedup(
+            docs.withColumn("text", textops.normalize_text_udf()("text"))
+        ).collect()
     }
     assert norm[0] == (0, "kept")
     assert norm[1] == (0, "exact")
@@ -878,19 +880,26 @@ def test_directory_sink_relative_path(spark, tmp_path, monkeypatch):
 def test_dedup_components_chain_logarithmic(spark):
     """A 512-node PATH graph (worst case for plain min-label
     propagation: O(diameter)=256 rounds) must converge in O(log n)
-    star rounds and still label every node with the chain minimum."""
+    star rounds and still label every node with the chain minimum.
+    Every superseded round's checkpoint is released: the call leaves
+    at most the three its result reads (edges, last labels, last star
+    edges), compared by persistent-RDD id as in
+    test_pack_token_shards_releases_its_cache."""
     import math
 
     n = 512
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     stats = {}
     comp = dedup.dedup_components(pairs, stats=stats)
     rows = comp.collect()
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)
     assert stats["iterations"] <= 3 * math.log2(n) + 5, stats
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 3
 
 
 def test_lang_guess_twelve_languages(spark):
@@ -1602,7 +1611,12 @@ def test_pagerank_integer_exact(spark):
 
     E = [(0, 1), (0, 2), (1, 2), (2, 0), (2, 3), (4, 0), (4, 4), (0, 1)]
     df = spark.createDataFrame(E, "src long, dst long")
-    got = {r.node: r.rank_units for r in pagerank(df, n_iter=5).collect()}
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    ranked = pagerank(df, n_iter=5)
+    got = {r.node: r.rank_units for r in ranked.collect()}
+    # only the final ranks checkpoint, which `ranked` reads, is left
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
 
     unit, dnum, dden = 10**6, 17, 20
     out = defaultdict(set)

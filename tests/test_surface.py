@@ -28,8 +28,9 @@ name appears as a value outside the tests (``route=_bloom_shard``) is
 called through a parameter the scan cannot follow, so it counts as
 called with unknown arguments in both parameter scans.
 
-And for statements: the same run of consecutive statements spanning 6
-or more lines may not appear twice in the engine; a copied block is
+And for statements and expressions: the same run of consecutive
+statements spanning 6 or more lines, or the same expression spanning 4
+or more lines, may not appear twice in the engine; a copied block is
 one helper that every site calls.
 """
 
@@ -68,7 +69,6 @@ TEST_ONLY_PARAMS = {
     ("temperature_mix", "total"),
     ("pagerank", "unit"),
     # operator variants a test checks beside the contract's default
-    ("corpus_dedup", "normalize"),
     ("knn_lsh", "multiprobe"),
     ("ngram_jaccard_pairs", "max_df"),
     # CLI argv (the console entry point reads sys.argv)
@@ -377,21 +377,13 @@ def _statement_lists(tree: ast.AST):
                 yield stmts
 
 
-def repeated_statement_blocks() -> set[tuple[str, str]]:
-    """Pairs of ``file:line`` where the same run of consecutive
-    statements (compared by ``ast.unparse``) spanning 6 or more source
-    lines starts twice in ``memorious_spark/``."""
-    seen: dict[tuple[str, ...], list[str]] = {}
+def _engine_trees():
     for path in sorted(ENGINE.rglob("*.py")):
-        rel = path.relative_to(ENGINE).as_posix()
-        for stmts in _statement_lists(_parse(path)):
-            src = [ast.unparse(s) for s in stmts]
-            for i, first in enumerate(stmts):
-                for j in range(i, len(stmts)):
-                    if stmts[j].end_lineno - first.lineno >= 5:
-                        seen.setdefault(tuple(src[i:j + 1]), []).append(
-                            f"{rel}:{first.lineno}"
-                        )
+        yield path.relative_to(ENGINE).as_posix(), _parse(path)
+
+
+def _repeats(seen: dict) -> set[tuple[str, str]]:
+    """Pairs of distinct ``file:line`` places that share a key."""
     return {
         (a, b)
         for where in seen.values()
@@ -401,7 +393,43 @@ def repeated_statement_blocks() -> set[tuple[str, str]]:
     }
 
 
+def repeated_statement_blocks() -> set[tuple[str, str]]:
+    """Pairs of ``file:line`` where the same run of consecutive
+    statements (compared by ``ast.unparse``) spanning 6 or more source
+    lines starts twice in ``memorious_spark/``."""
+    seen: dict[tuple[str, ...], list[str]] = {}
+    for rel, tree in _engine_trees():
+        for stmts in _statement_lists(tree):
+            src = [ast.unparse(s) for s in stmts]
+            for i, first in enumerate(stmts):
+                for j in range(i, len(stmts)):
+                    if stmts[j].end_lineno - first.lineno >= 5:
+                        seen.setdefault(tuple(src[i:j + 1]), []).append(
+                            f"{rel}:{first.lineno}"
+                        )
+    return _repeats(seen)
+
+
 def test_no_repeated_statement_blocks():
     assert repeated_statement_blocks() == set(), (
         "the same statements appear twice; fold them into one helper"
+    )
+
+
+def repeated_expressions() -> set[tuple[str, str]]:
+    """Pairs of ``file:line`` where the same expression (compared by
+    ``ast.unparse``) spanning 4 or more source lines appears twice in
+    ``memorious_spark/`` — the copies a statement scan misses because
+    the statements around them differ."""
+    seen: dict[str, list[str]] = {}
+    for rel, tree in _engine_trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.expr) and n.end_lineno - n.lineno >= 3:
+                seen.setdefault(ast.unparse(n), []).append(f"{rel}:{n.lineno}")
+    return _repeats(seen)
+
+
+def test_no_repeated_expressions():
+    assert repeated_expressions() == set(), (
+        "the same expression appears twice; fold it into one helper"
     )
