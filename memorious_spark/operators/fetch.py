@@ -26,7 +26,11 @@ locks that count.
 
 Past ``_BROADCAST_MAX_ROWS`` the frontier side falls back to a
 SHUFFLE_HASH-hinted key-partitioned shuffle join (hash build on the
-frontier side — never a sort of the corpus; AQE handles skew); on a
+frontier side — never a sort of the corpus). Crawl rounds plan
+statically, so no adaptive skew-join split backs it. None is needed
+for the direct join: its key is the url, which has one corpus row, and
+the round's dedup and seen anti-join leave each url about once on the
+frontier side. Only many redirects into one target share a key. On a
 real deployment the corpus is bucketed by url so even that path
 avoids re-shuffling the 100 TB side — demonstrated, not asserted:
 test_plans.py::test_bucketed_corpus_join_never_shuffles_corpus shows

@@ -248,7 +248,8 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 def salt_partitions(df: DataFrame) -> DataFrame:
     """Re-spread budget-selected rows by url hash over the default
     parallelism so a hot host's rows don't pin one task through
-    fetch/parse (the explicit hot-host salting of the north rule). AQE
-    skew-join is the backstop; this is the guarantee."""
+    fetch/parse (the explicit hot-host salting of the north rule).
+    Crawl rounds plan statically, with no adaptive skew-join split
+    behind it, so this is the only guard against a hot host."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, F.xxhash64("url"))

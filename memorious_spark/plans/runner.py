@@ -45,12 +45,23 @@ fetch join's broadcast decision uses the frontier count as its safe
 upper bound. Everything else (metrics, manifest) is driver-local
 pyarrow/JSON.
 
-A wave is one driver action (or one set of parallel actions), not one
-Spark job: with adaptive query execution on, every action runs as one
-stage job per shuffle exchange in its plan, re-planned between them.
-Traced crawl-benchmark runs (``crawlbench --trace 1``, ``local[4]``)
-count ``runner.jobs_per_round`` = 20.5 on ``bulk_drain`` and 29 on
-``bfs_polite``.
+A wave is one driver action (or one set of parallel actions). Crawl
+rounds plan statically (:meth:`CrawlRunner.run` turns adaptive query
+execution off for the run and restores the caller's value after it),
+so an action is one job plus the job of each broadcast it builds, not
+one stage job per shuffle exchange: a round runs 8-10 jobs (locked by
+``test_crawl_e2e.py::test_round_runs_at_most_ten_jobs``) where adaptive
+execution runs 20-30. The job count is not what a round costs: with
+only adaptive execution turned off, a traced ``bfs_polite`` round went
+from 29 to 9.5 jobs and its fixed cost stayed at about 5 s. A round's
+fixed cost is driver time: about 0.8 s before the first job and 0.5 s
+between each pair of waves (``crawlbench --trace 1``, ``local[4]``,
+4-vCPU VM), planning plus whole-stage code generation. The compile part
+is paid once per query shape only while Spark's generated-class cache
+holds a round's working set: at Spark's default of 100 entries every
+round compiles its classes again, so ``session.get_spark`` sizes the
+cache, and a repeat crawl compiles no class
+(``test_repeat_crawl_reuses_generated_classes``).
 
 State (frontier / seen / results / metrics) is checkpointed per round
 through :class:`RunStore`; a killed run resumes from the last complete
@@ -95,18 +106,7 @@ SEEN_SCHEMA = (
 
 _ORDER = ["src_emit_seq", "link_idx"]
 
-
-def _obs_counts(obs: Observation, *names: str) -> dict:
-    """``Observation.get`` with an empty-plan fallback: when AQE's
-    runtime empty-relation propagation replaces a subtree that turned
-    out empty (e.g. a round whose corpus join matched nothing), the
-    CollectMetrics node is dropped from the re-planned query and the
-    observation row comes back schemaless — in exactly that case every
-    counter here is provably zero."""
-    try:
-        return obs.get
-    except Exception:
-        return {n: 0 for n in names}
+_AQE = "spark.sql.adaptive.enabled"
 
 
 def _unpersist_all(cached: list[DataFrame]) -> None:
@@ -218,6 +218,54 @@ class CrawlRunner:
         return parsed.withColumn("retrieved_at", retrieved), members
 
     # ---- main loop ---------------------------------------------------
+    def _start(
+        self, resume: bool, initial_frontier: DataFrame | None
+    ) -> tuple[int, int, int, int, dict]:
+        """``(start_round, next_seq, seen_count, frontier_rows, totals)``
+        of a run: read back from the manifest on resume, else from the
+        round-0 frontier this writes."""
+        cfg, store, spark = self.config, self.store, self.spark
+        if resume and (m := store.read_manifest()) is not None:
+            # a resume follows a crash: sweep shared-table compaction
+            # leftovers ONCE here — per-op recovery only covers tables
+            # this run touches again (storage.vacuum_shared docstring)
+            store.vacuum_shared()
+            last = next(
+                r for r in m["rounds"] if r["round"] == m["last_complete_round"]
+            )
+            totals = {
+                "fetched": sum(r["fetched"] for r in m["rounds"]),
+                "stored": sum(r["stored"] for r in m["rounds"]),
+            }
+            store.truncate_after(m["last_complete_round"])  # drop partials
+            return (
+                m["last_complete_round"] + 1, last["next_seq"],
+                last["urls_seen"], last["next_frontier"], totals,
+            )
+        if initial_frontier is None and cfg.init_method in (
+            "sequence", "dates", "enumerate",
+        ):
+            # generator init stage compiled from YAML → materialize the
+            # round-0 frontier (sequence `tag` once-only state lives in
+            # the store's shared tables)
+            from memorious_spark.operators.initializers import (
+                compile_initial_frontier,
+            )
+
+            initial_frontier = compile_initial_frontier(spark, cfg, store)
+        if initial_frontier is not None:
+            frontier0 = self._frontier_shape(initial_frontier, depth=F.lit(0))
+            obs0 = Observation()
+            store.write_round(
+                "frontier", 0,
+                frontier0.observe(obs0, F.count(F.lit(1)).alias("rows")),
+            )
+            n_seeds = int(obs0.get["rows"])
+        else:
+            n_seeds = len(cfg.seeds)
+            store.write_round("frontier", 0, self._seed_frontier())
+        return 0, n_seeds, 0, n_seeds, {"fetched": 0, "stored": 0}
+
     def run(
         self,
         corpus: DataFrame,
@@ -241,56 +289,21 @@ class CrawlRunner:
             inc_df = store.read_shared(spark, "inc_tags", INC_TAGS_SCHEMA)
         else:
             cache_df = inc_df = None
-        if resume and (m := store.read_manifest()) is not None:
-            # a resume follows a crash: sweep shared-table compaction
-            # leftovers ONCE here — per-op recovery only covers tables
-            # this run touches again (storage.vacuum_shared docstring)
-            store.vacuum_shared()
-            start_round = m["last_complete_round"] + 1
-            last = next(
-                r for r in m["rounds"] if r["round"] == m["last_complete_round"]
-            )
-            next_seq = last["next_seq"]
-            seen_count = last["urls_seen"]
-            frontier_rows = last["next_frontier"]
-            totals = {
-                "fetched": sum(r["fetched"] for r in m["rounds"]),
-                "stored": sum(r["stored"] for r in m["rounds"]),
-            }
-            store.truncate_after(m["last_complete_round"])  # drop partials
-        else:
-            if initial_frontier is None and cfg.init_method in (
-                "sequence", "dates", "enumerate",
-            ):
-                # generator init stage compiled from YAML → materialize
-                # the round-0 frontier (sequence `tag` once-only state
-                # lives in the store's shared tables)
-                from memorious_spark.operators.initializers import (
-                    compile_initial_frontier,
-                )
-
-                initial_frontier = compile_initial_frontier(spark, cfg, store)
-            if initial_frontier is not None:
-                frontier0 = self._frontier_shape(initial_frontier, depth=F.lit(0))
-                obs0 = Observation()
-                store.write_round(
-                    "frontier", 0,
-                    frontier0.observe(obs0, F.count(F.lit(1)).alias("rows")),
-                )
-                n_seeds = int(_obs_counts(obs0, "rows")["rows"])
-            else:
-                frontier0 = self._seed_frontier()
-                n_seeds = len(cfg.seeds)
-                store.write_round("frontier", 0, frontier0)
-            start_round, next_seq, seen_count = 0, n_seeds, 0
-            frontier_rows = n_seeds
-            totals = {"fetched": 0, "stored": 0}
-
-        rnd = start_round
-        status = "done"
+        # crawl rounds plan statically: the runner places its own
+        # partitioning, broadcast choice and hot-host salting, so
+        # adaptive execution would add only its per-exchange stage jobs
+        # and re-planning (module docstring). The caller's value comes
+        # back in the ``finally``.
+        aqe = spark.conf.get(_AQE)
+        spark.conf.set(_AQE, "false")
         pool = ThreadPoolExecutor(max_workers=4)
         cached: list[DataFrame] = []  # this round's persists
         try:
+            start_round, next_seq, seen_count, frontier_rows, totals = self._start(
+                resume, initial_frontier
+            )
+            rnd = start_round
+            status = "done"
             while rnd < cfg.max_rounds:
                 if store.abort_requested():
                     status = "aborted"
@@ -415,10 +428,10 @@ class CrawlRunner:
                 )
                 # wave 1: results write (counts ride along as observations)
                 store.write_round("results", rnd, stored)
-                parse_counts = _obs_counts(obs_parse, "hits", "emitted")
+                parse_counts = obs_parse.get
                 n_hits = int(parse_counts["hits"])
                 n_emitted = int(parse_counts["emitted"])
-                n_stored = int(_obs_counts(obs_store, "rows")["rows"])
+                n_stored = int(obs_store.get["rows"])
 
                 # fetch-time seen tags: the redirect SOURCE url, tagged only
                 # for rows that passed the rule+ok gates (fetch.py:30-33).
@@ -573,7 +586,7 @@ class CrawlRunner:
                     ))
                 for fut in futs:
                     fut.result()
-                frontier_rows = int(_obs_counts(obs_frontier, "rows")["rows"])
+                frontier_rows = int(obs_frontier.get["rows"])
                 seen_count = seen_count + n_new  # redirect-source tags (few) not counted
 
                 # metrics: round summary + per-partition lineage (footer- or
@@ -621,6 +634,7 @@ class CrawlRunner:
             # session or its writes running behind the caller
             pool.shutdown(wait=True, cancel_futures=True)
             _unpersist_all(cached)
+            spark.conf.set(_AQE, aqe)
         # run-level sinks + the post-drain aggregator hook
         # (crawler.py:66-87 fires `aggregate` when pending hits 0)
         if status == "done" and (

@@ -4,7 +4,19 @@ AQE on (runtime re-plan, skew-join splitting, post-filter coalescing),
 Arrow on (every UDF in this engine is pandas/Arrow-batched), shuffle
 partitions sized from the environment. On a real cluster these are the
 same knobs; nothing here is local-mode-specific except the master
-default.
+default. Crawl rounds are the exception to AQE:
+:meth:`CrawlRunner.run` plans them statically for the length of the
+run and restores the session's value afterwards.
+
+The generated-class cache (``spark.sql.codegen.cache.maxEntries``)
+holds 2000 classes instead of Spark's 100. One crawl round needs more
+than 100 distinct whole-stage classes, so at 100 the LRU cache evicts
+each round's classes before the next round asks for them and every
+round compiles its code again (130-270 compiles per benchmark crawl).
+A whole crawl-benchmark process, with corpus build, warm-up, timed
+crawls and checks, compiles about 210 distinct classes; 2000 leaves
+room for the contract queries that share one session. The bound is a
+static conf: it takes effect only when the session is created here.
 
 :func:`release_checkpoint` frees a ``localCheckpoint`` frame's storage,
 which ``DataFrame.unpersist`` cannot reach.
@@ -42,6 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # runtime bloom-filter join injection prunes big-side scans by the

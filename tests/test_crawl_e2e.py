@@ -269,6 +269,103 @@ def test_failed_round_releases_its_caches(
     with pytest.raises(OSError, match="seen write failed"):
         runner.run(corpus)
     assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    # the run's static-plan switch is undone on the way out too
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_crawl_of_corpus_misses_retries_then_ends(
+    spark, corpus, tmp_path_factory
+):
+    """Every frontier url misses the corpus: each round observes zero
+    hits, the rows re-enter the frontier until ``retries`` is spent,
+    and the crawl ends with nothing fetched."""
+    import dataclasses
+
+    cfg = dataclasses.replace(
+        CFG, seeds=("https://nowhere.invalid/a", "https://nowhere.invalid/b"),
+    )
+    store = RunStore(tmp_path_factory.mktemp("runs_miss"), "e2e", "runM")
+    result = CrawlRunner(spark, cfg, store).run(corpus)
+    assert (result.status, result.pages_fetched, result.urls_seen) == ("done", 0, 0)
+    assert [
+        (r["selected"], r["fetched"], r["new_links"], r["next_frontier"])
+        for r in store.read_manifest()["rounds"]
+    ] == [(2, 0, 0, 2)] * cfg.retries + [(2, 0, 0, 0)]
+
+
+def test_empty_initial_frontier_crawls_nothing(spark, corpus, tmp_path_factory):
+    store = RunStore(tmp_path_factory.mktemp("runs_empty"), "e2e", "runE")
+    empty = spark.createDataFrame([], "url string, emit_seq long")
+    result = CrawlRunner(spark, CFG, store).run(corpus, initial_frontier=empty)
+    assert (result.status, result.rounds, result.pages_fetched) == ("done", 0, 0)
+
+
+class _JobMarks(RunStore):
+    """Spark's last job id at each round commit. Jobs the runner's
+    worker threads submit carry no job group, so every job is counted
+    by id (as crawlbench's ``TracingStore`` counts them). The status
+    tracker learns of a job from the listener bus, so each mark drains
+    the bus first: a round's last job is not counted in the next."""
+
+    def __init__(self, root, crawler, run_id, sc):
+        super().__init__(root, crawler, run_id)
+        self._sc = sc
+        self.marks = [self._last_job()]
+
+    def _last_job(self) -> int:
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(self._sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    def commit_round(self, rnd, stats):
+        super().commit_round(rnd, stats)
+        self.marks.append(self._last_job())
+
+    def jobs_per_round(self) -> list[int]:
+        return [b - a for a, b in zip(self.marks, self.marks[1:])]
+
+
+@pytest.mark.parametrize("budget", [None, 4])
+def test_round_runs_at_most_ten_jobs(spark, corpus, tmp_path_factory, budget):
+    """Crawl rounds plan statically, so a round is its three waves of
+    actions and not one stage job per shuffle exchange (20-30 jobs a
+    round under adaptive execution), on the unbudgeted path and on the
+    per-host budget path. The first round's count includes the round-0
+    frontier write."""
+    import dataclasses
+
+    cfg = dataclasses.replace(CFG, max_rounds=5)
+    if budget is not None:
+        cfg = dataclasses.replace(cfg, budget_per_host=budget)
+    store = _JobMarks(
+        tmp_path_factory.mktemp("runs_jobs"), "e2e", "runJ", spark.sparkContext
+    )
+    result = CrawlRunner(spark, cfg, store).run(corpus)
+    assert result.rounds == 5
+    jobs = store.jobs_per_round()
+    assert max(jobs) <= 10, jobs
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_repeat_crawl_reuses_generated_classes(spark, corpus, tmp_path_factory):
+    """A repeat crawl finds its whole-stage classes in Spark's
+    generated-class cache and compiles almost none. At Spark's default
+    of 100 entries one round's classes evict the previous round's, and
+    this crawl compiles about 330 classes again; ``get_spark`` sizes the
+    cache, and a session made without it fails here too."""
+    import dataclasses
+
+    cfg = dataclasses.replace(CFG, max_rounds=4)
+    root = tmp_path_factory.mktemp("runs_codegen")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles_of_crawl(run_id: str) -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        CrawlRunner(spark, cfg, RunStore(root, "e2e", run_id)).run(corpus)
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    first = compiles_of_crawl("runC0")
+    again = compiles_of_crawl("runC1")
+    assert again <= 5, (first, again)  # 0 measured
 
 
 def test_budgeted_crawl_matches_budgeted_oracle(
