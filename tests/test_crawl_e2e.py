@@ -350,7 +350,7 @@ def test_repeat_crawl_reuses_generated_classes(spark, corpus, tmp_path_factory):
     """A repeat crawl finds its whole-stage classes in Spark's
     generated-class cache and compiles almost none. At Spark's default
     of 100 entries one round's classes evict the previous round's, and
-    this crawl compiles about 330 classes again; ``get_spark`` sizes the
+    this crawl compiles about 310 classes again; ``get_spark`` sizes the
     cache, and a session made without it fails here too."""
     import dataclasses
 
